@@ -142,6 +142,23 @@ object FastText {
       copy(child = c)
   }
 
+  /** Per-document term frequencies: one (term, tf) struct per distinct
+    * split(text, " ") token, first-occurrence order — equals the
+    * groupBy(doc, term).count() of the exploded tokens, row by row.
+    */
+  case class TermCounts(child: Expression) extends UnaryExpression {
+    override def dataType: DataType = ArrayType(StructType(Seq(
+      StructField("term", StringType, nullable = false),
+      StructField("tf", LongType, nullable = false))), containsNull = false)
+    override def prettyName: String = "graft_term_counts"
+    override protected def nullSafeEval(input: Any): Any =
+      FastTextRuntime.termCounts(input.asInstanceOf[UTF8String])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $RT.termCounts($c);")
+    override protected def withNewChildInternal(c: Expression): TermCounts =
+      copy(child = c)
+  }
+
   /** Language-ID scorer: fraction of each profile's character bigrams
     * present among the doc's distinct bigrams; returns the argmax as a
     * (score, lang) struct with array_max tie-break semantics.
@@ -195,4 +212,6 @@ object FastText {
     Glue.column(DistinctShingles(Glue.expression(text), n))
   def wordNgrams(text: Column, n: Int): Column =
     Glue.column(WordNgrams(Glue.expression(text), n))
+  def termCounts(text: Column): Column =
+    Glue.column(TermCounts(Glue.expression(text)))
 }

@@ -172,6 +172,26 @@ object FastTextRuntime {
     new GenericArrayData(out)
   }
 
+  /** (term, tf) per distinct split(text, " ") token, in first-occurrence
+    * order — a document's term frequencies without a shuffle.
+    */
+  def termCounts(text: UTF8String): ArrayData = {
+    val counts = new java.util.LinkedHashMap[String, Array[Long]]()
+    for (t <- tokens(text)) {
+      val c = counts.get(t)
+      if (c == null) counts.put(t, Array(1L)) else c(0) += 1
+    }
+    val out = new Array[Any](counts.size)
+    val it = counts.entrySet().iterator()
+    var k = 0
+    while (it.hasNext) {
+      val e = it.next()
+      out(k) = InternalRow(UTF8String.fromString(e.getKey), e.getValue()(0))
+      k += 1
+    }
+    new GenericArrayData(out)
+  }
+
   def wordNgrams(text: UTF8String, n: Int): ArrayData = {
     val toks = tokens(text)
     if (toks.length < n) return new GenericArrayData(Array.empty[Any])

@@ -467,32 +467,53 @@ object Dedup {
       .filter(col("shared") >= minShared)
   }
 
+  /** Word-`n`-gram occurrences whose gram occurs at least twice in
+    * `base`: (id, start, xdoc) per occurrence, `start` 1-based, `xdoc`
+    * when the gram occurs in ≥2 distinct docs. One gram-keyed window —
+    * count(*) and min(id) <> max(id) over the gram partition — instead
+    * of a gram aggregate joined back to its occurrences: one exchange,
+    * and the window buffer spills, so a hot boilerplate gram cannot
+    * exhaust memory the way a collected list would.
+    */
+  private def repeatedGrams(base: DataFrame, idCol: String,
+      textCol: String, n: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val byGram = Window.partitionBy(col("ng"))
+    base.select(col(idCol), posexplode(FastText.wordNgrams(col(textCol), n))
+        .as(Seq("pos", "ng")))
+      .select(col(idCol), (col("pos") + 1).cast("long").as("start"),
+        (min(col(idCol)).over(byGram) =!= max(col(idCol)).over(byGram))
+          .as("xdoc"),
+        count(lit(1)).over(byGram).as("cnt"))
+      .filter(col("cnt") >= 2)
+  }
+
   /** Per-doc span-dedup accounting — the n-gram approximation of exact
     * substring dedup: a span (word-`n`-gram occurrence) is duplicated
     * when the same n-gram appears in ≥2 distinct docs. Returns
     * (id, n_spans, n_dup_spans, dup_frac) for every input doc. Cost at
-    * any corpus size: one explode, one gram-keyed aggregate (map-side
-    * partials), one semijoin back — all keyed shuffles, nothing
-    * quadratic.
+    * any corpus size: one explode, the gram-keyed window of
+    * [[repeatedGrams]], then one doc-keyed aggregate over the
+    * duplicated occurrences unioned with every doc's span count (docs
+    * without duplicates keep their zero row, no outer join) — all
+    * keyed shuffles, nothing quadratic.
     */
   def spanDedupStats(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", n: Int = 8): DataFrame = {
     val base = Scale.widen(docs, col(idCol))
-    val spans = base.select(col(idCol),
-      explode(FastText.wordNgrams(col(textCol), n)).as("ng"))
-    val shared = spans.groupBy(col("ng"))
-      .agg(countDistinct(col(idCol)).as("nd"))
-      .filter(col("nd") > 1)
-      .select(col("ng"))
-    val per = spans.join(shared, Seq("ng"), "left_semi")
-      .groupBy(col(idCol)).agg(count(lit(1)).as("n_dup0"))
-    val toks = split(col(textCol), " ")
+    val dup = repeatedGrams(base, idCol, textCol, n).filter(col("xdoc"))
+      .select(col(idCol), lit(null).cast("long").as("n_spans"),
+        lit(1).as("dup"))
     base.select(col(idCol),
-        greatest(size(toks) - lit(n - 1), lit(0)).cast("long").as("n_spans"))
-      .join(per, Seq(idCol), "left_outer")
-      .select(col(idCol), col("n_spans"),
-        coalesce(col("n_dup0"), lit(0L)).as("n_dup_spans"),
-        round(coalesce(col("n_dup0"), lit(0L)).cast("double") /
+        greatest(size(split(col(textCol), " ")) - lit(n - 1), lit(0))
+          .cast("long").as("n_spans"),
+        lit(null).cast("int").as("dup"))
+      .unionByName(dup)
+      .groupBy(col(idCol))
+      .agg(max(col("n_spans")).as("n_spans"),
+        count(col("dup")).as("n_dup_spans"))
+      .select(col(idCol), col("n_spans"), col("n_dup_spans"),
+        round(col("n_dup_spans").cast("double") /
           greatest(col("n_spans"), lit(1L)), 4).as("dup_frac"))
   }
 
@@ -510,60 +531,54 @@ object Dedup {
     * d16 also reports d10's cross-doc count so the approximation
     * error is in the artifact itself.
     *
-    * Scale: grams shard by gram hash (one keyed shuffle for the
-    * frequency count, one semi-join back — d10's shape), and the
-    * interval merge is a per-doc window (one doc-keyed exchange).
-    * No global sort, no all-pairs, no suffix concatenation of the
-    * corpus.
+    * Scale: one keyed exchange per key change. Grams shard by gram
+    * hash for the frequency window ([[repeatedGrams]], d10's shape);
+    * the duplicated occurrences then meet every doc's token count in
+    * one doc-keyed aggregate that collects the doc's (start, xdoc)
+    * occurrences, and the interval merge is a fold over them sorted
+    * by start: a new span opens when start > running end + 1. No
+    * global sort, no all-pairs, no suffix concatenation of the
+    * corpus; a doc's occurrence list is bounded by its token count.
     */
   def exactSubstringDedup(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", n: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val base = Scale.widen(docs, col(idCol))
-    val ws = split(col(textCol), " ")
-    val occs = base.select(col(idCol), ws.as("ws"))
-      .filter(size(col("ws")) >= n)
-      .select(col(idCol), explode(transform(
-        sequence(lit(1), size(col("ws")) - lit(n - 1)),
-        i => struct(i.as("start"),
-          array_join(slice(col("ws"), i, lit(n)), " ").as("ng")))).as("o"))
-      .select(col(idCol), col("o.start").cast("long").as("start"),
-        col("o.ng").as("ng"))
-    val stats = occs.groupBy(col("ng"))
-      .agg(count(lit(1)).as("cnt"), countDistinct(col(idCol)).as("nd"))
-      .filter(col("cnt") >= 2)
-      .select(col("ng"), col("nd"))
-    val dup = occs.join(stats, Seq("ng"))
-      .select(col(idCol), col("start"),
-        (col("start") + lit(n - 1)).as("e"), (col("nd") > 1).as("xdoc"))
-    val w = Window.partitionBy(col(idCol)).orderBy(col("start"))
-    val prevMax = max(col("e"))
-      .over(w.rowsBetween(Window.unboundedPreceding, -1))
-    val spans = dup
-      .withColumn("new_span",
-        when(col("start") > coalesce(prevMax, lit(-100L)) + 1, 1L)
-          .otherwise(0L))
-      .withColumn("span_id", sum(col("new_span")).over(w))
-      .groupBy(col(idCol), col("span_id"))
-      .agg(min(col("start")).as("s"), max(col("e")).as("ee"))
-    val perDoc = spans.groupBy(col(idCol)).agg(
-      count(lit(1)).as("n_dup_spans0"),
-      sum(col("ee") - col("s") + 1).as("n_dup_tokens0"),
-      max(col("ee") - col("s") + 1).as("max_span0"))
-    val occCounts = dup.groupBy(col(idCol)).agg(
-      count(lit(1)).as("n_dup_grams0"),
-      sum(when(col("xdoc"), 1L).otherwise(0L)).as("n_dup_grams_xdoc0"))
-    base.select(col(idCol), size(ws).cast("long").as("n_tokens"))
-      .join(perDoc, Seq(idCol), "left_outer")
-      .join(occCounts, Seq(idCol), "left_outer")
+    val occ = struct(col("start"), col("xdoc"))
+    val dup = repeatedGrams(base, idCol, textCol, n)
+      .select(col(idCol), lit(null).cast("long").as("n_tokens"), occ.as("o"))
+    val perDoc = base.select(col(idCol),
+        size(split(col(textCol), " ")).cast("long").as("n_tokens"),
+        lit(null).cast("struct<start:bigint,xdoc:boolean>").as("o"))
+      .unionByName(dup)
+      .groupBy(col(idCol))
+      .agg(max(col("n_tokens")).as("n_tokens"),
+        array_sort(collect_list(col("o"))).as("occs"),
+        count(col("o")).as("n_dup_grams"),
+        count(when(col("o.xdoc"), 1)).as("n_dup_grams_xdoc"))
+    // fold state: open span start / end, closed+open span count,
+    // covered tokens, longest span
+    val zero = struct(lit(0L).as("ss"), lit(-100L).as("e"),
+      lit(0L).as("spans"), lit(0L).as("toks"), lit(0L).as("mx"))
+    val merged = aggregate(col("occs"), zero, (acc, o) => {
+      val st = o.getField("start")
+      val opens = st > acc.getField("e") + 1
+      val ss = when(opens, st).otherwise(acc.getField("ss"))
+      val e = st + lit(n - 1L)
+      struct(ss.as("ss"), e.as("e"),
+        (acc.getField("spans") + when(opens, 1L).otherwise(0L)).as("spans"),
+        (acc.getField("toks") + e - greatest(acc.getField("e"), st - 1))
+          .as("toks"),
+        greatest(acc.getField("mx"), e - ss + 1).as("mx"))
+    })
+    perDoc.select(col(idCol), col("n_tokens"), col("n_dup_grams"),
+        col("n_dup_grams_xdoc"), merged.as("m"))
       .select(col(idCol), col("n_tokens"),
-        coalesce(col("n_dup_tokens0"), lit(0L)).as("n_dup_tokens"),
-        round(coalesce(col("n_dup_tokens0"), lit(0L)).cast("double") /
+        col("m.toks").as("n_dup_tokens"),
+        round(col("m.toks").cast("double") /
           greatest(col("n_tokens"), lit(1L)), 4).as("dup_token_frac"),
-        coalesce(col("n_dup_spans0"), lit(0L)).as("n_dup_spans"),
-        coalesce(col("max_span0"), lit(0L)).as("max_span"),
-        coalesce(col("n_dup_grams0"), lit(0L)).as("n_dup_grams"),
-        coalesce(col("n_dup_grams_xdoc0"), lit(0L)).as("n_dup_grams_xdoc"))
+        col("m.spans").as("n_dup_spans"),
+        col("m.mx").as("max_span"),
+        col("n_dup_grams"), col("n_dup_grams_xdoc"))
   }
 
   val all: Seq[GQuery] = Seq(
@@ -699,9 +714,10 @@ object Dedup {
     // work): a doc's span is duplicated when its word-8-gram occurs in
     // ≥2 distinct docs. Per doc: span count, duplicated-span count,
     // duplicated fraction — the signal a pipeline uses to trim
-    // boilerplate-heavy documents. Two keyed shuffles (gram agg + the
-    // semijoin back), both linear in corpus n-grams; string grams (not
-    // hashes) so the oracle reproduces the exact counts.
+    // boilerplate-heavy documents. Two keyed shuffles (the gram-keyed
+    // window shared with d16 + the doc-keyed count), both linear in
+    // corpus n-grams; string grams (not hashes) so the oracle
+    // reproduces the exact counts.
     GQuery("d10_span_dedup", (s, d) => {
       spanDedupStats(T.documents(s, d), n = 8).orderBy(col("doc_id"))
     }, Some("""
@@ -884,9 +900,9 @@ object Dedup {
     // ---------------------------------------------------------------- d16
     // EXACT substring dedup (see exactSubstringDedup): maximal
     // duplicated-span coverage at occurrence level — what a suffix
-    // array over the concatenated corpus reports, computed with two
-    // gram-sharded shuffles + one per-doc window instead of a global
-    // suffix sort. Carries d10's cross-doc count alongside, so the
+    // array over the concatenated corpus reports, computed with one
+    // gram-keyed window + one doc-keyed aggregate (an interval fold
+    // per doc) instead of a global suffix sort. Carries d10's cross-doc count alongside, so the
     // n-gram approximation's error (within-doc repetition it misses)
     // is measurable from this one result; DedupSpec asserts the
     // agreement bounds.

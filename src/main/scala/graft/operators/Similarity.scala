@@ -43,7 +43,10 @@ object Similarity {
   def asQueries(df: DataFrame): DataFrame =
     df.select(col("vec_id").as("q_id"), col("nv").as("q_nv"))
 
-  /** Rank candidate (q_id, vec_id, cos) rows to top-k per query. */
+  /** Rank candidate (q_id, vec_id, cos) rows to top-k per query,
+    * ordered by (q_id, rnk). The output is at most queries × k rows, so
+    * it is sorted in one partition: no range-partitioning sample job.
+    */
   private def topK(cand: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("vec_id"))
@@ -55,7 +58,8 @@ object Similarity {
         // cannot straddle a rounding boundary on the gate data (6
         // decimals did, by ~1e-7 — found by the hash compare).
         round(col("cos"), 4).as("cos"), col("rnk"))
-      .orderBy(col("q_id"), col("rnk"))
+      .repartition(1)
+      .sortWithinPartitions(col("q_id"), col("rnk"))
   }
 
   private def notSelf(excludeSelf: Boolean) =
@@ -75,6 +79,9 @@ object Similarity {
     * `dim <= 0` (the default) measures the embedding dimensionality
     * from the corpus — an explicit value that undershoots the data
     * would bucket on a prefix of each vector and silently lose recall.
+    * `vec_id` (and `q_id`) must be keys — one vector per id: the cosine
+    * is computed per colliding pair before the dedup, so the dedup
+    * shuffles (q_id, vec_id, cos) rather than two vectors per row.
     */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int = K,
       tables: Int = 16, nBits: Int = 6, dim: Int = -1, seed: Int = 200,
@@ -92,10 +99,9 @@ object Similarity {
     val cand = corpusB.join(broadcast(qs),
         col("tbl") === col("qtbl") && col("bucket") === col("qbucket") &&
           notSelf(excludeSelf))
-      .select(col("q_id"), col("vec_id"), col("q_nv"), col("nv"))
-      .distinct()
       .select(col("q_id"), col("vec_id"),
         FastVector.dot(col("q_nv"), col("nv")).as("cos"))
+      .distinct()
     topK(cand, k)
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{GQuery, Tables => T}
@@ -38,11 +38,20 @@ object TextOps {
     val stopRatio = size(filter(w, t => t.isInCollection(StopWords)))
       .cast("double") / size(w).cast("double")
     df.withColumn("n_tokens", size(w).cast("long"))
-      .withColumn("alpha_ratio", round(alphaRatio, 4))
-      .withColumn("stop_ratio", round(stopRatio, 4))
+      .withColumn("alpha_ratio", round4(alphaRatio))
+      .withColumn("stop_ratio", round4(stopRatio))
       .withColumn("quality",
-        round(alphaRatio * 0.5 + (lit(1.0) - stopRatio) * 0.5, 4))
+        round4(alphaRatio * 0.5 + (lit(1.0) - stopRatio) * 0.5))
   }
+
+  /** DuckDB's ROUND(double, 4): scale, round half away from zero, scale
+    * back — all binary double ops. Spark's round(x, 4) rounds the
+    * decimal string of x instead, so the two differ when the scaled
+    * product lands on the tie: 0.8262499999999999 × 1e4 is exactly
+    * 8262.5, which this rounds to 0.8263 (as DuckDB does) where Spark's
+    * round gives 0.8262.
+    */
+  def round4(x: Column): Column = round(x * 1e4) / 1e4
 
   /** Gopher-style hard-rule filter (Rae et al. 2021, public): word-count
     * bounds, mean-word-length bounds, alphabetic-word fraction, and a
@@ -98,23 +107,30 @@ object TextOps {
 
   /** Top-k TF-IDF terms per document, ranked by the deterministic
     * (tf DESC, df ASC, term) key; rounded score carried as output.
+    * Expects one row per document: tf is counted inside each row
+    * ([[FastText.termCounts]]), so the (doc, term) rows come out
+    * distinct with no shuffle under any input partitioning; df is a
+    * count window over their term partition and the rank a window over
+    * the doc partition — one exchange per key change.
     */
   def tfidfTopTerms(df: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", k: Int = 3): DataFrame = {
+    // One row per distinct term of each doc, plus one (null, null) row
+    // per null text. n_docs counts each doc's first row off the same
+    // generator, so a widened input's exchange is shared with the tf
+    // rows rather than run a second time for a bare row count.
     val terms = df.select(col(idCol).as("doc_id"),
-      explode(split(col(textCol), " ")).as("term"))
-    val tf = terms.groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-    val dfreq = terms.groupBy(col("term"))
-      .agg(countDistinct(col("doc_id")).as("df"))
-    val nDocs = df.agg(count(lit(1)).as("n_docs"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id"))
+      posexplode_outer(FastText.termCounts(col(textCol))).as(Seq("pos", "t")))
+    val nDocs = terms.agg(
+      count(when(coalesce(col("pos"), lit(0)) === 0, 1)).as("n_docs"))
+    val byDoc = Window.partitionBy(col("doc_id"))
       .orderBy(col("tf").desc, col("df").asc, col("term"))
-    tf.join(dfreq, "term")
-      .crossJoin(broadcast(nDocs))
-      .withColumn("rn", row_number().over(w).cast("long"))
+    terms.filter(col("t").isNotNull)
+      .select(col("doc_id"), col("t.term").as("term"), col("t.tf").as("tf"))
+      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("term"))))
+      .withColumn("rn", row_number().over(byDoc).cast("long"))
       .filter(col("rn") <= k)
+      .crossJoin(broadcast(nDocs))
       .select(col("doc_id"), col("rn"), col("term"), col("tf"), col("df"),
         round(col("tf") * (log((col("n_docs") + 1.0) / (col("df") + 1.0))
           + 1.0), 4).as("score"))
@@ -124,7 +140,7 @@ object TextOps {
     * repetition filters a training pipeline runs before dedup (heavily
     * repetitive documents are low-value even when globally unique):
     * distinct-token fraction, top-token fraction, top-bigram fraction.
-    * Shape: one token explode + keyed aggs per doc (the t05/t06 shape —
+    * Shape: one token explode + keyed aggs per doc (the t05 shape —
     * map-side partials, reduce traffic ∝ per-doc vocabulary, linear at
     * any corpus size).
     */
@@ -243,8 +259,9 @@ object TextOps {
     // ---------------------------------------------------------------- t02
     // Quality scoring: alpha-char ratio + stopword ratio blended into a
     // [0,1] heuristic score. All ratios double-divided identically in
-    // both engines; rounded to 4dp (binary doubles have no exact 1e-5
-    // midpoints, so HALF_UP vs HALF_EVEN can't diverge).
+    // both engines; rounded to 4dp the way DuckDB's ROUND(double, 4)
+    // does (round4: round(x * 1e4) / 1e4). Spark's own round(x, 4)
+    // rounds the decimal string and breaks a scaled tie differently.
     GQuery("t02_quality_score", (s, d) => {
       withQualityScore(T.documents(s, d))
         .select(col("doc_id"), col("n_tokens"), col("alpha_ratio"),
@@ -356,9 +373,10 @@ object TextOps {
     // TF-IDF top terms per document. Ranking is by the deterministic
     // integer key (tf DESC, df ASC, term) — identical ordering to
     // tf·idf without depending on cross-engine ln() ulp agreement; the
-    // rounded score is carried as output. Scale: terms explode once,
-    // two keyed aggs (term df is |vocab|-sized), doc-count scalar
-    // broadcasts, final per-doc window over ≤|terms-per-doc| rows.
+    // rounded score is carried as output. Scale: tf is counted per row
+    // (no shuffle), df is a term-keyed count window, the doc-count
+    // scalar broadcasts, final per-doc window over ≤|terms-per-doc|
+    // rows.
     GQuery("t06_tfidf", (s, d) => {
       tfidfTopTerms(Scale.widen(T.documents(s, d), col("doc_id")))
         .orderBy(col("doc_id"), col("rn"))

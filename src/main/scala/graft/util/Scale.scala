@@ -23,12 +23,6 @@ object Scale {
     */
   val Mode = "spark.graft.scale.widen"
 
-  /** Repartition `df` by `key` iff its current partition count is below
-    * `target` (default: the cluster's scheduling parallelism). Inspecting
-    * the partition count forces an extra physical planning of `df` (no
-    * job runs) — at very high query rates set [[Mode]] to "never"
-    * instead of paying it per call.
-    */
   /** A SOUND upper bound on `df`'s row count derived without running a
     * job: walk the optimized plan through row-preserving/-reducing
     * nodes (Project/Filter/Sample/Limit; Union sums) down to parquet
@@ -78,6 +72,12 @@ object Scale {
     walk(df.queryExecution.optimizedPlan)
   }
 
+  /** Repartition `df` by `key` iff its current partition count is below
+    * `target` (default: the cluster's scheduling parallelism). Inspecting
+    * the partition count plans `df` (no job runs; see [[partitionCount]])
+    * — at very high query rates set [[Mode]] to "never" instead of
+    * paying it per call.
+    */
   def widen(df: DataFrame, key: Column, target: Int = 0): DataFrame = {
     val goal =
       if (target > 0) target
@@ -86,7 +86,31 @@ object Scale {
       case "never" => df
       case "always" => df.repartition(goal, key)
       case _ =>
-        if (df.rdd.getNumPartitions < goal) df.repartition(goal, key) else df
+        if (partitionCount(df) < goal) df.repartition(goal, key) else df
     }
+  }
+
+  /** `df`'s partition count. A chain of projects and filters over one
+    * non-bucketed file scan has the scan's partitions, read from the
+    * planned scan's input RDD: physical planning only, no whole-stage
+    * code compiled. Any other plan (exchanges, joins, subqueries,
+    * non-file leaves) takes the count from `df.rdd`, which also
+    * prepares and compiles the plan.
+    */
+  private[graft] def partitionCount(df: DataFrame): Int = {
+    import org.apache.spark.sql.catalyst.expressions.PlanExpression
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec,
+      ProjectExec, SparkPlan}
+    def scanOf(p: SparkPlan): Option[FileSourceScanExec] = p match {
+      case s: FileSourceScanExec if !s.bucketedScan => Some(s)
+      case p: ProjectExec => scanOf(p.child)
+      case f: FilterExec => scanOf(f.child)
+      case _ => None
+    }
+    val plan = df.queryExecution.sparkPlan
+    val subquery = plan.exists(_.expressions.exists(
+      _.exists(_.isInstanceOf[PlanExpression[_]])))
+    scanOf(plan).filterNot(_ => subquery)
+      .fold(df.rdd.getNumPartitions)(_.inputRDD.getNumPartitions)
   }
 }

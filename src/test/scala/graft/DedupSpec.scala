@@ -176,6 +176,84 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  private def words(p: String, k: Int) = (1 to k).map(i => s"$p$i").mkString(" ")
+  private def d16(rows: Seq[(Long, String)]) =
+    Dedup.exactSubstringDedup(rows.toDF("doc_id", "text"), n = 8)
+      .collect().map(r => r.getLong(0) -> r).toMap
+
+  test("d16 span fold: an occurrence starting at previous end + 1 " +
+      "extends the span; one token of gap opens a new one") {
+    val got = d16(Seq(
+      1L -> s"${words("a", 8)} ${words("b", 8)}", // a-gram @1, b-gram @9
+      2L -> s"${words("a", 8)} x1 x2 x3",
+      3L -> s"y1 y2 ${words("b", 8)}",
+      4L -> s"${words("c", 8)} g ${words("d", 8)}", // c @1, d @10
+      5L -> words("c", 8),
+      6L -> words("d", 8)))
+    // doc 1: [1,8] and [9,16] are adjacent → one 16-token span
+    assert(got(1L).getLong(2) == 16L && got(1L).getLong(4) == 1L &&
+      got(1L).getLong(5) == 16L && got(1L).getLong(6) == 2L)
+    // doc 4: [1,8] and [10,17] leave token 9 uncovered → two spans
+    assert(got(4L).getLong(2) == 16L && got(4L).getLong(4) == 2L &&
+      got(4L).getLong(5) == 8L && got(4L).getLong(6) == 2L)
+  }
+
+  test("d16/d10: a doc shorter than n tokens and an empty-text doc " +
+      "each keep their zero row") {
+    val rows = Seq(1L -> words("s", 3), 2L -> "",
+      3L -> words("a", 12), 4L -> words("a", 12))
+    val got = d16(rows)
+    assert(got.keySet == Set(1L, 2L, 3L, 4L))
+    for ((id, nTok) <- Seq(1L -> 3L, 2L -> 1L)) {
+      val r = got(id)
+      assert(r.getLong(1) == nTok, s"doc $id n_tokens")
+      assert(r.getDouble(3) == 0.0, s"doc $id dup_token_frac")
+      assert((Seq(2, 4, 5, 6, 7).map(r.getLong)).forall(_ == 0L),
+        s"doc $id: $r")
+    }
+    assert(got(3L).getLong(2) == 12L && got(3L).getDouble(3) == 1.0)
+    val d10 = Dedup.spanDedupStats(rows.toDF("doc_id", "text"), n = 8)
+      .collect().map(r => r.getLong(0) -> r).toMap
+    assert(d10.keySet == Set(1L, 2L, 3L, 4L))
+    for (id <- Seq(1L, 2L))
+      assert(d10(id).getLong(1) == 0L && d10(id).getLong(2) == 0L &&
+        d10(id).getDouble(3) == 0.0, s"d10 doc $id")
+    assert(d10(3L).getLong(1) == 5L && d10(3L).getLong(2) == 5L)
+  }
+
+  test("d16: a gram occurring 3x in one doc and once in another counts " +
+      "every occurrence, all of them cross-doc") {
+    val g = words("g", 8)
+    val got = d16(Seq(1L -> s"$g p1 $g p2 $g", 2L -> s"q1 q2 $g",
+      3L -> words("z", 20)))
+    // doc 1: occurrences @1, @10, @19 — separated by p1/p2, three spans
+    assert(got(1L).getLong(6) == 3L && got(1L).getLong(7) == 3L)
+    assert(got(1L).getLong(2) == 24L && got(1L).getLong(4) == 3L &&
+      got(1L).getLong(5) == 8L)
+    assert(got(2L).getLong(6) == 1L && got(2L).getLong(7) == 1L &&
+      got(2L).getLong(2) == 8L)
+    assert(got(3L).getLong(6) == 0L && got(3L).getLong(7) == 0L)
+  }
+
+  test("Scale.partitionCount: the planned-scan fast path agrees with " +
+      "df.rdd on scans, filtered scans, bucket-free multi-file scans and " +
+      "plans that fall back (aggregates, unions, joins)") {
+    import graft.util.Scale
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val dir = graft.util.Scratch.dir("scale_partitions")
+    docs.repartition(3).write.mode("overwrite").parquet(dir)
+    val split = spark.read.parquet(dir)
+    val cases = Seq(
+      docs, docs.filter(col("doc_id") % 2 === 0).select(col("text")),
+      split, split.filter(col("doc_id") > 10),
+      docs.groupBy(col("source")).count(), docs.union(split),
+      docs.join(split.select(col("doc_id")), "doc_id"))
+    cases.foreach { df =>
+      assert(Scale.partitionCount(df) == df.rdd.getNumPartitions,
+        df.queryExecution.sparkPlan.treeString)
+    }
+  }
+
   test("Scale.rowCountUpperBound: exact footer count on a plain " +
       "parquet scan with ZERO jobs run; sound (never under) through " +
       "Project/Filter/Sample/Union; None when the plan could grow " +

@@ -80,6 +80,16 @@ class FastTextSpec extends SparkSpec {
     rows.foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1)))
   }
 
+  test("TermCounts equals explode + groupBy(doc, term).count() per doc") {
+    val rows = df.withColumn("id", monotonically_increasing_id())
+    val fast = rows.select(col("id"),
+        explode(FastText.termCounts(col("text"))).as("t"))
+      .select(col("id"), col("t.term"), col("t.tf")).collect().toSet
+    val ref = rows.select(col("id"), explode(split(col("text"), " ")).as("term"))
+      .groupBy("id", "term").agg(count(lit(1)).as("tf")).collect().toSet
+    assert(fast.nonEmpty && fast == ref)
+  }
+
   test("LangScore equals the HOF bigram-profile argmax on every doc") {
     val profiles = Seq(
       "en" -> Seq("th", "he", "in", "er", "an"),

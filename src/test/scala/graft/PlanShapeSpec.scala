@@ -89,9 +89,10 @@ class PlanShapeSpec extends SparkSpec {
     "a02_ann_lsh" -> 3, // bucket probe join + dedup + topk
     "a03_ivf_ann" -> 3, // probe-confined: centroid assign + cluster join
     "a05_range_search" -> 1, // scan-side filter, one output ordering
-    "d10_span_dedup" -> 4, // gram shard + span merge + per-doc window
+    "d10_span_dedup" -> 4, // widen + gram window + per-doc count + order
     "d14_dedup_pipeline" -> 4, // candidates + verify + CC + anti-join
-    "d16_exact_substring" -> 6, // gram sharding, no global sort
+    "d16_exact_substring" -> 4, // widen + gram window + per-doc fold + order
+    "t06_tfidf" -> 5, // widen + term window + doc rank + n_docs + order
     "t10_gopher_quality" -> 1, // pure scan-side scoring
     "t15_clean_pipeline" -> 1, // scan-side cleaning, one ordering
     "t17_bpe_tokens" -> 1) // scan-side tokenization

@@ -49,6 +49,51 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  test("lshTopK / bruteForceTopK: output ordered by (q_id, rnk) and " +
+      "equal to the dedup-vectors-then-cos, global-orderBy formulation") {
+    import org.apache.spark.sql.expressions.Window
+    import graft.functions.{FastVector, VectorOps}
+    import graft.operators.Similarity
+    val corpus = Similarity.prepared(Tables.embeddings(spark, sfDir),
+      "vec_id", "embedding")
+    val qs = Similarity.asQueries(corpus.filter(col("vec_id") < 8))
+    def oldTopK(cand: org.apache.spark.sql.DataFrame) = {
+      val w = Window.partitionBy(col("q_id"))
+        .orderBy(col("cos").desc, col("vec_id"))
+      cand.withColumn("rnk", row_number().over(w).cast("long"))
+        .filter(col("rnk") <= 10)
+        .select(col("q_id"), col("vec_id").as("neighbor_id"),
+          round(col("cos"), 4).as("cos"), col("rnk"))
+        .orderBy(col("q_id"), col("rnk"))
+    }
+    val planes = (0 until 16).map(t =>
+      VectorOps.makePlanes(seed = 200 + t, nBits = 6, dim = 64))
+    def bucketed(df: org.apache.spark.sql.DataFrame, idc: String,
+        nvc: String, tc: String, bc: String) =
+      df.select(col(idc), col(nvc),
+        posexplode(FastVector.hyperplaneBuckets(col(nvc), planes)).as(Seq(tc, bc)))
+    val oldLsh = oldTopK(bucketed(corpus, "vec_id", "nv", "tbl", "bucket")
+      .join(broadcast(bucketed(qs, "q_id", "q_nv", "qtbl", "qbucket")),
+        col("tbl") === col("qtbl") && col("bucket") === col("qbucket") &&
+          col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("vec_id"), col("q_nv"), col("nv")).distinct()
+      .select(col("q_id"), col("vec_id"),
+        FastVector.dot(col("q_nv"), col("nv")).as("cos")))
+    val oldBrute = oldTopK(corpus.join(broadcast(qs), col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("vec_id"),
+        FastVector.dot(col("q_nv"), col("nv")).as("cos")))
+    for ((name, got, old) <- Seq(
+        ("lsh", Similarity.lshTopK(corpus, qs, excludeSelf = true), oldLsh),
+        ("brute", Similarity.bruteForceTopK(corpus, qs, excludeSelf = true),
+          oldBrute))) {
+      val rows = got.collect().toSeq
+      assert(rows.nonEmpty, name)
+      val keys = rows.map(r => (r.getLong(0), r.getLong(3)))
+      assert(keys == keys.sorted, s"$name: not ordered by (q_id, rnk)")
+      assert(rows == old.collect().toSeq, name)
+    }
+  }
+
   test("ANN is deterministic across runs") {
     val r1 = run("a02_ann_lsh").collect().toSeq
     val r2 = run("a02_ann_lsh").collect().toSeq
