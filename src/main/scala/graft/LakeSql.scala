@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{AddColumns, Assignment, CreateTable, CreateTableAsSelect, DeleteAction, DeleteFromTable, DropTable, InsertIntoStatement, InsertStarAction, LogicalPlan, MergeIntoTable, RenameColumn, SubqueryAlias, TableSpec, UpdateAction, UpdateStarAction, UpdateTable}
 import org.apache.spark.sql.graft.Glue
 
-import graft.sources.{DeltaLite, IcebergLite}
+import graft.sources.{DeltaLite, IcebergLite, LakeFormat}
 
 /** SQL DDL + DML against the lake table formats — the reference's
   * `Connection::Query` path (reference:duckdb:24-35) extended from
@@ -183,8 +183,7 @@ object LakeSql {
     */
   def register(s: SparkSession, name: String, provider: String,
       path: String): Unit = {
-    require(Set("deltalite", "iceberglite").contains(provider),
-      s"unknown provider $provider")
+    LakeFormat.of(provider) // rejects an unknown provider
     registerEntry(s, name, provider, path)
   }
 
@@ -231,15 +230,11 @@ object LakeSql {
   // session's restore). That is the standard compensation contract
   // multi-table lakehouse pipelines use; true cross-table isolation
   // needs a coordinating catalog service, out of scope by design.
-  /** Per-table pre-transaction anchor: provider, version/snapshot id,
-    * and — iceberglite only — the current SCHEMA id. Iceberg schema
-    * evolution moves no snapshot, so rollbackTo alone cannot revert an
-    * in-transaction ALTER COLUMN; the recorded schema id restores it
-    * (Delta needs nothing extra: restore() reinstates prior metadata).
+  /** Per-table pre-transaction restore points (first touch wins, see
+    * [[LakeFormat.restorePoint]]) and the catalog undo log.
     */
   private case class TxnState(
-      dmlBase: scala.collection.mutable.LinkedHashMap[
-        String, (String, Long, Option[Int])],
+      dmlBase: scala.collection.mutable.LinkedHashMap[String, () => Unit],
       catalogUndo: scala.collection.mutable.ArrayBuffer[() => Unit])
 
   private val txns = java.util.Collections.synchronizedMap(
@@ -251,19 +246,11 @@ object LakeSql {
   /** Record `path`'s current version/snapshot the first time an active
     * transaction touches it; no-op outside a transaction.
     */
-  private def recordTableTouch(s: SparkSession, provider: String,
+  private def recordTableTouch(s: SparkSession, fmt: LakeFormat,
       path: String): Unit =
     txnOf(s).foreach { t =>
-      if (!t.dmlBase.contains(path)) {
-        val (v, schemaId) = provider match {
-          case "deltalite" => (DeltaLite.latestVersion(s, path), None)
-          case "iceberglite" => (IcebergLite.currentSnapshotId(s, path),
-            Some(IcebergLite.currentSchemaIdOf(s, path)))
-          case other => throw new IllegalArgumentException(
-            s"transactions do not cover provider $other")
-        }
-        t.dmlBase.put(path, (provider, v, schemaId))
-      }
+      if (!t.dmlBase.contains(path))
+        t.dmlBase.put(path, fmt.restorePoint(s, path))
     }
 
   /** Record a catalog-mutation undo; no-op outside a transaction. */
@@ -291,16 +278,7 @@ object LakeSql {
     txns.remove(s)
     // Tables first (restores work on paths, independent of catalog
     // state), then catalog undos in reverse mutation order.
-    t.dmlBase.foreach {
-      case (path, ("deltalite", v, _)) => DeltaLite.restore(s, path, v)
-      case (path, ("iceberglite", v, schemaId)) =>
-        IcebergLite.rollbackTo(s, path, v)
-        // rollbackTo moves only the snapshot pointer; in-transaction
-        // schema evolution (metadata-only, no snapshot) unwinds here.
-        schemaId.foreach(IcebergLite.restoreSchemaId(s, path, _))
-      case (path, (other, _, _)) => throw new IllegalStateException(
-        s"unknown provider $other recorded for $path")
-    }
+    t.dmlBase.values.foreach(_.apply())
     t.catalogUndo.reverseIterator.foreach(_.apply())
   }
 
@@ -435,17 +413,28 @@ object LakeSql {
       "(?:\\s+RETAIN\\s+(\\d+)\\s+VERSIONS?)?\\s*;?\\s*$").r
 
   private def maintTarget(s: SparkSession, what: String,
-      tbl: String): (String, String) = catalog(s).get(tbl) match {
-    case Some(("view", _)) => throw new IllegalArgumentException(
-      s"$tbl is a view — $what targets lake tables")
-    case Some(pp) => pp
-    case None => throw new IllegalArgumentException(
-      s"$what: table $tbl not in catalog")
+      tbl: String): (LakeFormat, String) =
+    lakeEntry(catalog(s).get(tbl), s"$tbl is a view — $what targets lake " +
+      "tables", s"$what: table $tbl not in catalog")
+
+  /** A catalog entry's lake table as (format, path): the one step that
+    * turns a stored provider into a [[LakeFormat]]. Views fail with
+    * `isView`, a missing entry with `missing`.
+    */
+  private def lakeEntry(e: Option[(String, String)], isView: => String,
+      missing: => String): (LakeFormat, String) = e match {
+    case Some(("view", _)) => throw new IllegalArgumentException(isView)
+    case Some((prov, path)) => (LakeFormat.of(prov), path)
+    case None => throw new IllegalArgumentException(missing)
   }
+
+  /** The format a CREATE names with `USING` (deltalite by default). */
+  private def createFormat(spec: Option[String]): LakeFormat =
+    LakeFormat.of(spec.map(_.toLowerCase).getOrElse(DeltaLite.provider))
 
   private def runOptimize(s: SparkSession, tbl: String,
       zcolsRaw: String, targetRaw: String): DataFrame = {
-    val (provider, path) = maintTarget(s, "OPTIMIZE", tbl)
+    val (fmt, path) = maintTarget(s, "OPTIMIZE", tbl)
     requireNoTxn(s, "OPTIMIZE") // physical rewrite; not undoable cheaply
     val target = Option(targetRaw).map(_.toInt).getOrElse(
       math.max(1, s.sparkContext.defaultParallelism / 8))
@@ -453,13 +442,12 @@ object LakeSql {
       case Some(raw) =>
         val cols = raw.split(",").map(_.trim).filter(_.nonEmpty)
         require(cols.nonEmpty, "ZORDER BY needs at least one column")
-        require(provider == "deltalite",
+        require(fmt == DeltaLite,
           "OPTIMIZE … ZORDER BY is the deltalite Morton-order rewrite " +
-            s"(s18); $tbl uses $provider — convert or use plain OPTIMIZE")
+            s"(s18); $tbl uses ${fmt.provider} — convert or use plain " +
+            "OPTIMIZE")
         DeltaLite.compactZOrder(s, path, cols.toSeq, target)
-      case None =>
-        if (provider == "deltalite") DeltaLite.compact(s, path, target)
-        else { IcebergLite.compact(s, path, target); () }
+      case None => fmt.compact(s, path, target)
     }
     s.emptyDataFrame
   }
@@ -467,12 +455,11 @@ object LakeSql {
   private def runVacuumTable(s: SparkSession, tbl: String,
       retainRaw: String): DataFrame = {
     import s.implicits._
-    val (provider, path) = maintTarget(s, "VACUUM", tbl)
+    val (fmt, path) = maintTarget(s, "VACUUM", tbl)
     requireNoTxn(s, "VACUUM") // deletes files; time travel shrinks
     val retain = Option(retainRaw).map(_.toInt).getOrElse(1)
     val n =
-      if (provider == "deltalite")
-        DeltaLite.vacuum(s, path, retainVersions = retain)
+      if (fmt == DeltaLite) DeltaLite.vacuum(s, path, retainVersions = retain)
       else IcebergLite.expireSnapshots(s, path, retain = retain)
     Seq(n.toString.toLong).toDF("files_removed")
   }
@@ -709,7 +696,7 @@ object LakeSql {
     val (prov, path) = catalog(s).getOrElse(table.toLowerCase,
       throw new IllegalArgumentException(
         s"CREATE INDEX: table $table is not in the catalog"))
-    require(prov == "deltalite",
+    require(prov == DeltaLite.provider,
       s"CREATE INDEX routes to the per-file bloom index, which lives " +
         s"on deltalite tables; $table uses $prov")
     graft.sources.BloomIndex.build(s, path, cols.head)
@@ -947,8 +934,6 @@ object LakeSql {
   def attachedTable(s: SparkSession, alias: String, name: String):
       DataFrame =
     attachedEntries(s, alias).get(name) match {
-      case Some(("deltalite", p)) => DeltaLite.snapshot(s, p)
-      case Some(("iceberglite", p)) => IcebergLite.snapshot(s, p)
       case Some(("view", text)) =>
         // A view stored in an ATTACHED catalog binds its text in THAT
         // catalog's scope (bare names resolve against the attached
@@ -959,8 +944,7 @@ object LakeSql {
         viewDepth.set(viewDepth.get() + 1)
         try expandAttachedView(s, alias, name, text)
         finally viewDepth.set(viewDepth.get() - 1)
-      case Some((other, _)) =>
-        throw new IllegalStateException(s"unknown provider $other")
+      case Some((prov, p)) => LakeFormat.of(prov).snapshot(s, p)
       case None => throw new IllegalArgumentException(
         s"table $alias.$name not in attached catalog")
     }
@@ -1053,15 +1037,12 @@ object LakeSql {
     */
   def table(s: SparkSession, name: String): DataFrame =
     catalog(s).get(name) match {
-      case Some(("deltalite", p)) => DeltaLite.snapshot(s, p)
-      case Some(("iceberglite", p)) => IcebergLite.snapshot(s, p)
       case Some(("view", text)) =>
         require(viewDepth.get() < 16,
           s"view chain deeper than 16 expanding $name — cycle?")
         viewDepth.set(viewDepth.get() + 1)
         try sql(s, text) finally viewDepth.set(viewDepth.get() - 1)
-      case Some((other, _)) =>
-        throw new IllegalStateException(s"unknown provider $other")
+      case Some((prov, p)) => LakeFormat.of(prov).snapshot(s, p)
       case None =>
         throw new IllegalArgumentException(s"table $name not in catalog")
     }
@@ -1132,24 +1113,17 @@ object LakeSql {
   /** Versioned snapshot of a cataloged table (`VERSION AS OF`): the log
     * version for DeltaLite, the snapshot id for IcebergLite.
     */
-  def tableAt(s: SparkSession, name: String, version: Long): DataFrame =
-    catalog(s).get(name) match {
-      case Some(("view", _)) => throw new IllegalArgumentException(
-        s"$name is a view - views do not support time travel")
-      case Some(("deltalite", p)) => DeltaLite.snapshot(s, p, version)
-      case Some(("iceberglite", p)) => IcebergLite.snapshot(s, p, version)
-      case Some((other, _)) =>
-        throw new IllegalStateException(s"unknown provider $other")
-      case None =>
-        throw new IllegalArgumentException(s"table $name not in catalog")
-    }
+  def tableAt(s: SparkSession, name: String, version: Long): DataFrame = {
+    val (fmt, p) = travelTarget(s, name)
+    fmt.snapshot(s, p, version)
+  }
 
-  /** Snapshot of a cataloged table as of a WALL-CLOCK instant
-    * (`TIMESTAMP AS OF`): resolves through the format's own commit
-    * stamps — DeltaLite commitInfo.timestamp, IcebergLite
-    * timestamp-ms — to the version/snapshot current at that instant
-    * (latest commit <= the instant, the rule both real formats use).
-    */
+  private def travelTarget(s: SparkSession,
+      name: String): (LakeFormat, String) =
+    lakeEntry(catalog(s).get(name),
+      s"$name is a view - views do not support time travel",
+      s"table $name not in catalog")
+
   /** Evaluate a `TIMESTAMP AS OF` expression to epoch millis: cast to
     * TIMESTAMP under the session zone (exactly what Spark's own
     * TimeTravelSpec does) and eval — the grammar guarantees a foldable
@@ -1168,36 +1142,26 @@ object LakeSql {
     Math.floorDiv(micros.asInstanceOf[Long], 1000L)
   }
 
-  def tableAsOf(s: SparkSession, name: String, tsMillis: Long): DataFrame =
-    catalog(s).get(name) match {
-      case Some(("view", _)) => throw new IllegalArgumentException(
-        s"$name is a view - views do not support time travel")
-      case Some(("deltalite", p)) =>
-        DeltaLite.snapshot(s, p, DeltaLite.versionAt(s, p, tsMillis))
-      case Some(("iceberglite", p)) =>
-        IcebergLite.snapshot(s, p, IcebergLite.snapshotIdAt(s, p, tsMillis))
-      case Some((other, _)) =>
-        throw new IllegalStateException(s"unknown provider $other")
-      case None =>
-        throw new IllegalArgumentException(s"table $name not in catalog")
-    }
+  /** Snapshot of a cataloged table as of a WALL-CLOCK instant
+    * (`TIMESTAMP AS OF`): resolves through the format's own commit
+    * stamps — DeltaLite commitInfo.timestamp, IcebergLite
+    * timestamp-ms — to the version/snapshot current at that instant
+    * (latest commit <= the instant, the rule both real formats use).
+    */
+  def tableAsOf(s: SparkSession, name: String, tsMillis: Long): DataFrame = {
+    val (fmt, p) = travelTarget(s, name)
+    fmt.snapshot(s, p, fmt.versionAt(s, p, tsMillis))
+  }
 
   /** Snapshot of a cataloged table as of a NAMED REF (`VERSION AS OF
     * 'branch-or-tag'`) — IcebergLite refs only; DeltaLite has no named
     * refs in the protocol.
     */
   def tableAtRef(s: SparkSession, name: String, ref: String): DataFrame =
-    catalog(s).get(name) match {
-      case Some(("view", _)) => throw new IllegalArgumentException(
-        s"$name is a view - views do not support time travel")
-      case Some(("iceberglite", p)) => IcebergLite.snapshotByRef(s, p, ref)
-      case Some(("deltalite", _)) =>
-        throw new IllegalArgumentException(
-          s"deltalite tables have no named refs; use VERSION AS OF <n>")
-      case Some((other, _)) =>
-        throw new IllegalStateException(s"unknown provider $other")
-      case None =>
-        throw new IllegalArgumentException(s"table $name not in catalog")
+    travelTarget(s, name) match {
+      case (IcebergLite, p) => IcebergLite.snapshotByRef(s, p, ref)
+      case (fmt, _) => throw new IllegalArgumentException(
+        s"${fmt.provider} tables have no named refs; use VERSION AS OF <n>")
     }
 
   /** One text statement, any kind — the `Connection::Query` analog.
@@ -1520,8 +1484,7 @@ object LakeSql {
     forEachConcurrently(specs.toSeq) { case (n, provider) =>
       val df = s.read.parquet(s"$dir/$n.parquet")
       val loc = s"${dir.stripSuffix("/")}/imported/$n"
-      if (provider == "deltalite") DeltaLite.create(s, loc, df, Seq.empty)
-      else IcebergLite.create(s, loc, df, Seq.empty)
+      LakeFormat.of(provider).create(s, loc, df)
       registerEntry(s, n, provider, loc)
     }
     val schema = readSmallFile(s, s"$dir/schema.sql").trim
@@ -5915,33 +5878,7 @@ object LakeSql {
       case _ => throw new IllegalArgumentException(
         s"unsupported RETURNING form: $statement")
     }
-    def resolveTarget(rel: LogicalPlan): (String, String) = {
-      val parts = partsOf(rel)
-      val pp =
-        if (parts.length == 2 && attached(s).contains(parts.head))
-          attachedEntries(s, parts.head).get(parts.last) match {
-            case Some(("view", _)) => throw new IllegalArgumentException(
-              s"${parts.mkString(".")} is a view — DML targets must be " +
-                "lake tables")
-            case Some(e) => e
-            case None => throw new IllegalArgumentException(
-              s"table ${parts.mkString(".")} not in attached catalog")
-          }
-        else catalog(s).get(parts.last) match {
-          case Some(("view", _)) => throw new IllegalArgumentException(
-            s"${parts.last} is a view — DML targets must be lake tables")
-          case Some(e) => e
-          case None => throw new IllegalArgumentException(
-            s"unknown lake table ${parts.last}")
-        }
-      pp
-    }
-    def snapshotAt(provider: String, path: String, v: Long): DataFrame =
-      if (provider == "iceberglite") IcebergLite.snapshot(s, path, v)
-      else DeltaLite.snapshot(s, path, v)
-    def versionOf(provider: String, path: String): Long =
-      if (provider == "iceberglite") IcebergLite.currentSnapshotId(s, path)
-      else DeltaLite.latestVersion(s, path)
+    def resolveTarget(rel: LogicalPlan) = dmlTarget(s, Map.empty, rel)
     def project(df: DataFrame): DataFrame = {
       val sels = splitTopCommas(exprs).flatMap(e =>
         if (e.trim == "*") df.columns.toSeq.map(c => s"`$c`") else Seq(e))
@@ -5949,12 +5886,12 @@ object LakeSql {
     }
     s.sessionState.sqlParser.parsePlan(normLit(dml)) match {
       case DeleteFromTable(rel, cond) =>
-        val (provider, path) = resolveTarget(rel)
-        val pre = versionOf(provider, path)
+        val (fmt, path) = resolveTarget(rel)
+        val pre = fmt.latestVersion(s, path)
         execute(s, Map.empty, dml)
-        project(snapshotAt(provider, path, pre).filter(Glue.column(cond)))
+        project(fmt.snapshot(s, path, pre).filter(Glue.column(cond)))
       case UpdateTable(rel, assignments, cond) =>
-        val (provider, path) = resolveTarget(rel)
+        val (fmt, path) = resolveTarget(rel)
         val asg = assignments.map {
           case Assignment(k: UnresolvedAttribute, v) =>
             k.name.toLowerCase -> Glue.column(v)
@@ -5963,9 +5900,9 @@ object LakeSql {
         }.toMap
         val pred = cond.map(Glue.column).getOrElse(
           org.apache.spark.sql.functions.lit(true))
-        val pre = versionOf(provider, path)
+        val pre = fmt.latestVersion(s, path)
         execute(s, Map.empty, dml)
-        val before = snapshotAt(provider, path, pre)
+        val before = fmt.snapshot(s, path, pre)
         // the post-image: assignments evaluated over the PRE rows —
         // exactly what updateWhere wrote for the matching rows. Each
         // applied assignment casts to the column's DECLARED type (the
@@ -5986,20 +5923,19 @@ object LakeSql {
         // pre-rows as if inserted.
         require(!ins.overwrite,
           "RETURNING is not supported on INSERT OVERWRITE")
-        val (provider, path) = resolveTarget(ins.table)
-        val pre = versionOf(provider, path)
+        val (fmt, path) = resolveTarget(ins.table)
+        val pre = fmt.latestVersion(s, path)
         execute(s, Map.empty, dml)
+        // Delta reads its change feed; Iceberg diffs the two snapshots.
         val inserted =
-          if (provider == "iceberglite") {
-            val post = IcebergLite.currentSnapshotId(s, path)
-            IcebergLite.snapshot(s, path, post)
-              .exceptAll(IcebergLite.snapshot(s, path, pre))
-          } else DeltaLite.tableChanges(s, path, pre)
+          if (fmt == DeltaLite) DeltaLite.tableChanges(s, path, pre)
             // pin to the commit's ADDED rows: a non-appends-only
             // change window also carries delete pre-images
             .filter(org.apache.spark.sql.functions
               .col("_change_type") === "insert")
             .drop("_change_type")
+          else fmt.snapshot(s, path, fmt.latestVersion(s, path))
+            .exceptAll(fmt.snapshot(s, path, pre))
         project(inserted)
       case other => throw new IllegalArgumentException(
         s"RETURNING supports INSERT/UPDATE/DELETE, got: $other")
@@ -6018,15 +5954,11 @@ object LakeSql {
     * that gives bare INSERT OR REPLACE / OR IGNORE and key-less
     * ON CONFLICT their keys.
     */
-  private def declaredKeys(s: SparkSession, provider: String,
-      path: String): Option[Seq[String]] = {
-    val props =
-      if (provider == "iceberglite") IcebergLite.tableProperties(s, path)
-      else DeltaLite.tableConfig(s, path)
-    props.get("graft.keys")
+  private def declaredKeys(s: SparkSession, fmt: LakeFormat,
+      path: String): Option[Seq[String]] =
+    fmt.tableProperties(s, path).get("graft.keys")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .filter(_.nonEmpty)
-  }
 
   // INSERT OR REPLACE / OR IGNORE — DuckDB's PK-implied upsert
   // shorthand. The conflict columns come from the table's declared
@@ -6045,14 +5977,10 @@ object LakeSql {
   private[graft] def runInsertOr(s: SparkSession,
       statement: String): DataFrame = statement match {
     case InsertOrRe(mode, tbl, source) =>
-      val (provider, path) = catalog(s).get(tbl) match {
-        case Some(("view", _)) => throw new IllegalArgumentException(
-          s"$tbl is a view — INSERT OR $mode targets must be lake tables")
-        case Some(pp) => pp
-        case None => throw new IllegalArgumentException(
-          s"INSERT OR $mode: table $tbl not in catalog")
-      }
-      val keys = declaredKeys(s, provider, path).getOrElse(
+      val (fmt, path) = lakeEntry(catalog(s).get(tbl),
+        s"$tbl is a view — INSERT OR $mode targets must be lake tables",
+        s"INSERT OR $mode: table $tbl not in catalog")
+      val keys = declaredKeys(s, fmt, path).getOrElse(
         throw new IllegalArgumentException(
           s"INSERT OR ${mode.toUpperCase} needs the table's conflict " +
             s"columns and $tbl declares none — declare them at CREATE " +
@@ -6143,13 +6071,10 @@ object LakeSql {
   }
 
   private def joinDmlTarget(s: SparkSession, tbl: String,
-      what: String): (String, String) = catalog(s).get(tbl) match {
-    case Some(("view", _)) => throw new IllegalArgumentException(
-      s"$tbl is a view — $what targets must be lake tables")
-    case Some(pp) => pp
-    case None => throw new IllegalArgumentException(
+      what: String): (LakeFormat, String) =
+    lakeEntry(catalog(s).get(tbl),
+      s"$tbl is a view — $what targets must be lake tables",
       s"$what: table $tbl not in catalog")
-  }
 
   private[graft] def runUpdateFrom(s: SparkSession, st: String): DataFrame = {
     import s.implicits._
@@ -6162,8 +6087,8 @@ object LakeSql {
       if (whereIdx >= 0) (afterFrom.substring(0, whereIdx),
         afterFrom.substring(whereIdx + 5).trim.stripSuffix(";").trim)
       else (afterFrom.trim.stripSuffix(";"), "TRUE")
-    val (provider, path) = joinDmlTarget(s, tbl, "UPDATE … FROM")
-    recordTableTouch(s, provider, path)
+    val (fmt, path) = joinDmlTarget(s, tbl, "UPDATE … FROM")
+    recordTableTouch(s, fmt, path)
     val schema = table(s, tbl).schema
     val ta = Option(aliasOpt).getOrElse(tbl)
     val (srcSql, sa) = parseJoinDmlSource(srcSpec, "UPDATE … FROM")
@@ -6230,8 +6155,7 @@ object LakeSql {
         val post = sql(s, s"""SELECT $colsSql FROM $tbl AS $ta
           LEFT JOIN (SELECT *, TRUE AS __gf_m FROM $srcView) AS $sa
           ON ($cond)""")
-        if (provider == "iceberglite") IcebergLite.overwrite(s, path, post)
-        else DeltaLite.overwrite(s, path, post)
+        fmt.overwrite(s, path, post)
       }
       Seq(nm).toDF("count")
     } finally s.catalog.dropTempView(srcView)
@@ -6246,8 +6170,8 @@ object LakeSql {
       if (whereIdx >= 0) (rest.substring(0, whereIdx),
         rest.substring(whereIdx + 5).trim.stripSuffix(";").trim)
       else (rest.trim.stripSuffix(";"), "TRUE")
-    val (provider, path) = joinDmlTarget(s, tbl, "DELETE … USING")
-    recordTableTouch(s, provider, path)
+    val (fmt, path) = joinDmlTarget(s, tbl, "DELETE … USING")
+    recordTableTouch(s, fmt, path)
     val schema = table(s, tbl).schema
     val ta = Option(aliasOpt).getOrElse(tbl)
     val (srcSql, sa) = parseJoinDmlSource(srcSpec, "DELETE … USING")
@@ -6267,8 +6191,7 @@ object LakeSql {
           .map(f => s"$ta.$f AS $f").mkString(", ")
         val post = sql(s, s"""SELECT $keepCols FROM $tbl AS $ta
           LEFT ANTI JOIN $srcView AS $sa ON ($cond)""")
-        if (provider == "iceberglite") IcebergLite.overwrite(s, path, post)
-        else DeltaLite.overwrite(s, path, post)
+        fmt.overwrite(s, path, post)
       }
       Seq(nDel).toDF("count")
     } finally s.catalog.dropTempView(srcView)
@@ -6280,20 +6203,16 @@ object LakeSql {
     import s.implicits._
     statement match {
       case OnConflictRe(tbl, source, keyList, action, assigns) =>
-        val (provider, path) = catalog(s).get(tbl) match {
-          case Some(("view", _)) => throw new IllegalArgumentException(
-            s"$tbl is a view — ON CONFLICT targets must be lake tables")
-          case Some(pp) => pp
-          case None => throw new IllegalArgumentException(
-            s"ON CONFLICT: table $tbl not in catalog")
-        }
-        recordTableTouch(s, provider, path)
+        val (fmt, path) = lakeEntry(catalog(s).get(tbl),
+          s"$tbl is a view — ON CONFLICT targets must be lake tables",
+          s"ON CONFLICT: table $tbl not in catalog")
+        recordTableTouch(s, fmt, path)
         val schema = table(s, tbl).schema
         // bare ON CONFLICT (no column list) resolves to the table's
         // declared graft.keys; keyless tables keep the loud refusal
         val keys =
           if (keyList != null) splitTopCommas(keyList).map(_.trim)
-          else declaredKeys(s, provider, path).getOrElse(
+          else declaredKeys(s, fmt, path).getOrElse(
             throw new IllegalArgumentException(
               s"ON CONFLICT without a column list needs declared " +
                 s"conflict columns and $tbl declares none — declare " +
@@ -6320,8 +6239,7 @@ object LakeSql {
             table(s, tbl).select(keys.map(col): _*), keys, "left_anti")
           val obs = org.apache.spark.sql.Observation()
           val df = fresh.observe(obs, count(lit(1)).as("n"))
-          if (provider == "deltalite") DeltaLite.append(s, path, df)
-          else IcebergLite.append(s, path, df)
+          fmt.append(s, path, df)
           Seq(obs.get("n").asInstanceOf[Long]).toDF("count")
         } else {
           val AsgRe = """(?is)^([A-Za-z_]\w*)\s*=\s*excluded\.([A-Za-z_]\w*)$""".r
@@ -6342,8 +6260,7 @@ object LakeSql {
               s"(full-row upsert): expected ${wanted.mkString(", ")}, " +
               s"got ${assigned.mkString(", ")}")
           val n = src.count()
-          if (provider == "deltalite") DeltaLite.merge(s, path, src, keys)
-          else IcebergLite.merge(s, path, src, keys)
+          fmt.merge(s, path, src, keys)
           Seq(n).toDF("count")
         }
       case _ => throw new IllegalArgumentException(
@@ -6476,14 +6393,10 @@ object LakeSql {
       require(!opts.contains("partition_by"),
         "COPY FROM: PARTITION_BY applies only to COPY … TO")
       require(!isQuery, "COPY … FROM: the target must be a table name")
-      val (provider, tpath) = catalog(s).get(source) match {
-        case Some(("view", _)) => throw new IllegalArgumentException(
-          s"$source is a view — COPY FROM targets must be lake tables")
-        case Some(pp) => pp
-        case None => throw new IllegalArgumentException(
-          s"COPY FROM: table $source not in catalog")
-      }
-      recordTableTouch(s, provider, tpath)
+      val (lake, tpath) = lakeEntry(catalog(s).get(source),
+        s"$source is a view — COPY FROM targets must be lake tables",
+        s"COPY FROM: table $source not in catalog")
+      recordTableTouch(s, lake, tpath)
       // The TARGET's schema types the load (DuckDB rule): csv/json
       // columns land typed, in table column order. Parquet arrives
       // already typed, so its own schema is CHECKED against the
@@ -6509,8 +6422,7 @@ object LakeSql {
       val df = loaded
         .observe(obs, org.apache.spark.sql.functions.count(
           org.apache.spark.sql.functions.lit(1)).as("n"))
-      if (provider == "deltalite") DeltaLite.append(s, tpath, df)
-      else IcebergLite.append(s, tpath, df)
+      lake.append(s, tpath, df)
       // The append's own write job fires the observation — the load
       // is scanned exactly once.
       Seq(obs.get("n").asInstanceOf[Long]).toDF("count")
@@ -7009,10 +6921,7 @@ object LakeSql {
           schema.fieldNames.exists(_.equalsIgnoreCase(k)),
           s"key column $k is not a column of the table"))
         if (!(catalog(s).contains(name) && ct.ignoreIfExists)) {
-          val provider = spec.provider.map(_.toLowerCase)
-            .getOrElse("deltalite")
-          require(Set("deltalite", "iceberglite").contains(provider),
-            s"unsupported provider $provider")
+          val fmt = createFormat(spec.provider)
           val loc = spec.location.getOrElse(
             s"${s.sessionState.conf.warehousePath.stripSuffix("/")}/$name")
           val partCols = ct.partitioning.map {
@@ -7025,11 +6934,8 @@ object LakeSql {
             s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
           val config = if (keys.nonEmpty)
             Map("graft.keys" -> keys.mkString(",")) else Map.empty[String, String]
-          if (provider == "deltalite")
-            DeltaLite.create(s, loc, empty, partCols, config = config)
-          else IcebergLite.create(s, loc, empty, partCols,
-            properties = config)
-          register(s, name, provider, loc)
+          fmt.create(s, loc, empty, partCols, config)
+          registerEntry(s, name, fmt.provider, loc)
           recordCatalogUndo(s) { dropEntry(s, name); () }
         }
         s.emptyDataFrame
@@ -7070,26 +6976,21 @@ object LakeSql {
             require(specProps.isEmpty,
               "TBLPROPERTIES on a replace of an existing table is not " +
                 "supported — properties travel with the table")
-            recordTableTouch(s, prov, path)
-            if (prov == "iceberglite") IcebergLite.overwrite(s, path, df)
-            else DeltaLite.overwrite(s, path, df)
+            val fmt = LakeFormat.of(prov)
+            recordTableTouch(s, fmt, path)
+            fmt.overwrite(s, path, df)
           case None =>
             require(orCreate,
               s"REPLACE TABLE: $name does not exist — use CREATE OR " +
                 "REPLACE TABLE")
-            val provider = specProvider.map(_.toLowerCase)
-              .getOrElse("deltalite")
-            require(Set("deltalite", "iceberglite").contains(provider),
-              s"unsupported provider $provider")
+            val fmt = createFormat(specProvider)
             val loc = specLocation.getOrElse(
               s"${s.sessionState.conf.warehousePath.stripSuffix("/")}/$name")
             require(specProps.isEmpty,
               "TBLPROPERTIES on CREATE OR REPLACE TABLE is not " +
                 "supported — declare keys on a plain CREATE TABLE")
-            if (provider == "deltalite")
-              DeltaLite.create(s, loc, df, Seq.empty)
-            else IcebergLite.create(s, loc, df, Seq.empty)
-            register(s, name, provider, loc)
+            fmt.create(s, loc, df)
+            registerEntry(s, name, fmt.provider, loc)
             recordCatalogUndo(s) { dropEntry(s, name); () }
         }
         s.emptyDataFrame
@@ -7117,17 +7018,13 @@ object LakeSql {
           case _ => ()
         }
         if (!(attachedEntries(s, alias).contains(name) && ignoreIfExists)) {
-          val provider = specProvider.map(_.toLowerCase)
-            .getOrElse("deltalite")
-          require(Set("deltalite", "iceberglite").contains(provider),
-            s"unsupported provider $provider")
+          val fmt = createFormat(specProvider)
           val loc = specLocation.getOrElse(s"${root.stripSuffix("/")}/$name")
           require(partitioning.isEmpty,
             "partitioned CTAS into an attached catalog is not supported")
           val df = Glue.dataFrame(s, query)
-          if (provider == "deltalite") DeltaLite.create(s, loc, df, Seq.empty)
-          else IcebergLite.create(s, loc, df, Seq.empty)
-          appendOp(s, root, "register", name, provider, loc)
+          fmt.create(s, loc, df)
+          appendOp(s, root, "register", name, fmt.provider, loc)
           recordCatalogUndo(s) { appendOp(s, root, "drop", name) }
         }
         s.emptyDataFrame
@@ -7144,10 +7041,7 @@ object LakeSql {
             s"unsupported table spec: $other")
         }
         if (!(catalog(s).contains(name) && ignoreIfExists)) {
-          val provider = specProvider.map(_.toLowerCase)
-            .getOrElse("deltalite")
-          require(Set("deltalite", "iceberglite").contains(provider),
-            s"unsupported provider $provider")
+          val fmt = createFormat(specProvider)
           val loc = specLocation.getOrElse(
             s"${s.sessionState.conf.warehousePath.stripSuffix("/")}/$name")
           val partCols = partitioning.map {
@@ -7175,10 +7069,8 @@ object LakeSql {
               s"graft.keys column $k is not a column of the table"))
             Map("graft.keys" -> ks.mkString(","))
           }.getOrElse(Map.empty[String, String])
-          if (provider == "deltalite")
-            DeltaLite.create(s, loc, df, partCols, config = config)
-          else IcebergLite.create(s, loc, df, partCols, properties = config)
-          register(s, name, provider, loc)
+          fmt.create(s, loc, df, partCols, config)
+          registerEntry(s, name, fmt.provider, loc)
           recordCatalogUndo(s) { dropEntry(s, name); () }
         }
         s.emptyDataFrame
@@ -7346,22 +7238,18 @@ object LakeSql {
       // stable field ids (iceberglite) or column mapping's physical
       // names (deltalite).
       case AddColumns(tbl, colsToAdd) =>
-        val (provider, path) = lookupAlterTarget(s, tbl)
+        val (fmt, path) = lookupAlterTarget(s, tbl)
         colsToAdd.foreach { c =>
           require(c.path.isEmpty,
             s"only top-level columns can be added, got ${c.name}")
-          if (provider == "deltalite")
-            DeltaLite.addColumn(s, path, c.colName, c.dataType)
-          else IcebergLite.addColumn(s, path, c.colName, c.dataType)
+          fmt.addColumn(s, path, c.colName, c.dataType)
         }
         s.emptyDataFrame
       case RenameColumn(tbl, column, newName) =>
-        val (provider, path) = lookupAlterTarget(s, tbl)
+        val (fmt, path) = lookupAlterTarget(s, tbl)
         require(column.name.length == 1,
           s"only top-level columns can be renamed, got ${column.name}")
-        if (provider == "deltalite")
-          DeltaLite.renameColumn(s, path, column.name.head, newName)
-        else IcebergLite.renameColumn(s, path, column.name.head, newName)
+        fmt.renameColumn(s, path, column.name.head, newName)
         s.emptyDataFrame
       // ALTER TABLE … DROP COLUMN (r16): metadata-only on either
       // format — Delta via column mapping (surviving fields keep
@@ -7370,19 +7258,14 @@ object LakeSql {
       // table size; files keep the orphan column until compaction.
       case org.apache.spark.sql.catalyst.plans.logical
           .DropColumns(tbl, cols, ifExists) =>
-        val (provider, path) = lookupAlterTarget(s, tbl)
+        val (fmt, path) = lookupAlterTarget(s, tbl)
         cols.foreach { c =>
           require(c.name.length == 1,
             s"only top-level columns can be dropped, got ${c.name}")
           val name = c.name.head
-          val have =
-            if (provider == "deltalite")
-              DeltaLite.snapshot(s, path).schema.fieldNames
-            else IcebergLite.snapshot(s, path).schema.fieldNames
-          if (have.contains(name)) {
-            if (provider == "deltalite") DeltaLite.dropColumn(s, path, name)
-            else IcebergLite.dropColumn(s, path, name)
-          } else require(ifExists, s"no column $name")
+          if (fmt.snapshot(s, path).schema.fieldNames.contains(name))
+            fmt.dropColumn(s, path, name)
+          else require(ifExists, s"no column $name")
         }
         s.emptyDataFrame
       // ALTER TABLE … RENAME TO (r16): a catalog-level re-binding —
@@ -7430,20 +7313,13 @@ object LakeSql {
         }
         require(parts.length == 1,
           "TRUNCATE supports unqualified names in the primary catalog")
-        val (provider, path) = catalog(s).get(parts.head) match {
-          case Some(("view", _)) => throw new IllegalArgumentException(
-            s"${parts.head} is a view — TRUNCATE targets lake tables")
-          case Some(pp) => pp
-          case None => throw new IllegalArgumentException(
-            s"TRUNCATE: table ${parts.head} not in catalog")
-        }
-        recordTableTouch(s, provider, path)
-        val snap = if (provider == "iceberglite")
-          IcebergLite.snapshot(s, path) else DeltaLite.snapshot(s, path)
+        val (fmt, path) = lakeEntry(catalog(s).get(parts.head),
+          s"${parts.head} is a view — TRUNCATE targets lake tables",
+          s"TRUNCATE: table ${parts.head} not in catalog")
+        recordTableTouch(s, fmt, path)
+        val snap = fmt.snapshot(s, path)
         val n = snap.count()
-        val empty = snap.limit(0)
-        if (provider == "iceberglite") IcebergLite.overwrite(s, path, empty)
-        else DeltaLite.overwrite(s, path, empty)
+        fmt.overwrite(s, path, snap.limit(0))
         Seq(n).toDF("count")
       case plan if plan.collectWithSubqueries {
           case _: RelationTimeTravel => () }.nonEmpty =>
@@ -7543,24 +7419,41 @@ object LakeSql {
     * session catalog.
     */
   private def lookupAlterTarget(s: SparkSession,
-      tbl: LogicalPlan): (String, String) = {
+      tbl: LogicalPlan): (LakeFormat, String) = {
     val name = tbl match {
       case u: org.apache.spark.sql.catalyst.analysis.UnresolvedTable =>
         u.multipartIdentifier.last
       case other => throw new IllegalArgumentException(
         s"unsupported ALTER target: $other")
     }
-    catalog(s).get(name) match {
-      case Some(("view", _)) => throw new IllegalArgumentException(
-        s"$name is a view — ALTER targets must be lake tables")
-      case Some(pp) =>
-        // Schema changes roll back with the table restore (both
-        // formats' restore paths reinstate the prior metadata).
-        recordTableTouch(s, pp._1, pp._2)
-        pp
-      case None =>
-        throw new IllegalArgumentException(s"table $name not in catalog")
-    }
+    val (fmt, path) = lakeEntry(catalog(s).get(name),
+      s"$name is a view — ALTER targets must be lake tables",
+      s"table $name not in catalog")
+    // Schema changes roll back with the table restore (both formats'
+    // restore points reinstate the prior metadata).
+    recordTableTouch(s, fmt, path)
+    (fmt, path)
+  }
+
+  /** A DML target as (format, path) through either catalog: a qualified
+    * `alias.table` target resolves (and writes through) to the ATTACHED
+    * catalog, so INSERT/UPDATE/DELETE/MERGE work across catalogs
+    * exactly like reads; `tables` binds bare names to DeltaLite paths
+    * ahead of the session catalog.
+    */
+  private def dmlTarget(s: SparkSession, tables: Map[String, String],
+      rel: LogicalPlan): (LakeFormat, String) = {
+    val parts = partsOf(rel)
+    val n = parts.last
+    if (parts.length == 2 && attached(s).contains(parts.head))
+      lakeEntry(attachedEntries(s, parts.head).get(n),
+        s"${parts.mkString(".")} is a view — DML targets must be lake " +
+          "tables",
+        s"table ${parts.mkString(".")} not in attached catalog")
+    else tables.get(n).map((DeltaLite: LakeFormat) -> _).getOrElse(
+      lakeEntry(catalog(s).get(n),
+        s"$n is a view — DML targets must be lake tables",
+        s"unknown lake table $n"))
   }
 
   /** Execute one DML statement. `tables` maps statement table names to
@@ -7568,58 +7461,22 @@ object LakeSql {
     * catalog (CREATE TABLE-registered — either provider). Returns the
     * affected table's path.
     */
-  /** True when every expression in `df`'s analyzed plan (subqueries
-    * included) is deterministic — the gate for evaluating a MERGE
-    * source more than once instead of materializing it.
-    */
-  private def planDeterministic(df: DataFrame): Boolean =
-    graft.util.Plans.deterministic(df)
-
   def execute(s: SparkSession, tables: Map[String, String],
       sql: String): String = {
-    // (provider, path) through either catalog: a qualified
-    // `alias.table` target resolves (and writes through) to the
-    // ATTACHED catalog, so INSERT/UPDATE/DELETE/MERGE work across
-    // catalogs exactly like reads.
-    def resolve(rel: LogicalPlan): (String, String) = {
-      val parts = partsOf(rel)
-      val pp =
-        if (parts.length == 2 && attached(s).contains(parts.head))
-          attachedEntries(s, parts.head).get(parts.last) match {
-            case Some(("view", _)) => throw new IllegalArgumentException(
-              s"${parts.mkString(".")} is a view — DML targets must be " +
-                "lake tables")
-            case Some(e) => e
-            case None => throw new IllegalArgumentException(
-              s"table ${parts.mkString(".")} not in attached catalog")
-          }
-        else {
-          val n = parts.last
-          tables.get(n).map(("deltalite", _)).getOrElse(
-            catalog(s).get(n) match {
-              case Some(("view", _)) => throw new IllegalArgumentException(
-                s"$n is a view — DML targets must be lake tables")
-              case Some(e) => e
-              case None =>
-                throw new IllegalArgumentException(s"unknown lake table $n")
-            })
-        }
-      // Transaction hook: the DML target's pre-state anchors here
-      // (first touch wins; later touches of the same path are no-ops).
-      recordTableTouch(s, pp._1, pp._2)
-      pp
+    // Transaction hook: the DML target's pre-state anchors here (first
+    // touch wins; later touches of the same path are no-ops).
+    def resolve(rel: LogicalPlan): (LakeFormat, String) = {
+      val (fmt, p) = dmlTarget(s, tables, rel)
+      recordTableTouch(s, fmt, p)
+      (fmt, p)
     }
-    def pathOf(rel: LogicalPlan): String = resolve(rel)._2
-    def isIceberg(rel: LogicalPlan): Boolean =
-      resolve(rel)._1 == "iceberglite"
     s.sessionState.sqlParser.parsePlan(normLit(sql)) match {
       case DeleteFromTable(rel, cond) =>
-        val p = pathOf(rel)
-        if (isIceberg(rel)) IcebergLite.deleteWhere(s, p, Glue.column(cond))
-        else DeltaLite.deleteWhere(s, p, Glue.column(cond))
+        val (fmt, p) = resolve(rel)
+        fmt.deleteWhere(s, p, Glue.column(cond))
         p
       case UpdateTable(rel, assignments, cond) =>
-        val p = pathOf(rel)
+        val (fmt, p) = resolve(rel)
         val asg = assignments.map {
           case Assignment(k: UnresolvedAttribute, v) =>
             k.name -> Glue.column(v)
@@ -7628,11 +7485,10 @@ object LakeSql {
         }.toMap
         val pred = cond.map(Glue.column).getOrElse(
           org.apache.spark.sql.functions.lit(true))
-        if (isIceberg(rel)) IcebergLite.updateWhere(s, p, pred, asg)
-        else DeltaLite.updateWhere(s, p, pred, asg)
+        fmt.updateWhere(s, p, pred, asg)
         p
       case ins: InsertIntoStatement =>
-        val p = pathOf(ins.table)
+        val (fmt, p) = resolve(ins.table)
         // INSERT OVERWRITE replaces the whole table atomically (static
         // full-table overwrite); per-partition overwrite specs are not
         // bound — rejected loudly rather than silently widened.
@@ -7643,9 +7499,7 @@ object LakeSql {
         // position — ignoring the flags would land values in the wrong
         // columns silently. Missing columns fill NULL (the SQL rule);
         // unknown source columns refuse.
-        lazy val targetSchema =
-          if (isIceberg(ins.table)) IcebergLite.snapshot(s, p).schema
-          else DeltaLite.snapshot(s, p).schema
+        lazy val targetSchema = fmt.snapshot(s, p).schema
         def alignByName(src: org.apache.spark.sql.DataFrame)
             : org.apache.spark.sql.DataFrame = {
           val target = targetSchema
@@ -7704,12 +7558,8 @@ object LakeSql {
           else org.apache.spark.sql.functions.col(c)
             .cast(f.dataType).as(c)
         }: _*)
-        (isIceberg(ins.table), ins.overwrite) match {
-          case (true, false) => IcebergLite.append(s, p, coerced)
-          case (true, true) => IcebergLite.overwrite(s, p, coerced)
-          case (false, false) => DeltaLite.append(s, p, coerced)
-          case (false, true) => DeltaLite.overwrite(s, p, coerced)
-        }
+        if (ins.overwrite) fmt.overwrite(s, p, coerced)
+        else fmt.append(s, p, coerced)
         p
       // MERGE INTO … USING … ON <key equalities> WHEN MATCHED THEN
       // UPDATE SET * WHEN NOT MATCHED THEN INSERT * — the upsert form,
@@ -7721,7 +7571,7 @@ object LakeSql {
       // (the keys), which is what gives merge its well-defined
       // one-source-row-per-target-row contract.
       case m: MergeIntoTable =>
-        val p = pathOf(m.targetTable)
+        val (fmt, p) = resolve(m.targetTable)
         def eqKeys(e: Expression): Seq[String] = e match {
           case And(l, r) => eqKeys(l) ++ eqKeys(r)
           case EqualTo(a: UnresolvedAttribute, b: UnresolvedAttribute) =>
@@ -7740,10 +7590,8 @@ object LakeSql {
               "INSERT * is supported (unconditional upsert form)")
         }
         val src = Glue.dataFrame(s, m.sourceTable)
-        if (m.notMatchedBySourceActions.isEmpty) {
-          if (isIceberg(m.targetTable)) IcebergLite.merge(s, p, src, keys)
-          else DeltaLite.merge(s, p, src, keys)
-        } else {
+        if (m.notMatchedBySourceActions.isEmpty) fmt.merge(s, p, src, keys)
+        else {
           // WHEN NOT MATCHED BY SOURCE — the CDC full-sync idiom:
           // target rows whose key is ABSENT from the source DELETE or
           // UPDATE (optional AND narrows which). r18, stats-pruned
@@ -7758,12 +7606,10 @@ object LakeSql {
           // unconditional BY SOURCE action touches every absent row,
           // so there the candidate set is every file (the honest full
           // rewrite this path used to pay always).
-          import org.apache.spark.sql.functions.{coalesce, col, lit, not, when, count, min => fmin, max => fmax}
+          import org.apache.spark.sql.functions.{coalesce, col, lit, not, when, count, max => fmax}
           require(m.notMatchedBySourceActions.length == 1,
             "one WHEN NOT MATCHED BY SOURCE clause is supported")
-          val ice = isIceberg(m.targetTable)
-          val tgtSchema = (if (ice) IcebergLite.snapshot(s, p)
-            else DeltaLite.snapshot(s, p)).schema
+          val tgtSchema = fmt.snapshot(s, p).schema
           // A nondeterministic source must evaluate exactly ONCE (the
           // dup check would otherwise judge a different row set than
           // the rewrite writes) — materialize via localCheckpoint.
@@ -7771,36 +7617,23 @@ object LakeSql {
           // no materialization job, no executor memory held (guide §5).
           val srcRaw = src.select(tgtSchema.fieldNames.map(col).toSeq: _*)
           val srcCols =
-            if (planDeterministic(srcRaw)) srcRaw
+            if (graft.util.Plans.deterministic(srcRaw)) srcRaw
             else srcRaw.localCheckpoint()
           // ONE aggregate job: the per-key counts roll up into the dup
-          // check AND the key ranges the pruning needs (the old path
-          // paid a persist job plus a dedicated dup-check job). String
-          // keys never contribute a range — parquet footer string stats
-          // compare in UTF-16 code-unit order vs Spark min/max's UTF-8
-          // byte order, which disagree above the BMP.
+          // check AND the key ranges the pruning needs (the keyed
+          // merge's range predicate, LakeFormat.rangePred).
           val kc = keys.map(col)
-          val prunable = tgtSchema.fields.toSeq
-            .filter(f => keys.contains(f.name) &&
-              f.dataType != org.apache.spark.sql.types.StringType)
-            .map(_.name)
-          val aggs = fmax(col("_gf_n")).as("_maxn") +:
-            prunable.flatMap(k =>
-              Seq(fmin(col(k)).as(s"_lo_$k"), fmax(col(k)).as(s"_hi_$k")))
+          val rk = LakeFormat.rangeKeys(keys, tgtSchema)
+          val aggs = fmax(col("_gf_n")).as("_maxn") +: LakeFormat.rangeAggs(rk)
           val row = srcCols.groupBy(kc: _*)
             .agg(count(lit(1)).as("_gf_n"))
             .agg(aggs.head, aggs.tail: _*).head()
           require(row.isNullAt(0) || row.getLong(0) <= 1L,
             "merge: duplicate source keys — SET * replacement is " +
               "ambiguous; dedup the source")
-          val rangePred: org.apache.spark.sql.Column =
+          val rangePred =
             if (row.isNullAt(0)) lit(false) // empty source: no key matches
-            else if (prunable.isEmpty) lit(true)
-            else prunable.zipWithIndex.map { case (k, i) =>
-              val lo = row.get(1 + 2 * i); val hi = row.get(2 + 2 * i)
-              if (lo == null) lit(false)
-              else col(k) >= lit(lo) && col(k) <= lit(hi)
-            }.reduce(_ && _)
+            else LakeFormat.rangePred(rk, row, 1)
           val action = m.notMatchedBySourceActions.head
           val bySrcCond = action match {
             case DeleteAction(c) => c.map(Glue.column)
@@ -7812,10 +7645,8 @@ object LakeSql {
             case None => lit(true) // unconditional: every absent row acted on
             case Some(c) => rangePred || c
           }
-          val files = if (ice) IcebergLite.filesMayMatch(s, p, rewritePred)
-            else DeltaLite.filesMayMatch(s, p, rewritePred)
-          val subset = if (ice) IcebergLite.readSubset(s, p, files)
-            else DeltaLite.readSubset(s, p, files)
+          val files = fmt.filesMayMatch(s, p, rewritePred)
+          val subset = fmt.readSubset(s, p, files)
           // keys are proven unique above, so the anti-join needs no
           // distinct() — one exchange fewer in the rewrite (§2.4)
           val absent = subset.join(srcCols.select(kc: _*), keys, "left_anti")
@@ -7851,9 +7682,7 @@ object LakeSql {
             case other => throw new IllegalArgumentException(
               s"unsupported WHEN NOT MATCHED BY SOURCE action: $other")
           }
-          val merged = srcCols.unionByName(kept)
-          if (ice) IcebergLite.commitReplace(s, p, files, merged)
-          else DeltaLite.commitReplace(s, p, files, merged)
+          fmt.commitReplace(s, p, files, srcCols.unionByName(kept))
         }
         p
       case other =>

@@ -18,6 +18,8 @@ import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import LakeFormat.fileName
+
 /** Minimal open-table-format support speaking the public Delta Lake
   * transaction-log protocol: a table is a directory of immutable parquet
   * data files plus a `_delta_log/` of JSON commits, each a newline-
@@ -54,7 +56,9 @@ import org.apache.spark.sql.types._
   *    (appId, version) already in the log, making restart-prone
   *    producers (e.g. a streaming foreachBatch sink) exactly-once.
   */
-object DeltaLite {
+object DeltaLite extends LakeFormat {
+
+  val provider = "deltalite"
 
   private val Json = new ObjectMapper()
 
@@ -546,7 +550,7 @@ object DeltaLite {
     * under the current schema, and rows soft-deleted by a deletion
     * vector are filtered out.
     */
-  def snapshot(s: SparkSession, table: String, version: Long = -1L): DataFrame = {
+  def snapshot(s: SparkSession, table: String, version: Long): DataFrame = {
     val latest = latestVersion(s, table)
     require(latest >= 0, s"no delta log at $table")
     val v = if (version < 0) latest else version
@@ -975,20 +979,6 @@ object DeltaLite {
     st.entries.map(_.path).sorted
   }
 
-  /** Read a SUBSET of the current snapshot's files under the table
-    * schema, honoring deletion vectors; `fileCol`, when set, adds each
-    * row's data-file NAME. Auxiliary-index hook: an index that maps
-    * file → summary (e.g. a bloom filter) scans exactly the files it
-    * kept through here.
-    */
-  def readSubset(s: SparkSession, table: String, rels: Seq[String],
-      fileCol: Option[String] = None): DataFrame = {
-    val st = replay(s, table, latestVersion(s, table))
-    val want = rels.toSet
-    readEntries(s, table, st.schema,
-      st.entries.filter(e => want.contains(e.path)), fileCol)
-  }
-
   private def protocolAction: String =
     obj("protocol") { p =>
       p.put("minReaderVersion", 1)
@@ -1043,8 +1033,9 @@ object DeltaLite {
     */
   @volatile private[graft] var interleaveForTest: () => Unit = () => ()
 
+  /** Claim version `v` with `actions`; returns `v`. */
   private def writeCommit(s: SparkSession, table: String, v: Long,
-      actions: Seq[String], operation: String = "WRITE"): Unit = {
+      actions: Seq[String], operation: String = "WRITE"): Long = {
     interleaveForTest()
     val p = commitPath(table, v)
     // Every commit leads with a commitInfo action naming its operation
@@ -1091,6 +1082,7 @@ object DeltaLite {
         throw new java.io.IOException(s"commit race lost for $p")
       }
     }
+    v
   }
 
   /** Stage `df`, read back per-file footer stats, and return the add
@@ -1148,13 +1140,6 @@ object DeltaLite {
     }
   }
 
-  /** Create the table (version 0) from `df`, Hive-partitioned on
-    * `partitionColumns` when given (partition values live in the log's
-    * add actions and the directory layout, not the data files — and
-    * [[scan]]/[[deleteWhere]]/[[merge]] prune on them before stats).
-    * `txn` stamps the creating commit with an (appId, version)
-    * high-water mark for idempotent producers (see [[appendOnce]]).
-    */
   // ------------------------------------------------ generated columns
   // Delta generated columns: a column whose value is ALWAYS a declared
   // expression of other columns, recorded as `delta.generationExpression`
@@ -1377,16 +1362,33 @@ object DeltaLite {
     }
   }
 
+  /** Create the table (version 0) from `df`, Hive-partitioned on
+    * `partitionColumns` when given (partition values live in the log's
+    * add actions and the directory layout, not the data files — and
+    * [[scan]]/[[deleteWhere]]/[[merge]] prune on them before stats).
+    * `properties` is the metaData configuration.
+    */
   def create(s: SparkSession, table: String, df: DataFrame,
-      partitionColumns: Seq[String] = Nil,
-      txn: Option[(String, Long)] = None,
-      config: Map[String, String] = Map.empty): Unit = {
+      partitionColumns: Seq[String], properties: Map[String, String]): Long =
+    createAt(s, table, df, partitionColumns, properties, None)
+
+  /** [[create]] with the creating commit stamped with an (appId,
+    * version) `txn` high-water mark for idempotent producers (see
+    * [[appendOnce]]).
+    */
+  def create(s: SparkSession, table: String, df: DataFrame,
+      txn: Option[(String, Long)]): Long =
+    createAt(s, table, df, Nil, Map.empty, txn)
+
+  private def createAt(s: SparkSession, table: String, df: DataFrame,
+      partitionColumns: Seq[String], properties: Map[String, String],
+      txn: Option[(String, Long)]): Long = {
     require(latestVersion(s, table) < 0, s"table already exists at $table")
     partitionColumns.foreach(pc => require(df.schema.fieldNames.contains(pc),
       s"partition column $pc not in data"))
     writeCommit(s, table, 0L,
       protocolAction +:
-        metaDataAction(table, df.schema.json, partitionColumns, config) +:
+        metaDataAction(table, df.schema.json, partitionColumns, properties) +:
         stagedAdds(s, table, df, df.schema, partitionColumns) ++:
         txn.map { case (app, tv) => txnAction(app, tv) }.toSeq,
       operation = "CREATE TABLE")
@@ -1395,14 +1397,14 @@ object DeltaLite {
   /** The table's metadata configuration (the `delta.constraints.*` /
     * `graft.*` key space) at the current version.
     */
-  def tableConfig(s: SparkSession, table: String): Map[String, String] = {
+  def tableProperties(s: SparkSession, table: String): Map[String, String] = {
     val v = latestVersion(s, table)
     require(v >= 0, s"no delta log at $table")
     replay(s, table, v).config
   }
 
   /** Append `df` as a new version. */
-  def append(s: SparkSession, table: String, df: DataFrame): Unit = {
+  def append(s: SparkSession, table: String, df: DataFrame): Long = {
     val v = latestVersion(s, table)
     require(v >= 0, s"no delta log at $table")
     val st = replay(s, table, v)
@@ -1416,7 +1418,7 @@ object DeltaLite {
     * live file — readers see the old or the new state, never a mix.
     * Old files stay on disk for time travel until [[vacuum]].
     */
-  def overwrite(s: SparkSession, table: String, df: DataFrame): Unit = {
+  def overwrite(s: SparkSession, table: String, df: DataFrame): Long = {
     val v = latestVersion(s, table)
     require(v >= 0, s"no delta log at $table")
     val st = replay(s, table, v)
@@ -1728,8 +1730,6 @@ object DeltaLite {
       s"appendWithRetry: lost the commit race $maxAttempts times at $table")
   }
 
-  private def fileName(p: String): String = p.substring(p.lastIndexOf('/') + 1)
-
   /** Cap on the driver-side matched-file set a DML operation may
     * collect (`spark.graft.maxHitFiles` overrides). The hit-file sets
     * of delete/update/merge are metadata-sized by design — but a
@@ -1755,128 +1755,27 @@ object DeltaLite {
     names.toSet
   }
 
-  /** Copy-on-write MERGE (upsert) on `keys`: source rows REPLACE
-    * matching target rows and are INSERTED otherwise. Only target files
-    * containing a matching key are rewritten — found by ONE
-    * metadata-column scan joined against the source keys — so merging
-    * a small source into a 100 TB table rewrites the touched files,
-    * not the table. Per Delta MERGE semantics, multiple source rows
-    * matching the same target row is an error (which copy would win is
-    * ambiguous); duplicate source keys that match nothing insert all
-    * their copies. The rewrite itself is one anti-join (matched old
-    * rows drop out) plus a union of the source.
-    */
-  def merge(s: SparkSession, table: String, source: DataFrame,
-      keys: Seq[String]): Unit = {
+  private[sources] def live(s: SparkSession,
+      table: String): LakeFormat.Live = {
     val v = latestVersion(s, table)
     require(v >= 0, s"no delta log at $table")
     val st = replay(s, table, v)
-    val schema = st.schema
-    val srcCols = source.select(schema.fieldNames.map(col).toSeq: _*)
-    val srcKeyCounts = source.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("_src_n"))
-    // Stats-pruned candidate set (guide §6): above a file-count floor,
-    // one cheap source key-range aggregate lets per-file min/max stats
-    // drop files that cannot hold ANY source key BEFORE the
-    // hit-detection read — at 100 TB the candidate read follows the
-    // source's key locality, never the table. Below the floor the
-    // extra aggregate job costs more than the full (tiny) read it
-    // saves, so it is skipped — scale-adaptive, not core-count-tuned.
-    val candidateEntries =
-      if (st.entries.size < mergePruneFloor(s)) st.entries
-      else sourceKeyRangePred(source, keys, schema) match {
-        case None => st.entries
-        case Some(pred) => keptEntries(s, st, pred)
+    new LakeFormat.Live {
+      val schema: StructType = st.schema
+      val files: Seq[String] = st.entries.map(_.path)
+      def prune(pred: Column): Seq[String] =
+        keptEntries(s, st, pred).map(_.path)
+      def read(paths: Seq[String], fileCol: Option[String]): DataFrame = {
+        val want = paths.toSet
+        readEntries(s, table, schema,
+          st.entries.filter(e => want.contains(e.path)), fileCol)
       }
-    val (hitNames, maxMatches) =
-      if (candidateEntries.isEmpty) (Set.empty[String], 0L)
-      else {
-        val row = readEntries(s, table, schema, candidateEntries,
-            fileCol = Some("_gf"))
-          .join(srcKeyCounts, keys)
-          .agg(collect_set(col("_gf")).as("_files"), max(col("_src_n")))
-          .head()
-        (row.getSeq[String](0).toSet,
-          if (row.isNullAt(1)) 0L else row.getLong(1))
-      }
-    require(maxMatches <= 1L,
-      s"merge: $maxMatches source rows match the same target key — " +
-        "Delta MERGE forbids ambiguous multi-matches; dedup the source")
-    val hitEntries = st.entries
-      .filter(e => hitNames.contains(fileName(e.path)))
-    // No distinct() on the anti-join's key side: right-side duplicates
-    // cannot change a left_anti result, and dropping the Deduplicate
-    // saves one exchange in the rewrite query (guide §2.4).
-    val newData =
-      if (hitEntries.isEmpty) srcCols
-      else readEntries(s, table, schema, hitEntries)
-        .join(source.select(keys.map(col): _*), keys, "left_anti")
-        .unionByName(srcCols)
-    writeCommit(s, table, v + 1,
-      stagedAdds(s, table, newData, schema, st.partCols,
-        constraints = st.constraints) ++
-        hitEntries.map(e => removeAction(e.path)),
-      operation = "MERGE")
-  }
-
-  /** Conf: minimum live-file count before a keyed MERGE pays the
-    * source key-range aggregate that drives stats pruning. Local/tiny
-    * tables (bench scale) skip the extra job; production tables prune.
-    */
-  private[sources] def mergePruneFloor(s: SparkSession): Int =
-    s.conf.get("spark.graft.merge.pruneMinFiles", "8").toInt
-
-  /** Conservative "file may hold a source key" predicate from ONE
-    * aggregate over the source: AND over key columns of
-    * `key BETWEEN min(src.key) AND max(src.key)`. String keys are
-    * excluded — parquet footer string stats compare in UTF-16 code-unit
-    * order while Spark min/max order by UTF-8 bytes, and the two
-    * disagree above the BMP, so pruning on them could be unsound.
-    * None = nothing prunable (or an empty/all-null-key source, where
-    * `lit(false)` prunes everything a matched-arm rewrite could touch).
-    */
-  private[sources] def sourceKeyRangePred(source: DataFrame,
-      keys: Seq[String], schema: StructType): Option[Column] = {
-    val prunable = schema.fields.toSeq
-      .filter(f => keys.contains(f.name) && f.dataType != StringType)
-      .map(_.name)
-    if (prunable.isEmpty) return None
-    val aggs = prunable.flatMap(k =>
-      Seq(min(col(k)).as(s"_lo_$k"), max(col(k)).as(s"_hi_$k")))
-    val row = source.agg(aggs.head, aggs.tail: _*).head()
-    Some(prunable.zipWithIndex.map { case (k, i) =>
-      val lo = row.get(2 * i); val hi = row.get(2 * i + 1)
-      if (lo == null) lit(false)
-      else col(k) >= lit(lo) && col(k) <= lit(hi)
-    }.reduce(_ && _))
-  }
-
-  /** Live files `pred` may match, by conservative partition+stats
-    * pruning — the rewrite-candidate set for [[commitReplace]].
-    */
-  def filesMayMatch(s: SparkSession, table: String, pred: Column): Seq[String] = {
-    val v = latestVersion(s, table)
-    require(v >= 0, s"no delta log at $table")
-    keptEntries(s, replay(s, table, v), pred).map(_.path)
-  }
-
-  /** ONE atomic commit replacing exactly the `removed` live files with
-    * `add`'s rows — the pruned-rewrite primitive behind the stats-pruned
-    * full-sync MERGE (guide §6): untouched files ride into the new
-    * version by reference; a full-table overwrite is the degenerate
-    * case where `removed` is every live file.
-    */
-  def commitReplace(s: SparkSession, table: String, removed: Seq[String],
-      add: DataFrame, operation: String = "MERGE"): Unit = {
-    val v = latestVersion(s, table)
-    require(v >= 0, s"no delta log at $table")
-    val st = replay(s, table, v)
-    val live = st.entries.map(_.path).toSet
-    removed.foreach(p => require(live.contains(p), s"not a live file: $p"))
-    writeCommit(s, table, v + 1,
-      stagedAdds(s, table, add, st.schema, st.partCols,
-        constraints = st.constraints) ++ removed.map(p => removeAction(p)),
-      operation)
+      def replace(removed: Seq[String], add: DataFrame): Long =
+        writeCommit(s, table, v + 1,
+          stagedAdds(s, table, add, schema, st.partCols,
+            constraints = st.constraints) ++ removed.map(removeAction(_)),
+          operation = "MERGE")
+    }
   }
 
   /** MERGE-ON-READ MERGE via deletion vectors: matched target rows are
@@ -2089,11 +1988,11 @@ object DeltaLite {
     * (per the protocol, streaming readers may skip this commit
     * entirely).
     */
-  def compact(s: SparkSession, table: String, targetFiles: Int): Unit = {
+  def compact(s: SparkSession, table: String, targetFiles: Int): Long = {
     val v = latestVersion(s, table)
     require(v >= 0, s"no delta log at $table")
     val st = replay(s, table, v)
-    if (st.entries.isEmpty) return
+    if (st.entries.isEmpty) return v
     // Reading through readEntries applies deletion vectors, so
     // compaction also REBASES soft deletes into clean files (the DV
     // maintenance story: accumulated sidecars disappear here).
@@ -2190,6 +2089,11 @@ object DeltaLite {
           e.stats.map(_.toString), dataChange = true,
           e.dv.map(p => (p, e.dvCardinality)))),
       operation = "RESTORE")
+  }
+
+  def restorePoint(s: SparkSession, table: String): () => Unit = {
+    val v = latestVersion(s, table)
+    () => restore(s, table, v)
   }
 
   /** Streaming-source contract: the current log schema, its partition
@@ -2385,13 +2289,13 @@ object DeltaLite {
     * removes). Untouched files are untouched — the 100 TB-safe DML
     * shape.
     */
-  def deleteWhere(s: SparkSession, table: String, cond: Column): Unit = {
+  def deleteWhere(s: SparkSession, table: String, cond: Column): Long = {
     val v = latestVersion(s, table)
     require(v >= 0, s"no delta log at $table")
     val st = replay(s, table, v)
     val schema = st.schema
     val candidates = keptEntries(s, st, cond)
-    if (candidates.isEmpty) return
+    if (candidates.isEmpty) return v
     // UUID file names are unique per table, so name-match recovers the
     // entries regardless of partition-directory encoding.
     val hitNames = collectHitNames(s,
@@ -2399,7 +2303,7 @@ object DeltaLite {
         .filter(cond))
     val hitEntries = candidates
       .filter(e => hitNames.contains(fileName(e.path)))
-    if (hitEntries.isEmpty) return
+    if (hitEntries.isEmpty) return v
     val survivors = readEntries(s, table, schema, hitEntries)
       .filter(!coalesce(cond, lit(false)))
     writeCommit(s, table, v + 1,
@@ -2465,7 +2369,7 @@ object DeltaLite {
     * [[appendEvolved]] for that).
     */
   def updateWhere(s: SparkSession, table: String, cond: Column,
-      assignments: Map[String, Column]): Unit = {
+      assignments: Map[String, Column]): Long = {
     val v = latestVersion(s, table)
     require(v >= 0, s"no delta log at $table")
     val st = replay(s, table, v)
@@ -2473,13 +2377,13 @@ object DeltaLite {
     assignments.keys.foreach(k => require(schema.fieldNames.contains(k),
       s"updateWhere: unknown column $k"))
     val candidates = keptEntries(s, st, cond)
-    if (candidates.isEmpty) return
+    if (candidates.isEmpty) return v
     val hitNames = collectHitNames(s,
       readEntries(s, table, schema, candidates, fileCol = Some("_gf"))
         .filter(cond))
     val hitEntries = candidates
       .filter(e => hitNames.contains(fileName(e.path)))
-    if (hitEntries.isEmpty) return
+    if (hitEntries.isEmpty) return v
     val matched = coalesce(cond, lit(false))
     val rewritten = readEntries(s, table, schema, hitEntries)
       .select(schema.fields.toSeq.map { f =>

@@ -11,6 +11,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import LakeFormat.fileName
+
 /** Minimal Iceberg-STYLE table format: the manifest-tree metadata
   * architecture of Apache Iceberg (reference:metadata:1-9's
   * Iceberg-vs-Delta comparative surface), distinct from DeltaLite's
@@ -64,7 +66,9 @@ import org.apache.spark.sql.types._
   * a catalog we don't have). Stats pruning reuses DeltaLite's
   * conservative evaluator — footer-derived stats, exact comparisons.
   */
-object IcebergLite {
+object IcebergLite extends LakeFormat {
+
+  val provider = "iceberglite"
 
   private val Json = new ObjectMapper()
 
@@ -97,29 +101,29 @@ object IcebergLite {
     else readText(f, versionHint(table)).trim.toLong
   }
 
-  /** Id of the snapshot `main` currently points at — the anchor a
-    * later [[rollbackTo]] returns to (LakeSql transactions record it
-    * at first touch).
-    */
-  def currentSnapshotId(s: SparkSession, table: String): Long =
+  /** Id of the snapshot `main` currently points at. */
+  def latestVersion(s: SparkSession, table: String): Long =
     readMeta(s, table).currentSnapshot
 
-  /** Id of the CURRENT schema. Schema evolution moves no snapshot
-    * (add/drop/rename column write new metadata, same
-    * current-snapshot-id — Iceberg's own contract), so a transaction
-    * that wants to roll back a metadata-only ALTER must record this
-    * alongside the snapshot id: [[rollbackTo]] alone cannot revert it.
+  /** Schema evolution moves no snapshot (add/drop/rename column write
+    * new metadata, same current-snapshot-id — Iceberg's own contract),
+    * so the restore point records the CURRENT schema id alongside the
+    * snapshot id: [[rollbackTo]] alone cannot revert a metadata-only
+    * ALTER.
     */
-  def currentSchemaIdOf(s: SparkSession, table: String): Int =
-    readMeta(s, table).currentSchemaId
+  def restorePoint(s: SparkSession, table: String): () => Unit = {
+    val meta = readMeta(s, table)
+    () => {
+      rollbackTo(s, table, meta.currentSnapshot)
+      restoreSchemaId(s, table, meta.currentSchemaId)
+    }
+  }
 
   /** Point current-schema-id back at `schemaId` (which must still be
     * in the table's schema list — schemas are append-only, so any
-    * previously-current id is). The transaction rollback path uses
-    * this to unwind in-transaction schema evolution; it is metadata-
-    * only and leaves snapshots untouched.
+    * previously-current id is). Metadata-only; snapshots untouched.
     */
-  def restoreSchemaId(s: SparkSession, table: String,
+  private def restoreSchemaId(s: SparkSession, table: String,
       schemaId: Int): Unit = {
     val meta = readMeta(s, table)
     if (meta.currentSchemaId == schemaId) return
@@ -693,8 +697,8 @@ object IcebergLite {
     * assigned in schema order and never change afterwards.
     */
   def create(s: SparkSession, table: String, df: DataFrame,
-      partitionColumns: Seq[String] = Nil,
-      properties: Map[String, String] = Map.empty): Long =
+      partitionColumns: Seq[String],
+      properties: Map[String, String]): Long =
     createWithSpec(s, table, df, partitionColumns.map(identityField),
       properties)
 
@@ -1140,9 +1144,6 @@ object IcebergLite {
   private def dataManifests(manifests: Seq[Manifest]): Seq[Manifest] =
     manifests.filter(_.content == "data")
 
-  private def fileName(p: String): String =
-    p.substring(p.lastIndexOf('/') + 1)
-
   /** One equality-delete manifest's application unit: delete files
     * holding key ROWS (columns = the schema's fields with ids `keyIds`,
     * written under schema `schemaId`'s names) that mask every data row
@@ -1326,8 +1327,8 @@ object IcebergLite {
     * position-delete files recorded by [[deleteWhere]] mask their rows.
     */
   def snapshot(s: SparkSession, table: String,
-      snapshotId: Long = -1L): DataFrame = {
-    val (meta, manifests) = manifestsOf(s, table, snapshotId)
+      version: Long): DataFrame = {
+    val (meta, manifests) = manifestsOf(s, table, version)
     readEntries(s, table, meta, entryGroups(manifests),
       delCtxOf(manifests))
   }
@@ -1735,10 +1736,10 @@ object IcebergLite {
     * full URIs). Returns the new snapshot id, or the current one when
     * nothing matched.
     */
-  def deleteWhere(s: SparkSession, table: String, pred: Column): Long = {
+  def deleteWhere(s: SparkSession, table: String, cond: Column): Long = {
     val (meta, manifests) = manifestsOf(s, table, -1L)
     val candidates =
-      prunedEntries(s, meta, dataManifests(manifests), pred)._2
+      prunedEntries(s, meta, dataManifests(manifests), cond)._2
     if (candidates.forall(_._2.isEmpty)) return meta.currentSnapshot
     val priorDeletes = delCtxOf(manifests)
     // Live hits only: rows already masked by an earlier delete file
@@ -1747,7 +1748,7 @@ object IcebergLite {
     // each candidate file was written.
     val hits = readEntries(s, table, meta, candidates, priorDeletes,
         fileCol = Some("file_path"), posCol = Some("pos"))
-      .filter(pred)
+      .filter(cond)
       .select(col("file_path"), col("pos"))
     val f = fs(s, new Path(table))
     val stageDir = new Path(table, s"_stage-del-${UUID.randomUUID()}")
@@ -1860,21 +1861,21 @@ object IcebergLite {
     * in during the rewrite (the rewritten files are clean). Returns the
     * new snapshot id.
     */
-  def updateWhere(s: SparkSession, table: String, pred: Column,
+  def updateWhere(s: SparkSession, table: String, cond: Column,
       assignments: Map[String, Column]): Long = {
     val (meta, manifests) = manifestsOf(s, table, -1L)
     val cur = meta.currentSchema
     assignments.keys.foreach(k =>
       require(cur.fields.exists(_.name == k), s"no column $k"))
     val candidates =
-      prunedEntries(s, meta, dataManifests(manifests), pred)._2
+      prunedEntries(s, meta, dataManifests(manifests), cond)._2
     if (candidates.forall(_._2.isEmpty)) return meta.currentSnapshot
     val rewritten = readEntries(s, table, meta, candidates,
       delCtxOf(manifests))
       .select(cur.fields.map { fd =>
         assignments.get(fd.name) match {
           case Some(set) =>
-            when(pred, set.cast(fd.dataType)).otherwise(col(fd.name))
+            when(cond, set.cast(fd.dataType)).otherwise(col(fd.name))
               .as(fd.name)
           case None => col(fd.name)
         }
@@ -1936,7 +1937,7 @@ object IcebergLite {
     * and so match any modern instant. Throws if the instant predates
     * the table. Metadata read only.
     */
-  def snapshotIdAt(s: SparkSession, table: String, tsMillis: Long): Long = {
+  def versionAt(s: SparkSession, table: String, tsMillis: Long): Long = {
     val meta = readMeta(s, table)
     val lineage: Set[Long] =
       if (meta.parents.contains(meta.currentSnapshot))
@@ -2163,100 +2164,28 @@ object IcebergLite {
     else commitSnapshot(s, table, meta, manifests.map(_.path) ++ newManifests)
   }
 
-  def merge(s: SparkSession, table: String, source: DataFrame,
-      keys: Seq[String]): Long = {
+  private[sources] def live(s: SparkSession,
+      table: String): LakeFormat.Live = {
     val (meta, manifests) = manifestsOf(s, table, -1L)
-    val cur = meta.currentSchema
-    keys.foreach(k => require(cur.fields.exists(_.name == k),
-      s"merge key $k not in schema"))
-    val srcCols = source.select(cur.fields.map(fd =>
-      col(fd.name).cast(fd.dataType).as(fd.name)).toSeq: _*)
-    val srcKeyCounts = source.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("_src_n"))
     val groups = entryGroups(manifests)
-    val deletes = delCtxOf(manifests)
-    // Stats-pruned candidate set (guide §6), same shape as
-    // DeltaLite.merge: above the file-count floor, one source key-range
-    // aggregate + manifest/stats pruning bound the hit-detection read
-    // to files whose key bounds can intersect the source.
-    val nFiles = groups.map(_._2.size).sum
-    val candGroups =
-      if (nFiles < DeltaLite.mergePruneFloor(s)) groups
-      else DeltaLite.sourceKeyRangePred(source, keys, cur.struct) match {
-        case None => groups
-        case Some(pred) =>
-          prunedEntries(s, meta, dataManifests(manifests), pred)._2
+    new LakeFormat.Live {
+      val schema: StructType = meta.currentSchema.struct
+      val files: Seq[String] = groups.flatMap(_._2.map(_.path))
+      def prune(pred: Column): Seq[String] =
+        prunedEntries(s, meta, dataManifests(manifests), pred)
+          ._2.flatMap(_._2.map(_.path))
+      def read(paths: Seq[String], fileCol: Option[String]): DataFrame = {
+        val want = paths.toSet
+        readEntries(s, table, meta, groups.map { case (k, es) =>
+          k -> es.filter(e => want.contains(e.path))
+        }, delCtxOf(manifests), fileCol)
       }
-    val (hitNames, maxMatches) =
-      if (candGroups.forall(_._2.isEmpty)) (Set.empty[String], 0L)
-      else {
-        val row = readEntries(s, table, meta, candGroups, deletes,
-            fileCol = Some("_ice_hit"))
-          .join(srcKeyCounts, keys)
-          .agg(collect_set(col("_ice_hit")).as("_files"),
-            max(col("_src_n")))
-          .head()
-        (row.getSeq[String](0).toSet,
-          if (row.isNullAt(1)) 0L else row.getLong(1))
+      def replace(removed: Seq[String], add: DataFrame): Long = {
+        val m = writeManifest(s, table, add, meta.currentSchema,
+          meta.defaultSpecId, meta.partCols, meta.sortCols, nextSeq(meta))
+        commitSnapshot(s, table, meta,
+          survivingManifests(s, table, meta, manifests, removed.toSet) :+ m)
       }
-    require(maxMatches <= 1L,
-      s"merge: $maxMatches source rows match the same target key — " +
-        "MERGE forbids ambiguous multi-matches; dedup the source")
-    val hitGroups = groups.map { case (sid, es) =>
-      sid -> es.filter(e => hitNames.contains(fileName(e.path)))
-    }.filter(_._2.nonEmpty)
-    // No distinct() on the anti-join's key side: right-side duplicates
-    // cannot change a left_anti result — one exchange fewer (§2.4).
-    val newData =
-      if (hitGroups.isEmpty) srcCols
-      else readEntries(s, table, meta, hitGroups, deletes)
-        .join(source.select(keys.map(col): _*), keys, "left_anti")
-        .unionByName(srcCols)
-    val newManifest = writeManifest(s, table, newData, cur,
-      meta.defaultSpecId, meta.partCols, meta.sortCols, nextSeq(meta))
-    val removed = hitGroups.flatMap(_._2.map(_.path)).toSet
-    commitSnapshot(s, table, meta,
-      survivingManifests(s, table, meta, manifests, removed) :+ newManifest)
-  }
-
-  /** Data files of the current snapshot that `pred` may match, by
-    * hierarchical manifest/partition/stats pruning — the
-    * rewrite-candidate set for [[commitReplace]].
-    */
-  def filesMayMatch(s: SparkSession, table: String,
-      pred: Column): Seq[String] = {
-    val (meta, manifests) = manifestsOf(s, table, -1L)
-    prunedEntries(s, meta, dataManifests(manifests), pred)
-      ._2.flatMap(_._2.map(_.path))
-  }
-
-  /** Read exactly the named data files of the current snapshot, under
-    * the current schema, honoring pending delete files.
-    */
-  def readSubset(s: SparkSession, table: String,
-      paths: Seq[String]): DataFrame = {
-    val (meta, manifests) = manifestsOf(s, table, -1L)
-    val want = paths.toSet
-    val groups = entryGroups(manifests).map { case (k, es) =>
-      k -> es.filter(e => want.contains(e.path))
     }
-    readEntries(s, table, meta, groups, delCtxOf(manifests))
-  }
-
-  /** ONE snapshot replacing exactly the `removed` data files with
-    * `add`'s rows — the pruned-rewrite primitive behind the
-    * stats-pruned full-sync MERGE (guide §6): untouched files stay in
-    * their (possibly rewritten) manifests by reference; a full-table
-    * overwrite is the degenerate case. Returns the new snapshot id.
-    */
-  def commitReplace(s: SparkSession, table: String, removed: Seq[String],
-      add: DataFrame): Long = {
-    val (meta, manifests) = manifestsOf(s, table, -1L)
-    val live = dataManifests(manifests).flatMap(_.entries.map(_.path)).toSet
-    removed.foreach(p => require(live.contains(p), s"not a live file: $p"))
-    val m = writeManifest(s, table, add, meta.currentSchema,
-      meta.defaultSpecId, meta.partCols, meta.sortCols, nextSeq(meta))
-    commitSnapshot(s, table, meta,
-      survivingManifests(s, table, meta, manifests, removed.toSet) :+ m)
   }
 }

@@ -1,0 +1,216 @@
+package graft.sources
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+/** The table operations Delta and Iceberg share, each with one meaning
+  * on both formats. [[DeltaLite]] and [[IcebergLite]] implement it; the
+  * SQL front end maps a catalog entry to `(LakeFormat, path)` once
+  * ([[LakeFormat.of]]) and calls through it. A VERSION is a Delta log
+  * version or an Iceberg snapshot id, and every write returns the
+  * version it committed (the current one when it committed nothing).
+  * Operations only one format has (ZORDER, deletion vectors, refs and
+  * branches, merge-on-read) stay on that format's object.
+  *
+  * The keyed [[merge]] and the pruned-rewrite primitives
+  * ([[filesMayMatch]], [[readSubset]], [[commitReplace]]) are written
+  * here once, over four hooks each format supplies on one replayed
+  * snapshot ([[LakeFormat.Live]]).
+  */
+trait LakeFormat {
+  import LakeFormat._
+
+  /** The provider name catalog entries and the ops log store. */
+  def provider: String
+
+  /** Snapshot read; `version < 0` means the current one. */
+  def snapshot(s: SparkSession, table: String,
+      version: Long = -1L): DataFrame
+
+  /** The current version. */
+  def latestVersion(s: SparkSession, table: String): Long
+
+  /** The version current at wall-clock `tsMillis` (`TIMESTAMP AS OF`):
+    * the latest commit at or before the instant. */
+  def versionAt(s: SparkSession, table: String, tsMillis: Long): Long
+
+  def create(s: SparkSession, table: String, df: DataFrame,
+      partitionColumns: Seq[String] = Nil,
+      properties: Map[String, String] = Map.empty): Long
+
+  def append(s: SparkSession, table: String, df: DataFrame): Long
+
+  /** REPLACE the table's contents in one atomic commit. */
+  def overwrite(s: SparkSession, table: String, df: DataFrame): Long
+
+  def deleteWhere(s: SparkSession, table: String, cond: Column): Long
+
+  def updateWhere(s: SparkSession, table: String, cond: Column,
+      assignments: Map[String, Column]): Long
+
+  /** Bin-pack the live rows into `targetFiles` files (OPTIMIZE). */
+  def compact(s: SparkSession, table: String, targetFiles: Int): Long
+
+  def addColumn(s: SparkSession, table: String, name: String,
+      dataType: DataType): Unit
+
+  def renameColumn(s: SparkSession, table: String, from: String,
+      to: String): Unit
+
+  def dropColumn(s: SparkSession, table: String, name: String): Unit
+
+  def tableProperties(s: SparkSession, table: String): Map[String, String]
+
+  /** The transaction-rollback restore: calling the result puts the
+    * table back as it is now, undoing every later commit. */
+  def restorePoint(s: SparkSession, table: String): () => Unit
+
+  /** The current snapshot, replayed once. */
+  private[sources] def live(s: SparkSession, table: String): Live
+
+  /** Live files `pred` may match, by partition and stats pruning — the
+    * rewrite-candidate set for [[commitReplace]]. */
+  def filesMayMatch(s: SparkSession, table: String,
+      pred: Column): Seq[String] =
+    live(s, table).prune(pred)
+
+  /** Read exactly the named live files under the current schema,
+    * honoring deletes; `fileCol` adds each row's data-file NAME. */
+  def readSubset(s: SparkSession, table: String, files: Seq[String],
+      fileCol: Option[String] = None): DataFrame =
+    live(s, table).read(files, fileCol)
+
+  /** ONE atomic commit replacing exactly the `removed` live files with
+    * `add`'s rows — the pruned-rewrite primitive behind the full-sync
+    * MERGE: untouched files ride into the new version by reference. */
+  def commitReplace(s: SparkSession, table: String, removed: Seq[String],
+      add: DataFrame): Long = {
+    val t = live(s, table)
+    val have = t.files.toSet
+    removed.foreach(p => require(have(p), s"not a live file: $p"))
+    t.replace(removed, add)
+  }
+
+  /** Copy-on-write MERGE (upsert) on `keys`: source rows REPLACE
+    * matching target rows and are INSERTED otherwise. Only target files
+    * containing a matching key are rewritten — found by ONE
+    * metadata-column scan joined against the source key counts — so
+    * merging a small source into a 100 TB table rewrites the touched
+    * files, not the table. Multiple source rows matching one target row
+    * is an error (which copy would win is ambiguous); duplicate source
+    * keys that match nothing insert all their copies. The rewrite is
+    * one anti-join (matched old rows drop out) plus a union of the
+    * source, committed with [[commitReplace]]'s shape.
+    */
+  def merge(s: SparkSession, table: String, source: DataFrame,
+      keys: Seq[String]): Long = {
+    val t = live(s, table)
+    keys.foreach(k => require(t.schema.fieldNames.contains(k),
+      s"merge key $k not in schema"))
+    val srcCols = source.select(t.schema.fields.toSeq.map(f =>
+      col(f.name).cast(f.dataType).as(f.name)): _*)
+    val srcKeyCounts = source.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("_src_n"))
+    // Stats-pruned candidate set: above the file-count floor, one
+    // source key-range aggregate lets partition and min/max stats drop
+    // files that cannot hold ANY source key before the hit-detection
+    // read, so at 100 TB that read follows the source's key locality.
+    val rk = rangeKeys(keys, t.schema)
+    val candidates =
+      if (t.files.size < MergePruneFloor || rk.isEmpty) t.files
+      else {
+        val aggs = rangeAggs(rk)
+        t.prune(rangePred(rk, source.agg(aggs.head, aggs.tail: _*).head(), 0))
+      }
+    val (hitNames, maxMatches) =
+      if (candidates.isEmpty) (Set.empty[String], 0L)
+      else {
+        val row = t.read(candidates, Some("_gf"))
+          .join(srcKeyCounts, keys)
+          .agg(collect_set(col("_gf")).as("_files"), max(col("_src_n")))
+          .head()
+        (row.getSeq[String](0).toSet,
+          if (row.isNullAt(1)) 0L else row.getLong(1))
+      }
+    require(maxMatches <= 1L,
+      s"merge: $maxMatches source rows match the same target key — " +
+        "MERGE forbids ambiguous multi-matches; dedup the source")
+    val hits = t.files.filter(p => hitNames.contains(fileName(p)))
+    // No distinct() on the anti-join's key side: right-side duplicates
+    // cannot change a left_anti result — one exchange fewer.
+    val newData =
+      if (hits.isEmpty) srcCols
+      else t.read(hits)
+        .join(source.select(keys.map(col): _*), keys, "left_anti")
+        .unionByName(srcCols)
+    t.replace(hits, newData)
+  }
+}
+
+object LakeFormat {
+
+  private val formats: Seq[LakeFormat] = Seq(DeltaLite, IcebergLite)
+
+  /** The format a provider name stores — the one place an unknown
+    * provider is rejected. */
+  def of(provider: String): LakeFormat =
+    formats.find(_.provider == provider).getOrElse(
+      throw new IllegalArgumentException(s"unknown provider $provider"))
+
+  /** One current snapshot, replayed once: the hooks the shared rewrite
+    * paths need from a format. Files are named the way the format's
+    * metadata names them. */
+  private[sources] trait Live {
+    def schema: StructType
+    /** Every live data file. */
+    def files: Seq[String]
+    /** The live files `pred` may match, by partition and stats pruning. */
+    def prune(pred: Column): Seq[String]
+    /** Rows of the live files `paths` under `schema`, honoring deletes;
+      * `fileCol` adds each row's data-file NAME. */
+    def read(paths: Seq[String], fileCol: Option[String] = None): DataFrame
+    /** ONE commit replacing `removed` with `add`'s rows; returns the
+      * new version. */
+    def replace(removed: Seq[String], add: DataFrame): Long
+  }
+
+  /** Live-file count below which a keyed MERGE skips the source
+    * key-range aggregate: on a small table the extra job costs more
+    * than the full read it saves. */
+  val MergePruneFloor = 8
+
+  private[sources] def fileName(p: String): String =
+    p.substring(p.lastIndexOf('/') + 1)
+
+  /** The merge keys a source key range may prune on: atomic orderable
+    * types only. String keys are out — parquet footer string stats
+    * compare in UTF-16 code-unit order while Spark's min/max order by
+    * UTF-8 bytes, and the two disagree above the BMP — and so are
+    * complex and binary keys, which have no literal form. */
+  private[graft] def rangeKeys(keys: Seq[String],
+      schema: StructType): Seq[String] =
+    schema.fields.toSeq.filter(f => keys.contains(f.name) &&
+      (f.dataType match {
+        case _: NumericType | DateType | TimestampType |
+            TimestampNTZType | BooleanType => true
+        case _ => false
+      })).map(_.name)
+
+  /** min and max of each range key, in the order [[rangePred]] reads. */
+  private[graft] def rangeAggs(rangeKeys: Seq[String]): Seq[Column] =
+    rangeKeys.flatMap(k =>
+      Seq(min(col(k)).as(s"_lo_$k"), max(col(k)).as(s"_hi_$k")))
+
+  /** Conservative "file may hold a source key" predicate: AND over the
+    * range keys of `key BETWEEN lo AND hi`, the bounds read from `row`
+    * starting at column `at`. A null lo (an empty or all-null-key
+    * source) is `lit(false)`; no range keys is `lit(true)`. */
+  private[graft] def rangePred(rangeKeys: Seq[String], row: Row,
+      at: Int): Column =
+    rangeKeys.zipWithIndex.map { case (k, i) =>
+      val lo = row.get(at + 2 * i); val hi = row.get(at + 2 * i + 1)
+      if (lo == null) lit(false)
+      else col(k) >= lit(lo) && col(k) <= lit(hi)
+    }.reduceOption(_ && _).getOrElse(lit(true))
+}

@@ -1400,7 +1400,7 @@ object Sources {
       IcebergLite.fastForward(s, t, "audit")
       IcebergLite.expireSnapshots(s, t, retain = 1)
       val midGone = scala.util.Try(
-        IcebergLite.snapshot(s, t, snapshotId = 2L).count()).isFailure
+        IcebergLite.snapshot(s, t, version = 2L).count()).isFailure
       IcebergLite.snapshotByRef(s, t, "v1")
         .withColumn("ref", lit("v1"))
         .unionByName(IcebergLite.snapshot(s, t).withColumn("ref", lit("main")))

@@ -232,7 +232,8 @@ object Streaming {
           if (DeltaLite.latestVersion(s, table) < 0)
             DeltaLite.create(s, table, batch.toDF(),
               txn = Some((appId, batchId)))
-          else { DeltaLite.appendOnce(s, table, batch.toDF(), appId, batchId); () }
+          else DeltaLite.appendOnce(s, table, batch.toDF(), appId, batchId)
+          ()
         }
         .option("checkpointLocation", graft.util.Scratch.dir("st06ckpt"))
         .start()
@@ -445,6 +446,7 @@ object Streaming {
             DeltaLite.merge(s, table, latestPerUser(up.unionByName(touched)),
               Seq("user_id"))
           }
+          ()
         }
         .option("checkpointLocation", graft.util.Scratch.dir("st11ckpt"))
         .start()

@@ -1001,4 +1001,39 @@ class DeltaLiteSpec extends SparkSpec {
           .union(c.filter(col("c_custkey") === 2)), Seq("c_custkey"))
     }
   }
+
+  test("keyed merge above the pruning floor replaces only the files " +
+      "whose key range meets the source") {
+    val t = freshTable()
+    val c = Tables.customer(spark, sfDir)
+    DeltaLite.create(spark, t, c.repartitionByRange(10, col("c_custkey")))
+    // (file name, min key, max key) of every live file
+    val ranges = DeltaLite.snapshot(spark, t)
+      .groupBy(element_at(split(input_file_name(), "/"), -1).as("f"))
+      .agg(min("c_custkey"), max("c_custkey")).collect()
+      .map(r => (r.getString(0), r.getAs[Number](1).longValue,
+        r.getAs[Number](2).longValue))
+    assert(ranges.length >= graft.sources.LakeFormat.MergePruneFloor)
+    val (lo, hi) = (31L, 55L)
+    val meets = ranges.filter { case (_, a, b) => a <= hi && b >= lo }
+      .map(_._1).toSet
+    assert(meets.nonEmpty && meets.size <= 3 && meets.size < ranges.length)
+    // the source key range prunes the candidates to exactly those files
+    assert(DeltaLite.pruneInfo(spark, t,
+      col("c_custkey") >= lo && col("c_custkey") <= hi) ==
+      (meets.size, ranges.length))
+    val inSrc = col("c_custkey").between(lo, hi)
+    DeltaLite.merge(spark, t, c.filter(inSrc)
+      .withColumn("c_acctbal", col("c_acctbal") + 1000.0), Seq("c_custkey"))
+    val want = c.withColumn("c_acctbal",
+      when(inSrc, col("c_acctbal") + 1000.0).otherwise(col("c_acctbal")))
+    assert(DeltaLite.snapshot(spark, t).orderBy(col("c_custkey"))
+      .collect().toSeq == want.orderBy(col("c_custkey")).collect().toSeq)
+    val removed = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(t, "_delta_log",
+        "00000000000000000001.json")), "UTF-8")
+      .linesIterator.filter(_.contains("\"remove\"")).toSeq
+    assert(removed.size == meets.size &&
+      meets.forall(f => removed.exists(_.contains(f))), removed)
+  }
 }

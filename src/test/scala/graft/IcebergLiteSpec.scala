@@ -811,4 +811,37 @@ class IcebergLiteSpec extends SparkSpec {
     assert(IcebergLite.snapshot(spark, t)
       .orderBy(col("c_custkey")).collect().toSeq == pre)
   }
+
+  test("keyed merge above the pruning floor replaces only the files " +
+      "whose key range meets the source") {
+    val t = freshTable()
+    val c = Tables.customer(spark, sfDir)
+    IcebergLite.create(spark, t, c.repartitionByRange(10, col("c_custkey")))
+    // (file name, min key, max key) of every live file
+    val ranges = IcebergLite.snapshot(spark, t)
+      .groupBy(element_at(split(input_file_name(), "/"), -1).as("f"))
+      .agg(min("c_custkey"), max("c_custkey")).collect()
+      .map(r => (r.getString(0), r.getAs[Number](1).longValue,
+        r.getAs[Number](2).longValue))
+    assert(ranges.length >= graft.sources.LakeFormat.MergePruneFloor)
+    val (lo, hi) = (31L, 55L)
+    val meets = ranges.filter { case (_, a, b) => a <= hi && b >= lo }
+      .map(_._1).toSet
+    assert(meets.nonEmpty && meets.size <= 3 && meets.size < ranges.length)
+    // the source key range prunes the candidates to exactly those files
+    assert(IcebergLite.pruneInfo(spark, t,
+      col("c_custkey") >= lo && col("c_custkey") <= hi) ==
+      (meets.size, ranges.length))
+    val before = IcebergLite.dataFiles(spark, t).toSet
+    val inSrc = col("c_custkey").between(lo, hi)
+    IcebergLite.merge(spark, t, c.filter(inSrc)
+      .withColumn("c_acctbal", col("c_acctbal") + 1000.0), Seq("c_custkey"))
+    val want = c.withColumn("c_acctbal",
+      when(inSrc, col("c_acctbal") + 1000.0).otherwise(col("c_acctbal")))
+    assert(IcebergLite.snapshot(spark, t).orderBy(col("c_custkey"))
+      .collect().toSeq == want.orderBy(col("c_custkey")).collect().toSeq)
+    val after = IcebergLite.dataFiles(spark, t).toSet
+    val removed = (before -- after).map(p => p.substring(p.lastIndexOf('/') + 1))
+    assert(removed == meets, s"removed $removed, key ranges meeting $meets")
+  }
 }

@@ -18,8 +18,7 @@ class PlanShapeSpec extends SparkSpec {
   // false: it is a lazy val, and if first touched after the finally
   // restores AQE the root is an AdaptiveSparkPlanExec leaf whose
   // children are invisible to collectWithSubqueries — every bound
-  // would pass vacuously (r15 advisor finding; ShuffleCount.scala
-  // already did this correctly).
+  // would pass vacuously (r15 advisor finding).
   private def planOf(name: String): SparkPlan = {
     val prior = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
