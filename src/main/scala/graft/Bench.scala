@@ -22,7 +22,7 @@ object Bench {
     * host is a known constant (BASELINE.md records it). A contended
     * host inflates the sentinel the same way it inflates every query,
     * so a bad measurement run is self-evident FROM the artifact — no
-    * cross-referencing untouched queries needed. Shared with TimeOne so
+    * cross-referencing untouched queries needed. Shared with KeyRun so
     * one-off re-measurements carry the same adjudication signal.
     */
   def sentinelOnce(spark: SparkSession, cpus: Int): Double = {
@@ -72,11 +72,20 @@ object Bench {
     require(names.map(_.takeWhile(_ != '_')).distinct.size == names.size,
       "query-name prefixes must stay unique — the compact bench line keys on them")
 
+    // A key that throws reads -1 and drops out of the total, so every
+    // such key is listed (first throw wins) in the artifact, on the
+    // headline line and on stderr: a failing key must never read as a
+    // faster run.
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     def runOnce(name: String): Double = {
       val t0 = System.nanoTime()
       try SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => return -1.0 }
+      catch { case e: Throwable =>
+        failed.getOrElseUpdate(name, (e.getClass.getName + ": " +
+          Option(e.getMessage).getOrElse("")).linesIterator.next().take(200))
+        return -1.0
+      }
       (System.nanoTime() - t0) / 1e9
     }
 
@@ -139,6 +148,16 @@ object Bench {
     }
 
     val total = results.map(_._2).filter(_ >= 0).sum
+    def jsonStr(v: String): String = "\"" + v.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+    val failedJson = failed.map { case (k, msg) =>
+      s"""{"key":${jsonStr(k)},"error":${jsonStr(msg)}}"""
+    }.mkString("[", ",", "]")
+    failed.foreach { case (k, msg) => System.err.println(s"BENCH_FAILED $k: $msg") }
 
     // Full-resolution, full-name timings: an earlier stdout line plus a
     // committed file. The driver stores only the LAST ~2000 chars of
@@ -153,7 +172,7 @@ object Bench {
     val midLine = midSentinels.map(v => "%.3f".formatLocal(
       java.util.Locale.ROOT, v)).mkString("[", ",", "]")
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","sentinel":$sentinel,"sentinel_end":$sentinelEnd,"sentinel_io":$sentinelIoStart,"sentinel_io_end":$sentinelIoEnd,"io_contended":$ioContended,"sentinels_mid":$midLine,"retimed":$fullRetimed,"queries":$fullQs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","sentinel":$sentinel,"sentinel_end":$sentinelEnd,"sentinel_io":$sentinelIoStart,"sentinel_io_end":$sentinelIoEnd,"io_contended":$ioContended,"sentinels_mid":$midLine,"retimed":$fullRetimed,"failed":$failedJson,"queries":$fullQs,"sf":"$sfDir"}"""
     println(s"BENCH_FULL $fullLine")
     try {
       val out = java.nio.file.Paths.get(
@@ -177,7 +196,7 @@ object Bench {
     val rts = retimed.toSeq.sortBy(_._1).map { case (k, v) =>
       "\"" + k.takeWhile(_ != '_') + "\":" + f3(v)
     }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","sentinel":${f3(sentinel)},"sentinel_end":${f3(sentinelEnd)},"sentinel_io":${f3(sentinelIoStart)},"sentinel_io_end":${f3(sentinelIoEnd)},"io_contended":$ioContended,"sentinels_mid":$midLine,"retimed":$rts,"queries":$qs,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","sentinel":${f3(sentinel)},"sentinel_end":${f3(sentinelEnd)},"sentinel_io":${f3(sentinelIoStart)},"sentinel_io_end":${f3(sentinelIoEnd)},"io_contended":$ioContended,"sentinels_mid":$midLine,"retimed":$rts,"failed":$failedJson,"queries":$qs,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

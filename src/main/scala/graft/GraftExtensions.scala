@@ -2,7 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, UnresolvedFunction}
+import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.types.{StringType, TimestampType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.{FastText, FastVector, TextHash}
 
@@ -20,7 +25,7 @@ import graft.functions.{FastText, FastVector, TextHash}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
-    GraftExtensions.functions.foreach { case (name, usage, builder) =>
+    GraftExtensions.all.foreach { case (name, usage, builder) =>
       ext.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo("graft", null, name, usage, ""), builder))
     }
@@ -73,13 +78,403 @@ object GraftExtensions {
       "nfc_normalize(text) - Unicode canonical composition (NFC)",
       (args: Seq[Expression]) => graft.functions.Unicode.Nfc(args.head)))
 
+  // ---- DuckDB dialect functions --------------------------------------
+
+  private type Builder = Seq[Expression] => Expression
+
+  /** A Spark builtin applied to `args`, resolved through Spark's own
+    * registry (so Spark's arity and type checks apply unchanged).
+    */
+  private def fn(name: String, args: Expression*): Expression =
+    FunctionRegistry.builtin.lookupFunction(FunctionIdentifier(name), args)
+
+  /** A lambda variable the analyzer binds like a parsed one. */
+  private def lambdaVar() = UnresolvedNamedLambdaVariable(
+    Seq(UnresolvedNamedLambdaVariable.freshVarName("x")))
+
+  /** `x -> f(x)` */
+  private def lambda(f: Expression => Expression): LambdaFunction = {
+    val x = lambdaVar()
+    LambdaFunction(f(x), Seq(x))
+  }
+
+  private def nonNull(list: Expression): Expression =
+    fn("filter", list, lambda(IsNotNull(_)))
+
+  private def sqlOf(args: Seq[Expression]): String =
+    args.map(_.sql).mkString(", ")
+
+  private def strLit(e: Expression, what: String): String = e match {
+    case Literal(v: UTF8String, _: StringType) => v.toString
+    case other => throw new IllegalArgumentException(
+      s"$what must be a string literal, got: ${other.sql}")
+  }
+
+  /** A builder that refuses any argument count but `n`. */
+  private def exactly(n: Int, shape: String)(
+      f: Seq[Expression] => Expression): (String, Builder) =
+    (shape, args => {
+      require(args.length == n, s"$shape, got: ${sqlOf(args)}")
+      f(args)
+    })
+
+  private def rename(to: String): (String, Builder) =
+    (s"Spark's $to", args => fn(to, args: _*))
+
+  // list_sum: DuckDB SKIPS NULL elements and returns NULL for an
+  // empty/all-NULL list — a guarded left-fold over the non-NULL
+  // elements, accumulating in DOUBLE in DuckDB's element order (so
+  // DOUBLE inputs are bit-identical; integer inputs widen).
+  private def listSum(l: Expression): Expression =
+    CaseWhen(Seq(EqualTo(fn("size", nonNull(l)), Literal(0)) ->
+      Literal(null)), fn("aggregate", nonNull(l), Literal(0.0), {
+      val (a, x) = (lambdaVar(), lambdaVar())
+      LambdaFunction(Add(a, x), Seq(a, x))
+    }))
+
+  // array_to_string: DuckDB joins the NON-NULL elements and returns
+  // NULL when there are none, where array_join returns ''.
+  private def arrayToString(l: Expression, sep: Expression): Expression =
+    CaseWhen(Seq(EqualTo(fn("size", nonNull(l)), Literal(0)) ->
+      Literal(null)), fn("array_join", l, sep))
+
+  private val StrftimeMap = Map(
+    'Y' -> "yyyy", 'y' -> "yy", 'm' -> "MM", 'd' -> "dd",
+    'H' -> "HH", 'I' -> "hh", 'M' -> "mm", 'S' -> "ss",
+    'j' -> "DDD", 'a' -> "EEE", 'A' -> "EEEE", 'b' -> "MMM",
+    'B' -> "MMMM", 'p' -> "a", 'G' -> "YYYY", 'V' -> "ww")
+
+  /** DuckDB's %-format as a Java pattern: literal characters that ARE
+    * Java pattern letters get quoted (the T of an ISO stamp), and an
+    * unknown % token refuses rather than passing a wrong pattern.
+    */
+  private[graft] def strftimeToJava(fmt: String): String = {
+    val out = new StringBuilder
+    val lit = new StringBuilder
+    // literal runs are flushed as ONE quoted block — adjacent
+    // per-character quotes ('Q''t''r') would read as escaped quote
+    // characters in a Java pattern
+    def flush(): Unit = if (lit.nonEmpty) {
+      val s = lit.toString
+      if (s.exists(_.isLetter) || s.contains('\''))
+        out.append("'").append(s.replace("'", "''")).append("'")
+      else out.append(s)
+      lit.clear()
+    }
+    var i = 0
+    while (i < fmt.length) {
+      val c = fmt.charAt(i)
+      if (c == '%') {
+        require(i + 1 < fmt.length, s"dangling % in strftime format $fmt")
+        val t = fmt.charAt(i + 1)
+        if (t == '%') { lit.append('%'); i += 2 }
+        else {
+          flush()
+          out.append(StrftimeMap.getOrElse(t,
+            throw new IllegalArgumentException(
+              s"unsupported strftime token %$t in $fmt")))
+          i += 2
+        }
+      } else { lit.append(c); i += 1 }
+    }
+    flush()
+    out.toString
+  }
+
+  private def strftimeLike(name: String, spark: String): (String, Builder) =
+    exactly(2, s"$name takes (value, format)") { a =>
+      fn(spark, a(0), Literal(strftimeToJava(
+        strLit(a(1), s"$name: the format"))))
+    }
+
+  // string_split: DuckDB splits on a LITERAL separator, Spark's split
+  // takes a Java regex — the separator is regex-quoted per character
+  // ('.' must not match every character). Limit -1 keeps trailing
+  // empties ('a,' → ['a', '']) as DuckDB does.
+  private def stringSplit(name: String): (String, Builder) =
+    exactly(2, s"$name takes (string, separator)") { a =>
+      val sep = strLit(a(1), s"$name: the separator").flatMap {
+        case c if "\\^$.|?*+()[]{}".contains(c) => s"\\$c"
+        case c => c.toString
+      }
+      fn("split", a(0), Literal(sep), Literal(-1))
+    }
+
+  // format(fmt, args…): DuckDB's brace template. A bare `{}` is
+  // format_string's %s (same rendering on every pinned type), `{{`/`}}`
+  // are literal braces, a literal % escapes to %%. Positional `{0}`,
+  // named `{name}` and spec `{:d}` forms refuse — their renderings
+  // diverge per type. DuckDB nulls the WHOLE result when ANY argument
+  // is NULL (format_string prints 'null'), hence the CASE guard.
+  private def formatTemplate(tpl: String, nArgs: Int): String = {
+    val sb = new StringBuilder
+    var i = 0
+    var holes = 0
+    while (i < tpl.length) {
+      if (tpl.startsWith("{{", i)) { sb.append('{'); i += 2 }
+      else if (tpl.startsWith("}}", i)) { sb.append('}'); i += 2 }
+      else if (tpl.startsWith("{}", i)) { sb.append("%s"); i += 2
+        holes += 1 }
+      else tpl.charAt(i) match {
+        case '{' | '}' => throw new IllegalArgumentException(
+          "format: only bare {} placeholders are supported " +
+            "(positional {n}, named {name} and spec {:…} forms " +
+            s"diverge between engines): '$tpl'")
+        case '%' => sb.append("%%"); i += 1
+        case c => sb.append(c); i += 1
+      }
+    }
+    require(holes == nArgs, s"format: template has $holes placeholder(s) " +
+      s"but $nArgs argument(s) were passed: '$tpl'")
+    sb.toString
+  }
+
+  private def anyNull(args: Seq[Expression]): Expression =
+    args.map(IsNull(_): Expression).reduce(Or(_, _))
+
+  /** DuckDB function names, each built into the Spark expression that
+    * computes DuckDB's result (every mapping below was pinned against
+    * DuckDB 1.0). Registered beside [[functions]] by both
+    * [[GraftExtensions]] and [[installInto]]; `LakeSql.sql` installs
+    * them into any session it runs on.
+    *
+    * Collision rule: no name here may exist in Spark's builtin
+    * registry (ExtensionsSpec checks it), because registering it would
+    * shadow Spark's meaning for every caller. DuckDB names that Spark
+    * also defines, with another meaning or argument order (log,
+    * left/right, substr/substring, ltrim/rtrim/trim, printf, concat,
+    * skewness, kurtosis, hash, len, map, date_diff/datediff,
+    * date_trunc, date_part), stay text pins in LakeSql.
+    */
+  val dialect: Seq[(String, String, Seq[Expression] => Expression)] =
+    Seq[(String, (String, Builder))](
+    // aggregates: OVER and FILTER keep working on the Spark aggregate
+    // (NULL order keys are skipped by max_by/min_by as by DuckDB)
+    "arg_max" -> rename("max_by"),
+    "arg_min" -> rename("min_by"),
+    // exact interpolated percentile (identical on DOUBLE inputs;
+    // DECIMAL inputs are typed-divergent in DuckDB itself)
+    "quantile_cont" -> rename("percentile"),
+    // DuckDB's discrete quantile is the element at rank
+    // max(1, ceil(p·n)); percentile_approx at accuracy 1e6 selects the
+    // same rank below a million rows per group while staying a bounded
+    // sketch above (the list-of-percentages form rides the same call)
+    "quantile_disc" -> exactly(2,
+      "quantile_disc takes (value, percentage[s])") { a =>
+      fn("percentile_approx", a(0), a(1), Literal(1000000))
+    },
+    // histogram(x): value → count MAP, keys ascending, NULLs skipped,
+    // empty → NULL. The identical collect_list aggregates share one
+    // buffer; the per-distinct filter pass is O(d·n) per group.
+    "histogram" -> exactly(1, "histogram takes one argument") { a =>
+      val xs = () => fn("collect_list", a(0))
+        .asInstanceOf[AggregateFunction].toAggregateExpression()
+      val counted = lambda(v => fn("struct", v,
+        fn("size", fn("filter", xs(), lambda(EqualTo(_, v))))))
+      CaseWhen(Seq(EqualTo(fn("size", xs()), Literal(0)) -> Literal(null)),
+        fn("map_from_entries", fn("transform",
+          fn("array_sort", fn("array_distinct", xs())), counted)))
+    },
+    "ends_with" -> rename("endswith"),
+    "to_hex" -> rename("hex"),
+    "sha256" -> exactly(1, "sha256 takes one argument") { a =>
+      fn("sha2", a(0), Literal(256))
+    },
+    "editdist3" -> exactly(2, "editdist3 takes two strings") { a =>
+      fn("levenshtein", a: _*)
+    },
+    // 1-based hit or 0 on miss on both engines
+    "strpos" -> exactly(2, "strpos takes (string, search)") { a =>
+      fn("instr", a: _*)
+    },
+    // first-char codepoint; DuckDB gives -1 for '' where ascii gives 0
+    "unicode" -> exactly(1, "unicode takes one argument") { a =>
+      CaseWhen(Seq(EqualTo(a(0), Literal("")) -> Literal(-1)),
+        fn("ascii", a(0)))
+    },
+    // both keep leading/trailing empties with limit -1
+    "regexp_split_to_array" -> exactly(2,
+      "regexp_split_to_array takes (string, pattern)") { a =>
+      fn("split", a(0), a(1), Literal(-1))
+    },
+    "string_split" -> stringSplit("string_split"),
+    "string_to_array" -> stringSplit("string_to_array"),
+    // epoch seconds keep their fraction (1577836801.5)
+    "epoch" -> exactly(1, "epoch takes one timestamp") { a =>
+      Divide(fn("unix_micros", Cast(a(0), TimestampType)), Literal(1e6))
+    },
+    "epoch_ms" -> exactly(1, "epoch_ms takes one timestamp") { a =>
+      IntegralDivide(fn("unix_micros", Cast(a(0), TimestampType)),
+        Literal(1000))
+    },
+    "epoch_us" -> exactly(1, "epoch_us takes one timestamp") { a =>
+      fn("unix_micros", Cast(a(0), TimestampType))
+    },
+    "strftime" -> strftimeLike("strftime", "date_format"),
+    "strptime" -> strftimeLike("strptime", "to_timestamp"),
+    "format" -> (("format takes (template, arg, …)", (a: Seq[Expression]) => {
+      require(a.length >= 2,
+        "format takes (template, arg, …) with at least one argument")
+      val tpl = formatTemplate(strLit(a(0), "format: the template"),
+        a.length - 1)
+      CaseWhen(Seq(anyNull(a.tail) -> Literal(null)),
+        fn("format_string", Literal(tpl) +: a.tail: _*))
+    })),
+    "json_extract_string" -> exactly(2,
+      "json_extract_string takes (json, 'path')") { a =>
+      val p = strLit(a(1), "json_extract_string: the path (a computed " +
+        "path cannot be normalized)")
+      fn("get_json_object", a(0), Literal(if (p.startsWith("$")) p
+        else "$." + p))
+    },
+    // both return keys in document order
+    "json_keys" -> rename("json_object_keys"),
+    // DuckDB returns a LIST: the value singleton, or [] for a missing
+    // key (try_element_at gives the bare value or NULL)
+    "map_extract" -> exactly(2, "map_extract takes (map, key)") { a =>
+      nonNull(fn("array", fn("try_element_at", a: _*)))
+    },
+    "list_value" -> rename("array"),
+    // interval constructors: make_interval(y, mo, w, d, h, mi, s) slots
+    "to_years" -> toInterval(0), "to_months" -> toInterval(1),
+    "to_days" -> toInterval(3), "to_hours" -> toInterval(4),
+    "to_minutes" -> toInterval(5), "to_seconds" -> toInterval(6),
+    // list vocabulary; the lambda forms are Spark's transform/filter
+    // with the same `x -> …` grammar
+    "list_transform" -> rename("transform"),
+    "list_filter" -> rename("filter"),
+    // ASC NULLS LAST on both (sort_array would put NULLS FIRST); a
+    // 2-arg list_sort('DESC') lands in array_sort's lambda slot and
+    // fails analysis
+    "list_sort" -> rename("array_sort"),
+    // DESC NULLS LAST on both ([3, NULL, 1] → [3, 1, NULL])
+    "list_reverse_sort" -> exactly(1, "list_reverse_sort takes ONE " +
+      "argument (the null-order modifier is not supported — DESC " +
+      "NULLS LAST is the pinned order)") { a =>
+      fn("sort_array", a(0), Literal(false))
+    },
+    "list_min" -> rename("array_min"),
+    "list_max" -> rename("array_max"),
+    "list_reverse" -> rename("reverse"),
+    // NULL-propagating array concat on both engines
+    "list_concat" -> rename("concat"),
+    // DuckDB answers FALSE for an absent element in a NULL-carrying
+    // list where array_contains answers NULL
+    "list_contains" -> (("list_contains(list, element)",
+      (a: Seq[Expression]) =>
+        fn("coalesce", fn("array_contains", a: _*), Literal(false)))),
+    // 1-based inclusive bounds → slice's length e-b+1, floored at 0
+    // (DuckDB returns [] when e < b; a negative length throws)
+    "list_slice" -> exactly(3, "list_slice takes (list, begin, end)") { a =>
+      fn("slice", a(0), a(1), fn("greatest",
+        Add(Subtract(a(2), a(1)), Literal(1)), Literal(0)))
+    },
+    "list_sum" -> exactly(1, "list_sum takes one list") { a =>
+      listSum(a(0))
+    },
+    // TRUE iff the lists share a non-NULL element (DuckDB 1.0: NULLs
+    // never match); both sides drop NULLs so arrays_overlap is
+    // two-valued except on a NULL list
+    "list_has_any" -> exactly(2, "list_has_any takes (list, list)") { a =>
+      fn("arrays_overlap", nonNull(a(0)), nonNull(a(1)))
+    },
+    // TRUE iff every non-NULL element of b is in a
+    "list_has_all" -> exactly(2, "list_has_all takes (list, list)") { a =>
+      EqualTo(fn("size", fn("array_except", nonNull(a(1)), a(0))),
+        Literal(0))
+    },
+    // removes duplicates AND NULLs; element order unspecified
+    "list_distinct" -> exactly(1, "list_distinct takes one list") { a =>
+      fn("array_distinct", nonNull(a(0)))
+    },
+    // the COUNT of distinct non-NULL elements
+    "list_unique" -> exactly(1, "list_unique takes one list") { a =>
+      fn("size", fn("array_distinct", nonNull(a(0))))
+    },
+    // 1-based hit or 0 on miss on both engines (NULL list → NULL)
+    "list_position" -> rename("array_position"),
+    "list_indexof" -> rename("array_position"),
+    // 1-based element access, l[0] = NULL, negative from the end,
+    // out of range = NULL — the subscript rewrite's pin
+    "list_extract" -> listElement("list_extract"),
+    "list_element" -> listElement("list_element"),
+    // DuckDB's dispatch sugar over the named list functions
+    "list_aggregate" -> (("list_aggregate(list, 'fn'[, arg])",
+      (a: Seq[Expression]) => {
+        require(a.length >= 2,
+          s"list_aggregate takes (list, 'fn'[, arg]), got: ${sqlOf(a)}")
+        strLit(a(1), "list_aggregate: the function name").toLowerCase match {
+          case "sum" => listSum(a(0))
+          case "min" => fn("array_min", a(0))
+          case "max" => fn("array_max", a(0))
+          case "count" => fn("size", nonNull(a(0)))
+          case "string_agg" =>
+            require(a.length == 3, "list_aggregate(l, 'string_agg', separator)")
+            arrayToString(a(0), a(2))
+          case other => throw new IllegalArgumentException(
+            s"list_aggregate: unsupported function '$other' (sum, min, " +
+              "max, count, string_agg)")
+        }
+      })),
+    "array_length" -> rename("array_size"),
+    "array_to_string" -> exactly(2,
+      "array_to_string takes (list, separator)") { a =>
+      arrayToString(a(0), a(1))
+    }
+  ).map { case (name, (usage, builder)) => (name, s"$name: $usage", builder) }
+
+  private def toInterval(slot: Int): (String, Builder) =
+    exactly(1, "to_* takes one number") { a =>
+      fn("make_interval", Seq.tabulate(7)(i =>
+        if (i == slot) a(0) else Literal(0)): _*)
+    }
+
+  private def listElement(name: String): (String, Builder) =
+    exactly(2, s"$name takes (list, index)") { a =>
+      fn("try_element_at", a(0), fn("nullif", a(1), Literal(0)))
+    }
+
+  private def all: Seq[(String, String, Builder)] = functions ++ dialect
+
+  private lazy val dialectByName = dialect.map(d => d._1 -> d._3).toMap
+
+  /** Run the [[dialect]] builders over a parsed, not yet resolved plan,
+    * so that a refusal (wrong arity, a non-literal format, separator or
+    * path, an unsupported token) is raised even when an argument names
+    * a column the analyzer would reject first. Any other failure of the
+    * dry run is left to the analyzer, which calls the same builders.
+    */
+  def refuseEarly(plan: LogicalPlan): Unit = {
+    plan.expressions.foreach(_.foreach {
+      case u: UnresolvedFunction if u.nameParts.length == 1 =>
+        dialectByName.get(u.nameParts.head.toLowerCase).foreach { b =>
+          try b(u.arguments) catch {
+            case e: IllegalArgumentException => throw e
+            case scala.util.control.NonFatal(_) =>
+          }
+        }
+      case q: SubqueryExpression => refuseEarly(q.plan)
+      case _ =>
+    })
+    (plan.children ++ plan.innerChildren).foreach {
+      case p: LogicalPlan => refuseEarly(p)
+      case _ =>
+    }
+  }
+
   /** Register every native function into an existing session (the
     * post-hoc equivalent of building withExtensions — same builders).
+    * Names the session already resolves (a session built with the
+    * extensions has them all) are left alone: re-registering one logs
+    * a replacement warning per name.
     */
-  def installInto(spark: org.apache.spark.sql.SparkSession): Unit =
-    functions.foreach { case (name, _, builder) =>
-      org.apache.spark.sql.graft.Glue.registerFunction(spark, name, builder)
+  def installInto(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    all.foreach { case (name, _, builder) =>
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        org.apache.spark.sql.graft.Glue.registerFunction(spark, name, builder)
     }
+  }
 }
 
 /** Builder for a fully-configured engine session: extensions installed,

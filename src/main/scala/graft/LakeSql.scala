@@ -1428,19 +1428,34 @@ object LakeSql {
     * §2.6): Spark's scheduler overlaps concurrent jobs, so the next
     * table's tasks back-fill executors a finishing table frees —
     * per-table exports/imports are serial only when driver code makes
-    * them so. Errors propagate; the pool never outlives the call.
+    * them so. The first failure cancels the rest — queued items never
+    * start and running Spark jobs (tagged per call) are cancelled — and
+    * is rethrown once every worker has stopped, so nothing still runs
+    * when the caller cleans up.
     */
-  private def forEachConcurrently[A](items: Seq[A], width: Int = 4)(
-      f: A => Unit): Unit =
+  private def forEachConcurrently[A](s: SparkSession, items: Seq[A],
+      width: Int = 4)(f: A => Unit): Unit =
     if (items.size <= 1) items.foreach(f)
     else {
+      val sc = s.sparkContext
+      val tag = s"graft-concurrent-${java.util.UUID.randomUUID()}"
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(width, items.size))
-      try items.map(a => pool.submit(new java.util.concurrent.Callable[Unit] {
-        override def call(): Unit = f(a)
-      })).foreach(_.get())
+      val futures = items.map(a =>
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          override def call(): Unit = {
+            sc.addJobTag(tag)
+            try f(a) finally sc.removeJobTag(tag)
+          }
+        }))
+      try futures.foreach(_.get())
       catch {
         case e: java.util.concurrent.ExecutionException =>
+          futures.foreach(_.cancel(false))
+          sc.cancelJobsWithTag(tag)
+          pool.shutdown()
+          pool.awaitTermination(Long.MaxValue,
+            java.util.concurrent.TimeUnit.NANOSECONDS)
           throw Option(e.getCause).getOrElse(e)
       } finally pool.shutdown()
     }
@@ -1456,7 +1471,7 @@ object LakeSql {
     // Independent per-table export writes run concurrently (§2.6); the
     // manifest is written AFTER every table landed, so a failed export
     // can never look complete.
-    forEachConcurrently(tables) { case (n, _) =>
+    forEachConcurrently(s, tables) { case (n, _) =>
       table(s, n).write.mode("overwrite").parquet(s"$dir/$n.parquet")
     }
     val arr = Json.createArrayNode()
@@ -1480,12 +1495,23 @@ object LakeSql {
     }
     // Per-table create jobs are independent of each other (distinct
     // target dirs) — run them concurrently (§2.6); registration is
-    // per-table and order-free (distinct names).
-    forEachConcurrently(specs.toSeq) { case (n, provider) =>
+    // per-table and order-free (distinct names). A failed import
+    // leaves nothing behind: the tables it created are unregistered
+    // and their directories removed, so a retry starts clean.
+    val created = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    try forEachConcurrently(s, specs.toSeq) { case (n, provider) =>
       val df = s.read.parquet(s"$dir/$n.parquet")
       val loc = s"${dir.stripSuffix("/")}/imported/$n"
       LakeFormat.of(provider).create(s, loc, df)
+      created.add((n, loc))
       registerEntry(s, n, provider, loc)
+    } catch { case e: Throwable =>
+      created.forEach { case (n, loc) =>
+        dropEntry(s, n)
+        val (fs, p) = hadoopFs(s, loc)
+        fs.delete(p, true)
+      }
+      throw e
     }
     val schema = readSmallFile(s, s"$dir/schema.sql").trim
     if (schema.nonEmpty)
@@ -1496,7 +1522,17 @@ object LakeSql {
   private val ExplainRe =
     """(?is)^\s*EXPLAIN(?:\s+(EXTENDED|FORMATTED|CODEGEN|COST))?\s+(.*)$""".r
 
+  // Sessions that already hold the DuckDB function table (keyed by the
+  // session object, weakly — the same guard as Sql.open's)
+  private val dialectSessions = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
+
   def sql(s: SparkSession, statement0: String): DataFrame = {
+    // DuckDB function names resolve in the session's function registry;
+    // a session not built with GraftExtensions gets them here, once
+    dialectSessions.computeIfAbsent(s, _ => {
+      GraftExtensions.installInto(s); true
+    })
     // lexical sugar first (quote-aware, idempotent): dollar-quoted
     // strings → standard literals, numeric underscore separators
     // stripped — both DuckDB parser features Spark's lexer lacks
@@ -1887,13 +1923,10 @@ object LakeSql {
         case OpPinRewrite(r) => sql(s, r)
         case TimeBucketRewrite(r) => sql(s, r)
         case OrderedAggRewrite(r) => sql(s, r)
-        case _ if StringSplitKeyword.matches(st) =>
-          sql(s, rewriteStringSplit(st))
         // guard on CHANGED text: a statement whose only regexp_* calls
         // are already in Spark form (3-arg regexp_extract) must fall
         // through to the remaining cases, not re-enter forever
         case RegexpFnRewrite(r) => sql(s, r)
-        case _ if StrftimeKeyword.matches(st) => sql(s, rewriteStrftime(st))
         case _ if StructPackKeyword.matches(st) =>
           sql(s, rewriteStructPack(st))
         case _ if ColumnsFnKeyword.matches(st) =>
@@ -2494,257 +2527,38 @@ object LakeSql {
       rewritten.substring(at)
   }
 
-  // ---- list lambda functions ----------------------------------------
-  // DuckDB's list_transform / list_filter are Spark's higher-order
-  // transform / filter with the SAME `x -> …` lambda grammar — only
-  // the names differ, so the rewrite is a name map. Both run as
-  // codegen'd array expressions over the scan (no UDF, no shuffle).
+  // ---- list syntax pins ----------------------------------------------
+  // DuckDB's list functions resolve in Spark's function registry
+  // (GraftExtensions.dialect); what stays here is syntax Spark's parser
+  // rejects (bracket slicing) and `len`, which Spark also defines (as
+  // a string length) — DuckDB's len() on a LIST is Spark's size.
   private val ListFnKeyword =
-    ("(?is).*(\\blist_(transform|filter|sort|min|max|reverse(_sort)?|" +
-      "concat|contains|slice|distinct|unique|position|indexof|sum|" +
-      "has_any|has_all|aggregate|extract|element)\\s*\\(|" +
-      "\\barray_to_string\\s*\\(|\\blen\\s*\\(|\\barray_length\\s*\\(|" +
+    ("(?is).*(\\blen\\s*\\(|" +
       "[A-Za-z_0-9]\\s*\\[\\s*\\d+\\s*:\\s*\\d+\\s*\\]).*").r
 
   private[graft] def rewriteListFns(statement: String): String = {
-    // list_contains needs more than a name swap: DuckDB returns FALSE
-    // when the element is absent from a NULL-carrying list, Spark's
-    // array_contains returns NULL (three-valued logic) — the coalesce
-    // pins DuckDB's two-valued answer. Balanced-paren extraction so
-    // nested calls and commas inside the list argument survive.
-    var st = statement
-    // list_aggregate(l, 'name'[, arg]) — DuckDB's dispatch sugar;
-    // rewritten FIRST into the named forms this same pass then
-    // translates ('sum'→list_sum's guarded fold, 'min'/'max',
-    // 'count' = non-NULL count, 'string_agg' → array_to_string which
-    // skips NULLs on both engines).
-    var hit = "(?i)\\blist_aggregate\\s*\\(".r.findFirstMatchIn(st)
-    while (hit.isDefined) {
-      val m = hit.get
-      val (inner, rest) = takeParenGroup(st.substring(m.end - 1))
-      val args = splitTopCommasQuoted(inner)
-      require(args.length >= 2,
-        s"list_aggregate takes (list, 'fn'[, arg]), got: $inner")
-      val FnLit = "^'([A-Za-z_]+)'$".r
-      val fn = args(1).trim match {
-        case FnLit(f) => f.toLowerCase
-        case other => throw new IllegalArgumentException(
-          s"list_aggregate: the function name must be a literal: $other")
-      }
-      val out = fn match {
-        case "sum" => s"list_sum(${args(0)})"
-        case "min" => s"list_min(${args(0)})"
-        case "max" => s"list_max(${args(0)})"
-        case "count" =>
-          s"size(filter((${args(0)}), __x -> __x IS NOT NULL))"
-        case "string_agg" =>
-          require(args.length == 3,
-            "list_aggregate(l, 'string_agg', separator)")
-          s"array_to_string(${args(0)}, ${args(2)})"
-        case other => throw new IllegalArgumentException(
-          s"list_aggregate: unsupported function '$other' (sum, min, " +
-            "max, count, string_agg)")
-      }
-      st = st.substring(0, m.start) + out + rest
-      hit = "(?i)\\blist_aggregate\\s*\\(".r.findFirstMatchIn(st)
-    }
-    hit = "(?i)\\blist_contains\\s*\\(".r.findFirstMatchIn(st)
-    while (hit.isDefined) {
-      val m = hit.get
-      val (inner, rest) = takeParenGroup(st.substring(m.end - 1))
-      st = st.substring(0, m.start) +
-        s"coalesce(array_contains($inner), false)" + rest
-      hit = "(?i)\\blist_contains\\s*\\(".r.findFirstMatchIn(st)
-    }
-    // list_slice(l, b, e): DuckDB bounds are 1-based INCLUSIVE both
-    // ends (and clamp past the list end) — Spark's slice(l, start,
-    // length) clamps the same way, so the translation is the length
-    // identity e-b+1, floored at 0: DuckDB returns [] when e < b
-    // (pinned: list_slice([1,2,3,4], 4, 2) = []) where a bare negative
-    // length would throw at Spark runtime.
-    hit = "(?i)\\blist_slice\\s*\\(".r.findFirstMatchIn(st)
-    while (hit.isDefined) {
-      val m = hit.get
-      val (inner, rest) = takeParenGroup(st.substring(m.end - 1))
-      val args = splitTopCommasQuoted(inner)
-      require(args.length == 3,
-        s"list_slice takes (list, begin, end), got: $inner")
-      st = st.substring(0, m.start) +
-        s"slice(${args(0)}, ${args(1)}, " +
-        s"greatest((${args(2)})-(${args(1)})+1, 0))" + rest
-      hit = "(?i)\\blist_slice\\s*\\(".r.findFirstMatchIn(st)
-    }
-    // list_sum: DuckDB SKIPS NULL elements and returns NULL for an
-    // empty/all-NULL list — rebuilt as a guarded left-fold over the
-    // non-NULL elements. The fold accumulates in DOUBLE and walks the
-    // SAME element order as DuckDB's sum, so over DOUBLE inputs the
-    // result is bit-identical; integer inputs widen (DuckDB keeps the
-    // integer type), so texts cast — the x99 idiom is to transform
-    // elements to DOUBLE first.
-    hit = "(?i)\\blist_sum\\s*\\(".r.findFirstMatchIn(st)
-    while (hit.isDefined) {
-      val m = hit.get
-      val (inner, rest) = takeParenGroup(st.substring(m.end - 1))
-      st = st.substring(0, m.start) +
-        s"(CASE WHEN size(filter(($inner), __x -> __x IS NOT NULL)) = 0 " +
-        s"THEN NULL ELSE aggregate(filter(($inner), " +
-        "__x -> __x IS NOT NULL), CAST(0 AS DOUBLE), " +
-        "(__a, __x) -> __a + __x) END)" + rest
-      hit = "(?i)\\blist_sum\\s*\\(".r.findFirstMatchIn(st)
-    }
-    // list_has_any(a, b): TRUE iff the lists share a non-NULL element
-    // (DuckDB 1.0: NULLs never match — [1,NULL] vs [NULL] is FALSE),
-    // FALSE for empties, NULL for a NULL list. Spark's arrays_overlap
-    // alone diverges (returns NULL when a NULL element exists and no
-    // other match), so both sides pre-filter NULLs — after which
-    // arrays_overlap is two-valued except on NULL input, matching.
-    hit = "(?i)\\blist_has_any\\s*\\(".r.findFirstMatchIn(st)
-    while (hit.isDefined) {
-      val m = hit.get
-      val (inner, rest) = takeParenGroup(st.substring(m.end - 1))
-      val args = splitTopCommasQuoted(inner)
-      require(args.length == 2,
-        s"list_has_any takes (list, list), got: $inner")
-      st = st.substring(0, m.start) +
-        s"arrays_overlap(filter((${args(0)}), __x -> __x IS NOT NULL), " +
-        s"filter((${args(1)}), __x -> __x IS NOT NULL))" + rest
-      hit = "(?i)\\blist_has_any\\s*\\(".r.findFirstMatchIn(st)
-    }
-    // list_has_all(a, b): TRUE iff every non-NULL element of b is in a
-    // (DuckDB ignores NULL needles; an empty needle list is trivially
-    // TRUE; a NULL list is NULL) — rebuilt as an empty array_except.
-    hit = "(?i)\\blist_has_all\\s*\\(".r.findFirstMatchIn(st)
-    while (hit.isDefined) {
-      val m = hit.get
-      val (inner, rest) = takeParenGroup(st.substring(m.end - 1))
-      val args = splitTopCommasQuoted(inner)
-      require(args.length == 2,
-        s"list_has_all takes (list, list), got: $inner")
-      st = st.substring(0, m.start) +
-        s"(size(array_except(filter((${args(1)}), " +
-        s"__x -> __x IS NOT NULL), (${args(0)}))) = 0)" + rest
-      hit = "(?i)\\blist_has_all\\s*\\(".r.findFirstMatchIn(st)
-    }
-    // list_distinct: DuckDB removes duplicates AND NULLs, element
-    // order UNSPECIFIED — texts must list_sort before comparing.
-    hit = "(?i)\\blist_distinct\\s*\\(".r.findFirstMatchIn(st)
-    while (hit.isDefined) {
-      val m = hit.get
-      val (inner, rest) = takeParenGroup(st.substring(m.end - 1))
-      st = st.substring(0, m.start) +
-        s"array_distinct(filter(($inner), __x -> __x IS NOT NULL))" + rest
-      hit = "(?i)\\blist_distinct\\s*\\(".r.findFirstMatchIn(st)
-    }
-    // array_to_string(l, sep): DuckDB joins the NON-NULL elements and
-    // returns NULL when there are none (empty or all-NULL list —
-    // pinned: array_to_string([], ',') IS NULL, [NULL] IS NULL,
-    // ['a',NULL,'b'] = 'a,b'); Spark's array_join returns '' for the
-    // first two — the guard pins DuckDB's NULL. 2-arg only (DuckDB
-    // 1.0's macro takes exactly (arr, sep); a 3-arg call refuses).
-    // literal-aware find: the token inside a quoted data value (an odd
-    // number of quotes precedes it) must survive untouched
-    def atsHit(s0: String) = "(?i)\\barray_to_string\\s*\\(".r
-      .findAllMatchIn(s0)
-      .find(m => s0.substring(0, m.start).count(_ == '\'') % 2 == 0)
-    hit = atsHit(st)
-    while (hit.isDefined) {
-      val m = hit.get
-      val (inner, rest) = takeParenGroup(st.substring(m.end - 1))
-      val args = splitTopCommasQuoted(inner)
-      require(args.length == 2,
-        s"array_to_string takes (list, separator), got: $inner")
-      st = st.substring(0, m.start) +
-        s"(CASE WHEN size(filter((${args(0)}), " +
-        s"__x -> __x IS NOT NULL)) = 0 THEN NULL " +
-        s"ELSE array_join(${args(0)}, ${args(1)}) END)" + rest
-      hit = atsHit(st)
-    }
-    // list_extract / list_element: DuckDB's 1-based element access
-    // (the function form of l[i]) — same try_element_at + nullif(0)
-    // pin as the subscript rewrite (l[0] = NULL, negative = from-end,
-    // out-of-range = NULL on both engines).
-    for (name <- Seq("list_extract", "list_element")) {
-      hit = ("(?i)\\b" + name + "\\s*\\(").r.findFirstMatchIn(st)
-      while (hit.isDefined) {
-        val m = hit.get
-        val (inner, rest) = takeParenGroup(st.substring(m.end - 1))
-        val args = splitTopCommasQuoted(inner)
-        require(args.length == 2,
-          s"$name takes (list, index), got: $inner")
-        st = st.substring(0, m.start) +
-          s"try_element_at(${args(0)}, nullif((${args(1)}), 0))" + rest
-        hit = ("(?i)\\b" + name + "\\s*\\(").r.findFirstMatchIn(st)
-      }
-    }
-    // list_unique: the COUNT of distinct non-NULL elements.
-    hit = "(?i)\\blist_unique\\s*\\(".r.findFirstMatchIn(st)
-    while (hit.isDefined) {
-      val m = hit.get
-      val (inner, rest) = takeParenGroup(st.substring(m.end - 1))
-      st = st.substring(0, m.start) +
-        s"size(array_distinct(filter(($inner), __x -> __x IS NOT NULL)))" +
-        rest
-      hit = "(?i)\\blist_unique\\s*\\(".r.findFirstMatchIn(st)
-    }
     // bracket slicing `l[2:4]` — DuckDB's 1-based inclusive list
     // slice; literal integer bounds translate to the same slice()
-    // call (a computed bound would need the list_slice spelling).
+    // call (a computed bound needs the function spelling).
     // Applied OUTSIDE string literals only: 'doc[1:2]' in a text
     // value must survive untouched (a slice can't span a quote, so
     // the segment-wise application is exact).
     val BracketRe =
       """((?:[A-Za-z_]\w*\.)?[A-Za-z_]\w*)\s*\[\s*(\d+)\s*:\s*(\d+)\s*\]""".r
-    st = st.split("'", -1).zipWithIndex.map { case (seg, i) =>
-      if (i % 2 == 1) seg // inside a literal
-      else BracketRe.replaceAllIn(seg, m => {
+    outsideLiterals(statement) { seg =>
+      BracketRe.replaceAllIn(seg, m => {
         val (b, e) = (m.group(2).toInt, m.group(3).toInt)
         require(b >= 1 && e >= 1,
           s"list slice bounds must be 1-based positive: [$b:$e] " +
             "(negative/from-end bounds are not supported)")
         // e < b is DuckDB's EMPTY slice ([1,2,3,4][4:2] = []), not an
-        // error — same floor-at-0 rule as the list_slice rewrite
+        // error — the same floor at 0 as the function form
         s"slice(${m.group(1)}, $b, ${math.max(e - b + 1, 0)})"
       })
-    }.mkString("'")
-    // list_reverse_sort(x) ≡ sort_array(x, false): DESC with NULLS
-    // LAST on both engines (probed [3, NULL, 1] → [3, 1, NULL] both);
-    // a second argument (DuckDB's null-order modifier) refuses loudly
-    var lrsHit = "(?i)\\blist_reverse_sort\\s*\\(".r.findFirstMatchIn(st)
-    while (lrsHit.isDefined) {
-      val m = lrsHit.get
-      val (inner, rest) = takeParenGroup(st.substring(m.end - 1))
-      require(splitTopCommasQuoted(inner).length == 1,
-        "list_reverse_sort takes ONE argument (the null-order " +
-          "modifier is not supported — DESC NULLS LAST is the pinned " +
-          "order)")
-      st = st.substring(0, m.start) + s"sort_array($inner, false)" + rest
-      lrsHit = "(?i)\\blist_reverse_sort\\s*\\(".r.findFirstMatchIn(st)
-    }
-    // name maps applied OUTSIDE string literals only — len( and
-    // array_to_string( are collision-prone tokens that must survive
-    // untouched inside a quoted data value like 'len(x)'
-    outsideLiterals(st)(
-      _.replaceAll("(?i)\\blist_transform\\s*\\(", "transform(")
-        .replaceAll("(?i)\\blist_filter\\s*\\(", "filter(")
-        // single-arg list_sort ≡ array_sort: ASC with NULLS LAST on both
-        // engines (Spark's sort_array would put NULLS FIRST — wrong);
-        // a two-arg list_sort('DESC') lands in array_sort's lambda slot
-        // and fails analysis loudly rather than silently re-ordering
-        .replaceAll("(?i)\\blist_sort\\s*\\(", "array_sort(")
-        .replaceAll("(?i)\\blist_min\\s*\\(", "array_min(")
-        .replaceAll("(?i)\\blist_max\\s*\\(", "array_max(")
-        .replaceAll("(?i)\\blist_reverse\\s*\\(", "reverse(")
-        // the tag keeps the concat NULL-skip pin (x117) off this
-        // ARRAY concat — list_concat is NULL-propagating on both
-        .replaceAll("(?i)\\blist_concat\\s*\\(", "concat/*graft*/(")
-        // 1-based hit or 0 on miss on BOTH engines (NULL list → NULL)
-        .replaceAll("(?i)\\blist_position\\s*\\(", "array_position(")
-        .replaceAll("(?i)\\blist_indexof\\s*\\(", "array_position(")
-        // DuckDB's len()/array_length() on a LIST = Spark's size/
-        // array_size; a string argument fails analysis loudly (use
-        // length(), which both engines share)
+      // DuckDB's len() on a LIST = Spark's size; a string argument
+      // fails analysis loudly (use length(), which both engines share)
         .replaceAll("(?i)\\blen\\s*\\(", "size(")
-        .replaceAll("(?i)\\barray_length\\s*\\(", "array_size("))
+    }
   }
 
   // ---- list literals, comprehensions, and 1-based subscripts -------
@@ -3342,20 +3156,18 @@ object LakeSql {
   }
 
   // ---- JSON operators -------------------------------------------------
-  // DuckDB's JSON extraction surface mapped onto Spark's codegen'd
-  // get_json_object: `j ->> 'key'` and json_extract_string(j, 'path')
-  // both return the UNQUOTED text of the matched value (number → its
-  // digits, missing → NULL) — exactly get_json_object's contract, so
-  // the rewrite is a path-normalizing name map ('key' → '$.key';
-  // $-paths, nested fields and 0-based [i] array steps pass through
-  // unchanged on both engines). json_keys → json_object_keys (both
-  // return keys in DOCUMENT order). json_array_length shares its name
-  // and array behavior (objects diverge: DuckDB 0, Spark NULL — texts
-  // use it on arrays). json_extract (the JSON-typed, quote-keeping
-  // form) stays unmapped and fails analysis loudly.
-  private val JsonFnKeyword =
-    ("(?is).*(\\bjson_extract_string\\s*\\(|\\bjson_keys\\s*\\(|" +
-      "->).*").r
+  // DuckDB's JSON operators mapped onto Spark's codegen'd
+  // get_json_object: `j ->> 'key'` returns the UNQUOTED text of the
+  // matched value (number → its digits, missing → NULL) — exactly
+  // get_json_object's contract, so the rewrite is a path-normalizing
+  // name map ('key' → '$.key'; $-paths, nested fields and 0-based [i]
+  // array steps pass through unchanged on both engines). The function
+  // forms resolve in Spark's registry (GraftExtensions.dialect).
+  // json_array_length shares its name and array behavior (objects
+  // diverge: DuckDB 0, Spark NULL — texts use it on arrays).
+  // json_extract (the JSON-typed, quote-keeping form) stays unmapped
+  // and fails analysis loudly.
+  private val JsonFnKeyword = "(?is).*->.*".r
 
   /** Index of the single DEPTH-0 `->` (not `->>`, not inside a string
     * literal) in `text`, or -1 when there are zero or several — a
@@ -3448,65 +3260,25 @@ object LakeSql {
         st.substring(castFrom))
     }
     // j ->> 'key' — (qualified) identifier LHS, literal path RHS
-    st = """((?:[A-Za-z_]\w*\.)?[A-Za-z_]\w*)\s*->>\s*'([^']+)'""".r
+    """((?:[A-Za-z_]\w*\.)?[A-Za-z_]\w*)\s*->>\s*'([^']+)'""".r
       .replaceAllIn(st, m => scala.util.matching.Regex.quoteReplacement(
         s"get_json_object(${m.group(1)}, '${norm(m.group(2))}')"))
-    var hit = "(?i)\\bjson_extract_string\\s*\\(".r.findFirstMatchIn(st)
-    while (hit.isDefined) {
-      val m = hit.get
-      val (inner, rest) = takeParenGroup(st.substring(m.end - 1))
-      val args = splitTopCommasQuoted(inner)
-      require(args.length == 2,
-        s"json_extract_string takes (json, 'path'), got: $inner")
-      val PathRe = "^'([^']*)'$".r
-      val path = args(1).trim match {
-        case PathRe(p) => norm(p)
-        case other => throw new IllegalArgumentException(
-          "json_extract_string needs a literal path (a computed path " +
-            s"cannot be normalized at rewrite time): $other")
-      }
-      st = st.substring(0, m.start) +
-        s"get_json_object(${args(0)}, '$path')" + rest
-      hit = "(?i)\\bjson_extract_string\\s*\\(".r.findFirstMatchIn(st)
-    }
-    st.replaceAll("(?i)\\bjson_keys\\s*\\(", "json_object_keys(")
   }
 
-  // ---- MAP vocabulary -------------------------------------------------
-  // DuckDB's MAP type surface: `map(keys_list, values_list)` constructs
-  // (Spark: map_from_arrays — both preserve entry order),
-  // `list_value(...)` is DuckDB's explicit list constructor (Spark:
-  // array), and `map_extract(m, k)` returns a LIST — the value
-  // singleton, or the EMPTY list when the key is absent. Spark's
-  // try_element_at returns the bare value-or-NULL, so the rewrite
-  // rebuilds DuckDB's list contract with filter(array(...), not-null)
-  // — still a codegen'd expression tree, no UDF. map_keys/map_values/
-  // cardinality share names and entry order on both engines and pass
-  // through untouched.
-  private val MapFnKeyword =
-    ("(?is).*(\\bmap\\s*\\(|\\blist_value\\s*\\(|" +
-      "\\bmap_extract\\s*\\().*").r
+  // ---- MAP constructor --------------------------------------------------
+  // DuckDB's `map(keys_list, values_list)` constructs a MAP from two
+  // lists (Spark: map_from_arrays — both preserve entry order); Spark's
+  // own map(k1, v1, …) takes alternating entries, so the name stays a
+  // text pin. The other MAP functions resolve in Spark's registry
+  // (GraftExtensions.dialect) or share names and entry order on both
+  // engines (map_keys/map_values/cardinality).
+  private val MapFnKeyword = "(?is).*\\bmap\\s*\\(.*".r
 
-  private[graft] def rewriteMapFns(statement: String): String = {
-    var st = statement
-    var hit = "(?i)\\bmap_extract\\s*\\(".r.findFirstMatchIn(st)
-    while (hit.isDefined) {
-      val m = hit.get
-      val (inner, rest) = takeParenGroup(st.substring(m.end - 1))
-      val args = splitTopCommasQuoted(inner)
-      require(args.length == 2,
-        s"map_extract takes (map, key), got: $inner")
-      st = st.substring(0, m.start) +
-        s"filter(array(try_element_at(${args(0)}, ${args(1)})), " +
-        "__e -> __e IS NOT NULL)" + rest
-      hit = "(?i)\\bmap_extract\\s*\\(".r.findFirstMatchIn(st)
-    }
-    // literal-aware name maps: map( is the single most collision-prone
-    // token in the surface — a data value like 'map(a)' must survive
-    outsideLiterals(st)(
-      _.replaceAll("(?i)\\bmap\\s*\\(", "map_from_arrays(")
-        .replaceAll("(?i)\\blist_value\\s*\\(", "array("))
-  }
+  // literal-aware: map( is the single most collision-prone token in
+  // the surface — a data value like 'map(a)' must survive
+  private[graft] def rewriteMapFns(statement: String): String =
+    outsideLiterals(statement)(
+      _.replaceAll("(?i)\\bmap\\s*\\(", "map_from_arrays("))
 
   // ---- scalar math/string pins ---------------------------------------
   // Four shared-name scalar divergences found by the round-13 probe
@@ -3536,40 +3308,23 @@ object LakeSql {
   // gated text) agree on both engines. DATE - DATE is likewise typed
   // (DuckDB INT days, Spark INTERVAL) — date_diff is the portable
   // spelling (x103).
-  // Second pinned batch (round 13): arg_max/arg_min are Spark's
-  // max_by/min_by (NULL order keys skipped by both — pinned);
-  // quantile_cont is Spark's exact interpolated percentile (identical
-  // on DOUBLE inputs — 1.75 = 1.75; DECIMAL inputs are typed-divergent
-  // in DuckDB ITSELF, which quantizes to the input scale and switches
-  // median to the discrete quantile — documented in SURVEY §6, cast to
-  // DOUBLE for cross-engine results); printf is format_string (same
-  // C-style directives); regexp_split_to_array is split with limit -1
-  // (both keep leading/trailing empties — pinned); epoch/epoch_ms/
-  // epoch_us rebuild from unix_micros (fractional seconds preserved:
-  // 1577836801.5 = 1577836801.5). quantile_disc and DuckDB's
-  // python-style format() stay unmapped — loud analysis failures.
-  // Third pinned batch: sha256(x) = Spark's sha2(x, 256) (same hex,
-  // pinned); ends_with = endswith; to_hex = hex (both 'FF'); and the
-  // nastiest find of the probe sweeps — 2-arg ltrim/rtrim/trim take
-  // (string, chars) in DuckDB but (trimStr, string) in Spark: the SAME
-  // call with SWAPPED argument meaning, silently different values
-  // unless the trim set is symmetric — the rewrite swaps the
-  // arguments. 1-arg and TRIM(LEADING … FROM …) forms agree untouched.
+  // And 2-arg ltrim/rtrim/trim take (string, chars) in
+  // DuckDB but (trimStr, string) in Spark: the SAME call with SWAPPED
+  // argument meaning, silently different values unless the trim set
+  // is symmetric — the rewrite swaps the arguments. 1-arg and
+  // TRIM(LEADING … FROM …) forms agree untouched.
+  // DuckDB function names that Spark lacks resolve in Spark's function
+  // registry instead (GraftExtensions.dialect); only names Spark also
+  // defines stay here.
   private val MathFnKeyword =
     ("(?is).*(\\blog\\s*\\(|\\bleft\\s*\\(|\\bright\\s*\\(|" +
       "\\bsubstr(ing)?\\s*\\(\\s*[^,()]+,\\s*0\\s*,|" +
-      "\\barg_(max|min)\\s*\\(|\\bquantile_cont\\s*\\(|" +
-      "\\bprintf\\s*\\(|\\bregexp_split_to_array\\s*\\(|" +
-      "\\bepoch(_ms|_us)?\\s*\\(|\\bsha256\\s*\\(|\\bends_with\\s*\\(|" +
-      "\\bto_hex\\s*\\(|\\b[lr]?trim\\s*\\(|\\bskewness\\s*\\(|" +
-      "\\bkurtosis\\s*\\(|\\bquantile_disc\\s*\\(|\\bformat\\s*\\(|" +
-      "\\bstrpos\\s*\\(|\\bunicode\\s*\\(|\\beditdist3\\s*\\(|" +
-      "\\bto_(years|months|days|hours|minutes|seconds)\\s*\\(|" +
-      "\\bhistogram\\s*\\(|\\bhash\\s*\\(|\\bconcat\\s*\\().*").r
+      "\\bprintf\\s*\\(|\\b[lr]?trim\\s*\\(|\\bskewness\\s*\\(|" +
+      "\\bkurtosis\\s*\\(|\\bhash\\s*\\(|\\bconcat\\s*\\().*").r
 
   private[graft] def rewriteMathFns(statement: String): String = {
     var st = statement
-    // literal-aware find (same quote-parity guard as atsHit): a
+    // literal-aware find (a quote-parity guard): a
     // collision-prone token inside a quoted data value like
     // 'trim(a, b)' must survive untouched — an odd number of quotes
     // before the match start means the match sits inside a literal.
@@ -3640,65 +3395,6 @@ object LakeSql {
         Some(s"$name($s, 1, ($l) - 1)")
       case _ => None
     }
-    loop("regexp_split_to_array") {
-      case Seq(s, re) => Some(s"split($s, $re, -1)")
-      case args => throw new IllegalArgumentException(
-        "regexp_split_to_array takes (string, pattern), got: " +
-          args.mkString(", "))
-    }
-    loop("epoch") {
-      case Seq(x) =>
-        Some(s"(unix_micros(CAST($x AS TIMESTAMP)) / " +
-          "CAST(1000000 AS DOUBLE))")
-      case _ => None
-    }
-    loop("epoch_ms") {
-      case Seq(x) =>
-        Some(s"(unix_micros(CAST($x AS TIMESTAMP)) DIV 1000)")
-      case _ => None
-    }
-    loop("epoch_us") {
-      case Seq(x) => Some(s"unix_micros(CAST($x AS TIMESTAMP))")
-      case _ => None
-    }
-    loop("sha256") {
-      case Seq(x) => Some(s"sha2($x, 256)")
-      case args => throw new IllegalArgumentException(
-        s"sha256 takes one argument, got: ${args.mkString(", ")}")
-    }
-    // editdist3 is DuckDB's levenshtein alias (probed equal)
-    loop("editdist3") {
-      case Seq(a, b) => Some(s"levenshtein($a, $b)")
-      case args => throw new IllegalArgumentException(
-        s"editdist3 takes two strings, got: ${args.mkString(", ")}")
-    }
-    // to_days/to_hours/… INTERVAL constructors → make_interval slots
-    // (probed: DATE/TIMESTAMP + to_*(n) arithmetic matches, month-end
-    // clamping included). make_interval(y, mo, weeks, d, h, mi, s).
-    for ((name, slot) <- Seq("to_years" -> 0, "to_months" -> 1,
-        "to_days" -> 3, "to_hours" -> 4, "to_minutes" -> 5,
-        "to_seconds" -> 6))
-      loop(name) {
-        case Seq(n) =>
-          val a = Array.fill(7)("0"); a(slot) = s"($n)"
-          Some(s"make_interval(${a.mkString(", ")})")
-        case args => throw new IllegalArgumentException(
-          s"$name takes one number, got: ${args.mkString(", ")}")
-      }
-    // histogram(x): DuckDB's value→count MAP, keys ascending, NULLs
-    // skipped, empty → NULL (probed). The distinct+filter-count
-    // identity keeps ONE collect_list buffer (Catalyst dedups the
-    // identical aggregates); the per-distinct filter pass is
-    // O(d·n) per group, post-aggregation.
-    loop("histogram") {
-      case Seq(x) => Some(
-        s"(CASE WHEN size(collect_list($x)) = 0 THEN NULL ELSE " +
-          s"map_from_entries(transform(array_sort(array_distinct(" +
-          s"collect_list($x))), __hv -> struct(__hv, " +
-          s"size(filter(collect_list($x), __hy -> __hy = __hv))))) END)")
-      case args => throw new IllegalArgumentException(
-        s"histogram takes one argument, got: ${args.mkString(", ")}")
-    }
     // hash(): both engines HAVE it with DIFFERENT functions (DuckDB's
     // own 64-bit vs Spark's 32-bit Murmur3) — same spelling, silently
     // different values on every input; the one honest mapping is none
@@ -3708,20 +3404,6 @@ object LakeSql {
           "Murmur3) — the same call returns DIFFERENT values per " +
           "engine; use md5()/sha256()/xxhash64() for a portable hash: " +
           s"hash(${args.mkString(", ")})")
-    }
-    // strpos ≡ instr (probed: both 1-based, 0 on miss)
-    loop("strpos") {
-      case Seq(a, b) => Some(s"instr($a, $b)")
-      case args => throw new IllegalArgumentException(
-        s"strpos takes (string, search), got: ${args.mkString(", ")}")
-    }
-    // unicode(s): first-char codepoint; DuckDB pins '' → -1 where
-    // Spark's ascii('') is 0 (NULL → NULL on both)
-    loop("unicode") {
-      case Seq(x) => Some(
-        s"(CASE WHEN ($x) = '' THEN -1 ELSE ascii($x) END)")
-      case args => throw new IllegalArgumentException(
-        s"unicode takes one argument, got: ${args.mkString(", ")}")
     }
     // skewness/kurtosis: DuckDB computes the SAMPLE-corrected
     // statistics (adjusted Fisher–Pearson G1 / sample excess G2) while
@@ -3750,71 +3432,6 @@ object LakeSql {
           s"(count($x)$ov - 3)) * ((count($x)$ov + 1) * " +
           s"kurtosis/*graft*/($x)$ov + 6) END)")
       case _ => None
-    }
-    // quantile_disc(x, p): DuckDB's DISCRETE quantile returns the
-    // element at rank max(1, ceil(p·n)) — pinned on seven cases incl.
-    // duplicates, even n, and fractional p ({1,2} p=0.5 → 1, n=7
-    // p=0.5 → the 4th). Spark's percentile_approx at high accuracy
-    // selects the SAME rank (all pins bit-equal); accuracy 1e6 keeps
-    // it exact below a million rows per group while staying a BOUNDED
-    // sketch above — at 100 TB the group summary compresses instead
-    // of buffering every value (DuckDB's own quantile_disc holds the
-    // full sorted list). The list-percentile form rides the same call
-    // (percentile_approx takes an array of percentages).
-    loop("quantile_disc") {
-      case Seq(x, p) => Some(s"percentile_approx($x, $p, 1000000)")
-      case args => throw new IllegalArgumentException(
-        s"quantile_disc takes (value, percentage[s]), got: " +
-          args.mkString(", "))
-    }
-    // format(fmt, args…): DuckDB's fmt-style brace template. The bare
-    // `{}` placeholder is format_string's %s (same rendering on every
-    // pinned type: BIGINT, DOUBLE '2.0'/'1.5', DECIMAL, DATE, BOOLEAN
-    // — both engines print the bare value); `{{`/`}}` are literal
-    // braces; a literal % must escape to %% (format_string treats it
-    // as a directive where fmt does not). Positional `{0}`, named
-    // `{name}` and spec-carrying `{:d}` forms REFUSE loudly — their
-    // numeric/padding renderings diverge per type. NULL-in → NULL-out
-    // is pinned (DuckDB nulls the WHOLE result when ANY argument is
-    // NULL; Spark format_string prints 'null'), so the rewrite guards
-    // with a CASE over every argument.
-    loop("format") {
-      case Seq() | Seq(_) => throw new IllegalArgumentException(
-        "format takes (template, arg, …) with at least one argument")
-      case fmt +: rest =>
-        val LitRe = "(?s)^'(.*)'$".r
-        val tpl = fmt.trim match {
-          case LitRe(t) => t
-          case other => throw new IllegalArgumentException(
-            s"format: the template must be a string literal, got: $other")
-        }
-        // tokenize: {{ }} escapes first, then bare {} holes; any other
-        // brace use refuses
-        val sb = new StringBuilder
-        var i = 0
-        var holes = 0
-        while (i < tpl.length) {
-          if (tpl.startsWith("{{", i)) { sb.append('{'); i += 2 }
-          else if (tpl.startsWith("}}", i)) { sb.append('}'); i += 2 }
-          else if (tpl.startsWith("{}", i)) { sb.append("%s"); i += 2
-            holes += 1 }
-          else tpl.charAt(i) match {
-            case '{' | '}' => throw new IllegalArgumentException(
-              "format: only bare {} placeholders are supported " +
-                "(positional {n}, named {name} and spec {:…} forms " +
-                s"diverge between engines): '$tpl'")
-            case '%' => sb.append("%%"); i += 1
-            case c => sb.append(c); i += 1
-          }
-        }
-        require(holes == rest.length,
-          s"format: template has $holes placeholder(s) but " +
-            s"${rest.length} argument(s) were passed: '$tpl'")
-        val nullGuard = rest.map(a => s"($a) IS NULL").mkString(" OR ")
-        // tpl is the literal's INNER text — doubled-quote escapes are
-        // still doubled and pass through the tokenizer verbatim
-        Some(s"(CASE WHEN $nullGuard THEN NULL ELSE " +
-          s"format_string('${sb.toString}', ${rest.mkString(", ")}) END)")
     }
     // 2-arg trims: DuckDB (string, chars) → Spark (trimStr, string) —
     // the SAME call shape with swapped argument meaning. The swapped
@@ -3848,54 +3465,6 @@ object LakeSql {
       case args if args.nonEmpty =>
         Some(s"concat_ws('', ${args.mkString(", ")})")
       case _ => None
-    }
-    outsideLiterals(st)(
-      _.replaceAll("(?i)\\barg_max\\s*\\(", "max_by(")
-        .replaceAll("(?i)\\barg_min\\s*\\(", "min_by(")
-        .replaceAll("(?i)\\bquantile_cont\\s*\\(", "percentile(")
-        .replaceAll("(?i)\\bends_with\\s*\\(", "endswith(")
-        .replaceAll("(?i)\\bto_hex\\s*\\(", "hex("))
-  }
-
-  // ---- string_split ---------------------------------------------------
-  // DuckDB's string_split(s, sep) splits on a LITERAL separator;
-  // Spark's split(s, pattern) takes a Java REGEX — so the rewrite
-  // regex-quotes the separator character-by-character (a '.' separator
-  // must not match every character). Literal separators only: a
-  // computed separator expression can't be quoted at rewrite time and
-  // refuses loudly. DuckDB keeps trailing empty strings ('a,' → ['a',
-  // '']) and so does Spark's split with limit -1 — the rewrite pins
-  // that limit (Spark's default drops them).
-  private val StringSplitKeyword =
-    "(?is).*\\bstring_(split|to_array)\\s*\\(.*".r
-
-  private[graft] def rewriteStringSplit(statement: String): String = {
-    // string_to_array is DuckDB's alias for string_split — same
-    // (string, literal separator) shape, same rewrite
-    var st = outsideLiterals(statement)(
-      _.replaceAll("(?i)\\bstring_to_array\\s*\\(", "string_split("))
-    var hit = "(?i)\\bstring_split\\s*\\(".r.findFirstMatchIn(st)
-    while (hit.isDefined) {
-      val m = hit.get
-      val (inner, rest) = takeParenGroup(st.substring(m.end - 1))
-      val args = splitTopCommasQuoted(inner)
-      require(args.length == 2,
-        s"string_split takes (string, separator), got: $inner")
-      val sepLit = "^'(.*)'$".r.findFirstMatchIn(args(1).trim).getOrElse(
-        throw new IllegalArgumentException(
-          "string_split: the separator must be a string literal " +
-            "(it is regex-quoted at rewrite time)")).group(1)
-      // ONE backslash per metachar: the session parses literals RAW
-      // (escapedStringLiterals=true), so '\.' reaches the regex engine
-      // as-is — a doubled '\\.' would be backslash-quote-dot
-      val quoted = sepLit.flatMap {
-        case c if "\\^$.|?*+()[]{}".contains(c) => s"\\$c"
-        case '\'' => "''"
-        case c => c.toString
-      }
-      st = st.substring(0, m.start) +
-        s"split(${args.head}, '$quoted', -1)" + rest
-      hit = "(?i)\\bstring_split\\s*\\(".r.findFirstMatchIn(st)
     }
     st
   }
@@ -4608,82 +4177,6 @@ object LakeSql {
         from = s0 + fixed.length
         hit = re.findFirstMatchIn(st.substring(from)).map(m =>
           (m.start + from, m.end + from))
-      }
-    }
-    st
-  }
-
-  // ---- strftime --------------------------------------------------------
-  // DuckDB's strftime(value, '%-format') → Spark's date_format with
-  // the % tokens translated to Java pattern letters. The format must
-  // be a literal (translated at rewrite time); literal characters that
-  // ARE Java pattern letters get quoted so they can never be
-  // interpreted (e.g. the T in an ISO stamp), and unknown % tokens
-  // refuse loudly rather than silently passing a wrong pattern.
-  private val StrftimeKeyword = "(?is).*\\bstr[fp]time\\s*\\(.*".r
-  private val StrftimeMap = Map(
-    'Y' -> "yyyy", 'y' -> "yy", 'm' -> "MM", 'd' -> "dd",
-    'H' -> "HH", 'I' -> "hh", 'M' -> "mm", 'S' -> "ss",
-    'j' -> "DDD", 'a' -> "EEE", 'A' -> "EEEE", 'b' -> "MMM",
-    'B' -> "MMMM", 'p' -> "a", 'G' -> "YYYY", 'V' -> "ww")
-
-  private[graft] def strftimeToJava(fmt: String): String = {
-    val out = new StringBuilder
-    val lit = new StringBuilder
-    // literal runs are flushed as ONE quoted block — adjacent
-    // per-character quotes ('Q''t''r') would read as escaped quote
-    // characters in a Java pattern
-    def flush(): Unit = if (lit.nonEmpty) {
-      val s = lit.toString
-      if (s.exists(_.isLetter) || s.contains('\''))
-        out.append("'").append(s.replace("'", "''")).append("'")
-      else out.append(s)
-      lit.clear()
-    }
-    var i = 0
-    while (i < fmt.length) {
-      val c = fmt.charAt(i)
-      if (c == '%') {
-        require(i + 1 < fmt.length, s"dangling % in strftime format $fmt")
-        val t = fmt.charAt(i + 1)
-        if (t == '%') { lit.append('%'); i += 2 }
-        else {
-          flush()
-          out.append(StrftimeMap.getOrElse(t,
-            throw new IllegalArgumentException(
-              s"unsupported strftime token %$t in $fmt")))
-          i += 2
-        }
-      } else { lit.append(c); i += 1 }
-    }
-    flush()
-    out.toString
-  }
-
-  private[graft] def rewriteStrftime(statement: String): String = {
-    var st = statement
-    // strftime (format) and strptime (parse) share the %-token
-    // translation table: one maps onto date_format, the other onto
-    // to_timestamp with the SAME Java pattern.
-    for ((duck, spark) <- Seq("strftime" -> "date_format",
-        "strptime" -> "to_timestamp")) {
-      var hit = s"(?i)\\b$duck\\s*\\(".r.findFirstMatchIn(st)
-      while (hit.isDefined) {
-        val m = hit.get
-        val (inner, rest) = takeParenGroup(st.substring(m.end - 1))
-        val args = splitTopCommasQuoted(inner)
-        require(args.length == 2,
-          s"$duck takes (value, format), got: $inner")
-        val fmtLit = "^'(.*)'$".r.findFirstMatchIn(args(1).trim).getOrElse(
-          throw new IllegalArgumentException(
-            s"$duck: the format must be a string literal (it is " +
-              "translated to a Java pattern at rewrite time)")).group(1)
-        // the Java pattern itself contains single quotes (quoted
-        // literals) — double them so the embedding SQL literal survives
-        val javaFmt = strftimeToJava(fmtLit).replace("'", "''")
-        st = st.substring(0, m.start) +
-          s"$spark(${args.head}, '$javaFmt')" + rest
-        hit = s"(?i)\\b$duck\\s*\\(".r.findFirstMatchIn(st)
       }
     }
     st
@@ -6861,7 +6354,9 @@ object LakeSql {
     // the LAST text-level stop before Spark's parser — literal dialect
     // normalizes here (and in every sibling parse site)
     val statement = pinNullOrder(normLit(statement0))
-    s.sessionState.sqlParser.parsePlan(statement) match {
+    val parsed = s.sessionState.sqlParser.parsePlan(statement)
+    GraftExtensions.refuseEarly(parsed)
+    parsed match {
       // Column-definition CREATE TABLE (r16) — the most common
       // migration-script statement: `CREATE TABLE t (k BIGINT PRIMARY
       // KEY, …)`. Creates an EMPTY lake table with the declared

@@ -56,7 +56,7 @@ object FuzzGen {
   /** Integer-valued scalar expression (exact on both engines). */
   private[tools] def intExpr(r: Random, cols: Seq[Col]): String = {
     val hasDate = cols.exists(_.kind == "d")
-    val n = r.nextInt(if (hasDate) 15 else 13)
+    val n = r.nextInt(if (hasDate) 16 else 14)
     (if (!hasDate && n >= 7) n + 2 else n) match {
       case 12 => // ^ / ** power pins (x112): XOR in bare Spark
         s"CAST((${iCol(r, cols)} % ${3 + r.nextInt(5)}) " +
@@ -64,6 +64,20 @@ object FuzzGen {
       case 13 => // // integer division incl. the NULL-on-zero divisor
         s"(${iCol(r, cols)} // ${pick(r, Seq("3", "7",
           s"(${iCol(r, cols)} % 4)"))})"
+      case 15 => // registry-resolved DuckDB names (GraftExtensions.dialect)
+        val s = sCol(r, cols)
+        r.nextInt(5) match {
+          case 0 => s"CAST(strpos($s, '${pick(r, Seq("A", "AN", "E"))}') " +
+            "AS BIGINT)"
+          case 1 => s"(CASE WHEN ends_with($s, " +
+            s"'${pick(r, Seq("A", "N", "Y"))}') THEN 1 ELSE 0 END)"
+          case 2 => s"CAST(unicode($s) AS BIGINT)"
+          case 3 => s"CAST(len(regexp_split_to_array($s, " +
+            s"'${pick(r, patterns)}')) AS BIGINT)"
+          case 4 => // the value list of a hit, [] on a miss
+            s"CAST(len(map_extract(map(list_value('A', 'E', 'I'), " +
+              s"list_value(1, 2, 3)), upper(substr($s, 1, 1)))) AS BIGINT)"
+        }
       case 14 => // full-match ~, GLOB, ^@ as CASE conditions
         s"(CASE WHEN ${sCol(r, cols)} ${pick(r, Seq("~ '[A-Za-z ]+'",
           "~ '[a-z]+'", "!~ '.*[0-9].*'", "^@ 'A'", "GLOB '[A-Z]*'",
@@ -103,7 +117,8 @@ object FuzzGen {
           "'1996-06-30 12:00:00')"
       case 8 =>
         val d = pick(r, cols.filter(_.kind == "d")).name
-        r.nextInt(5) match {
+        r.nextInt(6) match {
+          case 5 => s"epoch_ms(CAST($d AS TIMESTAMP))"
           case 0 => s"CAST(date_part('${pick(r, Seq("dow", "doy"))}', " +
             s"$d) AS BIGINT)"
           case 1 => // EXTRACT spelling of the pinned fields (x115)
@@ -159,7 +174,9 @@ object FuzzGen {
       }
       case 5 =>
         val d = pick(r, cols.filter(_.kind == "d")).name
-        s"strftime($d, ${pick(r, formats)})"
+        if (r.nextBoolean()) s"strftime($d, ${pick(r, formats)})"
+        else // DATE + INTERVAL is a TIMESTAMP in DuckDB: back to DATE
+          s"CAST(CAST($d + to_days(${1 + r.nextInt(40)}) AS DATE) AS VARCHAR)"
     }
   }
 
@@ -172,7 +189,13 @@ object FuzzGen {
     }
 
   private[tools] def aggExpr(r: Random, cols: Seq[Col]): String =
-    r.nextInt(9) match {
+    r.nextInt(10) match {
+      case 9 => r.nextInt(2) match { // registry-resolved aggregates
+        case 0 => s"CAST(quantile_disc(${iCol(r, cols)}, " +
+          s"0.${25 * (1 + r.nextInt(3))}) AS BIGINT)"
+        case 1 => // the first column is the table's unique key: no ties
+          s"arg_max(${sCol(r, cols)}, ${cols.head.name})"
+      }
       case 6 => r.nextInt(3) match {
         case 0 =>
           s"CAST(round(quantile_cont(CAST(${iCol(r, cols)} AS DOUBLE), " +

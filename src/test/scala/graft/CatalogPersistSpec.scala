@@ -349,6 +349,31 @@ class CatalogPersistSpec extends SparkSpec {
     }
   }
 
+  test("a failed IMPORT DATABASE throws and leaves no table of the " +
+      "import in the catalog") {
+    val s1 = spark.newSession()
+    Sql.open(s1, sfDir)
+    val root = graft.util.Scratch.dir("expdb_fail_src")
+    val exp = graft.util.Scratch.dir("expdb_fail_out")
+    LakeSql.script(s1, s"""
+      CREATE TABLE ef_nat USING deltalite LOCATION '$root/ef_nat'
+        AS SELECT n_nationkey, n_name FROM nation;
+      CREATE TABLE ef_reg USING iceberglite LOCATION '$root/ef_reg'
+        AS SELECT r_regionkey, r_name FROM region;
+      EXPORT DATABASE '$exp'""")
+    // corrupt every data file of one exported table
+    new java.io.File(s"$exp/ef_reg.parquet").listFiles()
+      .filter(_.getName.endsWith(".parquet")).foreach { f =>
+        java.nio.file.Files.write(f.toPath, "not parquet".getBytes)
+      }
+    val s2 = spark.newSession()
+    intercept[Exception](LakeSql.sql(s2, s"IMPORT DATABASE '$exp'"))
+    val left = LakeSql.sql(s2, "SELECT table_name FROM graft_tables")
+      .collect().map(_.getString(0)).toSet
+    assert(!left.contains("ef_nat") && !left.contains("ef_reg"), left)
+    assert(!new java.io.File(s"$exp/imported/ef_nat").exists)
+  }
+
   test("without a catalog dir the catalog stays session-only") {
     val tag = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
     val root = graft.util.Scratch.dir("catsess")

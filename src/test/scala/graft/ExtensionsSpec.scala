@@ -37,4 +37,31 @@ class ExtensionsSpec extends SparkSpec {
     assert(rows(0).getSeq[Double](1) == Seq(4.0, 6.0))
     assert(rows(1).getSeq[Double](1) == Seq(5.0, 6.0))
   }
+
+  test("no DuckDB dialect name shadows a Spark builtin") {
+    val builtin = org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+      .builtin
+    val clashes = GraftExtensions.dialect.map(_._1).filter(n =>
+      builtin.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+    assert(clashes.isEmpty, s"dialect names Spark defines: $clashes")
+  }
+
+  test("arg_max resolves as an aggregate under GROUP BY, FILTER and " +
+      "OVER") {
+    import spark.implicits._
+    Seq((1, 10, "a"), (1, 30, "b"), (1, 20, "c"), (2, 5, "d"))
+      .toDF("g", "k", "v").createOrReplaceTempView("ext_argmax")
+    val grouped = LakeSql.sql(spark, """
+      SELECT g, arg_max(v, k) AS top,
+             arg_max(v, k) FILTER (WHERE k < 30) AS top_below
+      FROM ext_argmax GROUP BY g ORDER BY g""").collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getString(2))).toSeq
+    assert(grouped == Seq((1, "b", "c"), (2, "d", "d")))
+    val windowed = LakeSql.sql(spark, """
+      SELECT v, arg_max(v, k) OVER (PARTITION BY g) AS top
+      FROM ext_argmax ORDER BY v""").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(windowed == Seq(("a", "b"), ("b", "b"), ("c", "b"), ("d", "d")))
+  }
 }
