@@ -5730,10 +5730,8 @@ object LakeSql {
         if (action.equalsIgnoreCase("NOTHING")) {
           val fresh = src.join(
             table(s, tbl).select(keys.map(col): _*), keys, "left_anti")
-          val obs = org.apache.spark.sql.Observation()
-          val df = fresh.observe(obs, count(lit(1)).as("n"))
-          fmt.append(s, path, df)
-          Seq(obs.get("n").asInstanceOf[Long]).toDF("count")
+          Seq(graft.sources.LakeFormat.rowsWritten(fmt.append(s, path, fresh)))
+            .toDF("count")
         } else {
           val AsgRe = """(?is)^([A-Za-z_]\w*)\s*=\s*excluded\.([A-Za-z_]\w*)$""".r
           val assigned = splitTopCommas(assigns).map(_.trim).map {
@@ -5857,31 +5855,25 @@ object LakeSql {
     }
     if (dir == "TO") {
       val df = if (isQuery) sql(s, source) else sql(s, s"SELECT * FROM $source")
-      // The returned count rides ON the write job itself (Observation
-      // metrics) — the source query runs exactly once, no read-back
-      // pass over the export.
-      val obs = org.apache.spark.sql.Observation()
-      var w = df.observe(obs,
-        org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("n"))
-        .write.mode("overwrite").format(fmt)
-      if (fmt == "csv") {
-        w = w.option("header", header.toString)
-        opts.get("delimiter").foreach(dl => w = w.option("sep", dl))
-      }
+      val csv =
+        if (fmt != "csv") Map.empty[String, String]
+        else Map("header" -> header.toString) ++ opts.get("delimiter").map("sep" -> _)
       // PARTITION_BY (c1[, c2…]): hive-layout export — one directory
       // per partition value, the layout every engine (and x65's
       // read_parquet) prunes on.
-      opts.get("partition_by").foreach { v =>
+      val partCols = opts.get("partition_by").toSeq.flatMap { v =>
         val cols = v.stripPrefix("(").stripSuffix(")")
-          .split(",").map(_.trim).filter(_.nonEmpty)
+          .split(",").map(_.trim).filter(_.nonEmpty).toSeq
         require(cols.nonEmpty, "COPY: empty PARTITION_BY list")
         cols.foreach(c => require(df.columns.exists(_.equalsIgnoreCase(c)),
           s"COPY: PARTITION_BY column $c not in the source"))
-        w = w.partitionBy(cols.toSeq: _*)
+        cols
       }
-      w.save(path)
-      Seq(obs.get("n").asInstanceOf[Long]).toDF("count")
+      // The returned count is the write command's own row metric — the
+      // source query runs exactly once, no read-back pass over the
+      // export.
+      Seq(org.apache.spark.sql.graft.Glue.save(df, fmt, path, partCols, csv))
+        .toDF("count")
     } else {
       require(!opts.contains("partition_by"),
         "COPY FROM: PARTITION_BY applies only to COPY … TO")
@@ -5911,14 +5903,10 @@ object LakeSql {
         if (fmt == "csv") r = csvOpts(r)
         r.load(path).select(schema.fieldNames.map(col).toSeq: _*)
       }
-      val obs = org.apache.spark.sql.Observation()
-      val df = loaded
-        .observe(obs, org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("n"))
-      lake.append(s, tpath, df)
-      // The append's own write job fires the observation — the load
-      // is scanned exactly once.
-      Seq(obs.get("n").asInstanceOf[Long]).toDF("count")
+      // The count is the append's own write metric — the load is
+      // scanned exactly once.
+      Seq(graft.sources.LakeFormat.rowsWritten(lake.append(s, tpath, loaded)))
+        .toDF("count")
     }
   }
 

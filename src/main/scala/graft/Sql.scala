@@ -1642,8 +1642,8 @@ object Sql {
       // the csv format roundtrip has its own oracle at s02.) Export is
       // a directory of part files (every executor writes its own; a
       // single-file funnel is the 100 TB anti-pattern), and the
-      // returned count rides on the write job itself (Observation
-      // metrics — the source query runs exactly once, no read-back).
+      // returned count is the write command's own row metric (the
+      // source query runs exactly once, no read-back).
       GQuery("x55_sql_copy", (s, d) => {
         open(s, d)
         val tag = java.util.UUID.randomUUID().toString

@@ -588,9 +588,8 @@ object DeltaLite extends LakeFormat {
   private[sources] def stage(s: SparkSession, table: String, df: DataFrame,
       partCols: Seq[String]): Seq[(String, Seq[(String, Option[String])], Long)] = {
     val stageDir = new Path(table, s"_stage_${UUID.randomUUID()}")
-    val w = df.write.mode("overwrite")
-    (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
-      .parquet(stageDir.toString)
+    LakeFormat.wrote(org.apache.spark.sql.graft.Glue.save(df, "parquet",
+      stageDir.toString, partCols))
     val f = fs(s, stageDir)
     val stagePrefix = f.makeQualified(stageDir).toString
     val found = mutable.Buffer[(Path, String, Long)]() // (file, subdir, size)

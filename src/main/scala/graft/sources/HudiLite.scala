@@ -1,8 +1,12 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Minimal Apache-Hudi-style table format — the third open table
@@ -38,9 +42,13 @@ import org.apache.spark.sql.functions._
   * key-unique per commit — real Hudi's precombine-field dedup is out
   * of scope).
   *
-  * Scale shape: the timeline is metadata (driver-side, O(commits));
-  * data file planning is per file group; reads are plain pruned parquet
-  * scans of the chosen slices, so Catalyst pushdown applies unchanged.
+  * Scale shape: the timeline is metadata (driver-side, O(commits)),
+  * parsed in one place ([[commits]]). Every operation reads through
+  * ONE multi-file parquet scan ([[scan]]: one schema inference,
+  * whatever the number of groups) whose rows carry their file group,
+  * and writes through ONE staged group write ([[writeGroups]]), so no
+  * operation's job count grows with the number of groups. Reads keep
+  * Catalyst pushdown; a filter on the group tag prunes whole files.
   * The MOR read-time merge confines the window shuffle to log-bearing
   * groups only — a 100 TB table with 1% freshly-updated groups merges
   * 1% and plain-scans 99%.
@@ -105,6 +113,29 @@ object HudiLite {
   case class FileSlice(baseInstant: String, basePath: String,
       logs: Seq[(String, String)])
 
+  /** One write stat of a commit: the file (relative path) it wrote into
+    * group `fileId`; `log` marks a MOR log file.
+    */
+  private case class Stat(fileId: String, path: String, log: Boolean)
+
+  private case class Commit(instant: String, operation: String,
+      stats: Seq[Stat])
+
+  /** Every completed commit, ascending — the one reader of the
+    * timeline's commit JSON.
+    */
+  private def commits(s: SparkSession, table: String): Seq[Commit] = {
+    val f = fs(s, hoodieDir(table))
+    timelineFiles(s, table).map { case (i, metaFile) =>
+      val n = Json.readTree(readText(f, metaFile))
+      val stats = n.get("partitionToWriteStats").elements().asScala
+        .flatMap(_.elements().asScala).map(st => Stat(
+          st.get("fileId").asText(), st.get("path").asText(),
+          st.path("log").asBoolean(false))).toSeq
+      Commit(i, n.path("operation").asText(""), stats)
+    }
+  }
+
   /** (fileId → latest [[FileSlice]]) at `asOf` (empty = latest
     * overall) — the Hudi snapshot-read rule. A new BASE file for a
     * group (COW rewrite, MOR compaction, fresh insert group) starts a
@@ -113,38 +144,21 @@ object HudiLite {
     */
   private def fileSlices(s: SparkSession, table: String,
       asOf: String = ""): Map[String, FileSlice] = {
-    val f = fs(s, hoodieDir(table))
-    val tl = timelineFiles(s, table)
-      .filter { case (i, _) => asOf.isEmpty || i <= asOf }
-    require(tl.nonEmpty,
+    val cs = commits(s, table).filter(c => asOf.isEmpty || c.instant <= asOf)
+    require(cs.nonEmpty,
       s"no completed commits at $table" +
         (if (asOf.nonEmpty) s" at or before instant $asOf" else ""))
-    var slices = Map.empty[String, FileSlice]
-    tl.foreach { case (i, metaFile) => // ascending: later wins
-      val n = Json.readTree(readText(f, metaFile))
-      n.get("partitionToWriteStats").fields().forEachRemaining { e =>
-        e.getValue.elements().forEachRemaining { st =>
-          val fileId = st.get("fileId").asText()
-          val path = st.get("path").asText()
-          if (st.has("log") && st.get("log").asBoolean()) {
-            val cur = slices.getOrElse(fileId, throw new IllegalStateException(
-              s"log file for unknown file group $fileId at instant $i"))
-            slices += fileId -> cur.copy(logs = cur.logs :+ (i, path))
-          } else slices += fileId -> FileSlice(i, path, Nil)
+    cs.foldLeft(Map.empty[String, FileSlice]) { (acc, c) =>
+      c.stats.foldLeft(acc) { (m, st) => // ascending: later wins
+        if (!st.log) m + (st.fileId -> FileSlice(c.instant, st.path, Nil))
+        else {
+          val cur = m.getOrElse(st.fileId, throw new IllegalStateException(
+            s"log file for unknown file group ${st.fileId} at instant ${c.instant}"))
+          m + (st.fileId -> cur.copy(logs = cur.logs :+ (c.instant -> st.path)))
         }
       }
     }
-    slices
   }
-
-  /** Back-compat shape used by the COW upsert path: (fileId →
-    * (base instant, base path)).
-    */
-  private def latestSlices(s: SparkSession, table: String,
-      asOf: String = ""): Map[String, (String, String)] =
-    fileSlices(s, table, asOf).map { case (fid, sl) =>
-      fid -> (sl.baseInstant, sl.basePath)
-    }
 
   /** Per-row commit-time meta column (the real Hudi field): stamped at
     * write, RETAINED through COW rewrites for untouched rows — which
@@ -153,56 +167,115 @@ object HudiLite {
     */
   val MetaCommitTime = "_hoodie_commit_time"
 
-  /** Write `df` as one new file slice per spark partition under
-    * `instant`, returning the commit's write stats.
+  /** The file group of a row: tagged by [[scan]], read by
+    * [[writeGroups]] (never stored inside a data file).
     */
-  private def writeSlices(s: SparkSession, table: String, df: DataFrame,
-      instant: String,
-      fileIdFor: Int => String): Seq[(String, String)] = {
-    val staged = s"$table/.staging_$instant"
-    // Always re-stamp: every record written by a commit carries THAT
-    // commit's instant (the incremental() contract). A source df that
-    // already has the column (e.g. rows from another table's
-    // incremental read) must not smuggle stale instants in.
-    val withMeta = df.withColumn(MetaCommitTime, lit(instant))
-    withMeta.write.mode("overwrite").parquet(staged)
+  private val Fg = "_hoodie_fg"
+
+  /** Separates a data file's group id from its instant. */
+  private val Sep = "_0-0-0_"
+
+  /** Relative paths of the slices' base files, and of their log files
+    * when `logs`.
+    */
+  private def files(slices: Iterable[FileSlice], logs: Boolean): Seq[String] =
+    slices.toSeq.flatMap(sl => sl.basePath +: (if (logs) sl.logs.map(_._2) else Nil))
+
+  /** ONE parquet scan of `rels` (one schema inference, whatever the
+    * number of groups), each row tagged with its file group, cut from
+    * the file name `<fileId>_0-0-0_<instant>[.log].parquet` (file ids
+    * never contain the separator, see [[create]]). A filter on the tag
+    * prunes files before any is opened; an unused tag costs nothing.
+    */
+  private def scan(s: SparkSession, table: String, rels: Seq[String]): DataFrame =
+    s.read.parquet(rels.map(rel => s"$table/$rel"): _*)
+      .withColumn(Fg, substring_index(col("_metadata.file_name"), Sep, 1))
+
+  /** Ids for fresh file groups: one per spark partition of the rows
+    * being written, `g<nnnn><suffix>`.
+    */
+  private def freshGroup(suffix: String): Column =
+    concat(format_string("g%04d", spark_partition_id()), lit(suffix))
+
+  /** The one staged write: `rows` land as EXACTLY ONE new file per
+    * file group under `instant` — a log file for the groups `log`
+    * accepts, a new base slice otherwise. Rows tagged with their group
+    * write in ONE distributed job (repartition on the group id +
+    * partitionBy write + metadata-sized renames) — never a driver loop
+    * of per-group jobs, which at lake scale would mean thousands of
+    * sequential job launches. Untagged rows of a bulk insert
+    * (`freshSuffix`) open one fresh group per spark partition and are
+    * written as they are: no shuffle, no sort.
+    */
+  private def writeGroups(s: SparkSession, table: String, instant: String,
+      rows: DataFrame, log: String => Boolean = _ => false,
+      freshSuffix: Option[String] = None): Seq[Stat] = {
     val f = fs(s, new Path(table))
-    val parts = f.listStatus(new Path(staged))
-      .map(_.getPath).filter(_.getName.startsWith("part-")).sortBy(_.getName)
-    val stats = parts.zipWithIndex.map { case (p, i) =>
-      val fileId = fileIdFor(i)
-      val rel = s"${fileId}_0-0-0_$instant.parquet"
-      f.rename(p, new Path(table, rel))
-      (fileId, rel)
-    }.toSeq
-    f.delete(new Path(staged), true)
-    stats
+    val staged = new Path(table, s".staging_$instant")
+    def parts(dir: Path) = f.listStatus(dir).map(_.getPath)
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName).toSeq
+    try {
+      val groups = freshSuffix match {
+        case Some(suffix) =>
+          rows.write.mode("overwrite").parquet(staged.toString)
+          parts(staged).zipWithIndex.map { case (p, i) => (f"g$i%04d$suffix", p) }
+        case None =>
+          rows.repartition(col(Fg))
+            .write.partitionBy(Fg).mode("overwrite").parquet(staged.toString)
+          if (!f.exists(staged)) Nil
+          else f.listStatus(staged).map(_.getPath)
+            .filter(_.getName.startsWith(s"$Fg=")).toSeq.map { dir =>
+              val fileId = ExternalCatalogUtils.unescapePathName(
+                dir.getName.stripPrefix(s"$Fg="))
+              // repartition(col) hashes each group to ONE task → one
+              // file. If that invariant ever breaks (maxRecordsPerFile,
+              // commit-protocol changes), fail loud instead of dropping
+              // rows.
+              val ps = parts(dir)
+              require(ps.length == 1,
+                s"write of file group $fileId produced ${ps.length} part " +
+                  "files (expected exactly 1); refusing to drop rows")
+              (fileId, ps.head)
+            }
+      }
+      groups.map { case (fileId, part) =>
+        val rel = s"$fileId$Sep$instant" +
+          (if (log(fileId)) ".log.parquet" else ".parquet")
+        require(f.rename(part, new Path(table, rel)),
+          s"rename of file group $fileId's part file to $rel failed")
+        Stat(fileId, rel, log(fileId))
+      }
+    } finally f.delete(staged, true)
   }
 
-  private def commitNode(operation: String,
-      stats: Seq[(String, String, Boolean)]): String = {
+  /** Commit `stats` under `instant`: a `.deltacommit` for the MOR log
+    * write, a `.commit` otherwise. Returns the instant.
+    */
+  private def commit(s: SparkSession, table: String, instant: String,
+      operation: String, stats: Seq[Stat]): String = {
     val root = Json.createObjectNode()
     root.put("operation", operation)
-    val p2w = root.putObject("partitionToWriteStats")
-    val arr = p2w.putArray("") // single (root) partition — scope cut
-    stats.foreach { case (fileId, rel, isLog) =>
-      val st = arr.addObject()
-      st.put("fileId", fileId)
-      st.put("path", rel)
-      if (isLog) st.put("log", true)
+    // single (root) partition — scope cut
+    val arr = root.putObject("partitionToWriteStats").putArray("")
+    stats.foreach { st =>
+      val o = arr.addObject()
+      o.put("fileId", st.fileId)
+      o.put("path", st.path)
+      if (st.log) o.put("log", true)
     }
-    Json.writeValueAsString(root)
+    val kind = if (operation == "deltacommit") "deltacommit" else "commit"
+    writeText(fs(s, hoodieDir(table)),
+      new Path(hoodieDir(table), s"$instant.$kind"),
+      Json.writeValueAsString(root))
+    instant
   }
-
-  private def baseStats(stats: Seq[(String, String)]):
-      Seq[(String, String, Boolean)] =
-    stats.map { case (fid, rel) => (fid, rel, false) }
 
   val CopyOnWrite = "COPY_ON_WRITE"
   val MergeOnRead = "MERGE_ON_READ"
 
   /** Create a table of either type: hoodie.properties + first commit
-    * (the initial bulk insert writes base files under both types).
+    * (the initial bulk insert writes base files under both types, one
+    * file group per spark partition of `df`).
     */
   def create(s: SparkSession, table: String, df: DataFrame,
       recordKey: String, tableType: String = CopyOnWrite): String = {
@@ -211,6 +284,8 @@ object HudiLite {
     require(!f.exists(hd), s"table already exists at $table")
     require(Set(CopyOnWrite, MergeOnRead).contains(tableType),
       s"unknown hoodie.table.type $tableType")
+    require(!new Path(table).getName.contains(Sep),
+      s"a table name may not contain $Sep, the file-name separator")
     f.mkdirs(hd)
     require(df.schema.fieldNames.contains(recordKey),
       s"record key $recordKey not in schema")
@@ -221,12 +296,17 @@ object HudiLite {
     writeText(f, new Path(hd, "hoodie.properties"),
       Json.writeValueAsString(props))
     val instant = nextInstant(s, table)
-    val stats = writeSlices(s, table, df, instant,
-      i => f"g$i%04d-${new Path(table).getName}")
-    writeText(f, new Path(hd, s"$instant.commit"),
-      commitNode("upsert", baseStats(stats)))
-    instant
+    commit(s, table, instant, "upsert", writeGroups(s, table, instant,
+      stamped(df, instant), freshSuffix = Some(s"-${new Path(table).getName}")))
   }
+
+  /** Always re-stamp: every record written by a commit carries THAT
+    * commit's instant (the incremental() contract). A source df that
+    * already has the column (e.g. rows from another table's
+    * incremental read) must not smuggle stale instants in.
+    */
+  private def stamped(df: DataFrame, instant: String): DataFrame =
+    df.withColumn(MetaCommitTime, lit(instant))
 
   private def propsOf(s: SparkSession, table: String) = {
     val f = fs(s, hoodieDir(table))
@@ -247,8 +327,7 @@ object HudiLite {
     * which is strictly later than every stamp a base row can carry.
     */
   private def latestWins(df: DataFrame, key: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(key)).orderBy(col(MetaCommitTime).desc)
+    val w = Window.partitionBy(col(key)).orderBy(col(MetaCommitTime).desc)
     df.withColumn("_hoodie_rn", row_number().over(w))
       .filter(col("_hoodie_rn") === 1).drop("_hoodie_rn")
   }
@@ -257,34 +336,25 @@ object HudiLite {
     * its newest base slice, MERGED at read time with the slice's log
     * files when it has any (MOR real-time view — latest record per key
     * wins). Groups without logs — every COW group, and every MOR group
-    * since its last compaction — go through a plain multi-file parquet
-    * scan with full pushdown; the merge window is confined to the
-    * log-bearing groups' rows only. The per-row commit-time meta
-    * column is dropped unless `keepMeta`.
+    * since its last compaction — are a plain parquet scan with full
+    * pushdown; the merge window is confined to the log-bearing groups'
+    * rows only. When only some groups have logs, the two halves read
+    * their own file lists under the [[scan]]'s schema: no second
+    * schema inference, and no per-row group filter. The per-row
+    * commit-time meta column is dropped unless `keepMeta`.
     */
   def snapshot(s: SparkSession, table: String, asOf: String = "",
       keepMeta: Boolean = false): DataFrame = {
-    val slices = fileSlices(s, table, asOf)
-    val (withLogs, pure) = slices.partition(_._2.logs.nonEmpty)
-    val pureDf =
-      if (pure.isEmpty) None
-      else Some(s.read.parquet(
-        pure.values.map(sl => s"$table/${sl.basePath}").toSeq: _*))
-    val mergedDf =
-      if (withLogs.isEmpty) None
-      else {
-        val key = recordKeyOf(s, table)
-        val files = withLogs.values.flatMap(sl =>
-          sl.basePath +: sl.logs.map(_._2)).map(rel => s"$table/$rel").toSeq
-        Some(latestWins(s.read.parquet(files: _*), key))
-      }
-    val df = (pureDf, mergedDf) match {
-      case (Some(p), Some(m)) => p.unionByName(m)
-      case (Some(p), None) => p
-      case (None, Some(m)) => m
-      case (None, None) => throw new IllegalStateException(
-        s"empty snapshot at $table")
-    }
+    val slices = fileSlices(s, table, asOf).values.toSeq
+    val (logged, pure) = slices.partition(_.logs.nonEmpty)
+    val all = scan(s, table, files(slices, logs = true)).drop(Fg)
+    def read(sl: Seq[FileSlice]) = s.read.schema(all.schema)
+      .parquet(files(sl, logs = true).map(rel => s"$table/$rel"): _*)
+    def merged(rows: DataFrame) = latestWins(rows, recordKeyOf(s, table))
+    val df =
+      if (logged.isEmpty) all
+      else if (pure.isEmpty) merged(all)
+      else read(pure).unionByName(merged(read(logged)))
     if (keepMeta) df else df.drop(MetaCommitTime)
   }
 
@@ -295,9 +365,8 @@ object HudiLite {
     */
   def readOptimized(s: SparkSession, table: String,
       keepMeta: Boolean = false): DataFrame = {
-    val slices = fileSlices(s, table)
-    val df = s.read.parquet(
-      slices.values.map(sl => s"$table/${sl.basePath}").toSeq: _*)
+    val df = scan(s, table, files(fileSlices(s, table).values, logs = false))
+      .drop(Fg)
     if (keepMeta) df else df.drop(MetaCommitTime)
   }
 
@@ -311,55 +380,53 @@ object HudiLite {
     (snapshot(s, table).schema, Seq.empty, instants.last.toLong)
   }
 
+  /** The files of instants (from, to] that `deliver` accepts, as
+    * (instant, absolute path, size, no partition values) for the DSv2
+    * streaming source; cost is O(commits). `deliver` sees each write
+    * stat with whether its group was already known — written by an
+    * earlier instant, inside the window or before it.
+    */
+  private def slicesBetween(s: SparkSession, table: String, from: Long,
+      to: Long)(deliver: (Commit, Stat, Boolean) => Boolean)
+      : Seq[(Long, String, Long, Seq[(String, Option[String])])] = {
+    val f = fs(s, new Path(table))
+    val rootQ = f.makeQualified(new Path(table))
+    val (before, after) = commits(s, table).partition(_.instant.toLong <= from)
+    var seen = before.flatMap(_.stats.map(_.fileId)).toSet
+    after.filter(_.instant.toLong <= to).flatMap(c => c.stats.flatMap { st =>
+      val known = seen.contains(st.fileId)
+      seen += st.fileId
+      if (!deliver(c, st, known)) None
+      else {
+        val p = new Path(rootQ, st.path)
+        Some((c.instant.toLong, p.toString, f.getFileStatus(p).getLen, Nil))
+      }
+    })
+  }
+
   /** File slices ADDED by instants (from, to] for the DSv2 streaming
     * source — appends-only contract like the Delta source default: a
     * commit that REWRITES an existing file group (a COW upsert of
     * matched keys) fails loudly rather than silently re-emitting the
     * group's old rows; update-inclusive consumption is the batch
-    * [[incremental]] query's job. Returns (instant, absolute path,
-    * size, no partition values); cost is O(new commits).
+    * [[incremental]] query's job.
     */
   def addedSlicesBetween(s: SparkSession, table: String, from: Long,
-      to: Long): Seq[(Long, String, Long, Seq[(String, Option[String])])] = {
-    val f = fs(s, new Path(table))
-    val rootQ = f.makeQualified(new Path(table))
-    val tl = timelineFiles(s, table)
-    // Groups live BEFORE the window: appearing again inside it = rewrite.
-    var seen: Set[String] = tl.filter(_._1.toLong <= from)
-      .flatMap { case (_, metaFile) =>
-        val n = Json.readTree(readText(f, metaFile))
-        val b = Seq.newBuilder[String]
-        n.get("partitionToWriteStats").fields().forEachRemaining(e =>
-          e.getValue.elements().forEachRemaining(st =>
-            b += st.get("fileId").asText()))
-        b.result()
-      }.toSet
-    tl.filter { case (i, _) => i.toLong > from && i.toLong <= to }
-      .flatMap { case (i, metaFile) =>
-        val n = Json.readTree(readText(f, metaFile))
-        val out = Seq.newBuilder[(Long, String, Long,
-          Seq[(String, Option[String])])]
-        n.get("partitionToWriteStats").fields().forEachRemaining(e =>
-          e.getValue.elements().forEachRemaining { st =>
-            val fileId = st.get("fileId").asText()
-            if (st.has("log") && st.get("log").asBoolean())
-              throw new UnsupportedOperationException(
-                s"instant $i of $table appends a LOG file to group " +
-                  s"$fileId; the streaming source reads base-file " +
-                  "appends only — use HudiLite.incremental for " +
-                  "update-inclusive consumption")
-            if (seen.contains(fileId))
-              throw new UnsupportedOperationException(
-                s"instant $i of $table rewrites file group $fileId; the " +
-                  "streaming source reads appends only — use " +
-                  "HudiLite.incremental for update-inclusive consumption")
-            seen += fileId
-            val p = new Path(rootQ, st.get("path").asText())
-            out += ((i.toLong, p.toString, f.getFileStatus(p).getLen, Nil))
-          })
-        out.result()
-      }
-  }
+      to: Long): Seq[(Long, String, Long, Seq[(String, Option[String])])] =
+    slicesBetween(s, table, from, to) { (c, st, known) =>
+      if (st.log)
+        throw new UnsupportedOperationException(
+          s"instant ${c.instant} of $table appends a LOG file to group " +
+            s"${st.fileId}; the streaming source reads base-file " +
+            "appends only — use HudiLite.incremental for " +
+            "update-inclusive consumption")
+      if (known)
+        throw new UnsupportedOperationException(
+          s"instant ${c.instant} of $table rewrites file group " +
+            s"${st.fileId}; the streaming source reads appends only — use " +
+            "HudiLite.incremental for update-inclusive consumption")
+      true
+    }
 
   /** Files holding every record WRITTEN by instants (from, to] — the
     * UPDATE-INCLUSIVE streaming feed a MOR table supports natively:
@@ -374,45 +441,15 @@ object HudiLite {
     * [[incremental]] query's per-row stamp filter instead.
     */
   def writtenSlicesBetween(s: SparkSession, table: String, from: Long,
-      to: Long): Seq[(Long, String, Long, Seq[(String, Option[String])])] = {
-    val f = fs(s, new Path(table))
-    val rootQ = f.makeQualified(new Path(table))
-    val tl = timelineFiles(s, table)
-    var seen: Set[String] = tl.filter(_._1.toLong <= from)
-      .flatMap { case (_, metaFile) =>
-        val n = Json.readTree(readText(f, metaFile))
-        val b = Seq.newBuilder[String]
-        n.get("partitionToWriteStats").fields().forEachRemaining(e =>
-          e.getValue.elements().forEachRemaining(st =>
-            b += st.get("fileId").asText()))
-        b.result()
-      }.toSet
-    tl.filter { case (i, _) => i.toLong > from && i.toLong <= to }
-      .flatMap { case (i, metaFile) =>
-        val n = Json.readTree(readText(f, metaFile))
-        val op = Option(n.get("operation")).map(_.asText()).getOrElse("")
-        val out = Seq.newBuilder[(Long, String, Long,
-          Seq[(String, Option[String])])]
-        n.get("partitionToWriteStats").fields().forEachRemaining(e =>
-          e.getValue.elements().forEachRemaining { st =>
-            val fileId = st.get("fileId").asText()
-            val isLog = st.has("log") && st.get("log").asBoolean()
-            if (op == "compact") {
-              seen += fileId // no new records; group stays known
-            } else if (isLog || !seen.contains(fileId)) {
-              seen += fileId
-              val p = new Path(rootQ, st.get("path").asText())
-              out += ((i.toLong, p.toString, f.getFileStatus(p).getLen,
-                Nil))
-            } else
-              throw new UnsupportedOperationException(
-                s"instant $i of $table rewrites file group $fileId; " +
-                  "file-level delivery would re-emit carried rows — " +
-                  "use HudiLite.incremental on COW tables")
-          })
-        out.result()
-      }
-  }
+      to: Long): Seq[(Long, String, Long, Seq[(String, Option[String])])] =
+    slicesBetween(s, table, from, to) { (c, st, known) =>
+      if (c.operation == "compact") false // no new records
+      else if (st.log || !known) true
+      else throw new UnsupportedOperationException(
+        s"instant ${c.instant} of $table rewrites file group ${st.fileId}; " +
+          "file-level delivery would re-emit carried rows — " +
+          "use HudiLite.incremental on COW tables")
+    }
 
   /** Hudi INCREMENTAL QUERY: every record written (inserted OR
     * updated) by a commit with instant > `fromInstant` — a per-row
@@ -425,31 +462,48 @@ object HudiLite {
     snapshot(s, table, keepMeta = true)
       .filter(col(MetaCommitTime) > fromInstant)
 
+  private val DupKeys = "duplicate record keys in the upsert source"
+
+  /** `updates`, failing the job that evaluates it when two of its rows
+    * share a record key — the check rides on a job the upsert runs
+    * anyway; [[upsert]] rethrows it as an IllegalArgumentException.
+    */
+  private def keyUnique(updates: DataFrame, key: String): DataFrame =
+    updates.withColumn("_hoodie_n", count(lit(1)).over(Window.partitionBy(col(key))))
+      .filter(assert_true(col("_hoodie_n") === 1, lit(DupKeys)).isNull)
+      .drop("_hoodie_n")
+
   /** Upsert by record key, dispatching on the table's type:
     * COPY_ON_WRITE rewrites affected groups, MERGE_ON_READ appends log
-    * files to them. Updates must be key-unique per call.
+    * files to them. Updates must be key-unique per call: a duplicate
+    * key throws IllegalArgumentException before anything commits.
     */
   def upsert(s: SparkSession, table: String, updates: DataFrame): String =
-    if (tableTypeOf(s, table) == MergeOnRead) morUpsert(s, table, updates)
-    else cowUpsert(s, table, updates)
+    try {
+      if (tableTypeOf(s, table) == MergeOnRead) morUpsert(s, table, updates)
+      else cowUpsert(s, table, updates)
+    } catch {
+      case e: Exception if Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null)
+          .exists(t => Option(t.getMessage).exists(_.contains(DupKeys))) =>
+        throw new IllegalArgumentException(
+          s"$DupKeys: HudiLite.upsert needs key-unique updates", e)
+    }
 
   /** COPY-ON-WRITE upsert by record key: file groups containing a
     * matched key are REWRITTEN (merged with the updates) as new slices
     * of the SAME group; unmatched incoming keys land in fresh groups.
     * Untouched groups are not rewritten — the COW write amplification
-    * is per affected file group, not per table.
-    *
-    * ALL affected groups rewrite in ONE distributed job (repartition
-    * on the group id + partitionBy write + metadata-sized renames) —
-    * never a driver loop of per-group jobs, which at lake scale would
-    * mean thousands of sequential job launches.
+    * is per affected file group, not per table. The affected groups
+    * come from a key-column-only probe of one [[scan]] (guide §6); only
+    * their files are then read full-width, and the rewrite and the
+    * fresh groups write in one [[writeGroups]] job.
     */
   private def cowUpsert(s: SparkSession, table: String,
       updates: DataFrame): String = {
     val key = recordKeyOf(s, table)
-    val slices = latestSlices(s, table)
+    val slices = fileSlices(s, table)
     val instant = nextInstant(s, table)
-    val f = fs(s, new Path(table))
     // Multi-consumed source: materialize ONLY when its plan is
     // nondeterministic (guide §5) — a deterministic source re-evaluates
     // to the same rows, and skipping the checkpoint saves one job and
@@ -457,149 +511,53 @@ object HudiLite {
     val upd =
       if (graft.util.Plans.deterministic(updates)) updates
       else updates.localCheckpoint()
+    val all = scan(s, table, files(slices.values, logs = false))
     // No distinct() on the probe keys: semi/anti joins are unaffected
-    // by right-side duplicates, and dropping Deduplicate saves an
-    // exchange (guide §2.4).
-    val updKeys = upd.select(col(key))
-
-    // Affected groups from COLUMN-PRUNED key scans (guide §6): the r17
-    // shape localCheckpointed EVERY column of EVERY group — an O(table)
-    // read + executor-memory materialization per upsert. A 100 TB COW
-    // upsert must discover its touched groups from the key column
-    // alone, then read only those groups full-width for the rewrite.
-    val keyToGroupAll = slices.toSeq.map { case (fileId, (_, rel)) =>
-      s.read.parquet(s"$table/$rel").select(col(key))
-        .withColumn("_hoodie_fg", lit(fileId))
-    }.reduce(_.unionByName(_))
-    val affected = keyToGroupAll.join(updKeys, Seq(key), "left_semi")
-      .select(col("_hoodie_fg")).distinct()
-      .collect().map(_.getString(0)).toSet
-
-    val newStats = scala.collection.mutable.Buffer.empty[(String, String)]
-    if (affected.nonEmpty) {
-      // Only affected groups are read full-width and rewritten: their
-      // unmatched current rows + the updates whose key lives there,
-      // each row carrying the group id — one shuffle on the group id,
-      // one partitioned write.
-      val tagged = slices.toSeq.collect {
-        case (fileId, (_, rel)) if affected.contains(fileId) =>
-          s.read.parquet(s"$table/$rel")
-            .withColumn("_hoodie_fg", lit(fileId))
-      }.reduce(_.unionByName(_))
-      val merged = tagged
-        .join(updKeys, Seq(key), "left_anti")
-        .unionByName(upd
-          .withColumn(MetaCommitTime, lit(instant)) // updated rows re-stamp
-          .join(tagged.select(col(key), col("_hoodie_fg")), Seq(key))
-          .select(tagged.columns.map(col).toSeq: _*))
-      val staged = s"$table/.staging_$instant"
-      merged.repartition(col("_hoodie_fg"))
-        .write.partitionBy("_hoodie_fg").mode("overwrite").parquet(staged)
-      val stagedPath = new Path(staged)
-      if (f.exists(stagedPath))
-        f.listStatus(stagedPath).map(_.getPath)
-          .filter(_.getName.startsWith("_hoodie_fg=")).foreach { dir =>
-            val fileId = dir.getName.stripPrefix("_hoodie_fg=")
-            // repartition(col) hashes each group to ONE task → one file.
-            // If that invariant ever breaks (maxRecordsPerFile, commit-
-            // protocol changes), fail loud instead of dropping rows.
-            val groupParts = f.listStatus(dir).map(_.getPath)
-              .filter(_.getName.startsWith("part-"))
-            require(groupParts.length == 1,
-              s"COW rewrite of group $fileId produced ${groupParts.length} " +
-                "part files (expected exactly 1); refusing to drop rows")
-            val part = groupParts.head
-            val rel = s"${fileId}_0-0-0_$instant.parquet"
-            f.rename(part, new Path(table, rel))
-            newStats += ((fileId, rel))
-          }
-      f.delete(stagedPath, true)
-    }
-
-    // Pure inserts (keys in no current group) become fresh groups.
-    // Instant-suffixed ids: a reused group name would make this slice
-    // SHADOW that group's rows at read time.
-    val inserts = upd.join(keyToGroupAll.select(col(key)), Seq(key),
-      "left_anti")
-    if (!inserts.isEmpty)
-      newStats ++= writeSlices(s, table, inserts, instant,
-        i => f"g$i%04d-ins-$instant")
-    require(newStats.nonEmpty, "upsert matched nothing and inserted nothing")
-    writeText(f, new Path(hoodieDir(table), s"$instant.commit"),
-      commitNode("upsert", baseStats(newStats.toSeq)))
-    instant
+    // by right-side duplicates (guide §2.4).
+    val affected = all.select(col(key), col(Fg))
+      .join(keyUnique(upd, key).select(col(key)), Seq(key), "left_semi")
+      .select(col(Fg)).distinct().collect().map(_.getString(0))
+    val hit = all.filter(col(Fg).isin(affected.toIndexedSeq: _*))
+    // Carried rows keep their stamps; updated rows re-stamp and join
+    // their group; keys in no group get a fresh one (instant-suffixed
+    // ids: a reused name would SHADOW that group's rows at read time).
+    val rows = hit.join(upd.select(col(key)), Seq(key), "left_anti")
+      .unionByName(stamped(upd, instant)
+        .join(hit.select(col(key), col(Fg)), Seq(key), "left")
+        .withColumn(Fg, coalesce(col(Fg), freshGroup(s"-ins-$instant")))
+        .select(hit.columns.map(col).toSeq: _*))
+    val stats = writeGroups(s, table, instant, rows)
+    require(stats.nonEmpty, "upsert matched nothing and inserted nothing")
+    commit(s, table, instant, "upsert", stats)
   }
 
   /** MERGE-ON-READ upsert: updates whose key lives in an existing file
     * group land in ONE new LOG FILE per affected group — no base file
-    * is read or rewritten, so write cost is O(updates) regardless of
-    * group size (the headline MOR property: a 1 GB file group takes a
-    * 1 MB update for the price of writing 1 MB). Keys in no current
-    * group become fresh base-file groups (the bulk-insert path).
-    * Commits as `<instant>.deltacommit`.
-    *
-    * All log files write in ONE distributed job (repartition on the
-    * group id + partitionBy write + metadata-sized renames), mirroring
-    * the COW path's single-job shape.
+    * is read full-width or rewritten, so write cost is O(updates)
+    * regardless of group size (the headline MOR property: a 1 GB file
+    * group takes a 1 MB update for the price of writing 1 MB). Keys in
+    * no current group become fresh base-file groups (the bulk-insert
+    * path). The source appears once in the plan, and logs and fresh
+    * groups write in one [[writeGroups]] job — an empty insert set
+    * writes nothing. Commits as `<instant>.deltacommit`.
     */
   private def morUpsert(s: SparkSession, table: String,
       updates: DataFrame): String = {
     val key = recordKeyOf(s, table)
     val slices = fileSlices(s, table)
     val instant = nextInstant(s, table)
-    val f = fs(s, new Path(table))
-    // Materialize only a nondeterministic source (guide §5) — see
-    // cowUpsert.
-    val upd =
-      if (graft.util.Plans.deterministic(updates)) updates
-      else updates.localCheckpoint()
-
     // key → file group, from base AND log rows (a key that entered the
-    // table through an earlier log file still maps to its group).
-    // Keys-only and therefore bounded, so the localCheckpoint below is
-    // O(keys), never O(table) — it is consumed by two joins.
-    val keyToGroup = slices.toSeq.map { case (fileId, sl) =>
-      val files = (sl.basePath +: sl.logs.map(_._2))
-        .map(rel => s"$table/$rel")
-      s.read.parquet(files: _*).select(col(key))
-        .withColumn("_hoodie_fg", lit(fileId))
-    }.reduce(_.unionByName(_)).distinct().localCheckpoint()
-
-    // Matched updates → one log file per affected group.
-    val matched = upd.join(keyToGroup, Seq(key))
-    val newStats = scala.collection.mutable.Buffer.empty[(String, String, Boolean)]
-    val staged = s"$table/.staging_$instant"
-    val stagedPath = new Path(staged)
-    matched
-      .withColumn(MetaCommitTime, lit(instant))
-      .repartition(col("_hoodie_fg"))
-      .write.partitionBy("_hoodie_fg").mode("overwrite").parquet(staged)
-    if (f.exists(stagedPath))
-      f.listStatus(stagedPath).map(_.getPath)
-        .filter(_.getName.startsWith("_hoodie_fg=")).foreach { dir =>
-          val fileId = dir.getName.stripPrefix("_hoodie_fg=")
-          val groupParts = f.listStatus(dir).map(_.getPath)
-            .filter(_.getName.startsWith("part-"))
-          require(groupParts.length == 1,
-            s"MOR log write of group $fileId produced " +
-              s"${groupParts.length} part files (expected exactly 1)")
-          val rel = s"${fileId}_0-0-0_$instant.log.parquet"
-          f.rename(groupParts.head, new Path(table, rel))
-          newStats += ((fileId, rel, true))
-        }
-    f.delete(stagedPath, true)
-
-    // Pure inserts become fresh base-file groups (instant-suffixed ids
-    // so a reused name can never shadow an existing group).
-    val inserts = upd.join(keyToGroup.select(col(key)), Seq(key),
-      "left_anti")
-    if (!inserts.isEmpty)
-      newStats ++= baseStats(writeSlices(s, table, inserts, instant,
-        i => f"g$i%04d-ins-$instant"))
-    require(newStats.nonEmpty, "upsert matched nothing and inserted nothing")
-    writeText(f, new Path(hoodieDir(table), s"$instant.deltacommit"),
-      commitNode("deltacommit", newStats.toSeq))
-    instant
+    // table through an earlier log file still maps to its group). A key
+    // lives in one group, so max() only folds its base and log rows,
+    // keyed like the join that follows.
+    val groups = scan(s, table, files(slices.values, logs = true))
+      .groupBy(col(key)).agg(max(col(Fg)).as(Fg))
+    val rows = stamped(keyUnique(updates, key), instant)
+      .join(groups, Seq(key), "left")
+      .withColumn(Fg, coalesce(col(Fg), freshGroup(s"-ins-$instant")))
+    val stats = writeGroups(s, table, instant, rows, slices.contains)
+    require(stats.nonEmpty, "upsert matched nothing and inserted nothing")
+    commit(s, table, instant, "deltacommit", stats)
   }
 
   /** MOR COMPACTION: fold every log-bearing group's (base + logs) into
@@ -618,36 +576,11 @@ object HudiLite {
     val withLogs = fileSlices(s, table).filter(_._2.logs.nonEmpty)
     if (withLogs.isEmpty) return ""
     val instant = nextInstant(s, table)
-    val f = fs(s, new Path(table))
-    val tagged = withLogs.toSeq.map { case (fileId, sl) =>
-      val files = (sl.basePath +: sl.logs.map(_._2))
-        .map(rel => s"$table/$rel")
-      s.read.parquet(files: _*).withColumn("_hoodie_fg", lit(fileId))
-    }.reduce(_.unionByName(_))
-    val merged = latestWins(tagged, key)
-    val staged = s"$table/.staging_$instant"
-    val stagedPath = new Path(staged)
-    merged.repartition(col("_hoodie_fg"))
-      .write.partitionBy("_hoodie_fg").mode("overwrite").parquet(staged)
-    val newStats = scala.collection.mutable.Buffer.empty[(String, String)]
-    f.listStatus(stagedPath).map(_.getPath)
-      .filter(_.getName.startsWith("_hoodie_fg=")).foreach { dir =>
-        val fileId = dir.getName.stripPrefix("_hoodie_fg=")
-        val groupParts = f.listStatus(dir).map(_.getPath)
-          .filter(_.getName.startsWith("part-"))
-        require(groupParts.length == 1,
-          s"compaction of group $fileId produced ${groupParts.length} " +
-            "part files (expected exactly 1)")
-        val rel = s"${fileId}_0-0-0_$instant.parquet"
-        f.rename(groupParts.head, new Path(table, rel))
-        newStats += ((fileId, rel))
-      }
-    f.delete(stagedPath, true)
-    require(newStats.size == withLogs.size,
-      s"compaction wrote ${newStats.size} groups, expected ${withLogs.size}")
-    writeText(f, new Path(hoodieDir(table), s"$instant.commit"),
-      commitNode("compact", baseStats(newStats.toSeq)))
-    instant
+    val stats = writeGroups(s, table, instant,
+      latestWins(scan(s, table, files(withLogs.values, logs = true)), key))
+    require(stats.size == withLogs.size,
+      s"compaction wrote ${stats.size} groups, expected ${withLogs.size}")
+    commit(s, table, instant, "compact", stats)
   }
 
   /** Data files (relative paths) of every group's current slice —

@@ -175,6 +175,19 @@ object LakeFormat {
     def replace(removed: Seq[String], add: DataFrame): Long
   }
 
+  /** Rows this thread's staged data writes have written so far. */
+  private val written = ThreadLocal.withInitial[java.lang.Long](() => 0L)
+
+  private[sources] def wrote(rows: Long): Unit = written.set(written.get + rows)
+
+  /** Rows the lake writes `body` runs on this thread stage (their write
+    * commands' own row counts, so `body`'s source is read once). */
+  private[graft] def rowsWritten(body: => Unit): Long = {
+    val before: Long = written.get
+    body
+    written.get - before
+  }
+
   /** Live-file count below which a keyed MERGE skips the source
     * key-range aggregate: on a small table the extra job costs more
     * than the full read it saves. */

@@ -27,6 +27,12 @@ import graft.{Bench, GraftSession, Registry, Sql}
   *     Spark job/stage/task counts and summed task time, after one
   *     warm-up run (GRAFT_PROFILE_JOBS=1 also prints every job) —
   *     separates driver-overhead keys from compute-bound ones
+  *   runMain graft.tools.KeyRun sql <stmt|@file> ...
+  *     each statement through LakeSql.sql over the views of `run`'s
+  *     data dir (local[8]), printing up to 50
+  *     rows or REFUSED/<exception>: <message>; an @file argument holds
+  *     one statement per non-empty line (sbt's runMain arg lexer
+  *     rejects backslashes)
   * }}}
   */
 object KeyRun {
@@ -36,8 +42,9 @@ object KeyRun {
     case Some("time") => time(args.tail.toSeq)
     case Some("profile") =>
       profile(args(1), args(2).toInt, args.drop(3).toSeq)
+    case Some("sql") => sql(args.tail.toSeq)
     case _ => throw new IllegalArgumentException(
-      "usage: KeyRun run|plan|time|profile ... (see the scaladoc)")
+      "usage: KeyRun run|plan|time|profile|sql ... (see the scaladoc)")
   }
 
   private def session(cpus: Int): SparkSession = {
@@ -47,13 +54,34 @@ object KeyRun {
     spark
   }
 
+  private def sfDir = sys.env.getOrElse("SF_DIR", "/root/testdata/sf0.001")
+
   private def run(names: Seq[String]): Unit = {
     val spark = session(8)
-    val dir = sys.env.getOrElse("SF_DIR", "/root/testdata/sf0.001")
+    val dir = sfDir
     names.foreach { name =>
       val df = Registry.byName(name).fn(spark, dir)
       df.show(20, false)
       println(s"$name rows=${df.count()}")
+    }
+    spark.stop()
+  }
+
+  private def sql(args: Seq[String]): Unit = {
+    val spark = session(8)
+    Sql.open(spark, sfDir)
+    val texts = args.flatMap { a =>
+      if (a.startsWith("@"))
+        scala.io.Source.fromFile(a.drop(1), "UTF-8").getLines()
+          .map(_.trim).filter(_.nonEmpty).toSeq
+      else Seq(a)
+    }
+    texts.foreach { text =>
+      println(s"-- $text")
+      try graft.LakeSql.sql(spark, text).show(50, false)
+      catch { case e: Exception =>
+        println(s"REFUSED/${e.getClass.getSimpleName}: ${e.getMessage}")
+      }
     }
     spark.stop()
   }

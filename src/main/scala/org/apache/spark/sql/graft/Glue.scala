@@ -1,8 +1,13 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.CommandResult
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.{DataSource, DataSourceUtils}
 
 /** Bridge between graft's custom Catalyst expressions and the public
   * Column API. Spark 4 scopes the Expression⇄Column converters
@@ -47,4 +52,36 @@ object Glue {
       builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
+
+  /** `df.write.mode("overwrite").format(format).options(options)
+    * .partitionBy(partitionBy: _*).save(path)` — the V1 file-source
+    * command DataFrameWriter runs for parquet, csv and json — returning
+    * the rows it wrote: the write command's `numOutputRows` metric, read
+    * off its own QueryExecution once it ran. No second pass over `df`,
+    * and no listener (an `Observation` installs a session-wide one that
+    * logs a stack for every failed query after it).
+    */
+  def save(df: DataFrame, format: String, path: String,
+      partitionBy: Seq[String],
+      options: Map[String, String] = Map.empty): Long = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val session = ds.sparkSession
+    val opts = options + ("path" -> path) ++ (if (partitionBy.isEmpty) Nil
+      else Seq(DataSourceUtils.PARTITIONING_COLUMNS_KEY ->
+        DataSourceUtils.encodePartitioningColumns(partitionBy)))
+    val cmd = DataSource(session, className = format,
+      partitionColumns = partitionBy, options = opts)
+      .planForWriting(SaveMode.Overwrite, ds.logicalPlan)
+    val qe = new QueryExecution(session, cmd, ds.queryExecution.tracker,
+      shuffleCleanupMode =
+        QueryExecution.determineShuffleCleanupMode(session.sessionState.conf))
+    qe.assertCommandExecuted()
+    // AQE wraps the whole write command in its final query stage
+    qe.commandExecuted.collectFirst { case r: CommandResult => r.commandPhysicalPlan }
+      .flatMap(AqePlans.collectFirst(_) { case w: DataWritingCommandExec =>
+        w.cmd.metrics("numOutputRows").value })
+      .getOrElse(throw new IllegalStateException(s"no write command ran for $path"))
+  }
+
+  private object AqePlans extends AdaptiveSparkPlanHelper
 }

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.sources.HudiLite
 
@@ -192,6 +196,89 @@ class HudiLiteSpec extends SparkSpec {
     // The appends-only reader still refuses the log commit loudly.
     intercept[UnsupportedOperationException] {
       HudiLite.addedSlicesBetween(spark, t, 0L, last)
+    }
+  }
+
+  /** Spark jobs `body` starts, counted by a job group; read once a
+    * sentinel job submitted after `body` reaches the listener (listener
+    * events arrive in submission order).
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new AtomicInteger(0)
+    val done = new CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(g) if g == tag => jobs.incrementAndGet(); ()
+          case Some(g) if g == s"$tag-end" => done.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(tag, "counted")
+      body
+      sc.setJobGroup(s"$tag-end", "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(done.await(60, TimeUnit.SECONDS), "sentinel job never arrived")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+    jobs.get
+  }
+
+  test("MOR upsert and snapshot run a fixed number of jobs, whatever " +
+      "the number of file groups") {
+    val c = Tables.customer(spark, sfDir)
+      .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
+    val dir = graft.util.Scratch.dir("hudispec")
+    def upsertJobs(groups: Int): (Int, Int) = {
+      val t = s"$dir/jobs_$groups"
+      HudiLite.create(spark, t, c.filter(col("c_custkey") <= 100)
+        .repartition(groups, col("c_custkey")), recordKey = "c_custkey",
+        tableType = HudiLite.MergeOnRead)
+      assert(HudiLite.currentFiles(spark, t)._1.size == groups)
+      val up = jobsOf(HudiLite.upsert(spark, t,
+        c.filter(col("c_custkey").isin(1, 2, 3))
+          .withColumn("c_acctbal", lit(5.0))))
+      val read = jobsOf(assert(HudiLite.snapshot(spark, t).count() == 101))
+      (up, read)
+    }
+    val (up3, read3) = upsertJobs(3)
+    val (up12, read12) = upsertJobs(12)
+    info(s"upsert: $up3 / $up12 jobs, snapshot: $read3 / $read12 jobs " +
+      "(3 / 12 groups)")
+    assert(up3 == up12, s"upsert: $up3 jobs on 3 groups, $up12 on 12")
+    assert(read3 == read12, s"snapshot: $read3 jobs on 3 groups, $read12 on 12")
+    assert(up3 < 10, s"upsert ran $up3 jobs")
+    assert(read3 < 5, s"snapshot read ran $read3 jobs")
+  }
+
+  test("upsert refuses duplicate record keys on both table types and " +
+      "commits nothing") { // keys 0-100: 101 rows
+    val c = Tables.customer(spark, sfDir)
+      .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
+    val dup = c.filter(col("c_custkey") === 1)
+    // key 1 twice (matched) and key 200 twice (new)
+    val src = dup.unionByName(dup)
+      .unionByName(dup.withColumn("c_custkey", col("c_custkey") + 199))
+      .unionByName(dup.withColumn("c_custkey", col("c_custkey") + 199))
+    Seq(HudiLite.CopyOnWrite, HudiLite.MergeOnRead).foreach { tt =>
+      val t = s"${graft.util.Scratch.dir("hudispec")}/dup_$tt"
+      HudiLite.create(spark, t, c.filter(col("c_custkey") <= 100),
+        recordKey = "c_custkey", tableType = tt)
+      val before = HudiLite.completedInstants(spark, t)
+      val e = intercept[IllegalArgumentException] {
+        HudiLite.upsert(spark, t, src)
+      }
+      assert(e.getMessage.contains("duplicate record keys"), e.getMessage)
+      assert(HudiLite.completedInstants(spark, t) == before, tt)
+      val snap = HudiLite.snapshot(spark, t)
+      assert(snap.count() == 101, tt)
+      assert(snap.filter(col("c_custkey") === 1).count() == 1, tt)
     }
   }
 }

@@ -198,5 +198,10 @@ class OperatorsSpec extends SparkSpec {
     val qs = SparkEntry.queries.keySet
     assert(SparkEntry.oracleSql.keySet.subsetOf(qs))
     assert(qs.forall(_.matches("[a-z]+[0-9]+[a-z0-9_]*")))
+    // Registry.byName is a toMap: a duplicate name would silently drop
+    // one of the two queries
+    val names = Registry.all.map(_.name)
+    assert(names.diff(names.distinct).isEmpty,
+      s"duplicate registry names: ${names.diff(names.distinct).mkString(", ")}")
   }
 }
