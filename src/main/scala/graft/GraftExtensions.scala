@@ -6,6 +6,9 @@ import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, UnresolvedFunct
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
+import org.apache.spark.sql.graft.ParamLiterals
 import org.apache.spark.sql.types.{StringType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -22,13 +25,24 @@ import graft.functions.{FastText, FastVector, TextHash}
   *   SELECT graft_minhash_sig(text, 3) FROM documents   -- 64-perm sig
   *   SELECT graft_rolling_fp(text) FROM documents
   * }}}
+  *
+  * It also injects [[org.apache.spark.sql.graft.ParamLiterals]], which
+  * takes the primitive constants of filters and projections out of the
+  * generated Java source, so that statements differing only in those
+  * constants share their compiled classes. It runs as a columnar rule's
+  * pre-transition step, which Spark applies to every query stage under
+  * adaptive execution and to the whole plan without it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.all.foreach { case (name, usage, builder) =>
       ext.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo("graft", null, name, usage, ""), builder))
     }
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] = ParamLiterals
+    })
+  }
 }
 
 object GraftExtensions {
@@ -479,6 +493,16 @@ object GraftExtensions {
 
 /** Builder for a fully-configured engine session: extensions installed,
   * AQE on, UTC, sane shuffle parallelism for the local gate.
+  *
+  * Spark's codegen cache (`spark.sql.codegen.cache.maxEntries`, a static
+  * setting, default 100) is raised to 1000 entries. A compiled class is
+  * cached once per class loader, and the driver thread and the task
+  * threads use different loaders, so each class body takes two entries.
+  * The working set of a mix of lake statements is larger than 100: on
+  * the benchmark's `lake-dml` mix, with the same literals every other
+  * pass, 100 entries still recompiled 82–99 classes a pass and 1000
+  * entries 2–4 (see [[GraftExtensions]] for why literals no longer
+  * matter). The larger cache retained about 2 MB more heap there.
   */
 object GraftSession {
   def builder(master: String = "local[*]",
@@ -489,5 +513,6 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.codegen.cache.maxEntries", 1000)
       .config("spark.ui.enabled", "false")
 }

@@ -8,6 +8,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Minimal Apache-Hudi-style table format — the third open table
   * format of the reference's metadata study (reference:metadata:1,
@@ -44,10 +45,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: the timeline is metadata (driver-side, O(commits)),
   * parsed in one place ([[commits]]). Every operation reads through
-  * ONE multi-file parquet scan ([[scan]]: one schema inference,
-  * whatever the number of groups) whose rows carry their file group,
-  * and writes through ONE staged group write ([[writeGroups]]), so no
-  * operation's job count grows with the number of groups. Reads keep
+  * ONE multi-file parquet scan ([[scan]], under the schema the commits
+  * record, so with no schema-inference job) whose rows carry their file
+  * group, and writes through ONE staged group write ([[writeGroups]]),
+  * so no operation's job count grows with the number of groups. Reads keep
   * Catalyst pushdown; a filter on the group tag prunes whole files.
   * The MOR read-time merge confines the window shuffle to log-bearing
   * groups only — a 100 TB table with 1% freshly-updated groups merges
@@ -118,11 +119,18 @@ object HudiLite {
     */
   private case class Stat(fileId: String, path: String, log: Boolean)
 
+  /** What one write put down: its files, and the schema of the rows in
+    * them (kept in the commit, as real Hudi keeps the writer schema in
+    * `extraMetadata.schema`, so reads need no schema-inference job).
+    */
+  private case class Written(stats: Seq[Stat], schema: StructType)
+
   private case class Commit(instant: String, operation: String,
-      stats: Seq[Stat])
+      stats: Seq[Stat], schema: Option[StructType])
 
   /** Every completed commit, ascending — the one reader of the
-    * timeline's commit JSON.
+    * timeline's commit JSON. Commits written without a schema have
+    * none.
     */
   private def commits(s: SparkSession, table: String): Seq[Commit] = {
     val f = fs(s, hoodieDir(table))
@@ -132,23 +140,31 @@ object HudiLite {
         .flatMap(_.elements().asScala).map(st => Stat(
           st.get("fileId").asText(), st.get("path").asText(),
           st.path("log").asBoolean(false))).toSeq
-      Commit(i, n.path("operation").asText(""), stats)
+      val schema = Option(n.path("extraMetadata").path("schema").asText(null))
+        .map(DataType.fromJson(_).asInstanceOf[StructType])
+      Commit(i, n.path("operation").asText(""), stats, schema)
     }
   }
 
-  /** (fileId → latest [[FileSlice]]) at `asOf` (empty = latest
-    * overall) — the Hudi snapshot-read rule. A new BASE file for a
-    * group (COW rewrite, MOR compaction, fresh insert group) starts a
-    * new slice and retires the previous slice's logs; a LOG stat
-    * appends to the group's current slice.
+  /** The table at one instant: (fileId → latest [[FileSlice]]), and
+    * the schema the newest commit up to that instant wrote (none when
+    * that commit carries no schema, and [[scan]] infers it).
     */
-  private def fileSlices(s: SparkSession, table: String,
-      asOf: String = ""): Map[String, FileSlice] = {
+  private case class View(slices: Map[String, FileSlice],
+      schema: Option[StructType])
+
+  /** The [[View]] at `asOf` (empty = latest overall) — the Hudi
+    * snapshot-read rule. A new BASE file for a group (COW rewrite, MOR
+    * compaction, fresh insert group) starts a new slice and retires the
+    * previous slice's logs; a LOG stat appends to the group's current
+    * slice.
+    */
+  private def view(s: SparkSession, table: String, asOf: String = ""): View = {
     val cs = commits(s, table).filter(c => asOf.isEmpty || c.instant <= asOf)
     require(cs.nonEmpty,
       s"no completed commits at $table" +
         (if (asOf.nonEmpty) s" at or before instant $asOf" else ""))
-    cs.foldLeft(Map.empty[String, FileSlice]) { (acc, c) =>
+    View(cs.foldLeft(Map.empty[String, FileSlice]) { (acc, c) =>
       c.stats.foldLeft(acc) { (m, st) => // ascending: later wins
         if (!st.log) m + (st.fileId -> FileSlice(c.instant, st.path, Nil))
         else {
@@ -157,7 +173,7 @@ object HudiLite {
           m + (st.fileId -> cur.copy(logs = cur.logs :+ (c.instant -> st.path)))
         }
       }
-    }
+    }, cs.last.schema)
   }
 
   /** Per-row commit-time meta column (the real Hudi field): stamped at
@@ -181,14 +197,18 @@ object HudiLite {
   private def files(slices: Iterable[FileSlice], logs: Boolean): Seq[String] =
     slices.toSeq.flatMap(sl => sl.basePath +: (if (logs) sl.logs.map(_._2) else Nil))
 
-  /** ONE parquet scan of `rels` (one schema inference, whatever the
-    * number of groups), each row tagged with its file group, cut from
-    * the file name `<fileId>_0-0-0_<instant>[.log].parquet` (file ids
-    * never contain the separator, see [[create]]). A filter on the tag
-    * prunes files before any is opened; an unused tag costs nothing.
+  /** ONE parquet scan of `rels` under the view's schema (or, for a
+    * table whose newest commit carries none, one schema inference,
+    * whatever the number of groups), each row tagged with its file
+    * group, cut from the file name `<fileId>_0-0-0_<instant>[.log].parquet`
+    * (file ids never contain the separator, see [[create]]). A filter on
+    * the tag prunes files before any is opened; an unused tag costs
+    * nothing.
     */
-  private def scan(s: SparkSession, table: String, rels: Seq[String]): DataFrame =
-    s.read.parquet(rels.map(rel => s"$table/$rel"): _*)
+  private def scan(s: SparkSession, table: String, v: View,
+      rels: Seq[String]): DataFrame =
+    v.schema.fold(s.read)(s.read.schema)
+      .parquet(rels.map(rel => s"$table/$rel"): _*)
       .withColumn(Fg, substring_index(col("_metadata.file_name"), Sep, 1))
 
   /** Ids for fresh file groups: one per spark partition of the rows
@@ -209,7 +229,7 @@ object HudiLite {
     */
   private def writeGroups(s: SparkSession, table: String, instant: String,
       rows: DataFrame, log: String => Boolean = _ => false,
-      freshSuffix: Option[String] = None): Seq[Stat] = {
+      freshSuffix: Option[String] = None): Written = {
     val f = fs(s, new Path(table))
     val staged = new Path(table, s".staging_$instant")
     def parts(dir: Path) = f.listStatus(dir).map(_.getPath)
@@ -238,31 +258,32 @@ object HudiLite {
               (fileId, ps.head)
             }
       }
-      groups.map { case (fileId, part) =>
+      Written(groups.map { case (fileId, part) =>
         val rel = s"$fileId$Sep$instant" +
           (if (log(fileId)) ".log.parquet" else ".parquet")
         require(f.rename(part, new Path(table, rel)),
           s"rename of file group $fileId's part file to $rel failed")
         Stat(fileId, rel, log(fileId))
-      }
+      }, StructType(rows.schema.filter(_.name != Fg)))
     } finally f.delete(staged, true)
   }
 
-  /** Commit `stats` under `instant`: a `.deltacommit` for the MOR log
+  /** Commit `w` under `instant`: a `.deltacommit` for the MOR log
     * write, a `.commit` otherwise. Returns the instant.
     */
   private def commit(s: SparkSession, table: String, instant: String,
-      operation: String, stats: Seq[Stat]): String = {
+      operation: String, w: Written): String = {
     val root = Json.createObjectNode()
     root.put("operation", operation)
     // single (root) partition — scope cut
     val arr = root.putObject("partitionToWriteStats").putArray("")
-    stats.foreach { st =>
+    w.stats.foreach { st =>
       val o = arr.addObject()
       o.put("fileId", st.fileId)
       o.put("path", st.path)
       if (st.log) o.put("log", true)
     }
+    root.putObject("extraMetadata").put("schema", w.schema.json)
     val kind = if (operation == "deltacommit") "deltacommit" else "commit"
     writeText(fs(s, hoodieDir(table)),
       new Path(hoodieDir(table), s"$instant.$kind"),
@@ -345,9 +366,10 @@ object HudiLite {
     */
   def snapshot(s: SparkSession, table: String, asOf: String = "",
       keepMeta: Boolean = false): DataFrame = {
-    val slices = fileSlices(s, table, asOf).values.toSeq
+    val v = view(s, table, asOf)
+    val slices = v.slices.values.toSeq
     val (logged, pure) = slices.partition(_.logs.nonEmpty)
-    val all = scan(s, table, files(slices, logs = true)).drop(Fg)
+    val all = scan(s, table, v, files(slices, logs = true)).drop(Fg)
     def read(sl: Seq[FileSlice]) = s.read.schema(all.schema)
       .parquet(files(sl, logs = true).map(rel => s"$table/$rel"): _*)
     def merged(rows: DataFrame) = latestWins(rows, recordKeyOf(s, table))
@@ -365,8 +387,8 @@ object HudiLite {
     */
   def readOptimized(s: SparkSession, table: String,
       keepMeta: Boolean = false): DataFrame = {
-    val df = scan(s, table, files(fileSlices(s, table).values, logs = false))
-      .drop(Fg)
+    val v = view(s, table)
+    val df = scan(s, table, v, files(v.slices.values, logs = false)).drop(Fg)
     if (keepMeta) df else df.drop(MetaCommitTime)
   }
 
@@ -502,7 +524,7 @@ object HudiLite {
   private def cowUpsert(s: SparkSession, table: String,
       updates: DataFrame): String = {
     val key = recordKeyOf(s, table)
-    val slices = fileSlices(s, table)
+    val v = view(s, table)
     val instant = nextInstant(s, table)
     // Multi-consumed source: materialize ONLY when its plan is
     // nondeterministic (guide §5) — a deterministic source re-evaluates
@@ -511,7 +533,7 @@ object HudiLite {
     val upd =
       if (graft.util.Plans.deterministic(updates)) updates
       else updates.localCheckpoint()
-    val all = scan(s, table, files(slices.values, logs = false))
+    val all = scan(s, table, v, files(v.slices.values, logs = false))
     // No distinct() on the probe keys: semi/anti joins are unaffected
     // by right-side duplicates (guide §2.4).
     val affected = all.select(col(key), col(Fg))
@@ -526,9 +548,9 @@ object HudiLite {
         .join(hit.select(col(key), col(Fg)), Seq(key), "left")
         .withColumn(Fg, coalesce(col(Fg), freshGroup(s"-ins-$instant")))
         .select(hit.columns.map(col).toSeq: _*))
-    val stats = writeGroups(s, table, instant, rows)
-    require(stats.nonEmpty, "upsert matched nothing and inserted nothing")
-    commit(s, table, instant, "upsert", stats)
+    val w = writeGroups(s, table, instant, rows)
+    require(w.stats.nonEmpty, "upsert matched nothing and inserted nothing")
+    commit(s, table, instant, "upsert", w)
   }
 
   /** MERGE-ON-READ upsert: updates whose key lives in an existing file
@@ -544,20 +566,20 @@ object HudiLite {
   private def morUpsert(s: SparkSession, table: String,
       updates: DataFrame): String = {
     val key = recordKeyOf(s, table)
-    val slices = fileSlices(s, table)
+    val v = view(s, table)
     val instant = nextInstant(s, table)
     // key → file group, from base AND log rows (a key that entered the
     // table through an earlier log file still maps to its group). A key
     // lives in one group, so max() only folds its base and log rows,
     // keyed like the join that follows.
-    val groups = scan(s, table, files(slices.values, logs = true))
+    val groups = scan(s, table, v, files(v.slices.values, logs = true))
       .groupBy(col(key)).agg(max(col(Fg)).as(Fg))
     val rows = stamped(keyUnique(updates, key), instant)
       .join(groups, Seq(key), "left")
       .withColumn(Fg, coalesce(col(Fg), freshGroup(s"-ins-$instant")))
-    val stats = writeGroups(s, table, instant, rows, slices.contains)
-    require(stats.nonEmpty, "upsert matched nothing and inserted nothing")
-    commit(s, table, instant, "deltacommit", stats)
+    val w = writeGroups(s, table, instant, rows, v.slices.contains)
+    require(w.stats.nonEmpty, "upsert matched nothing and inserted nothing")
+    commit(s, table, instant, "deltacommit", w)
   }
 
   /** MOR COMPACTION: fold every log-bearing group's (base + logs) into
@@ -573,14 +595,15 @@ object HudiLite {
     */
   def compact(s: SparkSession, table: String): String = {
     val key = recordKeyOf(s, table)
-    val withLogs = fileSlices(s, table).filter(_._2.logs.nonEmpty)
+    val v = view(s, table)
+    val withLogs = v.slices.filter(_._2.logs.nonEmpty)
     if (withLogs.isEmpty) return ""
     val instant = nextInstant(s, table)
-    val stats = writeGroups(s, table, instant,
-      latestWins(scan(s, table, files(withLogs.values, logs = true)), key))
-    require(stats.size == withLogs.size,
-      s"compaction wrote ${stats.size} groups, expected ${withLogs.size}")
-    commit(s, table, instant, "compact", stats)
+    val w = writeGroups(s, table, instant,
+      latestWins(scan(s, table, v, files(withLogs.values, logs = true)), key))
+    require(w.stats.size == withLogs.size,
+      s"compaction wrote ${w.stats.size} groups, expected ${withLogs.size}")
+    commit(s, table, instant, "compact", w)
   }
 
   /** Data files (relative paths) of every group's current slice —
@@ -590,7 +613,7 @@ object HudiLite {
     */
   def currentFiles(s: SparkSession,
       table: String): (Seq[String], Seq[String]) = {
-    val slices = fileSlices(s, table)
+    val slices = view(s, table).slices
     (slices.values.map(_.basePath).toSeq.sorted,
       slices.values.flatMap(_.logs.map(_._2)).toSeq.sorted)
   }

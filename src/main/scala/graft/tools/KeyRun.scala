@@ -2,6 +2,7 @@ package graft.tools
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
@@ -24,9 +25,10 @@ import graft.{Bench, GraftSession, Registry, Sql}
   *     are upper bounds, clean sentinels mean the numbers are real
   *   runMain graft.tools.KeyRun profile <sfDir> <cpus> key1 key2 ...
   *     wall seconds split into plan construction vs execution, plus
-  *     Spark job/stage/task counts and summed task time, after one
-  *     warm-up run (GRAFT_PROFILE_JOBS=1 also prints every job) —
-  *     separates driver-overhead keys from compute-bound ones
+  *     Spark job/stage/task counts, summed task time and the number of
+  *     classes codegen compiled (`compiles=`), after one warm-up run
+  *     (GRAFT_PROFILE_JOBS=1 also prints every job) — separates
+  *     driver-overhead keys from compute-bound ones
   *   runMain graft.tools.KeyRun sql <stmt|@file> ...
   *     each statement through LakeSql.sql over the views of `run`'s
   *     data dir (local[8]), printing up to 50
@@ -152,6 +154,7 @@ object KeyRun {
       fn(spark, sfDir).write.format("noop").mode("overwrite").save() // warmup
       (1 to 2).foreach { i =>
         jobs.set(0); stages.set(0); tasks.set(0); taskNanos.set(0L)
+        val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
         val tPlan = System.nanoTime()
@@ -162,7 +165,8 @@ object KeyRun {
           f"build=${(tPlan - t0) / 1e9}%.3f " +
           f"exec=${(t1 - tPlan) / 1e9}%.3f jobs=${jobs.get} " +
           f"stages=${stages.get} tasks=${tasks.get} " +
-          f"taskTime=${taskNanos.get / 1e9}%.3f")
+          f"taskTime=${taskNanos.get / 1e9}%.3f " +
+          s"compiles=${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0}")
       }
     }
     spark.stop()

@@ -253,8 +253,8 @@ class HudiLiteSpec extends SparkSpec {
       "(3 / 12 groups)")
     assert(up3 == up12, s"upsert: $up3 jobs on 3 groups, $up12 on 12")
     assert(read3 == read12, s"snapshot: $read3 jobs on 3 groups, $read12 on 12")
-    assert(up3 < 10, s"upsert ran $up3 jobs")
-    assert(read3 < 5, s"snapshot read ran $read3 jobs")
+    assert(up3 < 6, s"upsert ran $up3 jobs")
+    assert(read3 < 4, s"snapshot read ran $read3 jobs")
   }
 
   test("upsert refuses duplicate record keys on both table types and " +
