@@ -5,11 +5,11 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, UnresolvedFunction}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith, WithWindowDefinition}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 import org.apache.spark.sql.graft.ParamLiterals
-import org.apache.spark.sql.types.{StringType, TimestampType}
+import org.apache.spark.sql.types.{DateType, DoubleType, IntegerType, LongType, StringType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.{FastText, FastVector, TextHash}
@@ -118,11 +118,14 @@ object GraftExtensions {
   private def sqlOf(args: Seq[Expression]): String =
     args.map(_.sql).mkString(", ")
 
-  private def strLit(e: Expression, what: String): String = e match {
-    case Literal(v: UTF8String, _: StringType) => v.toString
-    case other => throw new IllegalArgumentException(
-      s"$what must be a string literal, got: ${other.sql}")
+  private def strLitOpt(e: Expression): Option[String] = e match {
+    case Literal(v: UTF8String, _: StringType) => Some(v.toString)
+    case _ => None
   }
+
+  private def strLit(e: Expression, what: String): String =
+    strLitOpt(e).getOrElse(throw new IllegalArgumentException(
+      s"$what must be a string literal, got: ${e.sql}"))
 
   /** A builder that refuses any argument count but `n`. */
   private def exactly(n: Int, shape: String)(
@@ -131,6 +134,9 @@ object GraftExtensions {
       require(args.length == n, s"$shape, got: ${sqlOf(args)}")
       f(args)
     })
+
+  /** A builder with its usage line. */
+  private def call(usage: String)(f: Builder): (String, Builder) = (usage, f)
 
   private def rename(to: String): (String, Builder) =
     (s"Spark's $to", args => fn(to, args: _*))
@@ -255,10 +261,8 @@ object GraftExtensions {
     * Collision rule: no name here may exist in Spark's builtin
     * registry (ExtensionsSpec checks it), because registering it would
     * shadow Spark's meaning for every caller. DuckDB names that Spark
-    * also defines, with another meaning or argument order (log,
-    * left/right, substr/substring, ltrim/rtrim/trim, printf, concat,
-    * skewness, kurtosis, hash, len, map, date_diff/datediff,
-    * date_trunc, date_part), stay text pins in LakeSql.
+    * also defines, with another meaning or argument order, are [[pins]]
+    * instead.
     */
   val dialect: Seq[(String, String, Seq[Expression] => Expression)] =
     Seq[(String, (String, Builder))](
@@ -434,8 +438,374 @@ object GraftExtensions {
     "array_to_string" -> exactly(2,
       "array_to_string takes (list, separator)") { a =>
       arrayToString(a(0), a(1))
-    }
+    },
+    // DuckDB's regexp_matches(s, re) is a partial-match boolean —
+    // exactly Spark's regexp_like (both SEARCH, neither anchors)
+    "regexp_matches" -> rename("regexp_like"),
+    "datetrunc" -> call("datetrunc('unit', value)")(dateTrunc)
   ).map { case (name, (usage, builder)) => (name, s"$name: $usage", builder) }
+
+  /** Spark's own `name(args)`, left for the analyzer to resolve: the
+    * [[pins]] build on a parsed plan, where [[fn]] cannot run Spark's
+    * builders (some assert resolved arguments).
+    */
+  private def spark(name: String, args: Expression*): Expression =
+    UnresolvedFunction(name, args, isDistinct = false)
+
+  private def respell(to: String): (String, Builder) =
+    (s"Spark's $to", args => spark(to, args: _*))
+
+  // ---- DuckDB's meaning of Spark-defined names ------------------------
+
+  /** DuckDB function names that Spark's builtin registry also defines,
+    * with another meaning or argument order, each built into the
+    * Spark expression that computes DuckDB's result. Registering them
+    * would shadow Spark's meaning for every caller, so [[pin]] swaps
+    * them on the parsed plan of a statement that entered through
+    * `LakeSql`; `spark.sql` callers keep Spark's meaning. A builder
+    * that meets a form both engines share returns Spark's own call.
+    */
+  val pins: Seq[(String, String, Seq[Expression] => Expression)] =
+    Seq[(String, (String, Builder))](
+    // log(x) is DuckDB's log10 and Spark's natural log; the 2-arg
+    // log(base, x) agrees on both engines
+    "log" -> call("log(x) is log10") { a =>
+      if (a.length == 1) spark("log10", a(0)) else spark("log", a: _*)
+    },
+    // left/right(s, n<0): DuckDB drops |n| from the OTHER end
+    // ('abc',-1 → 'ab'/'bc') where Spark returns '' — a substr CASE
+    // exact on every pinned edge (0, ±beyond-length, NULL n → NULL)
+    "left" -> call("left(string, n)") { a =>
+      if (a.length != 2) spark("left", a: _*)
+      else spark("substr", a(0), Literal(1), CaseWhen(Seq(
+        GreaterThanOrEqual(a(1), Literal(0)) -> a(1),
+        LessThan(a(1), Literal(0)) ->
+          spark("greatest", Add(spark("length", a(0)), a(1)),
+            Literal(0)))))
+    },
+    "right" -> call("right(string, n)") { a =>
+      if (a.length != 2) spark("right", a: _*)
+      else CaseWhen(Seq(
+        LessThan(a(1), Literal(0)) ->
+          spark("substr", a(0), Subtract(Literal(1), a(1))),
+        GreaterThanOrEqual(a(1), Literal(0)) -> spark("substr", a(0),
+          spark("greatest", Add(Subtract(spark("length", a(0)), a(1)),
+            Literal(1)), Literal(1)))))
+    },
+    // substr(s, 0, L): DuckDB's window rule [0,L)∩[1,∞) drops one char
+    // ('abcdef',0,3 → 'ab') where Spark treats 0 as 1 ('abc') — a
+    // literal-0 start shifts to (1, L-1); the 2-arg substr(s, 0) agrees
+    // (whole string) and negative starts agree (from-end on both)
+    "substr" -> substr("substr"), "substring" -> substr("substring"),
+    // 2-arg trims take (string, chars) in DuckDB but (trimStr, string)
+    // in Spark: the same call with swapped argument meaning, silently
+    // different unless the trim set is symmetric. 1-arg and
+    // TRIM(LEADING … FROM …) forms agree (the latter never parses to a
+    // call by name)
+    "ltrim" -> trim("ltrim"), "rtrim" -> trim("rtrim"),
+    "trim" -> trim("trim"),
+    // printf: DuckDB NULLs the WHOLE result when ANY argument is NULL
+    // (printf('%s-%d', NULL, 5) → NULL) where format_string prints
+    // 'null' — the same whole-result guard format() carries
+    "printf" -> call("printf(format, arg, …)") { a =>
+      if (a.length >= 2) CaseWhen(Seq(anyNull(a.tail) -> Literal(null)),
+        spark("format_string", a: _*))
+      else if (a.length == 1) spark("format_string", a(0))
+      else spark("printf", a: _*)
+    },
+    // concat: DuckDB SKIPS NULL arguments (concat('a', NULL, 'b') = 'ab',
+    // all-NULL = '') where Spark's concat propagates NULL —
+    // concat_ws('') is DuckDB's concat for the string operands the
+    // shared dialect covers (DuckDB casts every argument to VARCHAR;
+    // list operands stringify there, so they are out of the dialect).
+    // list_concat and `||` keep Spark's NULL-propagating concat.
+    "concat" -> call("concat(string, …) skips NULLs") { a =>
+      if (a.nonEmpty) spark("concat_ws", Literal("") +: a: _*)
+      else spark("concat", a: _*)
+    },
+    // hash(): both engines have it with DIFFERENT functions (DuckDB's
+    // own 64-bit vs Spark's 32-bit Murmur3) — same spelling, silently
+    // different values on every input; the one honest mapping is none
+    "hash" -> call("hash() refuses") { a =>
+      throw new IllegalArgumentException("hash() is engine-specific " +
+        "(DuckDB's 64-bit hash vs Spark's Murmur3) — the same call " +
+        "returns DIFFERENT values per engine; use md5()/sha256()/" +
+        s"xxhash64() for a portable hash: hash(${sqlOf(a)})")
+    },
+    "skewness" -> moment("skewness"), "kurtosis" -> moment("kurtosis"),
+    "date_diff" -> dateDiff("date_diff"), "datediff" -> dateDiff("datediff"),
+    "date_trunc" -> call("date_trunc('unit', value)")(dateTrunc),
+    "date_part" -> datePart("date_part"),
+    // Spark parses EXTRACT(field FROM x) as extract('field', x)
+    "extract" -> datePart("extract"),
+    // DuckDB's map(keys_list, values_list) builds a MAP from two lists
+    // (Spark's map takes alternating entries); both keep entry order
+    "map" -> respell("map_from_arrays"),
+    // DuckDB's len() on a LIST is Spark's size; a string argument fails
+    // analysis loudly (use length(), which both engines share)
+    "len" -> respell("size"),
+    // regexp_extract's default group diverges: DuckDB's 2-arg form
+    // extracts the FULL match (group 0) where Spark's defaults to group
+    // 1; regexp_extract_all shares it. 3-arg calls agree (and both
+    // engines return '' on no match). Patterns stay in the shared
+    // RE2∩Java dialect; engine-specific syntax fails loudly at
+    // whichever engine rejects it.
+    "regexp_extract" -> regexpExtract("regexp_extract"),
+    "regexp_extract_all" -> regexpExtract("regexp_extract_all"),
+    "regexp_replace" -> call("regexp_replace(string, pattern, " +
+      "replacement[, flags])")(regexpReplace)
+  ).map { case (name, (usage, builder)) => (name, s"$name: $usage", builder) }
+
+  private def substr(name: String): (String, Builder) =
+    call(s"$name(string, start[, length])") {
+      case Seq(s, Literal(0, IntegerType), l) =>
+        spark(name, s, Literal(1), Subtract(l, Literal(1)))
+      case a => spark(name, a: _*)
+    }
+
+  private def trim(name: String): (String, Builder) =
+    call(s"$name(string[, characters])") { a =>
+      if (a.length == 2) spark(name, a(1), a(0)) else spark(name, a: _*)
+    }
+
+  // skewness/kurtosis: DuckDB computes the SAMPLE-corrected statistics
+  // (adjusted Fisher–Pearson G1 / sample excess G2) while Spark's
+  // same-named aggregates are the POPULATION g1/g2 — pinned: skew
+  // {1,2,2,3,9} DuckDB 1.9694 vs Spark 1.3211; the correction
+  // identities G1 = g1·√(n(n−1))/(n−2) and
+  // G2 = (n−1)/((n−2)(n−3))·((n+1)·g2 + 6) reproduce DuckDB exactly
+  // (both pinned cases bit-equal), with NULL below the minimum n
+  // (DuckDB: skewness n<3, kurtosis n<4 — the CASE guard also keeps
+  // ANSI Spark off the zero divisor). The identity is per group and
+  // per frame, so `agg` builds every inner aggregate the way the
+  // pinned call is written: [[pin]] gives each one the call's
+  // DISTINCT, FILTER and window (the whole CASE cannot carry them).
+  private def momentOf(name: String,
+      agg: String => Expression): Expression = {
+    val n = agg("count")
+    val m = agg(name)
+    if (name == "skewness")
+      CaseWhen(Seq(LessThan(n, Literal(3)) -> Literal(null)),
+        Divide(Multiply(m, spark("sqrt",
+          Multiply(Cast(n, DoubleType), Subtract(n, Literal(1))))),
+          Subtract(n, Literal(2))))
+    else
+      CaseWhen(Seq(LessThan(n, Literal(4)) -> Literal(null)),
+        Multiply(Divide(Subtract(Cast(n, DoubleType), Literal(1)),
+          Multiply(Subtract(n, Literal(2)), Subtract(n, Literal(3)))),
+          Add(Multiply(Add(n, Literal(1)), m), Literal(6))))
+  }
+
+  private def moment(name: String): (String, Builder) =
+    exactly(1, s"$name takes one argument") { a =>
+      momentOf(name, spark(_, a: _*))
+    }
+
+  // date_diff counts PARTITION-BOUNDARY crossings in DuckDB (month of
+  // Jan-31 → Feb-01 is 1), not elapsed full units — so each unit is the
+  // boundary identity: day → datediff(b, a) (calendar-day delta, same
+  // rule), month → 12·year+month delta, year → year delta. Sub-day
+  // units count unit-GRID crossings (hour of 10:59:59 → 11:00:00 is 1;
+  // 10:00:00 → 10:59:59 is 0; negatives symmetric) — the epoch-grid
+  // identity floor(epoch_us(b)/unit) - floor(epoch_us(a)/unit). The
+  // session runs UTC (GraftSession pins it), so the epoch grid IS the
+  // wall-clock grid and DATE operands land on midnight exactly as
+  // DuckDB's implicit cast does; floor() is exact for any |unix_micros|
+  // below 2^53. Other units refuse. Spark's 2-arg datediff(end, start)
+  // has no unit literal and keeps its meaning.
+  private def dateDiff(name: String): (String, Builder) =
+    call(s"$name('unit', start, end)") { a =>
+      a.headOption.flatMap(strLitOpt) match {
+        case None => spark(name, a: _*)
+        case Some(unit) =>
+          require(a.length == 3,
+            s"$name takes ('unit', start, end), got: ${sqlOf(a)}")
+          val (x, y) = (a(1), a(2))
+          def micros(e: Expression) =
+            spark("unix_micros", Cast(e, TimestampType))
+          def grid(step: Long): Expression = {
+            def cell(e: Expression) = Cast(spark("floor", Divide(micros(e),
+              Literal(BigDecimal(s"$step.0")))), LongType)
+            Subtract(cell(y), cell(x))
+          }
+          def months(e: Expression) =
+            Add(Multiply(spark("year", e), Literal(12)), spark("month", e))
+          unit.toLowerCase match {
+            case "day" => spark("datediff", y, x)
+            case "month" => Subtract(months(y), months(x))
+            case "year" => Subtract(spark("year", y), spark("year", x))
+            case "hour" => grid(3600000000L)
+            case "minute" => grid(60000000L)
+            case "second" => grid(1000000L)
+            case "millisecond" => grid(1000L)
+            case "microsecond" => Subtract(micros(y), micros(x))
+            case other => throw new IllegalArgumentException(
+              s"$name: unsupported unit '$other' (year, month, day, " +
+                "hour, minute, second, millisecond, microsecond)")
+          }
+      }
+    }
+
+  // date_trunc / datetrunc: DuckDB returns DATE for day-and-coarser
+  // units where Spark stays TIMESTAMP (silent once the value renders:
+  // CAST(… AS VARCHAR) gives '2021-03-01' vs '2021-03-01 00:00:00'),
+  // and Spark returns a SILENT NULL for a unit it doesn't know where
+  // DuckDB's decade/century/millennium work — so unshared units refuse
+  // instead of nulling. Sub-day units are value- and type-shared.
+  private def dateTrunc(a: Seq[Expression]): Expression =
+    a.headOption.flatMap(strLitOpt).map(_.toLowerCase) match {
+      case Some("day" | "week" | "month" | "quarter" | "year") =>
+        Cast(fn("date_trunc", a: _*), DateType)
+      case Some(u) => require(Set("hour", "minute", "second",
+          "millisecond", "microsecond")(u),
+        s"date_trunc unit '$u' is not shared (Spark would return NULL " +
+          "silently) — supported: year, quarter, month, week, day, " +
+          "hour, minute, second, millisecond, microsecond")
+        fn("date_trunc", a: _*)
+      case None => fn("date_trunc", a: _*)
+    }
+
+  // date_part shares its name and field vocabulary with Spark EXCEPT
+  // the fields below, and EXTRACT(field FROM x) is the SAME vocabulary
+  // in the SQL-standard spelling — probed divergences, identical for
+  // both spellings:
+  //   dow          DuckDB Sunday=0..6; Spark extract Sunday=1..7 —
+  //                SILENT wrong values → dayofweek(x)-1
+  //   isodow       DuckDB Mon=1..Sun=7; Spark has no such field →
+  //                weekday(x)+1
+  //   epoch        DuckDB fractional epoch seconds (1709600523.5);
+  //                Spark refuses the field → unix_micros/1e6 DOUBLE
+  //   second       DuckDB INTEGER seconds-in-minute (3 for 03.456789);
+  //                Spark extract returns DECIMAL WITH the fraction —
+  //                SILENT wrong values → exact integer pmod on
+  //                unix_micros (no float rounding at ms boundaries)
+  //   millisecond  DuckDB includes the seconds (3456) — same pmod grid
+  //   microsecond  DuckDB includes the seconds (3456789) — same grid
+  // The other fields (year/month/day/hour/minute/doy/week/quarter) are
+  // probed SHARED.
+  private val ExtractPins: Map[String, Expression => Expression] = {
+    def inMinute(x: Expression) = spark("pmod",
+      spark("unix_micros", Cast(x, TimestampType)), Literal(60000000L))
+    Map(
+      "dow" -> (x => Subtract(spark("dayofweek", x), Literal(1))),
+      "isodow" -> (x => Add(spark("weekday", x), Literal(1))),
+      "epoch" -> (x => Divide(spark("unix_micros", Cast(x, TimestampType)),
+        Literal(1e6))),
+      "second" -> (x => IntegralDivide(inMinute(x), Literal(1000000L))),
+      "millisecond" -> (x => IntegralDivide(inMinute(x), Literal(1000L))),
+      "microsecond" -> inMinute)
+  }
+
+  private def datePart(name: String): (String, Builder) =
+    call(s"$name('field', value)") { a =>
+      a.headOption.flatMap(strLitOpt).map(_.toLowerCase)
+        .flatMap(ExtractPins.get) match {
+        case Some(fix) =>
+          require(a.length == 2, s"$name takes ('unit', value)")
+          fix(a(1))
+        case None => spark(name, a: _*)
+      }
+    }
+
+  private def regexpExtract(name: String): (String, Builder) =
+    call(s"$name(string, pattern[, group]) — group 0 by default") { a =>
+      require(a.length == 2 || a.length == 3,
+        s"$name takes (string, pattern[, group]), got: ${sqlOf(a)}")
+      if (a.length == 2) spark(name, a(0), a(1), Literal(0))
+      else spark(name, a: _*)
+    }
+
+  // regexp_replace: DuckDB's DEFAULT is FIRST-match-only
+  // (regexp_replace('aaa','a','b') = 'baa'); the 'g' flag is global —
+  // which is Spark's ONLY behavior. So 'g' drops to Spark's 3-arg
+  // global form, and the bare 3-arg / explicit-'' form builds the
+  // anchored first-match identity — `(?s)^(.*?)(?:p)` replaced with
+  // `$1r`: the ^ anchor admits exactly one (the leftmost) match, (?s)
+  // keeps the lazy prefix spanning newlines, and the (?:…) wrap
+  // preserves p's own precedence. It refuses a non-literal pattern or
+  // replacement, a pattern with its own ^/\A/(?m) anchor (the injected
+  // prefix would defeat it) or with backreferences (the prefix group
+  // shifts numbering), and a replacement with $ or \ (Spark's
+  // replacement metacharacters — DuckDB's \1 group syntax has no
+  // unshifted equivalent here).
+  private def regexpReplace(a: Seq[Expression]): Expression = {
+    require(a.length == 3 || a.length == 4,
+      s"regexp_replace takes (string, pattern, replacement[, flags]), " +
+        s"got: ${sqlOf(a)}")
+    val flag = if (a.length == 4) strLit(a(3), "regexp_replace: the flags")
+      else ""
+    flag match {
+      case "g" => spark("regexp_replace", a(0), a(1), a(2))
+      case "" =>
+        val pat = strLitOpt(a(1)).getOrElse(throw new IllegalArgumentException(
+          "regexp_replace without 'g' is FIRST-match-only in DuckDB — the " +
+            s"rewrite needs a literal pattern (got: ${a(1).sql}); spell " +
+            "the 'g' flag for global replacement"))
+        val rep = strLitOpt(a(2)).getOrElse(throw new IllegalArgumentException(
+          "regexp_replace without 'g' needs a literal replacement (got: " +
+            s"${a(2).sql}); spell the 'g' flag for global replacement"))
+        // a ^ INSIDE a character class ([^0-9] negation, [a^] literal)
+        // is not an anchor — only a top-level (unescaped, outside
+        // [...]) caret defeats the injected prefix and refuses
+        def anchorCaret(p: String): Boolean = {
+          var i = 0; var inClass = false
+          while (i < p.length) {
+            p.charAt(i) match {
+              case '\\' => i += 1 // escaped char — \^ is a literal
+              case '[' if !inClass => inClass = true
+              case ']' if inClass => inClass = false
+              case '^' if !inClass => return true
+              case _ =>
+            }
+            i += 1
+          }
+          false
+        }
+        require(!anchorCaret(pat) && !pat.contains("\\A") &&
+          !pat.contains("(?m"),
+          "first-match regexp_replace: pattern anchors (^, \\A, (?m) " +
+            s"would be defeated by the injected prefix: '$pat'")
+        require(!"\\\\\\d".r.findFirstIn(pat).isDefined,
+          "first-match regexp_replace: backreferences in the pattern " +
+            "shift under the injected prefix group: '" + pat + "'")
+        require(!rep.contains("$") && !rep.contains("\\"),
+          "first-match regexp_replace: replacement must be free of " +
+            s"$$/\\ metacharacters: '$rep'")
+        // the prefix back-reference stays NUMBERED ($1): Spark's
+        // regexp_replace does NOT resolve ${name} references (it
+        // substitutes empty — Java-only syntax). $1 before a
+        // digit-leading replacement is resolved GREEDILY-legal by Java
+        // ('$19' = group 19 only if it exists, else group 1 + literal
+        // '9'), so the shape is ambiguous ONLY when the pattern carries
+        // 10+ capture groups — counted class- and escape-aware, refused
+        // there, safe below
+        def countGroups(p: String): Int = {
+          var i = 0; var inClass = false; var n = 0
+          while (i < p.length) {
+            p.charAt(i) match {
+              case '\\' => i += 1
+              case '[' if !inClass => inClass = true
+              case ']' if inClass => inClass = false
+              case '(' if !inClass =>
+                if (i + 1 >= p.length || p.charAt(i + 1) != '?') n += 1
+              case _ =>
+            }
+            i += 1
+          }
+          n
+        }
+        require(!(rep.headOption.exists(_.isDigit) &&
+            countGroups(pat) + 1 >= 10),
+          "first-match regexp_replace: a digit-leading replacement " +
+            "after a 10+-group pattern would absorb into the $1 " +
+            s"prefix reference: '$rep'")
+        spark("regexp_replace", a(0), Literal(s"(?s)^(.*?)(?:$pat)"),
+          Literal("$1" + rep))
+      case other => throw new IllegalArgumentException(
+        s"regexp_replace flag '$other' is not supported ('' = " +
+          "first-match, 'g' = global)")
+    }
+  }
 
   private def toInterval(slot: Int): (String, Builder) =
     exactly(1, "to_* takes one number") { a =>
@@ -451,30 +821,77 @@ object GraftExtensions {
   private def all: Seq[(String, String, Builder)] = functions ++ dialect
 
   private lazy val dialectByName = dialect.map(d => d._1 -> d._3).toMap
+  private lazy val pinByName = pins.map(p => p._1 -> p._3).toMap
 
-  /** Run the [[dialect]] builders over a parsed, not yet resolved plan,
-    * so that a refusal (wrong arity, a non-literal format, separator or
-    * path, an unsupported token) is raised even when an argument names
-    * a column the analyzer would reject first. Any other failure of the
-    * dry run is left to the analyzer, which calls the same builders.
+  /** DuckDB's meaning for every call in a parsed, not yet resolved
+    * plan, including subqueries, CTE bodies, WINDOW-clause definitions,
+    * lambda bodies and MERGE/UPDATE actions. A call to a [[pins]] name
+    * becomes its builder's expression; the walk visits the arguments
+    * first and never the built expression, so Spark's own functions a
+    * builder emits keep Spark's meaning. A [[dialect]] call stays for
+    * the analyzer, but its builder is dry-run here, so that a refusal
+    * (wrong arity, a non-literal format, separator or path, an
+    * unsupported token) is raised even when an argument names a column
+    * the analyzer would reject first; any other failure of the dry run
+    * is left to the analyzer, which calls the same builder.
     */
-  def refuseEarly(plan: LogicalPlan): Unit = {
-    plan.expressions.foreach(_.foreach {
-      case u: UnresolvedFunction if u.nameParts.length == 1 =>
-        dialectByName.get(u.nameParts.head.toLowerCase).foreach { b =>
-          try b(u.arguments) catch {
-            case e: IllegalArgumentException => throw e
-            case scala.util.control.NonFatal(_) =>
-          }
-        }
-      case q: SubqueryExpression => refuseEarly(q.plan)
-      case _ =>
+  def pin(plan: LogicalPlan): LogicalPlan = plan.transformDown {
+    case w: UnresolvedWith => w.copy(cteRelations = w.cteRelations.map {
+      case (name, q, depth) =>
+        (name, pin(q).asInstanceOf[SubqueryAlias], depth)
     })
-    (plan.children ++ plan.innerChildren).foreach {
-      case p: LogicalPlan => refuseEarly(p)
-      case _ =>
-    }
+    case d: WithWindowDefinition => d.copy(windowDefinitions =
+      d.windowDefinitions.map { case (name, w) =>
+        name -> pinExpr(w).asInstanceOf[WindowSpecDefinition]
+      })
+    case p => p.mapExpressions(pinExpr)
   }
+
+  /** [[pin]] for one expression. */
+  def pinExpr(e: Expression): Expression = e match {
+    case WindowExpression(u: UnresolvedFunction, spec) if isMoment(u) =>
+      val w = pinExpr(spec).asInstanceOf[WindowSpecDefinition]
+      momentCall(pinArgs(u), WindowExpression(_, w))
+    case UnresolvedWindowExpression(u: UnresolvedFunction, ref)
+        if isMoment(u) =>
+      momentCall(pinArgs(u), UnresolvedWindowExpression(_, ref))
+    case u: UnresolvedFunction if u.nameParts.length == 1 =>
+      val v = pinArgs(u)
+      val name = v.nameParts.head.toLowerCase
+      if (isMoment(v)) momentCall(v, identity)
+      else pinByName.get(name) match {
+        case Some(b) => b(v.arguments)
+        case None =>
+          dialectByName.get(name).foreach { b =>
+            try b(v.arguments) catch {
+              case e: IllegalArgumentException => throw e
+              case scala.util.control.NonFatal(_) =>
+            }
+          }
+          v
+      }
+    case q: SubqueryExpression =>
+      q.withNewPlan(pin(q.plan)).mapChildren(pinExpr)
+    case other => other.mapChildren(pinExpr)
+  }
+
+  private def pinArgs(u: UnresolvedFunction): UnresolvedFunction =
+    u.mapChildren(pinExpr).asInstanceOf[UnresolvedFunction]
+
+  private val Moments = Set("skewness", "kurtosis")
+
+  private def isMoment(u: UnresolvedFunction): Boolean =
+    u.nameParts.length == 1 && u.arguments.length == 1 &&
+      Moments(u.nameParts.head.toLowerCase)
+
+  /** A skewness/kurtosis call `v` (arguments already pinned) whose inner
+    * aggregates each take the call's DISTINCT and FILTER and, through
+    * `over`, its window.
+    */
+  private def momentCall(v: UnresolvedFunction,
+      over: Expression => Expression): Expression =
+    momentOf(v.nameParts.head.toLowerCase,
+      agg => over(v.copy(nameParts = Seq(agg))))
 
   /** Register every native function into an existing session (the
     * post-hoc equivalent of building withExtensions — same builders).

@@ -10,8 +10,8 @@ import graft.sources.{DeltaLite, IcebergLite, LakeFormat}
 
 /** SQL DDL + DML against the lake table formats — the reference's
   * `Connection::Query` path (reference:duckdb:24-35) extended from
-  * SELECT to writes: every statement goes through Spark's OWN parser
-  * (`sqlParser.parsePlan`), yielding the standard Catalyst plans
+  * SELECT to writes: every statement goes through Spark's OWN parser,
+  * once ([[parse]]), yielding the standard Catalyst plans
   * (`CreateTableAsSelect` / `DropTable` / `DeleteFromTable` /
   * `UpdateTable` / `InsertIntoStatement`), and this front-end binds
   * named tables — via the session [[catalog]] the DDL maintains, the
@@ -27,6 +27,12 @@ import graft.sources.{DeltaLite, IcebergLite, LakeFormat}
   * assignment expressions pass as unresolved Catalyst trees and resolve
   * against the table's schema inside DeltaLite (same path as the
   * DataFrame API's Column predicates).
+  *
+  * The DuckDB dialect: function names Spark lacks resolve in Spark's
+  * function registry ([[GraftExtensions.dialect]]); names Spark also
+  * defines get DuckDB's meaning on the parsed plan
+  * ([[GraftExtensions.pins]], applied by [[parse]]). What stays a text
+  * rewrite here is syntax Spark's parser rejects.
   */
 object LakeSql {
 
@@ -959,8 +965,7 @@ object LakeSql {
     */
   private def expandAttachedView(s: SparkSession, alias: String,
       name: String, text: String): DataFrame = {
-    val plan = s.sessionState.sqlParser.parsePlan(normLit(text))
-    val bound = bindRelationsDeep(plan, {
+    val bound = bindRelationsDeep(parse(s, text), {
       case r if r.multipartIdentifier.length == 2 &&
           attached(s).contains(r.multipartIdentifier.head) =>
         attachedTable(s, r.multipartIdentifier.head,
@@ -1259,12 +1264,18 @@ object LakeSql {
     // (round-15 script fuzz). When the parse DOES succeed, the plan
     // type check catches CTE-led DML (`WITH … INSERT/UPDATE/…`) that
     // the head regex misses — WITH matches the query-shape head but
-    // the statement is still DML (r15 advisor finding).
-    try {
-      val plan = s.sessionState.sqlParser.parsePlan(
-        normLit(rewriteOrdinals(text)))
+    // the statement is still DML (r15 advisor finding). A function pin
+    // that refuses a marker (a pattern, a unit) defers to EXECUTE too,
+    // which binds the marker to a literal first.
+    val plan = try Some(parse(s, rewriteOrdinals(text))) catch {
+      case _: org.apache.spark.sql.catalyst.parser.ParseException
+          if "(?is)^\\s*(SELECT|WITH|FROM|VALUES)\\b".r
+            .findFirstIn(text).isDefined => None
+      case _: IllegalArgumentException => None
+    }
+    plan.foreach { p =>
       import org.apache.spark.sql.catalyst.plans.logical._
-      val dml = plan.collectFirst {
+      val dml = p.collectFirst {
         case _: InsertIntoStatement => "INSERT"
         case _: UpdateTable => "UPDATE"
         case _: DeleteFromTable => "DELETE"
@@ -1272,11 +1283,6 @@ object LakeSql {
       }
       require(dml.isEmpty,
         "PREPARE covers queries; prepared DML is not supported")
-    }
-    catch {
-      case e: org.apache.spark.sql.catalyst.parser.ParseException =>
-        if ("(?is)^\\s*(SELECT|WITH|FROM|VALUES)\\b".r
-            .findFirstIn(text).isEmpty) throw e
     }
     preparedOf(s).put(name, text)
     ()
@@ -1350,7 +1356,7 @@ object LakeSql {
     // table-free SELECT keeps typing rules identical to any literal in
     // a query (DATE '…', casts, arithmetic all work).
     val vals: Seq[Any] = argExprs.map { a =>
-      val r = s.sql(normLit(s"SELECT $a")).collect()
+      val r = Glue.dataFrame(s, parse(s, s"SELECT $a")).collect()
       require(r.length == 1, s"EXECUTE argument is not scalar: $a")
       r.head.get(0)
     }
@@ -1819,13 +1825,8 @@ object LakeSql {
         case _ if SummarizeKeyword.matches(st) => runSummarize(s, st)
         case _ if PivotKeyword.matches(st) => runPivot(s, st)
         // statement-level rewrites RE-ENTER the full dispatch (each
-        // removes its own trigger keyword, so no loop): round-13 fuzz
-        // found that routing these to sqlStatement() skipped the whole
-        // function-rewrite layer — a DISTINCT ON statement containing
-        // log() ran Spark's NATURAL log where DuckDB computes log10,
-        // silently wrong values (and every dialect function under
-        // QUALIFY/UNPIVOT/ORDER BY ALL/ASOF/star-modifiers failed
-        // analysis instead of rewriting)
+        // removes its own trigger keyword, so no loop), so the text
+        // rewrites below still see the statement they emit
         case _ if UnpivotKeyword.matches(st) =>
           sql(s, rewriteUnpivot(st))
         case _ if DescribeKeyword.matches(st) => runDescribe(s, st)
@@ -1874,10 +1875,10 @@ object LakeSql {
                 " it explicitly first")
           }
           df
-        // changed-text guards (same reason as the regexp_* case below):
-        // a keyword can match text the rewrite leaves alone, which must
-        // fall through, not re-enter forever. Each extractor computes
-        // its rewrite ONCE (guard and recursion share the result).
+        // changed-text guards: a keyword can match text the rewrite
+        // leaves alone, which must fall through, not re-enter forever.
+        // Each extractor computes its rewrite ONCE (guard and recursion
+        // share the result).
         case ListLitRewrite(r) =>
           val df = try sql(s, r) catch {
             // a string-keyed subscript rewrote to try_element_at,
@@ -1912,21 +1913,14 @@ object LakeSql {
               "explicitly")
           df
         case ListFnRewrite(r) => sql(s, r)
-        case MapFnRewrite(r) => sql(s, r)
         case JsonFnRewrite(r) => sql(s, r)
         case NullsModRewrite(r) => sql(s, r)
         case _ if StringAggKeyword.matches(st) =>
           sql(s, rewriteStringAgg(st))
-        case DateFnRewrite(r) => sql(s, r)
-        case MathFnRewrite(r) => sql(s, r)
         case TypeAliasRewrite(r) => sql(s, r)
         case OpPinRewrite(r) => sql(s, r)
         case TimeBucketRewrite(r) => sql(s, r)
         case OrderedAggRewrite(r) => sql(s, r)
-        // guard on CHANGED text: a statement whose only regexp_* calls
-        // are already in Spark form (3-arg regexp_extract) must fall
-        // through to the remaining cases, not re-enter forever
-        case RegexpFnRewrite(r) => sql(s, r)
         case _ if StructPackKeyword.matches(st) =>
           sql(s, rewriteStructPack(st))
         case _ if ColumnsFnKeyword.matches(st) =>
@@ -1956,9 +1950,7 @@ object LakeSql {
     * this, a quote inside a comment flips literal-parity for every
     * quote-aware rewrite downstream — probed silent wrong values:
     * `SELECT /* it's */ log(100)` computed ln, `/* don't */ 2 ^ 3`
-    * stayed XOR. The engine's own `/*graft*/` re-entry tags survive
-    * verbatim (stripping them would re-trigger the tagged rewrites on
-    * dispatch re-entry).
+    * stayed XOR.
     */
   private[graft] def stripComments(st0: String): String = {
     if (st0.indexOf("--") < 0 && st0.indexOf("/*") < 0) return st0
@@ -1985,14 +1977,6 @@ object LakeSql {
       else if (c == '-' && i + 1 < st0.length && st0.charAt(i + 1) == '-') {
         while (i < st0.length && st0.charAt(i) != '\n') i += 1
         sb += ' '
-      }
-      else if (st0.startsWith("/*graft", i)) {
-        // every /*graft…*/ re-entry tag variant (/*graft*/, /*graft:g*/,
-        // /*graft:1*/) survives verbatim
-        val end = st0.indexOf("*/", i)
-        require(end >= 0, "unterminated /*graft tag")
-        sb ++= st0.substring(i, end + 2)
-        i = end + 2
       }
       else if (c == '/' && i + 1 < st0.length && st0.charAt(i + 1) == '*') {
         var depth = 1; i += 2
@@ -2088,20 +2072,15 @@ object LakeSql {
   private lazy val ListLitRewrite =
     new Rewritten(ListLiteralKeyword, rewriteListLiterals)
   private lazy val ListFnRewrite = new Rewritten(ListFnKeyword, rewriteListFns)
-  private lazy val MapFnRewrite = new Rewritten(MapFnKeyword, rewriteMapFns)
   private lazy val JsonFnRewrite = new Rewritten(JsonFnKeyword, rewriteJsonFns)
   private lazy val NullsModRewrite =
     new Rewritten(NullsModKeyword, rewriteNullsModifier)
-  private lazy val DateFnRewrite = new Rewritten(DateFnKeyword, rewriteDateFns)
-  private lazy val MathFnRewrite = new Rewritten(MathFnKeyword, rewriteMathFns)
   private lazy val OpPinRewrite =
     new Rewritten(OpPinKeyword, rewriteOperatorPins)
   private lazy val TimeBucketRewrite =
     new Rewritten(TimeBucketKeyword, rewriteTimeBucket)
   private lazy val OrderedAggRewrite =
     new Rewritten(OrderedAggKeyword, rewriteOrderedListAgg)
-  private lazy val RegexpFnRewrite =
-    new Rewritten(RegexpFnKeyword, rewriteRegexpFns)
   private lazy val TypeAliasRewrite =
     new Rewritten(TypeAliasKeyword, rewriteTypeAliases)
 
@@ -2116,22 +2095,49 @@ object LakeSql {
       if (i % 2 == 1) seg else f(seg)
     }.mkString("'")
 
-  /** Literal-dialect normalization, applied at EVERY Spark-parser
-    * boundary (parsePlan / s.sql on user-derived text): the shared
-    * dialect keeps backslashes in string literals RAW ('\d+' is four
-    * characters in DuckDB) while Spark's default parser folds them as
-    * escapes ('\d' → 'd' — every backslash-carrying regex was silently
-    * a DIFFERENT pattern per engine). Doubling each backslash inside
+  /** Parse a statement with Spark's parser, once, and give every
+    * Spark-defined function name in it DuckDB's meaning
+    * ([[GraftExtensions.pin]]). Every statement that reaches Spark's
+    * parser from this entry goes through here or [[parseExpr]].
+    */
+  private[graft] def parse(s: SparkSession, text: String): LogicalPlan =
+    Glue.withActive(s)(GraftExtensions.pin(
+      s.sessionState.sqlParser.parsePlan(normLit(text))))
+
+  /** [[parse]] for one (possibly aliased) expression. */
+  private[graft] def parseExpr(s: SparkSession, text: String): Expression =
+    Glue.withActive(s)(GraftExtensions.pinExpr(
+      s.sessionState.sqlParser.parseExpression(normLit(text))))
+
+  private val QuotedUnitCall = "(?i)\\b(date_?diff)(\\s*\\(\\s*)$".r
+
+  /** Literal-dialect normalization at the Spark-parser boundary
+    * ([[parse]]): the shared dialect keeps backslashes in string
+    * literals RAW ('\d+' is four characters in DuckDB) while Spark's
+    * default parser folds them as escapes ('\d' → 'd' — every
+    * backslash-carrying regex was silently a DIFFERENT pattern per
+    * engine). Doubling each backslash inside
     * single-quoted segments makes Spark's fold reproduce the raw text,
     * and also restores the quote boundary for a trailing backslash
     * ('a\' would otherwise swallow the closing quote as \'). Quote
     * doubling ('') is shared by both engines and passes through. All
     * text-level rewrites run BEFORE this, on the raw dialect.
+    *
+    * Spark's grammar also keeps `date_diff(`/`datediff(` followed by a
+    * unit for its own TIMESTAMPDIFF form and refuses a quoted unit
+    * there, so DuckDB's `date_diff('day', a, b)` gets a quoted name:
+    * it then parses as an ordinary call, which
+    * [[GraftExtensions.pins]] gives DuckDB's meaning.
     */
-  private[graft] def normLit(text: String): String =
-    text.split("'", -1).zipWithIndex.map { case (seg, i) =>
-      if (i % 2 == 1) seg.replace("\\", "\\\\") else seg
+  private[graft] def normLit(text: String): String = {
+    val segs = text.split("'", -1)
+    segs.indices.map { i =>
+      if (i % 2 == 1) segs(i).replace("\\", "\\\\")
+      else if (i + 1 < segs.length)
+        QuotedUnitCall.replaceAllIn(segs(i), "`$1`$2")
+      else segs(i)
     }.mkString("'")
+  }
 
   // ---- QUALIFY at the text entry -----------------------------------
   // DuckDB filters on window results with `… QUALIFY <pred>` (its
@@ -2527,14 +2533,12 @@ object LakeSql {
       rewritten.substring(at)
   }
 
-  // ---- list syntax pins ----------------------------------------------
+  // ---- list slicing --------------------------------------------------
   // DuckDB's list functions resolve in Spark's function registry
-  // (GraftExtensions.dialect); what stays here is syntax Spark's parser
-  // rejects (bracket slicing) and `len`, which Spark also defines (as
-  // a string length) — DuckDB's len() on a LIST is Spark's size.
+  // (GraftExtensions.dialect, and `len` in GraftExtensions.pins); what
+  // stays here is syntax Spark's parser rejects (bracket slicing).
   private val ListFnKeyword =
-    ("(?is).*(\\blen\\s*\\(|" +
-      "[A-Za-z_0-9]\\s*\\[\\s*\\d+\\s*:\\s*\\d+\\s*\\]).*").r
+    "(?is).*[A-Za-z_0-9]\\s*\\[\\s*\\d+\\s*:\\s*\\d+\\s*\\].*".r
 
   private[graft] def rewriteListFns(statement: String): String = {
     // bracket slicing `l[2:4]` — DuckDB's 1-based inclusive list
@@ -2555,9 +2559,6 @@ object LakeSql {
         // error — the same floor at 0 as the function form
         s"slice(${m.group(1)}, $b, ${math.max(e - b + 1, 0)})"
       })
-      // DuckDB's len() on a LIST = Spark's size; a string argument
-      // fails analysis loudly (use length(), which both engines share)
-        .replaceAll("(?i)\\blen\\s*\\(", "size(")
     }
   }
 
@@ -2792,40 +2793,6 @@ object LakeSql {
     st
   }
 
-  // ---- date_diff / date_part pins --------------------------------------
-  // DuckDB's date_diff counts PARTITION-BOUNDARY crossings (month of
-  // Jan-31 → Feb-01 is 1), not elapsed full units — so the rewrite is
-  // the boundary identity per unit: day → datediff(b, a) (calendar-day
-  // delta, same rule), month → 12·year+month delta, year → year delta.
-  // Other units refuse (hour/minute boundary semantics on timestamps
-  // aren't what Spark's timestampdiff computes). date_part shares its
-  // name and unit vocabulary EXCEPT the pinned fields below, and
-  // EXTRACT(field FROM x) is the SAME vocabulary in the SQL-standard
-  // spelling — probed divergences, identical for both spellings:
-  //   dow          DuckDB Sunday=0..6; Spark extract Sunday=1..7 —
-  //                SILENT wrong values → dayofweek(x)-1
-  //   isodow       DuckDB Mon=1..Sun=7; Spark has no such field →
-  //                weekday(x)+1
-  //   epoch        DuckDB fractional epoch seconds (1709600523.5);
-  //                Spark refuses the field → unix_micros/1e6 DOUBLE
-  //   second       DuckDB INTEGER seconds-in-minute (3 for 03.456789);
-  //                Spark extract returns DECIMAL WITH the fraction —
-  //                SILENT wrong values → exact integer pmod on
-  //                unix_micros (no float rounding at ms boundaries)
-  //   millisecond  DuckDB includes the seconds (3456) — same pmod grid
-  //   microsecond  DuckDB includes the seconds (3456789) — same grid
-  private val ExtractPins: Map[String, String => String] = Map(
-    "dow" -> (x => s"(dayofweek($x) - 1)"),
-    "isodow" -> (x => s"(weekday($x) + 1)"),
-    "epoch" -> (x =>
-      s"(unix_micros(CAST($x AS TIMESTAMP)) / CAST(1000000 AS DOUBLE))"),
-    "second" -> (x =>
-      s"(pmod(unix_micros(CAST($x AS TIMESTAMP)), 60000000L) div 1000000L)"),
-    "millisecond" -> (x =>
-      s"(pmod(unix_micros(CAST($x AS TIMESTAMP)), 60000000L) div 1000L)"),
-    "microsecond" -> (x =>
-      s"pmod(unix_micros(CAST($x AS TIMESTAMP)), 60000000L)"))
-
   // ---- DuckDB type-alias pins (probed round 15) --------------------
   // Bare VARCHAR — DuckDB's default string spelling, in half its
   // documentation examples — is REFUSED by Spark's parser
@@ -2949,141 +2916,6 @@ object LakeSql {
         st = st.substring(0, m.start) + s"$fn($e AS $mapped)" + rest
         cont = true
       }
-    }
-    st
-  }
-
-  private val DateFnKeyword =
-    ("(?is).*(\\bdate_diff\\s*\\(|\\bdatediff\\s*\\(\\s*'|" +
-      "\\bdate_?trunc\\s*\\(\\s*'|" +
-      "\\bdate_part\\s*\\(\\s*'(dow|isodow|epoch|second|millisecond|" +
-      "microsecond)'|\\bextract\\s*\\(\\s*(dow|isodow|epoch|second|" +
-      "millisecond|microsecond)\\b).*").r
-
-  private[graft] def rewriteDateFns(statement: String): String = {
-    var st = statement
-    for (name <- Seq("date_diff", "datediff")) {
-      var hit = ("(?i)\\b" + name + "\\s*\\(\\s*'").r.findFirstMatchIn(st)
-      while (hit.isDefined) {
-        val m = hit.get
-        val open = st.indexOf('(', m.start)
-        val (inner, rest) = takeParenGroup(st.substring(open))
-        val args = splitTopCommasQuoted(inner)
-        require(args.length == 3,
-          s"$name takes ('unit', start, end), got: $inner")
-        val unit = args(0).trim.stripPrefix("'").stripSuffix("'")
-          .toLowerCase
-        val (a, b) = (args(1), args(2))
-        // sub-day units: DuckDB counts unit-GRID boundary crossings
-        // (hour of 10:59:59 → 11:00:00 is 1; 10:00:00 → 10:59:59 is
-        // 0; negatives symmetric) — the epoch-grid identity
-        // floor(epoch_us(b)/unit) - floor(epoch_us(a)/unit). The
-        // session runs UTC (GraftSession pins it), so the epoch grid
-        // IS the wall-clock grid and DATE operands land on midnight
-        // exactly as DuckDB's implicit cast does. floor() over DOUBLE
-        // is exact here: |unix_micros| < 2^53 for any testdata date.
-        def grid(micros: Long): String =
-          s"(CAST(floor(unix_micros(CAST($b AS TIMESTAMP)) / $micros" +
-            s".0) AS BIGINT) - CAST(floor(unix_micros(CAST($a AS " +
-            s"TIMESTAMP)) / $micros.0) AS BIGINT))"
-        val out = unit match {
-          case "day" => s"datediff($b, $a)"
-          case "month" =>
-            s"((year($b) * 12 + month($b)) - (year($a) * 12 + month($a)))"
-          case "year" => s"(year($b) - year($a))"
-          case "hour" => grid(3600000000L)
-          case "minute" => grid(60000000L)
-          case "second" => grid(1000000L)
-          case "millisecond" => grid(1000L)
-          case "microsecond" =>
-            s"(unix_micros(CAST($b AS TIMESTAMP)) - " +
-              s"unix_micros(CAST($a AS TIMESTAMP)))"
-          case other => throw new IllegalArgumentException(
-            s"$name: unsupported unit '$other' (year, month, day, " +
-              "hour, minute, second, millisecond, microsecond)")
-        }
-        st = st.substring(0, m.start) + out + rest
-        hit = ("(?i)\\b" + name + "\\s*\\(\\s*'").r.findFirstMatchIn(st)
-      }
-    }
-    // date_trunc / datetrunc — probed typed divergence (round 15):
-    // DuckDB returns DATE for day-and-coarser units where Spark stays
-    // TIMESTAMP (silent once the value renders: CAST(... AS VARCHAR)
-    // gives '2021-03-01' vs '2021-03-01 00:00:00'); and Spark returns
-    // SILENT NULL for any unit it doesn't know, where DuckDB's
-    // decade/century/millennium work — so unshared units refuse
-    // loudly instead of nulling. Day-and-coarser calls wrap in
-    // CAST(… AS DATE); sub-day units are value- and type-shared on
-    // both engines and pass through. The /*graft*/ tag stops
-    // re-entry.
-    if ("(?i)\\bdatetrunc\\s*\\(".r.findFirstIn(st).isDefined)
-      st = outsideLiterals(st)(
-        _.replaceAll("(?i)\\bdatetrunc\\s*\\(", "date_trunc("))
-    val truncRe = "(?i)\\bdate_trunc\\s*\\(\\s*'([A-Za-z]+)'\\s*,".r
-    var truncHit = truncRe.findFirstMatchIn(st)
-    while (truncHit.isDefined) {
-      val m = truncHit.get
-      val unit = m.group(1).toLowerCase
-      val open = st.indexOf('(', m.start)
-      val (inner, rest) = takeParenGroup(st.substring(open))
-      val out = unit match {
-        case "day" | "week" | "month" | "quarter" | "year" =>
-          s"CAST(date_trunc/*graft*/($inner) AS DATE)"
-        case "hour" | "minute" | "second" | "millisecond" |
-             "microsecond" =>
-          s"date_trunc/*graft*/($inner)"
-        case other => throw new IllegalArgumentException(
-          s"date_trunc unit '$other' is not shared (Spark would " +
-            "return NULL silently) — supported: year, quarter, " +
-            "month, week, day, hour, minute, second, millisecond, " +
-            "microsecond")
-      }
-      st = st.substring(0, m.start) + out + rest
-      truncHit = truncRe.findFirstMatchIn(st)
-    }
-    // date_part('field', x) for every pinned field
-    for ((field, fix) <- ExtractPins) {
-      val re = ("(?i)\\bdate_part\\s*\\(\\s*'" + field + "'\\s*,").r
-      var hit = re.findFirstMatchIn(st)
-      while (hit.isDefined) {
-        val m = hit.get
-        val open = st.indexOf('(', m.start)
-        val (inner, rest) = takeParenGroup(st.substring(open))
-        val args = splitTopCommasQuoted(inner)
-        require(args.length == 2, s"date_part takes ('unit', value)")
-        st = st.substring(0, m.start) + fix(args(1).trim) + rest
-        hit = re.findFirstMatchIn(st)
-      }
-    }
-    // EXTRACT(field FROM x) — the SQL-standard spelling of the same
-    // pinned fields; unpinned fields (year/month/day/hour/minute/doy/
-    // week/quarter) are probed SHARED and pass through untouched.
-    val exRe = "(?i)\\bextract\\s*\\(".r
-    var from = 0
-    var exHit = exRe.findFirstMatchIn(st.substring(from)).map(m =>
-      (m.start + from, m.end + from))
-    while (exHit.isDefined) {
-      val (hs, he) = exHit.get
-      val quoteGuarded = st.substring(0, hs).count(_ == '\'') % 2 == 1
-      var advanced = false
-      if (!quoteGuarded) {
-        val (inner, rest) = takeParenGroup(st.substring(he - 1))
-        val fi = topLevelWord(inner, "FROM")
-        if (fi >= 0) {
-          val field = inner.substring(0, fi).trim.toLowerCase
-          ExtractPins.get(field) match {
-            case Some(fix) =>
-              val x = inner.substring(fi + 4).trim
-              st = st.substring(0, hs) + fix(x) + rest
-              from = 0
-              advanced = true
-            case None => ()
-          }
-        }
-      }
-      if (!advanced) from = hs + 1
-      exHit = exRe.findFirstMatchIn(st.substring(from)).map(m =>
-        (m.start + from, m.end + from))
     }
     st
   }
@@ -3263,210 +3095,6 @@ object LakeSql {
     """((?:[A-Za-z_]\w*\.)?[A-Za-z_]\w*)\s*->>\s*'([^']+)'""".r
       .replaceAllIn(st, m => scala.util.matching.Regex.quoteReplacement(
         s"get_json_object(${m.group(1)}, '${norm(m.group(2))}')"))
-  }
-
-  // ---- MAP constructor --------------------------------------------------
-  // DuckDB's `map(keys_list, values_list)` constructs a MAP from two
-  // lists (Spark: map_from_arrays — both preserve entry order); Spark's
-  // own map(k1, v1, …) takes alternating entries, so the name stays a
-  // text pin. The other MAP functions resolve in Spark's registry
-  // (GraftExtensions.dialect) or share names and entry order on both
-  // engines (map_keys/map_values/cardinality).
-  private val MapFnKeyword = "(?is).*\\bmap\\s*\\(.*".r
-
-  // literal-aware: map( is the single most collision-prone token in
-  // the surface — a data value like 'map(a)' must survive
-  private[graft] def rewriteMapFns(statement: String): String =
-    outsideLiterals(statement)(
-      _.replaceAll("(?i)\\bmap\\s*\\(", "map_from_arrays("))
-
-  // ---- scalar math/string pins ---------------------------------------
-  // Four shared-name scalar divergences found by the round-13 probe
-  // sweep (each pinned empirically in both engines):
-  //   log(x)    — DuckDB log10, Spark NATURAL log → rewrite to log10;
-  //               the 2-arg log(base, x) agrees and passes through.
-  //   left/right(s, n<0) — DuckDB drops |n| from the OTHER end
-  //               ('abc',-1 → 'ab'/'bc'), Spark returns '' → rebuilt
-  //               as a substr CASE exact on every pinned edge (0,
-  //               ±beyond-length, NULL n → NULL).
-  //   substr(s, 0, L) — DuckDB's window rule [0,L)∩[1,∞) drops one
-  //               char ('abcdef',0,3 → 'ab'), Spark treats 0 as 1
-  //               ('abc') → literal-0 starts shift to (1, L-1); the
-  //               2-arg substr(s, 0) agrees (whole string) and
-  //               negative starts agree (from-end on both engines).
-  //   a // b    — DuckDB's // divides integrally ONLY for integer
-  //               operands (7.0 // 2 = 3.5, pinned) — a blind DIV
-  //               rewrite would silently diverge on fractional
-  //               operands, so // REFUSES loudly with the portable
-  //               spellings.
-  // CAST(fractional → integer) stays DOCUMENTED-divergent, not
-  // rewritten: DuckDB ROUNDS (half-even on DOUBLE, half-away on
-  // DECIMAL — pinned: CAST(2.5::DOUBLE AS INT)=2, CAST(2.5 AS INT)=3)
-  // while Spark TRUNCATES; the rounding mode depends on the operand's
-  // runtime type, which a text rewrite cannot see. Spell round()/
-  // bround() explicitly on fractional casts — integral values (every
-  // gated text) agree on both engines. DATE - DATE is likewise typed
-  // (DuckDB INT days, Spark INTERVAL) — date_diff is the portable
-  // spelling (x103).
-  // And 2-arg ltrim/rtrim/trim take (string, chars) in
-  // DuckDB but (trimStr, string) in Spark: the SAME call with SWAPPED
-  // argument meaning, silently different values unless the trim set
-  // is symmetric — the rewrite swaps the arguments. 1-arg and
-  // TRIM(LEADING … FROM …) forms agree untouched.
-  // DuckDB function names that Spark lacks resolve in Spark's function
-  // registry instead (GraftExtensions.dialect); only names Spark also
-  // defines stay here.
-  private val MathFnKeyword =
-    ("(?is).*(\\blog\\s*\\(|\\bleft\\s*\\(|\\bright\\s*\\(|" +
-      "\\bsubstr(ing)?\\s*\\(\\s*[^,()]+,\\s*0\\s*,|" +
-      "\\bprintf\\s*\\(|\\b[lr]?trim\\s*\\(|\\bskewness\\s*\\(|" +
-      "\\bkurtosis\\s*\\(|\\bhash\\s*\\(|\\bconcat\\s*\\().*").r
-
-  private[graft] def rewriteMathFns(statement: String): String = {
-    var st = statement
-    // literal-aware find (a quote-parity guard): a
-    // collision-prone token inside a quoted data value like
-    // 'trim(a, b)' must survive untouched — an odd number of quotes
-    // before the match start means the match sits inside a literal.
-    // loopOver additionally captures a trailing OVER clause (paren
-    // form or named window) so window-context rewrites can attach it
-    // to every aggregate they emit.
-    def loopOver(name: String)(
-        fix: (Seq[String], String) => Option[String]): Unit = {
-      val re = ("(?i)\\b" + name + "\\s*\\(").r
-      var from = 0
-      var hit = re.findFirstMatchIn(st.substring(from)).map(m =>
-        (m.start + from, m.end + from))
-      while (hit.isDefined) {
-        val (s0, e0) = hit.get
-        if (st.substring(0, s0).count(_ == '\'') % 2 == 1) {
-          from = e0 // inside a string literal — leave untouched
-        } else {
-          val (inner, rest0) = takeParenGroup(st.substring(e0 - 1))
-          // trailing OVER: `OVER (…)` (consume the balanced group) or
-          // `OVER name` (a WINDOW-clause reference, kept by name)
-          val OverParen = "(?is)^\\s*OVER\\s*\\(".r
-          val OverName = "(?is)^\\s*OVER\\s+([A-Za-z_]\\w*)".r
-          val (ov, rest) = OverParen.findFirstMatchIn(rest0) match {
-            case Some(om) =>
-              val (oin, orest) = takeParenGroup(rest0.substring(om.end - 1))
-              (s" OVER ($oin)", orest)
-            case None => OverName.findFirstMatchIn(rest0) match {
-              case Some(om) =>
-                (s" OVER ${om.group(1)}", rest0.substring(om.end))
-              case None => ("", rest0)
-            }
-          }
-          fix(splitTopCommasQuoted(inner), ov) match {
-            case Some(out) =>
-              st = st.substring(0, s0) + out + rest
-              from = s0 + out.length
-            case None => // keep verbatim, OVER clause included
-              from = s0 + (st.substring(s0, e0) + inner + ")").length
-          }
-        }
-        hit = re.findFirstMatchIn(st.substring(from)).map(m =>
-          (m.start + from, m.end + from))
-      }
-    }
-    def loop(name: String)(fix: Seq[String] => Option[String]): Unit =
-      // scalar rewrites never own a window — any captured OVER text is
-      // re-emitted verbatim after the rewritten call
-      loopOver(name)((args, ov) => fix(args).map(_ + ov))
-    loop("log") {
-      case Seq(x) => Some(s"log10($x)")
-      case _ => None // 2-arg log(base, x) agrees on both engines
-    }
-    loop("left") {
-      case Seq(s, n) => Some(
-        s"substr($s, 1, (CASE WHEN ($n) >= 0 THEN ($n) WHEN ($n) < 0 " +
-          s"THEN greatest(length($s) + ($n), 0) END))")
-      case _ => None
-    }
-    loop("right") {
-      case Seq(s, n) => Some(
-        s"(CASE WHEN ($n) < 0 THEN substr($s, 1 - ($n)) " +
-          s"WHEN ($n) >= 0 THEN " +
-          s"substr($s, greatest(length($s) - ($n) + 1, 1)) END)")
-      case _ => None
-    }
-    for (name <- Seq("substring", "substr")) loop(name) {
-      case Seq(s, b, l) if b.trim == "0" =>
-        Some(s"$name($s, 1, ($l) - 1)")
-      case _ => None
-    }
-    // hash(): both engines HAVE it with DIFFERENT functions (DuckDB's
-    // own 64-bit vs Spark's 32-bit Murmur3) — same spelling, silently
-    // different values on every input; the one honest mapping is none
-    loop("hash") {
-      case args => throw new IllegalArgumentException(
-        "hash() is engine-specific (DuckDB's 64-bit hash vs Spark's " +
-          "Murmur3) — the same call returns DIFFERENT values per " +
-          "engine; use md5()/sha256()/xxhash64() for a portable hash: " +
-          s"hash(${args.mkString(", ")})")
-    }
-    // skewness/kurtosis: DuckDB computes the SAMPLE-corrected
-    // statistics (adjusted Fisher–Pearson G1 / sample excess G2) while
-    // Spark's same-named aggregates are the POPULATION g1/g2 — pinned:
-    // skew {1,2,2,3,9} DuckDB 1.9694 vs Spark 1.3211; the correction
-    // identities G1 = g1·√(n(n−1))/(n−2) and
-    // G2 = (n−1)/((n−2)(n−3))·((n+1)·g2 + 6) reproduce DuckDB exactly
-    // (both pinned cases bit-equal), with NULL below the minimum n
-    // (DuckDB: skewness n<3, kurtosis n<4 — the CASE guard also keeps
-    // ANSI Spark off the zero divisor). A windowed call rewrites the
-    // same way — the identity is per-frame, so the captured OVER
-    // clause attaches to EVERY inner aggregate (the whole CASE cannot
-    // carry the window) and count rides the same frame as the moment.
-    // /*graft*/ tags stop re-entry.
-    loopOver("skewness") {
-      case (Seq(x), ov) => Some(
-        s"(CASE WHEN count($x)$ov < 3 THEN NULL ELSE " +
-          s"skewness/*graft*/($x)$ov * sqrt(CAST(count($x)$ov AS DOUBLE) " +
-          s"* (count($x)$ov - 1)) / (count($x)$ov - 2) END)")
-      case _ => None
-    }
-    loopOver("kurtosis") {
-      case (Seq(x), ov) => Some(
-        s"(CASE WHEN count($x)$ov < 4 THEN NULL ELSE " +
-          s"(CAST(count($x)$ov AS DOUBLE) - 1) / ((count($x)$ov - 2) * " +
-          s"(count($x)$ov - 3)) * ((count($x)$ov + 1) * " +
-          s"kurtosis/*graft*/($x)$ov + 6) END)")
-      case _ => None
-    }
-    // 2-arg trims: DuckDB (string, chars) → Spark (trimStr, string) —
-    // the SAME call shape with swapped argument meaning. The swapped
-    // call carries the inline /*graft*/ tag (lexed as whitespace) so
-    // the finder skips it on dispatch re-entry — an untagged swap
-    // would ping-pong back on the next pass.
-    for (name <- Seq("ltrim", "rtrim", "trim")) loop(name) {
-      case Seq(s0, chars) => Some(s"$name/*graft*/($chars, $s0)")
-      case _ => None // 1-arg and TRIM(LEADING … FROM …) forms agree
-    }
-    // printf: DuckDB NULLs the WHOLE result when ANY argument is NULL
-    // (probed: printf('%s-%d', NULL, 5) → NULL) where format_string
-    // prints 'null' — the same whole-result guard format() carries
-    loop("printf") {
-      case args if args.length >= 2 =>
-        val guard = args.tail.map(a => s"($a) IS NULL").mkString(" OR ")
-        Some(s"(CASE WHEN $guard THEN NULL ELSE " +
-          s"format_string(${args.mkString(", ")}) END)")
-      case args if args.length == 1 =>
-        Some(s"format_string(${args.head})")
-      case _ => None
-    }
-    // concat: DuckDB SKIPS NULL arguments (probed: concat('a', NULL,
-    // 'b') = 'ab', all-NULL = '') where Spark's concat is
-    // NULL-propagating — concat_ws('') IS DuckDB's concat for the
-    // string operands the shared dialect covers (DuckDB casts every
-    // argument to VARCHAR; list operands stringify there, so they are
-    // out of the dialect). list_concat's array emission carries the
-    // /*graft*/ tag and keeps Spark's NULL-propagating array concat.
-    loop("concat") {
-      case args if args.nonEmpty =>
-        Some(s"concat_ws('', ${args.mkString(", ")})")
-      case _ => None
-    }
-    st
   }
 
   // ---- operator vocabulary pins -------------------------------------
@@ -4020,168 +3648,6 @@ object LakeSql {
     st
   }
 
-  // ---- regexp_matches / 2-arg regexp_extract --------------------------
-  // DuckDB's regexp_matches(s, re) is a partial-match boolean — exactly
-  // Spark's regexp_like (both SEARCH, neither anchors). regexp_extract
-  // diverges only in the default group: DuckDB's 2-arg form extracts
-  // the FULL match (group 0) while Spark's defaults to group 1 — the
-  // rewrite pins the explicit 0; 3-arg calls pass through untouched
-  // (same group semantics, and both engines return '' on no match).
-  // Patterns here stay in the shared RE2∩Java dialect (classes,
-  // quantifiers, anchors, alternation); engine-specific syntax would
-  // fail loudly at whichever engine rejects it.
-  private val RegexpFnKeyword =
-    "(?is).*\\bregexp_(matches|extract(_all)?|replace)\\s*\\(.*".r
-
-  private[graft] def rewriteRegexpFns(statement: String): String = {
-    var st = statement.replaceAll("(?i)\\bregexp_matches\\s*\\(",
-      "regexp_like(")
-    // regexp_replace: DuckDB's DEFAULT is FIRST-match-only
-    // (pinned: regexp_replace('aaa','a','b') = 'baa'); the 'g' flag is
-    // global — which is Spark's ONLY behavior. So: 'g' (and one extra
-    // arg dropping to Spark's 3-arg global form) passes through, and
-    // the bare 3-arg / explicit-'' form rewrites to the anchored
-    // first-match identity — `(?s)^(.*?)(?:p)` replaced with `$1r`:
-    // the ^ anchor admits exactly one (the leftmost) match, (?s) keeps
-    // the lazy prefix spanning newlines, and the (?:…) wrap preserves
-    // p's own precedence. Constraints checked at rewrite time (loud
-    // refusal otherwise): literal pattern without its own ^/\A/(?m)
-    // anchor (the injected prefix would defeat it) and without
-    // backreferences (the prefix group shifts numbering); literal
-    // replacement without $/\ (Spark's replacement-string
-    // metacharacters — DuckDB's \1 group syntax has no unshifted
-    // equivalent here). Rewritten calls are tagged with an inline
-    // /*graft*/ comment (lexed as whitespace by Spark) so the finder
-    // skips them on re-entry — an UNTAGGED already-Spark-form call
-    // cannot be told apart from DuckDB's first-match default, which is
-    // exactly the silent divergence this rewrite closes.
-    val rr = "(?i)\\bregexp_replace\\s*\\(".r
-    var rrFrom = 0
-    var rrHit = rr.findFirstMatchIn(st.substring(rrFrom)).map(m =>
-      (m.start + rrFrom, m.end + rrFrom))
-    while (rrHit.isDefined) {
-      val (s0, e0) = rrHit.get
-      val (inner, rest) = takeParenGroup(st.substring(e0 - 1))
-      val args = splitTopCommasQuoted(inner)
-      require(args.length == 3 || args.length == 4,
-        s"regexp_replace takes (string, pattern, replacement[, flags])," +
-          s" got: $inner")
-      val flag =
-        if (args.length == 4) args(3).trim.stripPrefix("'").stripSuffix("'")
-        else ""
-      val fixed = flag match {
-        case "g" =>
-          s"regexp_replace/*graft:g*/(${args(0)}, ${args(1)}, ${args(2)})"
-        case "" =>
-          val LitRe = "(?s)^'(.*)'$".r
-          val pat = args(1).trim match {
-            case LitRe(p) => p
-            case other => throw new IllegalArgumentException(
-              "regexp_replace without 'g' is FIRST-match-only in DuckDB" +
-                " — the rewrite needs a literal pattern (got: " + other +
-                "); spell the 'g' flag for global replacement")
-          }
-          val rep = args(2).trim match {
-            case LitRe(r) => r
-            case other => throw new IllegalArgumentException(
-              "regexp_replace without 'g' needs a literal replacement " +
-                s"(got: $other); spell the 'g' flag for global " +
-                "replacement")
-          }
-          // a ^ INSIDE a character class ([^0-9] negation, [a^] literal)
-          // is not an anchor — only a top-level (unescaped, outside
-          // [...]) caret defeats the injected prefix and refuses
-          def anchorCaret(p: String): Boolean = {
-            var i = 0; var inClass = false
-            while (i < p.length) {
-              p.charAt(i) match {
-                case '\\' => i += 1 // escaped char — \^ is a literal
-                case '[' if !inClass => inClass = true
-                case ']' if inClass => inClass = false
-                case '^' if !inClass => return true
-                case _ =>
-              }
-              i += 1
-            }
-            false
-          }
-          require(!anchorCaret(pat) && !pat.contains("\\A") &&
-            !pat.contains("(?m"),
-            "first-match regexp_replace: pattern anchors (^, \\A, (?m) " +
-              s"would be defeated by the injected prefix: '$pat'")
-          require(!"\\\\\\d".r.findFirstIn(pat).isDefined,
-            "first-match regexp_replace: backreferences in the pattern " +
-              "shift under the injected prefix group: '" + pat + "'")
-          require(!rep.contains("$") && !rep.contains("\\"),
-            "first-match regexp_replace: replacement must be free of " +
-              s"$$/\\ metacharacters: '$rep'")
-          // the prefix back-reference stays NUMBERED ($1): Spark's
-          // regexp_replace does NOT resolve ${name} references (pinned:
-          // it substitutes empty — Java-only syntax). $1 before a
-          // digit-leading replacement is resolved GREEDILY-legal by
-          // Java ('$19' = group 19 only if it exists, else group 1 +
-          // literal '9'), so the shape is ambiguous ONLY when the
-          // pattern carries 10+ capture groups — counted class- and
-          // escape-aware, refused there, safe below
-          def countGroups(p: String): Int = {
-            var i = 0; var inClass = false; var n = 0
-            while (i < p.length) {
-              p.charAt(i) match {
-                case '\\' => i += 1
-                case '[' if !inClass => inClass = true
-                case ']' if inClass => inClass = false
-                case '(' if !inClass =>
-                  if (i + 1 >= p.length || p.charAt(i + 1) != '?') n += 1
-                case _ =>
-              }
-              i += 1
-            }
-            n
-          }
-          require(!(rep.headOption.exists(_.isDigit) &&
-              countGroups(pat) + 1 >= 10),
-            "first-match regexp_replace: a digit-leading replacement " +
-              "after a 10+-group pattern would absorb into the $1 " +
-              s"prefix reference: '$rep'")
-          s"regexp_replace/*graft:1*/(${args(0)}, " +
-            s"'(?s)^(.*?)(?:$pat)', '$$1$rep')"
-        case other => throw new IllegalArgumentException(
-          s"regexp_replace flag '$other' is not supported ('' = " +
-            "first-match, 'g' = global)")
-      }
-      st = st.substring(0, s0) + fixed + rest
-      rrFrom = s0 + fixed.length
-      rrHit = rr.findFirstMatchIn(st.substring(rrFrom)).map(m =>
-        (m.start + rrFrom, m.end + rrFrom))
-    }
-    // regexp_extract_all shares regexp_extract's default-group
-    // divergence (DuckDB: full match; Spark: group 1 — a 2-arg call
-    // with a group-carrying pattern silently returns DIFFERENT
-    // elements) — same pin, explicit group 0. Handled BEFORE
-    // regexp_extract so the _all suffix is never half-matched.
-    for (name <- Seq("regexp_extract_all", "regexp_extract")) {
-      val re = ("(?i)\\b" + name + "\\s*\\(").r
-      var from = 0
-      var hit = re.findFirstMatchIn(st.substring(from)).map(m =>
-        (m.start + from, m.end + from))
-      while (hit.isDefined) {
-        val (s0, e0) = hit.get
-        val (inner, rest) = takeParenGroup(st.substring(e0 - 1))
-        val args = splitTopCommasQuoted(inner)
-        require(args.length == 2 || args.length == 3,
-          s"$name takes (string, pattern[, group]), got: $inner")
-        val fixed =
-          if (args.length == 2) s"$name($inner, 0)"
-          else s"$name($inner)"
-        st = st.substring(0, s0) + fixed + rest
-        from = s0 + fixed.length
-        hit = re.findFirstMatchIn(st.substring(from)).map(m =>
-          (m.start + from, m.end + from))
-      }
-    }
-    st
-  }
-
   // ---- struct_pack ------------------------------------------------------
   // DuckDB's struct constructor: struct_pack(name := expr, …) is
   // Spark's named_struct('name', expr, …) — same nested-type model,
@@ -4528,8 +3994,8 @@ object LakeSql {
   // hash rule is portable and stable — the q31/d11 sampling law at
   // the text entry, so the SAME rows are kept by DuckDB replaying the
   // predicate, by every graft re-run, and by any repartitioning.
-  // NULL keys: the join uses NULL-PROPAGATING CONCAT (Spark's CONCAT
-  // = DuckDB's ||), so a row with any NULL key hashes to NULL and is
+  // NULL keys: the key joins with NULL-PROPAGATING || (on both
+  // engines), so a row with any NULL key hashes to NULL and is
   // DROPPED — identical on both engines. concat_ws would silently
   // skip NULLs here, making ('a', NULL) collide with ('a') on the
   // Spark side while the oracle's || replay drops the row.
@@ -4548,11 +4014,8 @@ object LakeSql {
         (m.group(1), m.group(2).toDouble, splitTopCommas(m.group(3)))
       require(pct > 0 && pct < 100, s"USING SAMPLE: percent $pct out of (0, 100)")
       val threshold = "%03x".format(math.floor(4096.0 * pct / 100.0).toInt)
-      // the tag keeps the x117 NULL-skip concat pin off this internal
-      // hash key: a NULL key component must NULL the whole key (so the
-      // row drops), matching the oracle's NULL-propagating || replay
-      val key = keys.map(k => s"CAST($k AS STRING)")
-        .mkString("CONCAT/*graft*/(", ", '-', ", ")")
+      // `||`, not concat (pinned to DuckDB's NULL-skipping concat)
+      val key = keys.map(k => s"CAST($k AS STRING)").mkString(" || '-' || ")
       scala.util.matching.Regex.quoteReplacement(
         s"FROM (SELECT * FROM $tbl WHERE " +
           s"SUBSTR(MD5($key), 1, 3) < '$threshold') $tbl")
@@ -4842,9 +4305,9 @@ object LakeSql {
     val orderCols = Option(m.group(6)).map(splitTopCommas(_))
       .getOrElse(groupCols)
     val base = sql(s, s"SELECT * FROM $table")
-    import org.apache.spark.sql.functions.{expr, lit, count => cnt}
+    import org.apache.spark.sql.functions.{lit, count => cnt}
     val agg = if (fn == "count" && (arg == "*" || arg.isEmpty))
-      cnt(lit(1)) else expr(s"$fn($arg)")
+      cnt(lit(1)) else Glue.column(parseExpr(s, s"$fn($arg)"))
     base.groupBy(groupCols.map(org.apache.spark.sql.functions.col): _*)
       .pivot(onCol)
       .agg(agg)
@@ -5068,7 +4531,7 @@ object LakeSql {
       val v = "__ubn_" + java.util.UUID.randomUUID().toString
         .replace("-", "").take(8)
       res.createOrReplaceTempView(v)
-      val out = s.sql(normLit(s"SELECT * FROM $v $orderClause"))
+      val out = Glue.dataFrame(s, parse(s, s"SELECT * FROM $v $orderClause"))
       s.catalog.dropTempView(v) // plan resolved eagerly; safe to drop
       out
     }
@@ -5375,13 +4838,14 @@ object LakeSql {
     def project(df: DataFrame): DataFrame = {
       val sels = splitTopCommas(exprs).flatMap(e =>
         if (e.trim == "*") df.columns.toSeq.map(c => s"`$c`") else Seq(e))
-      df.selectExpr(sels: _*)
+      df.select(sels.map(e => Glue.column(parseExpr(s, e))): _*)
     }
-    s.sessionState.sqlParser.parsePlan(normLit(dml)) match {
+    val plan = parse(s, dml)
+    plan match {
       case DeleteFromTable(rel, cond) =>
         val (fmt, path) = resolveTarget(rel)
         val pre = fmt.latestVersion(s, path)
-        execute(s, Map.empty, dml)
+        execute(s, Map.empty, plan)
         project(fmt.snapshot(s, path, pre).filter(Glue.column(cond)))
       case UpdateTable(rel, assignments, cond) =>
         val (fmt, path) = resolveTarget(rel)
@@ -5394,7 +4858,7 @@ object LakeSql {
         val pred = cond.map(Glue.column).getOrElse(
           org.apache.spark.sql.functions.lit(true))
         val pre = fmt.latestVersion(s, path)
-        execute(s, Map.empty, dml)
+        execute(s, Map.empty, plan)
         val before = fmt.snapshot(s, path, pre)
         // the post-image: assignments evaluated over the PRE rows —
         // exactly what updateWhere wrote for the matching rows. Each
@@ -5418,7 +4882,7 @@ object LakeSql {
           "RETURNING is not supported on INSERT OVERWRITE")
         val (fmt, path) = resolveTarget(ins.table)
         val pre = fmt.latestVersion(s, path)
-        execute(s, Map.empty, dml)
+        execute(s, Map.empty, plan)
         // Delta reads its change feed; Iceberg diffs the two snapshots.
         val inserted =
           if (fmt == DeltaLite) DeltaLite.tableChanges(s, path, pre)
@@ -6339,11 +5803,9 @@ object LakeSql {
   }
 
   private def sqlStatement(s: SparkSession, statement0: String): DataFrame = {
-    // the LAST text-level stop before Spark's parser — literal dialect
-    // normalizes here (and in every sibling parse site)
-    val statement = pinNullOrder(normLit(statement0))
-    val parsed = s.sessionState.sqlParser.parsePlan(statement)
-    GraftExtensions.refuseEarly(parsed)
+    // the LAST text-level step before Spark's parser
+    val statement = pinNullOrder(statement0)
+    val parsed = parse(s, statement)
     parsed match {
       // Column-definition CREATE TABLE (r16) — the most common
       // migration-script statement: `CREATE TABLE t (k BIGINT PRIMARY
@@ -6707,13 +6169,7 @@ object LakeSql {
         s.emptyDataFrame
       case _: DeleteFromTable | _: UpdateTable | _: InsertIntoStatement |
           _: MergeIntoTable =>
-        // Pass the RAW text: execute() normLits at ITS parse site, and
-        // handing it the already-normalized `statement` doubled every
-        // backslash in string literals a second time — an INSERT whose
-        // source carried '\d'-style regex (or the GLOB rewrite's \A…\z
-        // pattern) silently matched literal backslashes instead (r16
-        // script-fuzz finding, the r13 bug class on the DML route).
-        execute(s, Map.empty, pinNullOrder(statement0))
+        execute(s, Map.empty, parsed)
         s.emptyDataFrame
       // ALTER TABLE … ADD COLUMNS / RENAME COLUMN: metadata-only
       // schema evolution on either provider — zero data IO at any
@@ -6848,8 +6304,8 @@ object LakeSql {
         Glue.dataFrame(s, bound)
       case plan =>
         // Query path: bind every cataloged name the plan references to
-        // the table's current snapshot, then hand the ORIGINAL text to
-        // spark.sql (full Catalyst optimization).
+        // the table's current snapshot, then run the parsed plan (full
+        // Catalyst optimization).
         // Metadata views bind by textual mention: they are reserved
         // names, and a mention inside a CTE body is invisible to
         // plan.collect (UnresolvedWith keeps cteRelations out of the
@@ -6893,7 +6349,7 @@ object LakeSql {
             catalog(s).get(n).foreach(_ =>
               table(s, n).createOrReplaceTempView(n))
           }
-          s.sql(statement)
+          Glue.dataFrame(s, plan)
         }
     }
   }
@@ -6945,7 +6401,10 @@ object LakeSql {
     * affected table's path.
     */
   def execute(s: SparkSession, tables: Map[String, String],
-      sql: String): String = {
+      sql: String): String = execute(s, tables, parse(s, sql))
+
+  private def execute(s: SparkSession, tables: Map[String, String],
+      plan: LogicalPlan): String = {
     // Transaction hook: the DML target's pre-state anchors here (first
     // touch wins; later touches of the same path are no-ops).
     def resolve(rel: LogicalPlan): (LakeFormat, String) = {
@@ -6953,7 +6412,7 @@ object LakeSql {
       recordTableTouch(s, fmt, p)
       (fmt, p)
     }
-    s.sessionState.sqlParser.parsePlan(normLit(sql)) match {
+    plan match {
       case DeleteFromTable(rel, cond) =>
         val (fmt, p) = resolve(rel)
         fmt.deleteWhere(s, p, Glue.column(cond))

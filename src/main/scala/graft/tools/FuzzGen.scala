@@ -161,10 +161,13 @@ object FuzzGen {
         case 2 => s"substr(sha256(${sCol(r, cols)}), 1, 8)"
         case 3 => s"to_hex(CAST(${iCol(r, cols)} % 4096 AS BIGINT))"
       }
-      case 4 => r.nextInt(3) match {
+      case 4 => r.nextInt(4) match {
         case 0 =>
           s"json_extract_string('{\"k\": ' || CAST(${iCol(r, cols)} " +
             s"AS STRING) || '}', 'k')"
+        case 3 => // a pinned call spelled inside a literal is data
+          s"'${pick(r, Seq("regexp_matches(", "regexp_replace(", "log(",
+            "date_diff(''day'', "))}' || ${sCol(r, cols)} || ')'"
         case 1 => // concat NULL-skip pin (x117)
           s"concat(${sCol(r, cols)}, nullif(${sCol(r, cols)}, " +
             s"${sCol(r, cols)}), '-', ${iCol(r, cols)} % 9)"

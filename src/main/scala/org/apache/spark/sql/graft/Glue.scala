@@ -45,6 +45,14 @@ object Glue {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** Run `f` with `spark` as the thread's active session, as
+    * `spark.sql` does around its parse: Spark's parser reads session
+    * settings (the time zone of a TIMESTAMP literal) from the active
+    * session, which need not be `spark`.
+    */
+  def withActive[T](spark: org.apache.spark.sql.SparkSession)(f: => T): T =
+    spark.withActive(f)
+
   /** Register a native function into an ALREADY-RUNNING session (the
     * with-extensions path only works at session build time).
     */

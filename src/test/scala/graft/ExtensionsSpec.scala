@@ -45,6 +45,14 @@ class ExtensionsSpec extends SparkSpec {
       builtin.functionExists(
         org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
     assert(clashes.isEmpty, s"dialect names Spark defines: $clashes")
+    // and the other direction: a pin only makes sense on a name Spark
+    // defines, and no name is in both tables
+    val pins = GraftExtensions.pins.map(_._1)
+    val unknown = pins.filterNot(n => builtin.functionExists(
+      org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+    assert(unknown.isEmpty, s"pinned names Spark lacks: $unknown")
+    val both = pins.intersect(GraftExtensions.dialect.map(_._1))
+    assert(both.isEmpty, s"names in both tables: $both")
   }
 
   test("arg_max resolves as an aggregate under GROUP BY, FILTER and " +

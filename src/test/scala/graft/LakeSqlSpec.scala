@@ -3454,4 +3454,73 @@ class LakeSqlSpec extends SparkSpec {
     assert(ee.getMessage.contains("single plain column"), ee.getMessage)
     LakeSql.sql(s, "DROP TABLE ci_t")
   }
+
+  test("a string literal that spells a pinned call comes back verbatim") {
+    for (v <- Seq("call regexp_matches(x, y) here",
+        "see date_diff('day', a, b)", "regexp_replace(a, b, c)")) {
+      val lit = "'" + v.replace("'", "''") + "'"
+      assert(LakeSql.sql(spark, s"SELECT $lit AS v").collect().head
+        .getString(0) == v)
+    }
+  }
+
+  test("skewness and kurtosis keep FILTER and a named window") {
+    val f = LakeSql.sql(spark, """SELECT skewness(x) FILTER (WHERE x > 0)
+      AS s FROM VALUES (1),(2),(2),(3),(9),(-1) t(x)""").collect().head
+    assert(math.abs(f.getDouble(0) - 1.969360176238791) < 1e-12)
+    val w = LakeSql.sql(spark, """SELECT x, skewness(x) OVER w AS s,
+      kurtosis(x) OVER w AS k FROM VALUES (1),(2),(4),(3),(9),(-1),(7) t(x)
+      WINDOW w AS (ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING AND
+      CURRENT ROW) ORDER BY x""").collect()
+    def opt(r: org.apache.spark.sql.Row, i: Int): Option[Double] =
+      if (r.isNullAt(i)) None else Some(r.getDouble(i))
+    val want = Seq(
+      (-1, None, None),
+      (1, None, None),
+      (2, Some(-0.9352195295828247), None),
+      (3, Some(-0.7528371991317251), Some(0.34285714285714564)),
+      (4, Some(-0.5901286563843656), Some(-0.02191380569759005)),
+      (7, Some(0.43458050123489356), Some(0.5859374999999974)),
+      (9, Some(0.47294040315845126), Some(-0.5219250488087503)))
+    def near(a: Option[Double], b: Option[Double]) = (a, b) match {
+      case (Some(x), Some(y)) => math.abs(x - y) < 1e-12
+      case _ => a == b
+    }
+    assert(w.length == want.length)
+    w.zip(want).foreach { case (r, (x, s, k)) =>
+      assert(r.getInt(0) == x && near(opt(r, 1), s) && near(opt(r, 2), k),
+        s"$r vs $x, $s, $k")
+    }
+  }
+
+  test("pins reach CTE bodies, subqueries and lambdas, once each") {
+    val r = LakeSql.sql(spark, """WITH c AS (SELECT log(100) AS v)
+      SELECT v, (SELECT log(1000)) AS w,
+             transform(array(CAST(10 AS DOUBLE)), x -> log(x)) AS z,
+             ltrim(ltrim('xya', 'x'), 'y') AS t FROM c""").collect().head
+    assert(r.getDouble(0) == 2.0 && r.getDouble(1) == 3.0)
+    assert(r.getSeq[Double](2) == Seq(1.0) && r.getString(3) == "a")
+  }
+
+  test("EXECUTE arguments take DuckDB's meaning of a pinned name") {
+    LakeSql.sql(spark, "PREPARE pin_q AS SELECT ? AS v")
+    assert(LakeSql.sql(spark, "EXECUTE pin_q(log(100))").collect().head
+      .getDouble(0) == 2.0)
+    LakeSql.sql(spark, "DEALLOCATE pin_q")
+  }
+
+  test("PIVOT's USING aggregate takes DuckDB's meaning of a pinned name") {
+    Sql.open(spark, sfDir)
+    val got = LakeSql.sql(spark, """PIVOT orders ON o_orderstatus
+      USING skewness(o_totalprice) GROUP BY o_orderpriority
+      ORDER BY o_orderpriority""").select("o_orderpriority", "F").collect()
+    val want = LakeSql.sql(spark, """SELECT o_orderpriority,
+      skewness(o_totalprice) FILTER (WHERE o_orderstatus = 'F') AS s
+      FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""")
+      .collect()
+    assert(got.map(_.getString(0)).toSeq == want.map(_.getString(0)).toSeq)
+    got.zip(want).foreach { case (g, w) =>
+      assert(math.abs(g.getDouble(1) - w.getDouble(1)) < 1e-9, s"$g vs $w")
+    }
+  }
 }
