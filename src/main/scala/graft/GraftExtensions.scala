@@ -301,9 +301,9 @@ object GraftExtensions {
     "editdist3" -> exactly(2, "editdist3 takes two strings") { a =>
       fn("levenshtein", a: _*)
     },
-    // 1-based hit or 0 on miss on both engines
+    // 1-based hit or 0 on miss on both engines; BIGINT as in DuckDB
     "strpos" -> exactly(2, "strpos takes (string, search)") { a =>
-      fn("instr", a: _*)
+      Cast(fn("instr", a: _*), LongType)
     },
     // first-char codepoint; DuckDB gives -1 for '' where ascii gives 0
     "unicode" -> exactly(1, "unicode takes one argument") { a =>

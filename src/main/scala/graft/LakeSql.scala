@@ -2139,6 +2139,22 @@ object LakeSql {
     }.mkString("'")
   }
 
+  private val QuotedUnitName = "(?i)`(date_?diff)`(\\s*\\(\\s*)$".r
+
+  /** The dialect text behind `norm`, a slice of [[normLit]]'s output
+    * that starts outside a string literal (a parsed query's own text,
+    * such as `CreateView.originalText`): [[normLit]] undone, so stored
+    * text reads back through [[parse]] as it was written. */
+  private[graft] def rawLit(norm: String): String = {
+    val segs = norm.split("'", -1)
+    segs.indices.map { i =>
+      if (i % 2 == 1) segs(i).replace("\\\\", "\\")
+      else if (i + 1 < segs.length)
+        QuotedUnitName.replaceAllIn(segs(i), "$1$2")
+      else segs(i)
+    }.mkString("'")
+  }
+
   // ---- QUALIFY at the text entry -----------------------------------
   // DuckDB filters on window results with `… QUALIFY <pred>` (its
   // logical order: windows evaluate, QUALIFY filters, then ORDER BY /
@@ -5182,9 +5198,11 @@ object LakeSql {
         require(src0.columns.length == schema.fields.length,
           s"INSERT arity ${src0.columns.length} != table arity " +
             s"${schema.fields.length} (positional binding)")
-        val src = src0.toDF(schema.fieldNames.toIndexedSeq: _*)
-          .select(schema.fields.map(f =>
-            col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
+        // the duplicate check, the count and the write each read it
+        val src = graft.sources.LakeFormat.once(
+          src0.toDF(schema.fieldNames.toIndexedSeq: _*)
+            .select(schema.fields.map(f =>
+              col(f.name).cast(f.dataType).as(f.name)).toSeq: _*))
         require(src.groupBy(keys.map(col): _*)
             .agg(count(lit(1)).as("__n")).filter(col("__n") > 1)
             .isEmpty,
@@ -6068,7 +6086,7 @@ object LakeSql {
             s"unsupported CREATE VIEW target: $other")
         }
         val name = nameParts.last
-        val text = cv.originalText.getOrElse(
+        val text = cv.originalText.map(rawLit).getOrElse(
           throw new IllegalArgumentException(
             s"CREATE VIEW $name: no query text"))
         if (nameParts.length == 2) {
@@ -6507,11 +6525,10 @@ object LakeSql {
       // UPDATE SET * WHEN NOT MATCHED THEN INSERT * — the upsert form,
       // bound to the table format's keyed merge (pruned copy-on-write:
       // a small source into a 100 TB table rewrites touched files
-      // only). Conditional/partial-assignment actions and
-      // not-matched-by-source clauses are rejected loudly; the ON
-      // clause must be a conjunction of same-name column equalities
-      // (the keys), which is what gives merge its well-defined
-      // one-source-row-per-target-row contract.
+      // only). Conditional/partial-assignment matched actions are
+      // rejected loudly; the ON clause must be a conjunction of
+      // same-name column equalities (the keys), which is what gives
+      // merge its well-defined one-source-row-per-target-row contract.
       case m: MergeIntoTable =>
         val (fmt, p) = resolve(m.targetTable)
         def eqKeys(e: Expression): Seq[String] = e match {
@@ -6532,99 +6549,26 @@ object LakeSql {
               "INSERT * is supported (unconditional upsert form)")
         }
         val src = Glue.dataFrame(s, m.sourceTable)
-        if (m.notMatchedBySourceActions.isEmpty) fmt.merge(s, p, src, keys)
-        else {
-          // WHEN NOT MATCHED BY SOURCE — the CDC full-sync idiom:
-          // target rows whose key is ABSENT from the source DELETE or
-          // UPDATE (optional AND narrows which). r18, stats-pruned
-          // (guide §6, §3): ONE fused aggregate over the source yields
-          // both the dup check and the per-key min/max range; only
-          // files whose stats admit a source-range key OR a row
-          // satisfying the BY SOURCE condition are rewritten — every
-          // other file provably holds only absent-keyed rows the
-          // action cannot touch, and rides into the SAME atomic commit
-          // by reference. At 100 TB a keyed CDC sync rewrites the
-          // files its keys and condition reach, never the table; an
-          // unconditional BY SOURCE action touches every absent row,
-          // so there the candidate set is every file (the honest full
-          // rewrite this path used to pay always).
-          import org.apache.spark.sql.functions.{coalesce, col, lit, not, when, count, max => fmax}
-          require(m.notMatchedBySourceActions.length == 1,
+        m.notMatchedBySourceActions match {
+          case Seq() => fmt.merge(s, p, src, keys)
+          // WHEN NOT MATCHED BY SOURCE — the CDC full-sync idiom, bound
+          // to the format's full-sync MERGE (LakeFormat.sync)
+          case Seq(DeleteAction(c)) =>
+            fmt.sync(s, p, src, keys, c.map(Glue.column), None)
+          case Seq(UpdateAction(c, assignments, false)) =>
+            val set = assignments.map {
+              case Assignment(k: UnresolvedAttribute, v) =>
+                k.nameParts.last -> Glue.column(v)
+              case other => throw new IllegalArgumentException(
+                s"unsupported BY SOURCE assignment: $other")
+            }.toMap
+            require(!set.keySet.exists(keys.contains),
+              "BY SOURCE UPDATE must not reassign merge keys")
+            fmt.sync(s, p, src, keys, c.map(Glue.column), Some(set))
+          case Seq(other) => throw new IllegalArgumentException(
+            s"unsupported WHEN NOT MATCHED BY SOURCE action: $other")
+          case _ => throw new IllegalArgumentException(
             "one WHEN NOT MATCHED BY SOURCE clause is supported")
-          val tgtSchema = fmt.snapshot(s, p).schema
-          // A nondeterministic source must evaluate exactly ONCE (the
-          // dup check would otherwise judge a different row set than
-          // the rewrite writes) — materialize via localCheckpoint.
-          // Deterministic sources (the common case) re-evaluate freely:
-          // no materialization job, no executor memory held (guide §5).
-          val srcRaw = src.select(tgtSchema.fieldNames.map(col).toSeq: _*)
-          val srcCols =
-            if (graft.util.Plans.deterministic(srcRaw)) srcRaw
-            else srcRaw.localCheckpoint()
-          // ONE aggregate job: the per-key counts roll up into the dup
-          // check AND the key ranges the pruning needs (the keyed
-          // merge's range predicate, LakeFormat.rangePred).
-          val kc = keys.map(col)
-          val rk = LakeFormat.rangeKeys(keys, tgtSchema)
-          val aggs = fmax(col("_gf_n")).as("_maxn") +: LakeFormat.rangeAggs(rk)
-          val row = srcCols.groupBy(kc: _*)
-            .agg(count(lit(1)).as("_gf_n"))
-            .agg(aggs.head, aggs.tail: _*).head()
-          require(row.isNullAt(0) || row.getLong(0) <= 1L,
-            "merge: duplicate source keys — SET * replacement is " +
-              "ambiguous; dedup the source")
-          val rangePred =
-            if (row.isNullAt(0)) lit(false) // empty source: no key matches
-            else LakeFormat.rangePred(rk, row, 1)
-          val action = m.notMatchedBySourceActions.head
-          val bySrcCond = action match {
-            case DeleteAction(c) => c.map(Glue.column)
-            case UpdateAction(c, _, false) => c.map(Glue.column)
-            case other => throw new IllegalArgumentException(
-              s"unsupported WHEN NOT MATCHED BY SOURCE action: $other")
-          }
-          val rewritePred = bySrcCond match {
-            case None => lit(true) // unconditional: every absent row acted on
-            case Some(c) => rangePred || c
-          }
-          val files = fmt.filesMayMatch(s, p, rewritePred)
-          val subset = fmt.readSubset(s, p, files)
-          // keys are proven unique above, so the anti-join needs no
-          // distinct() — one exchange fewer in the rewrite (§2.4)
-          val absent = subset.join(srcCols.select(kc: _*), keys, "left_anti")
-          val kept = action match {
-            case DeleteAction(cond) =>
-              // delete where cond holds (NULL = not deleted, SQL rule);
-              // no condition deletes every absent-keyed row
-              cond match {
-                case None => absent.limit(0)
-                case Some(c) =>
-                  absent.filter(not(coalesce(Glue.column(c), lit(false))))
-              }
-            case UpdateAction(cond, assignments, false) =>
-              val assigned = assignments.map {
-                case Assignment(k: UnresolvedAttribute, v) =>
-                  k.nameParts.last -> Glue.column(v)
-                case other => throw new IllegalArgumentException(
-                  s"unsupported BY SOURCE assignment: $other")
-              }.toMap
-              require(!assigned.keySet.exists(keys.contains),
-                "BY SOURCE UPDATE must not reassign merge keys")
-              val gate = cond.map(c =>
-                coalesce(Glue.column(c), lit(false)))
-              absent.select(tgtSchema.fieldNames.map { f =>
-                assigned.get(f) match {
-                  case None => col(f)
-                  case Some(v) => (gate match {
-                    case None => v
-                    case Some(g) => when(g, v).otherwise(col(f))
-                  }).as(f)
-                }
-              }.toSeq: _*)
-            case other => throw new IllegalArgumentException(
-              s"unsupported WHEN NOT MATCHED BY SOURCE action: $other")
-          }
-          fmt.commitReplace(s, p, files, srcCols.unionByName(kept))
         }
         p
       case other =>

@@ -62,9 +62,9 @@ object BloomIndex {
   def build(s: SparkSession, table: String, column: String,
       expectedPerFile: Long = 100000L, fpp: Double = 0.01): Unit = {
     import s.implicits._
-    val rels = DeltaLite.liveFiles(s, table)
-    val byName = rels.map(r => r.substring(r.lastIndexOf('/') + 1) -> r).toMap
-    val rows = DeltaLite.readSubset(s, table, rels, fileCol = Some("_bf_file"))
+    val t = DeltaLite.live(s, table)
+    val byName = t.files.map(r => LakeFormat.fileName(r) -> r).toMap
+    val rows = t.read(t.files, fileCol = Some("_bf_file"))
       .select(col("_bf_file"), col(column).cast("string").as("_bf_val"))
       .filter(col("_bf_val").isNotNull)
       .as[(String, String)]
@@ -135,13 +135,13 @@ object BloomIndex {
     * each task opens only its own sidecars; the driver sees file
     * names, never bloom bytes.
     */
-  private def keptFiles(s: SparkSession, table: String, column: String,
+  private def keptFiles(s: SparkSession, table: String,
+      t: LakeFormat.Live, column: String,
       values: Seq[Any]): (Seq[String], Int) = {
     import s.implicits._
     val idx = readIndex(s, table, column)
     val probes = values.map(String.valueOf)
-    val live = DeltaLite.liveFiles(s, table)
-    val (indexed, unindexed) = live.partition(idx.contains)
+    val (indexed, unindexed) = t.files.partition(idx.contains)
     val hadoopConf = new org.apache.spark.SerializableWritable(
       s.sparkContext.hadoopConfiguration)
     val surviving: Seq[String] =
@@ -161,13 +161,14 @@ object BloomIndex {
           }.map(_._1)
         }
         .collect().toSeq
-    (surviving ++ unindexed, live.size)
+    (surviving ++ unindexed, t.files.size)
   }
 
   /** (kept, total) file counts for a lookup (spec assertion hook). */
   def pruneInfo(s: SparkSession, table: String, column: String,
       values: Seq[Any]): (Int, Int) = {
-    val (kept, total) = keptFiles(s, table, column, values)
+    val (kept, total) =
+      keptFiles(s, table, DeltaLite.live(s, table), column, values)
     (kept.size, total)
   }
 
@@ -176,8 +177,9 @@ object BloomIndex {
     */
   def lookupScan(s: SparkSession, table: String, column: String,
       values: Seq[Any]): DataFrame = {
-    val (kept, _) = keptFiles(s, table, column, values)
-    DeltaLite.readSubset(s, table, kept)
+    val t = DeltaLite.live(s, table)
+    val (kept, _) = keptFiles(s, table, t, column, values)
+    t.read(kept)
       .filter(col(column).isin(values: _*))
   }
 

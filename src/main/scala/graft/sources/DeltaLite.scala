@@ -970,9 +970,7 @@ object DeltaLite extends LakeFormat {
       .filter(pred)
   }
 
-  /** Relative paths of the current snapshot's live data files — hook
-    * for auxiliary per-file indexes (see [[BloomIndex]]).
-    */
+  /** Relative paths of the current snapshot's live data files, sorted. */
   def liveFiles(s: SparkSession, table: String): Seq[String] = {
     val st = replay(s, table, latestVersion(s, table))
     st.entries.map(_.path).sorted
@@ -1794,9 +1792,9 @@ object DeltaLite extends LakeFormat {
     require(v >= 0, s"no delta log at $table")
     val st = replay(s, table, v)
     val schema = st.schema
-    val srcCols = source.select(schema.fieldNames.map(col).toSeq: _*)
-    val srcKeys = source.select(keys.map(col): _*).distinct()
-    val srcKeyCounts = source.groupBy(keys.map(col): _*)
+    val srcCols = LakeFormat.mergeSource(source, schema, keys)
+    val srcKeys = srcCols.select(keys.map(col): _*).distinct()
+    val srcKeyCounts = srcCols.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("_src_n"))
     val (hitNames, maxMatches) =
       if (st.entries.isEmpty) (Set.empty[String], 0L)

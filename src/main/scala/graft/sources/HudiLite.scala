@@ -526,13 +526,8 @@ object HudiLite {
     val key = recordKeyOf(s, table)
     val v = view(s, table)
     val instant = nextInstant(s, table)
-    // Multi-consumed source: materialize ONLY when its plan is
-    // nondeterministic (guide §5) — a deterministic source re-evaluates
-    // to the same rows, and skipping the checkpoint saves one job and
-    // holds no executor memory.
-    val upd =
-      if (graft.util.Plans.deterministic(updates)) updates
-      else updates.localCheckpoint()
+    // the probe and the rewrite each read the source
+    val upd = LakeFormat.once(updates)
     val all = scan(s, table, v, files(v.slices.values, logs = false))
     // No distinct() on the probe keys: semi/anti joins are unaffected
     // by right-side duplicates (guide §2.4).

@@ -1,6 +1,12 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation,
+  LogicalPlan, Project, Range, SubqueryAlias, View}
+import org.apache.spark.sql.catalyst.trees.TreePattern
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -13,10 +19,12 @@ import org.apache.spark.sql.types._
   * Operations only one format has (ZORDER, deletion vectors, refs and
   * branches, merge-on-read) stay on that format's object.
   *
-  * The keyed [[merge]] and the pruned-rewrite primitives
-  * ([[filesMayMatch]], [[readSubset]], [[commitReplace]]) are written
-  * here once, over four hooks each format supplies on one replayed
-  * snapshot ([[LakeFormat.Live]]).
+  * The keyed [[merge]] and the full-sync [[sync]] MERGE are written
+  * here once. Each reads one snapshot ([[LakeFormat.Live]], the hooks
+  * a format supplies on one log replay or manifest read) for the whole
+  * statement, evaluates its source under the one DML source rule
+  * ([[LakeFormat.once]]), casts it to the table's types, and ends in
+  * the same anti-join + union commit.
   */
 trait LakeFormat {
   import LakeFormat._
@@ -69,29 +77,6 @@ trait LakeFormat {
   /** The current snapshot, replayed once. */
   private[sources] def live(s: SparkSession, table: String): Live
 
-  /** Live files `pred` may match, by partition and stats pruning — the
-    * rewrite-candidate set for [[commitReplace]]. */
-  def filesMayMatch(s: SparkSession, table: String,
-      pred: Column): Seq[String] =
-    live(s, table).prune(pred)
-
-  /** Read exactly the named live files under the current schema,
-    * honoring deletes; `fileCol` adds each row's data-file NAME. */
-  def readSubset(s: SparkSession, table: String, files: Seq[String],
-      fileCol: Option[String] = None): DataFrame =
-    live(s, table).read(files, fileCol)
-
-  /** ONE atomic commit replacing exactly the `removed` live files with
-    * `add`'s rows — the pruned-rewrite primitive behind the full-sync
-    * MERGE: untouched files ride into the new version by reference. */
-  def commitReplace(s: SparkSession, table: String, removed: Seq[String],
-      add: DataFrame): Long = {
-    val t = live(s, table)
-    val have = t.files.toSet
-    removed.foreach(p => require(have(p), s"not a live file: $p"))
-    t.replace(removed, add)
-  }
-
   /** Copy-on-write MERGE (upsert) on `keys`: source rows REPLACE
     * matching target rows and are INSERTED otherwise. Only target files
     * containing a matching key are rewritten — found by ONE
@@ -99,18 +84,13 @@ trait LakeFormat {
     * merging a small source into a 100 TB table rewrites the touched
     * files, not the table. Multiple source rows matching one target row
     * is an error (which copy would win is ambiguous); duplicate source
-    * keys that match nothing insert all their copies. The rewrite is
-    * one anti-join (matched old rows drop out) plus a union of the
-    * source, committed with [[commitReplace]]'s shape.
+    * keys that match nothing insert all their copies.
     */
   def merge(s: SparkSession, table: String, source: DataFrame,
       keys: Seq[String]): Long = {
     val t = live(s, table)
-    keys.foreach(k => require(t.schema.fieldNames.contains(k),
-      s"merge key $k not in schema"))
-    val srcCols = source.select(t.schema.fields.toSeq.map(f =>
-      col(f.name).cast(f.dataType).as(f.name)): _*)
-    val srcKeyCounts = source.groupBy(keys.map(col): _*)
+    val src = mergeSource(source, t.schema, keys)
+    val srcKeyCounts = src.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("_src_n"))
     // Stats-pruned candidate set: above the file-count floor, one
     // source key-range aggregate lets partition and min/max stats drop
@@ -121,7 +101,7 @@ trait LakeFormat {
       if (t.files.size < MergePruneFloor || rk.isEmpty) t.files
       else {
         val aggs = rangeAggs(rk)
-        t.prune(rangePred(rk, source.agg(aggs.head, aggs.tail: _*).head(), 0))
+        t.prune(rangePred(rk, src.agg(aggs.head, aggs.tail: _*).head(), 0))
       }
     val (hitNames, maxMatches) =
       if (candidates.isEmpty) (Set.empty[String], 0L)
@@ -136,16 +116,62 @@ trait LakeFormat {
     require(maxMatches <= 1L,
       s"merge: $maxMatches source rows match the same target key — " +
         "MERGE forbids ambiguous multi-matches; dedup the source")
-    val hits = t.files.filter(p => hitNames.contains(fileName(p)))
-    // No distinct() on the anti-join's key side: right-side duplicates
-    // cannot change a left_anti result — one exchange fewer.
-    val newData =
-      if (hits.isEmpty) srcCols
-      else t.read(hits)
-        .join(source.select(keys.map(col): _*), keys, "left_anti")
-        .unionByName(srcCols)
-    t.replace(hits, newData)
+    rewrite(t, t.files.filter(p => hitNames.contains(fileName(p))), src,
+      keys)(identity)
   }
+
+  /** Full-sync MERGE — [[merge]] plus `WHEN NOT MATCHED BY SOURCE [AND
+    * cond] THEN DELETE | UPDATE SET …`, the CDC idiom: target rows
+    * whose key the source lacks are deleted (`set` None) or take the
+    * `set` assignments, where `cond` holds (NULL is false; no `cond`
+    * acts on every such row). Source keys must be unique.
+    *
+    * ONE aggregate over the source gives both the duplicate-key check
+    * and the per-key ranges. Only files whose stats admit a source-range
+    * key OR a row satisfying `cond` are rewritten: every other file
+    * holds only absent-keyed rows the action cannot touch and rides
+    * into the same commit by reference. An unconditional action touches
+    * every absent row, so there every file is rewritten.
+    */
+  def sync(s: SparkSession, table: String, source: DataFrame,
+      keys: Seq[String], cond: Option[Column],
+      set: Option[Map[String, Column]]): Long = {
+    val t = live(s, table)
+    val src = mergeSource(source, t.schema, keys)
+    val rk = rangeKeys(keys, t.schema)
+    val aggs = max(col("_n")).as("_maxn") +: rangeAggs(rk)
+    val row = src.groupBy(keys.map(col): _*).agg(count(lit(1)).as("_n"))
+      .agg(aggs.head, aggs.tail: _*).head()
+    require(row.isNullAt(0) || row.getLong(0) <= 1L,
+      "merge: duplicate source keys — SET * replacement is ambiguous; " +
+        "dedup the source")
+    val files = cond.fold(t.files) { c =>
+      // an empty source holds no key, so only `cond` keeps a file
+      t.prune((if (row.isNullAt(0)) lit(false)
+        else rangePred(rk, row, 1)) || c)
+    }
+    val acts = cond.fold(lit(true))(c => coalesce(c, lit(false)))
+    rewrite(t, files, src, keys) { absent =>
+      set.fold(absent.filter(not(acts))) { asg =>
+        absent.select(t.schema.fields.toSeq.map(f =>
+          asg.get(f.name).fold(col(f.name))(v =>
+            when(acts, v.cast(f.dataType)).otherwise(col(f.name))
+              .as(f.name))): _*)
+      }
+    }
+  }
+
+  /** The one commit both MERGEs end in: `files` are replaced by their
+    * rows whose key `src` lacks (passed through `absent`) and by `src`.
+    * No distinct() on the anti-join's key side: right-side duplicates
+    * cannot change a left_anti result — one exchange fewer. */
+  private def rewrite(t: Live, files: Seq[String], src: DataFrame,
+      keys: Seq[String])(absent: DataFrame => DataFrame): Long =
+    t.replace(files,
+      if (files.isEmpty) src
+      else absent(t.read(files)
+          .join(src.select(keys.map(col): _*), keys, "left_anti"))
+        .unionByName(src))
 }
 
 object LakeFormat {
@@ -186,6 +212,44 @@ object LakeFormat {
     val before: Long = written.get
     body
     written.get - before
+  }
+
+  /** The DML source rule: `df` itself when every evaluation of it
+    * yields the same rows, else `df` evaluated once (`localCheckpoint`).
+    * Every lake DML statement reads its source more than once (a check,
+    * a hit probe, the rewrite), and evaluations that disagree duplicate
+    * or lose rows. A source is re-evaluated only when its analyzed plan
+    * is projections, filters, aliases and views over one leaf relation
+    * (a file scan, a local or checkpointed relation, a range), with no
+    * nondeterministic or time-dependent expression (`current_timestamp()`
+    * and its kin take a new value in every query). Anything else — a
+    * LIMIT, a TABLESAMPLE, a join, an aggregate — is materialized: its
+    * rows may differ per evaluation, and proving otherwise costs more
+    * than the job.
+    */
+  private[graft] def once(df: DataFrame): DataFrame =
+    if (stable(df.queryExecution.analyzed)) df else df.localCheckpoint()
+
+  private def stable(p: LogicalPlan): Boolean = (p match {
+    case _: Project | _: Filter | _: SubqueryAlias | _: View =>
+      p.children.forall(stable)
+    case _: LogicalRelation | _: LocalRelation | _: Range | _: LogicalRDD =>
+      true
+    case _ => false
+  }) && p.expressions.forall(e => e.deterministic &&
+    !e.containsPattern(TreePattern.CURRENT_LIKE) &&
+    e.collect { case q: SubqueryExpression => q.plan }.forall(stable))
+
+  /** A MERGE source as the table writes it: evaluated [[once]], its
+    * columns in `schema`'s order and types (an uncast column would land
+    * its own physical type in a data file the table's readers refuse),
+    * its `keys` checked against the table. */
+  private[sources] def mergeSource(source: DataFrame, schema: StructType,
+      keys: Seq[String]): DataFrame = {
+    keys.foreach(k => require(schema.fieldNames.contains(k),
+      s"merge key $k not in schema"))
+    once(source).select(schema.fields.toSeq.map(f =>
+      col(f.name).cast(f.dataType).as(f.name)): _*)
   }
 
   /** Live-file count below which a keyed MERGE skips the source

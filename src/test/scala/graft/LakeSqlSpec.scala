@@ -2771,6 +2771,74 @@ class LakeSqlSpec extends SparkSpec {
     }
   }
 
+  test("a keyed MERGE whose source key depends on the clock evaluates " +
+      "it once: no key is duplicated, on both formats") {
+    Sql.open(spark, sfDir)
+    val tag = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
+    val root = graft.util.Scratch.dir("mergeonce")
+    for (provider <- Seq("deltalite", "iceberglite")) {
+      val t = s"mo_${provider.take(4)}_$tag"
+      // 40 keys in 4 files; each run's source names one 10-key decile,
+      // picked by the current millisecond
+      graft.sources.LakeFormat.of(provider).create(spark, s"$root/$t",
+        LakeSql.sql(spark, """SELECT c_custkey AS k, c_acctbal AS v
+          FROM customer WHERE c_custkey BETWEEN 1 AND 40""").repartition(4))
+      LakeSql.register(spark, t, provider, s"$root/$t")
+      for (_ <- 1 to 3) LakeSql.sql(spark, s"""MERGE INTO $t USING (
+          SELECT c_custkey + ((unix_micros(current_timestamp()) DIV 1000)
+            % 4) * 10 AS k, c_acctbal + 1 AS v
+          FROM customer WHERE c_custkey BETWEEN 1 AND 10) AS src
+        ON $t.k = src.k
+        WHEN MATCHED THEN UPDATE SET *
+        WHEN NOT MATCHED THEN INSERT *""")
+      val r = LakeSql.sql(spark,
+        s"SELECT COUNT(*) AS n, COUNT(DISTINCT k) AS d FROM $t")
+        .collect().head
+      assert(r.getLong(0) == 40L && r.getLong(1) == 40L, s"$provider: $r")
+      LakeSql.sql(spark, s"DROP TABLE $t")
+    }
+  }
+
+  test("a full-sync MERGE casts its source to the table's types: a " +
+      "BIGINT source into INT columns reads back, on both formats") {
+    Sql.open(spark, sfDir)
+    val tag = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
+    val root = graft.util.Scratch.dir("synccast")
+    for (provider <- Seq("deltalite", "iceberglite")) {
+      val t = s"sc_${provider.take(4)}_$tag"
+      LakeSql.sql(spark, s"""CREATE TABLE $t USING $provider
+        LOCATION '$root/$t' AS SELECT CAST(c_custkey AS INT) AS k,
+        CAST(c_nationkey AS INT) AS n FROM customer WHERE c_custkey <= 20""")
+      LakeSql.sql(spark, s"""MERGE INTO $t USING (
+          SELECT CAST(c_custkey AS BIGINT) AS k,
+            CAST(c_nationkey + 100 AS BIGINT) AS n
+          FROM customer WHERE c_custkey BETWEEN 5 AND 25) AS src
+        ON $t.k = src.k
+        WHEN MATCHED THEN UPDATE SET *
+        WHEN NOT MATCHED THEN INSERT *
+        WHEN NOT MATCHED BY SOURCE AND k < 3 THEN DELETE""")
+      val got = LakeSql.sql(spark, s"SELECT * FROM $t")
+      assert(got.schema.map(_.dataType) ==
+        Seq(org.apache.spark.sql.types.IntegerType,
+          org.apache.spark.sql.types.IntegerType), s"$provider: ${got.schema}")
+      val want = LakeSql.sql(spark, """SELECT CAST(c_custkey AS INT) AS k,
+          CAST(c_nationkey + CASE WHEN c_custkey >= 5 THEN 100 ELSE 0 END
+            AS INT) AS n
+        FROM customer WHERE c_custkey BETWEEN 3 AND 25""")
+      assert(got.collect().toSet == want.collect().toSet, provider)
+      LakeSql.sql(spark, s"DROP TABLE $t")
+    }
+  }
+
+  test("a view's text reads back as written: backslashes in its string " +
+      "literals keep their meaning") {
+    LakeSql.sql(spark, """CREATE OR REPLACE VIEW bv AS
+      SELECT regexp_replace('a1b', '\d', 'X', 'g') AS r""")
+    assert(LakeSql.sql(spark, "SELECT * FROM bv").collect().head
+      .getString(0) == "aXb")
+    LakeSql.sql(spark, "DROP VIEW bv")
+  }
+
   test("operator pins: ^/** power, // integer division, ~/!~ " +
       "full-match regex, ~~/!~~ LIKE, ^@ starts_with") {
     Sql.open(spark, sfDir)
@@ -2902,7 +2970,7 @@ class LakeSqlSpec extends SparkSpec {
     assert(lx.getLong(0) == 142857L)
     assert(lx.getDecimal(1).doubleValue == 1000.5)
     assert(lx.getString(2) == "it's $$ raw")
-    assert(lx.getInt(3) == 2 && lx.getInt(4) == -1)
+    assert(lx.getLong(3) == 2L && lx.getInt(4) == -1)
     assert(lx.getString(5) == "keep_$1_000$_literal")
   }
 

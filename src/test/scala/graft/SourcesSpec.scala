@@ -146,4 +146,51 @@ class SourcesSpec extends SparkSpec {
     assert(plan.contains("BroadcastHashJoin") ||
       plan.contains("BroadcastNestedLoopJoin"), plan.take(2000))
   }
+
+  // The DML source rule (LakeFormat.once), one plan shape per test: a
+  // source whose evaluations may disagree is materialized once, a
+  // stable one is returned as it is (no extra job).
+  private def checkpointed(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+
+  private val unstableSources
+      : Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+    "LIMIT" -> (() => LakeSql.sql(spark, "SELECT * FROM orders LIMIT 5")),
+    "TABLESAMPLE" -> (() =>
+      spark.sql("SELECT * FROM orders TABLESAMPLE (10 PERCENT)")),
+    "current_timestamp()" -> (() => LakeSql.sql(spark,
+      "SELECT o_orderkey, current_timestamp() AS ts FROM orders")),
+    "rand()" -> (() => spark.table("orders").withColumn("r", rand())))
+
+  private val stableSources
+      : Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+    "a bare scan" -> (() => spark.read.parquet(s"$sfDir/nation.parquet")),
+    "a VALUES list" -> (() => LakeSql.sql(spark,
+      "SELECT * FROM (VALUES (1, 'a'), (2, 'b')) v(k, s)")),
+    "a checkpointed frame" -> (() =>
+      spark.table("orders").limit(5).localCheckpoint()),
+    "the lake-dml MERGE source" -> (() => LakeSql.sql(spark,
+      """SELECT o_orderkey, o_custkey, 'U' AS o_orderstatus,
+        o_totalprice + 3 AS o_totalprice, o_orderdate, o_orderpriority
+        FROM orders WHERE o_orderkey BETWEEN 10 AND 40""")),
+    "the lake-dml Hudi source" -> (() => spark.table("orders")
+      .filter(col("o_orderkey").between(10, 40))
+      .withColumn("o_orderstatus", lit("H"))
+      .withColumn("o_totalprice", col("o_totalprice") + 3)))
+
+  for ((shape, df) <- unstableSources)
+    test(s"DML source rule: $shape is materialized once") {
+      Sql.open(spark, sfDir)
+      val once = graft.sources.LakeFormat.once(df())
+      assert(checkpointed(once), once.queryExecution.analyzed.treeString)
+    }
+
+  for ((shape, df) <- stableSources)
+    test(s"DML source rule: $shape is read as it is") {
+      Sql.open(spark, sfDir)
+      val d = df()
+      assert(graft.sources.LakeFormat.once(d) eq d,
+        d.queryExecution.analyzed.treeString)
+    }
 }
