@@ -6413,6 +6413,72 @@ object LakeSql {
         s"unknown lake table $n"))
   }
 
+  /** An INSERT's source rows bound to the target's columns and cast to
+    * their types. */
+  private def bindInsert(ins: InsertIntoStatement, df0: DataFrame,
+      targetSchema: org.apache.spark.sql.types.StructType): DataFrame = {
+    // BY NAME and column-list INSERTs must bind by NAME, never by
+    // position — ignoring the flags would land values in the wrong
+    // columns silently. Missing columns fill NULL (the SQL rule);
+    // unknown source columns refuse.
+    def alignByName(src: DataFrame): DataFrame = {
+      val byLower = src.columns.map(c => c.toLowerCase -> c).toMap
+      val extra = src.columns.filterNot(c =>
+        targetSchema.fieldNames.exists(_.equalsIgnoreCase(c)))
+      require(extra.isEmpty,
+        s"INSERT BY NAME: source column(s) ${extra.mkString(", ")} " +
+          "not in the target table")
+      src.select(targetSchema.fields.toSeq.map { f =>
+        byLower.get(f.name.toLowerCase)
+          .map(org.apache.spark.sql.functions.col)
+          .getOrElse(org.apache.spark.sql.functions.lit(null)
+            .cast(f.dataType))
+          .as(f.name)
+      }: _*)
+    }
+    val df =
+      if (ins.byName) alignByName(df0)
+      else if (ins.userSpecifiedCols.nonEmpty) {
+        require(ins.userSpecifiedCols.length == df0.columns.length,
+          s"INSERT column list names ${ins.userSpecifiedCols.length} " +
+            s"column(s) but the query produces ${df0.columns.length}")
+        alignByName(df0.toDF(ins.userSpecifiedCols: _*))
+      } else if (df0.columns.length == targetSchema.fields.length) {
+        // positional INSERT (the SQL rule): a bare INSERT binds the
+        // query's columns to the table's left-to-right, EVEN when
+        // the source aliases happen to name target columns in a
+        // different order — SQL/DuckDB never bind a bare INSERT by
+        // name, so neither does graft (silent reorder otherwise)
+        df0.toDF(targetSchema.fieldNames.toSeq: _*)
+      } else if (df0.columns.forall(c =>
+        targetSchema.fieldNames.exists(_.equalsIgnoreCase(c)))) {
+        // FEWER columns, each naming a target column → the
+        // omitted-generated/identity-column case; the write path
+        // binds by name and computes the omitted columns
+        df0
+      } else {
+        throw new IllegalArgumentException(
+          s"INSERT provides ${df0.columns.length} column(s) but " +
+            s"the table has ${targetSchema.fields.length} — use a " +
+            "column list to insert a subset")
+      }
+    // Implicit INSERT coercion (the SQL rule both engines apply):
+    // each bound source column CASTs to its target column's
+    // declared type — an INT into a STRING column renders, an
+    // incompatible value fails LOUDLY at write time (ANSI), and a
+    // mismatched physical type never lands in a data file (r16
+    // fuzz finding: an uncast INT32 landed under a STRING schema
+    // and poisoned every later read of the table).
+    df.select(df.columns.toSeq.map { c =>
+      val f = targetSchema.fields
+        .find(_.name.equalsIgnoreCase(c)).get
+      if (f.dataType == df.schema(c).dataType)
+        org.apache.spark.sql.functions.col(c)
+      else org.apache.spark.sql.functions.col(c)
+        .cast(f.dataType).as(c)
+    }: _*)
+  }
+
   /** Execute one DML statement. `tables` maps statement table names to
     * DeltaLite paths; names not in the map resolve through the session
     * catalog (CREATE TABLE-registered — either provider). Returns the
@@ -6455,71 +6521,7 @@ object LakeSql {
         require(ins.partitionSpec.isEmpty,
           "partition-spec INSERT is not supported (full-table only)")
         val df0 = Glue.dataFrame(s, ins.query)
-        // BY NAME and column-list INSERTs must bind by NAME, never by
-        // position — ignoring the flags would land values in the wrong
-        // columns silently. Missing columns fill NULL (the SQL rule);
-        // unknown source columns refuse.
-        lazy val targetSchema = fmt.snapshot(s, p).schema
-        def alignByName(src: org.apache.spark.sql.DataFrame)
-            : org.apache.spark.sql.DataFrame = {
-          val target = targetSchema
-          val byLower = src.columns.map(c => c.toLowerCase -> c).toMap
-          val extra = src.columns.filterNot(c =>
-            target.fieldNames.exists(_.equalsIgnoreCase(c)))
-          require(extra.isEmpty,
-            s"INSERT BY NAME: source column(s) ${extra.mkString(", ")} " +
-              "not in the target table")
-          src.select(target.fields.toSeq.map { f =>
-            byLower.get(f.name.toLowerCase)
-              .map(org.apache.spark.sql.functions.col)
-              .getOrElse(org.apache.spark.sql.functions.lit(null)
-                .cast(f.dataType))
-              .as(f.name)
-          }: _*)
-        }
-        val df =
-          if (ins.byName) alignByName(df0)
-          else if (ins.userSpecifiedCols.nonEmpty) {
-            require(ins.userSpecifiedCols.length == df0.columns.length,
-              s"INSERT column list names ${ins.userSpecifiedCols.length} " +
-                s"column(s) but the query produces ${df0.columns.length}")
-            alignByName(df0.toDF(ins.userSpecifiedCols: _*))
-          } else if (df0.columns.length == targetSchema.fields.length) {
-            // positional INSERT (the SQL rule): a bare INSERT binds the
-            // query's columns to the table's left-to-right, EVEN when
-            // the source aliases happen to name target columns in a
-            // different order — SQL/DuckDB never bind a bare INSERT by
-            // name, so neither does graft (silent reorder otherwise)
-            df0.toDF(targetSchema.fieldNames.toSeq: _*)
-          } else if (df0.columns.forall(c =>
-            targetSchema.fieldNames.exists(_.equalsIgnoreCase(c)))) {
-            // FEWER columns, each naming a target column → the
-            // omitted-generated/identity-column case; the write path
-            // binds by name and computes the omitted columns
-            df0
-          } else {
-            throw new IllegalArgumentException(
-              s"INSERT provides ${df0.columns.length} column(s) but " +
-                s"the table has ${targetSchema.fields.length} — use a " +
-                "column list to insert a subset")
-          }
-        // Implicit INSERT coercion (the SQL rule both engines apply):
-        // each bound source column CASTs to its target column's
-        // declared type — an INT into a STRING column renders, an
-        // incompatible value fails LOUDLY at write time (ANSI), and a
-        // mismatched physical type never lands in a data file (r16
-        // fuzz finding: an uncast INT32 landed under a STRING schema
-        // and poisoned every later read of the table).
-        val coerced = df.select(df.columns.toSeq.map { c =>
-          val f = targetSchema.fields
-            .find(_.name.equalsIgnoreCase(c)).get
-          if (f.dataType == df.schema(c).dataType)
-            org.apache.spark.sql.functions.col(c)
-          else org.apache.spark.sql.functions.col(c)
-            .cast(f.dataType).as(c)
-        }: _*)
-        if (ins.overwrite) fmt.overwrite(s, p, coerced)
-        else fmt.append(s, p, coerced)
+        fmt.insert(s, p, ins.overwrite)(bindInsert(ins, df0, _))
         p
       // MERGE INTO … USING … ON <key equalities> WHEN MATCHED THEN
       // UPDATE SET * WHEN NOT MATCHED THEN INSERT * — the upsert form,

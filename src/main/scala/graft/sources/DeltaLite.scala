@@ -18,7 +18,7 @@ import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import LakeFormat.fileName
+import LakeFormat.{collectHitNames, fileName}
 
 /** Minimal open-table-format support speaking the public Delta Lake
   * transaction-log protocol: a table is a directory of immutable parquet
@@ -1400,31 +1400,6 @@ object DeltaLite extends LakeFormat {
     replay(s, table, v).config
   }
 
-  /** Append `df` as a new version. */
-  def append(s: SparkSession, table: String, df: DataFrame): Long = {
-    val v = latestVersion(s, table)
-    require(v >= 0, s"no delta log at $table")
-    val st = replay(s, table, v)
-    writeCommit(s, table, v + 1,
-      stagedAdds(s, table, df, st.schema, st.partCols,
-        constraints = st.constraints))
-  }
-
-  /** REPLACE the table's contents in one atomic commit (INSERT
-    * OVERWRITE): the new files' add actions plus a remove for every
-    * live file — readers see the old or the new state, never a mix.
-    * Old files stay on disk for time travel until [[vacuum]].
-    */
-  def overwrite(s: SparkSession, table: String, df: DataFrame): Long = {
-    val v = latestVersion(s, table)
-    require(v >= 0, s"no delta log at $table")
-    val st = replay(s, table, v)
-    writeCommit(s, table, v + 1,
-      stagedAdds(s, table, df, st.schema, st.partCols,
-        constraints = st.constraints) ++
-        st.entries.map(e => removeAction(e.path)))
-  }
-
   /** Idempotent append for restart-prone producers: commits `df` with a
     * `txn` action recording (`appId`, `txnVersion`), and SKIPS the
     * write — returning false — when the log already holds that version
@@ -1727,37 +1702,13 @@ object DeltaLite extends LakeFormat {
       s"appendWithRetry: lost the commit race $maxAttempts times at $table")
   }
 
-  /** Cap on the driver-side matched-file set a DML operation may
-    * collect (`spark.graft.maxHitFiles` overrides). The hit-file sets
-    * of delete/update/merge are metadata-sized by design — but a
-    * predicate matching most of a 100 TB table would queue millions of
-    * names on the driver; refusing loudly past the cap beats an OOM.
-    */
-  private def maxHitFiles(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.maxHitFiles").map(_.toInt)
-      .getOrElse(100000)
-
-  /** Distinct `_gf` hit-file names of `df`, bounded by [[maxHitFiles]]
-    * — fails loud (with the remedy) past the cap.
-    */
-  private def collectHitNames(s: SparkSession,
-      df: org.apache.spark.sql.DataFrame): Set[String] = {
-    val cap = maxHitFiles(s)
-    val names = df.select(col("_gf")).distinct().limit(cap + 1)
-      .collect().map(_.getString(0))
-    require(names.length <= cap,
-      s"predicate matches more than $cap data files; a driver-side " +
-        "file set this large risks driver memory — narrow the " +
-        "operation or raise spark.graft.maxHitFiles")
-    names.toSet
-  }
-
   private[sources] def live(s: SparkSession,
       table: String): LakeFormat.Live = {
     val v = latestVersion(s, table)
     require(v >= 0, s"no delta log at $table")
     val st = replay(s, table, v)
     new LakeFormat.Live {
+      val version: Long = v
       val schema: StructType = st.schema
       val files: Seq[String] = st.entries.map(_.path)
       def prune(pred: Column): Seq[String] =
@@ -1767,11 +1718,15 @@ object DeltaLite extends LakeFormat {
         readEntries(s, table, schema,
           st.entries.filter(e => want.contains(e.path)), fileCol)
       }
-      def replace(removed: Seq[String], add: DataFrame): Long =
+      // A DELETE's rows only carry over, so its CHECKs are not re-run
+      // (the stagedAdds rule).
+      def replace(removed: Seq[String], add: DataFrame,
+          operation: String): Long =
         writeCommit(s, table, v + 1,
           stagedAdds(s, table, add, schema, st.partCols,
-            constraints = st.constraints) ++ removed.map(removeAction(_)),
-          operation = "MERGE")
+            constraints = if (operation == "DELETE") Nil
+              else st.constraints) ++ removed.map(removeAction(_)),
+          operation)
     }
   }
 
@@ -1812,79 +1767,11 @@ object DeltaLite extends LakeFormat {
         "Delta MERGE forbids ambiguous multi-matches; dedup the source")
     val hitEntries = st.entries
       .filter(e => hitNames.contains(fileName(e.path)))
-    val dvActions: Seq[String] = if (hitEntries.isEmpty) Nil else {
-      // Prior soft-deleted positions merge into each file's NEW
-      // sidecar (sidecars replace, not chain — the deleteWhereDV
-      // contract).
-      val prior = hitEntries.flatMap(e => e.dv.toSeq.flatMap(rel =>
-        readDv(s, table, rel).map(rid => (fileName(e.path), rid))))
-      import s.implicits._
-      val scanReader = {
-        val r0 = s.read.schema(physStruct(schema))
-        if (hitEntries.exists(e => isAbsPath(e.path))) r0
-        else r0.option("basePath", table)
-      }
-      val scan0 = scanReader
-        .parquet(hitEntries.map(e => new Path(table, e.path).toString): _*)
-        .withColumn("_dv_fname",
-          element_at(split(input_file_name(), "/"), -1))
-        .withColumn("_dv_rid", col("_metadata.row_index"))
-        .select(schema.fields.map(fd =>
-          col(physName(fd)).as(fd.name)).toSeq ++
-          Seq(col("_dv_fname"), col("_dv_rid")): _*)
-      val live = if (prior.isEmpty) scan0
-        else scan0.join(
-          broadcast(prior.toDF("_dv_fname", "_dv_rid")),
-          Seq("_dv_fname", "_dv_rid"), "left_anti")
-      // Matched = live rows whose key appears in the source: their
-      // positions soft-delete; the source's new versions arrive via
-      // the append below. Sidecars write on EXECUTORS (the
-      // deleteWhereDV shape) — only (file, sidecar, count) metadata
-      // returns to the driver.
-      val hadoopConf = new org.apache.spark.SerializableWritable(
-        s.sparkContext.hadoopConfiguration)
-      val newPos = live.join(broadcast(srcKeys), keys, "left_semi")
-        .select(col("_dv_fname"), col("_dv_rid"))
-        .as[(String, Long)]
-        .map(t => (t._1, t._2, true))
-      val priorDs = prior.toDS().map(t => (t._1, t._2, false))
-      val dvMeta: Array[(String, String, Long)] = newPos.union(priorDs)
-        .groupByKey(_._1)
-        .flatMapGroups { (fname, it) =>
-          val rows = it.toArray
-          if (!rows.exists(_._3)) Iterator.empty
-          else {
-            val rids = rows.map(_._2).distinct.sorted
-            val rel = s"_dv/dv-${UUID.randomUUID()}.json"
-            val p = new Path(table, rel)
-            val f = p.getFileSystem(hadoopConf.value)
-            f.mkdirs(p.getParent)
-            val sb = new StringBuilder("{\"deletedRows\":[")
-            var i = 0
-            while (i < rids.length) {
-              if (i > 0) sb.append(',')
-              sb.append(rids(i))
-              i += 1
-            }
-            sb.append("]}")
-            val out = f.create(p, false)
-            try out.write(sb.toString.getBytes("UTF-8"))
-            finally out.close()
-            Iterator.single((fname, rel, rids.length.toLong))
-          }
-        }
-        .collect()
-      val byFile = dvMeta.map(m => m._1 -> (m._2, m._3)).toMap
-      hitEntries
-        .filter(e => byFile.contains(fileName(e.path)))
-        .flatMap { e =>
-          val (rel, n) = byFile(fileName(e.path))
-          Seq(removeAction(e.path),
-            addAction(e.path, e.size, e.partValues,
-              e.stats.map(_.toString), dataChange = true,
-              dv = Some((rel, n))))
-        }
-    }
+    // Matched = live rows whose key appears in the source: their
+    // positions soft-delete; the source's new versions arrive via the
+    // append below.
+    val dvActions = softDelete(s, table, schema, hitEntries)(
+      _.join(broadcast(srcKeys), keys, "left_semi"))
     writeCommit(s, table, v + 1,
       stagedAdds(s, table, srcCols, schema, st.partCols,
         constraints = st.constraints) ++ dvActions,
@@ -2279,35 +2166,12 @@ object DeltaLite extends LakeFormat {
       operation = "OPTIMIZE")
   }
 
-  /** Copy-on-write DELETE WHERE `cond`: partition+stats pruning first
-    * narrows the candidates, then one metadata-column scan of those
-    * finds the files actually containing matching rows; only those are
-    * rewritten (their surviving rows become new adds, the originals
-    * removes). Untouched files are untouched — the 100 TB-safe DML
-    * shape.
+  /** Copy-on-write DELETE WHERE `cond` ([[rewriteWhere]]): only the
+    * files holding a match are rewritten, to their surviving rows.
     */
-  def deleteWhere(s: SparkSession, table: String, cond: Column): Long = {
-    val v = latestVersion(s, table)
-    require(v >= 0, s"no delta log at $table")
-    val st = replay(s, table, v)
-    val schema = st.schema
-    val candidates = keptEntries(s, st, cond)
-    if (candidates.isEmpty) return v
-    // UUID file names are unique per table, so name-match recovers the
-    // entries regardless of partition-directory encoding.
-    val hitNames = collectHitNames(s,
-      readEntries(s, table, schema, candidates, fileCol = Some("_gf"))
-        .filter(cond))
-    val hitEntries = candidates
-      .filter(e => hitNames.contains(fileName(e.path)))
-    if (hitEntries.isEmpty) return v
-    val survivors = readEntries(s, table, schema, hitEntries)
-      .filter(!coalesce(cond, lit(false)))
-    writeCommit(s, table, v + 1,
-      stagedAdds(s, table, survivors, schema, st.partCols) ++
-        hitEntries.map(e => removeAction(e.path)),
-      operation = "DELETE")
-  }
+  def deleteWhere(s: SparkSession, table: String, cond: Column): Long =
+    rewriteWhere(s, live(s, table), cond, "DELETE")(
+      _.filter(!coalesce(cond, lit(false))))
 
   /** Row-level changes between two versions — the change-data-feed
     * read: every output row carries `_change_type` ('insert' or
@@ -2354,50 +2218,6 @@ object DeltaLite extends LakeFormat {
     }
   }
 
-  /** Copy-on-write UPDATE WHERE `cond`: `assignments` maps column name
-    * → new-value expression (which may reference any current columns);
-    * matching rows are rewritten in place, non-matching rows in the
-    * same files carry over unchanged, and untouched files are
-    * untouched. Same pruned shape as [[deleteWhere]] — partition+stats
-    * pruning narrows candidates, one metadata-column scan finds the
-    * files that actually contain matches, only those rewrite.
-    * Assignments cast to the column's declared type; assigning an
-    * unknown column is an error (UPDATE never widens the schema — use
-    * [[appendEvolved]] for that).
-    */
-  def updateWhere(s: SparkSession, table: String, cond: Column,
-      assignments: Map[String, Column]): Long = {
-    val v = latestVersion(s, table)
-    require(v >= 0, s"no delta log at $table")
-    val st = replay(s, table, v)
-    val schema = st.schema
-    assignments.keys.foreach(k => require(schema.fieldNames.contains(k),
-      s"updateWhere: unknown column $k"))
-    val candidates = keptEntries(s, st, cond)
-    if (candidates.isEmpty) return v
-    val hitNames = collectHitNames(s,
-      readEntries(s, table, schema, candidates, fileCol = Some("_gf"))
-        .filter(cond))
-    val hitEntries = candidates
-      .filter(e => hitNames.contains(fileName(e.path)))
-    if (hitEntries.isEmpty) return v
-    val matched = coalesce(cond, lit(false))
-    val rewritten = readEntries(s, table, schema, hitEntries)
-      .select(schema.fields.toSeq.map { f =>
-        assignments.get(f.name) match {
-          case Some(e) =>
-            when(matched, e.cast(f.dataType)).otherwise(col(f.name))
-              .as(f.name)
-          case None => col(f.name)
-        }
-      }: _*)
-    writeCommit(s, table, v + 1,
-      stagedAdds(s, table, rewritten, schema, st.partCols,
-        constraints = st.constraints) ++
-        hitEntries.map(e => removeAction(e.path)),
-      operation = "UPDATE")
-  }
-
   /** Merge-on-read DELETE WHERE `cond` via deletion vectors: instead of
     * rewriting every file containing a match (copy-on-write, O(touched
     * data) write amplification), the matching ROW POSITIONS are
@@ -2416,23 +2236,40 @@ object DeltaLite extends LakeFormat {
     val v = latestVersion(s, table)
     require(v >= 0, s"no delta log at $table")
     val st = replay(s, table, v)
-    val schema = st.schema
-    val candidates = keptEntries(s, st, cond)
-    if (candidates.isEmpty) return
-    // Prior soft-deleted positions ride along so each file's NEW
-    // sidecar is the full merged set (sidecars are replaced, not
-    // chained). They were driver-written metadata; re-distributing
-    // them is a small parallelize.
-    val prior = candidates.flatMap(e => e.dv.toSeq.flatMap(rel =>
+    val actions = softDelete(s, table, st.schema,
+      keptEntries(s, st, cond))(_.filter(cond))
+    if (actions.isEmpty) return
+    writeCommit(s, table, v + 1, actions, operation = "DELETE")
+  }
+
+  /** The deletion-vector write both merge-on-read paths share: the live
+    * rows of `entries` that `hits` keeps get their positions soft-
+    * deleted. Each file with a new hit gets a FRESH sidecar holding its
+    * prior and new positions (sidecars replace, not chain); a file
+    * whose only positions are prior ones keeps its sidecar and log
+    * entry. Rows group by data file and each group's EXECUTOR writes
+    * the sidecar — only (file, sidecar, count) metadata returns to the
+    * driver, so a delete matching billions of rows never funnels row
+    * ids through it (the Iceberg position-delete path in
+    * IcebergLite.deleteWhere shares this shape). Returns the remove +
+    * re-add actions of the files that took a hit.
+    */
+  private def softDelete(s: SparkSession, table: String,
+      schema: StructType, entries: Seq[FileEntry])(
+      hits: DataFrame => DataFrame): Seq[String] = {
+    if (entries.isEmpty) return Nil
+    // Prior soft-deleted positions were driver-written metadata;
+    // re-distributing them is a small parallelize.
+    val prior = entries.flatMap(e => e.dv.toSeq.flatMap(rel =>
       readDv(s, table, rel).map(rid => (fileName(e.path), rid))))
     import s.implicits._
     val scanReader = {
       val r0 = s.read.schema(physStruct(schema))
-      if (candidates.exists(e => isAbsPath(e.path))) r0
+      if (entries.exists(e => isAbsPath(e.path))) r0
       else r0.option("basePath", table)
     }
     val scan0 = scanReader
-      .parquet(candidates.map(e => new Path(table, e.path).toString): _*)
+      .parquet(entries.map(e => new Path(table, e.path).toString): _*)
       .withColumn("_dv_fname",
         element_at(split(input_file_name(), "/"), -1))
       .withColumn("_dv_rid", col("_metadata.row_index"))
@@ -2443,15 +2280,9 @@ object DeltaLite extends LakeFormat {
       else scan0.join(
         broadcast(prior.toDF("_dv_fname", "_dv_rid")),
         Seq("_dv_fname", "_dv_rid"), "left_anti")
-    // Distributed sidecar write: rows group by their data file and each
-    // group's EXECUTOR writes the merged sidecar; only (file, sidecar
-    // path, count) — metadata, not positions — returns to the driver.
-    // At 100 TB a delete matching billions of rows therefore never
-    // funnels row ids through the driver (the Iceberg position-delete
-    // path in IcebergLite.deleteWhere shares this shape).
     val hadoopConf = new org.apache.spark.SerializableWritable(
       s.sparkContext.hadoopConfiguration)
-    val newPos = live.filter(cond)
+    val newPos = hits(live)
       .select(col("_dv_fname"), col("_dv_rid"))
       .as[(String, Long)]
       .map(t => (t._1, t._2, true))
@@ -2460,8 +2291,6 @@ object DeltaLite extends LakeFormat {
       .groupByKey(_._1)
       .flatMapGroups { (fname, it) =>
         val rows = it.toArray
-        // A file whose only positions are prior ones took no new hit:
-        // leave its existing sidecar (and log entry) untouched.
         if (!rows.exists(_._3)) Iterator.empty
         else {
           val rids = rows.map(_._2).distinct.sorted
@@ -2484,9 +2313,8 @@ object DeltaLite extends LakeFormat {
         }
       }
       .collect()
-    if (dvMeta.isEmpty) return
     val byFile = dvMeta.map(m => m._1 -> (m._2, m._3)).toMap
-    val actions = candidates
+    entries
       .filter(e => byFile.contains(fileName(e.path)))
       .flatMap { e =>
         val (rel, n) = byFile(fileName(e.path))
@@ -2494,6 +2322,5 @@ object DeltaLite extends LakeFormat {
           addAction(e.path, e.size, e.partValues, e.stats.map(_.toString),
             dataChange = true, dv = Some((rel, n))))
       }
-    writeCommit(s, table, v + 1, actions, operation = "DELETE")
   }
 }

@@ -9,6 +9,7 @@ import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Glue
 import org.apache.spark.sql.types._
 
 import LakeFormat.fileName
@@ -740,34 +741,6 @@ object IcebergLite extends LakeFormat {
   def tableProperties(s: SparkSession, table: String): Map[String, String] =
     readMeta(s, table).properties
 
-  /** Append as a NEW snapshot: its manifest list is the previous
-    * snapshot's manifests — reused by reference, the Iceberg metadata
-    * shape that keeps commit cost O(new data) — plus one new manifest
-    * for the appended files. Returns the new snapshot id.
-    */
-  def append(s: SparkSession, table: String, df: DataFrame): Long = {
-    val meta = readMeta(s, table)
-    val current = meta.snapshots.toMap.apply(meta.currentSnapshot)
-    val prevManifests = readManifests(s, table, current, meta).map(_.path)
-    val m = writeManifest(s, table, df, meta.currentSchema,
-      meta.defaultSpecId, meta.partCols, meta.sortCols, nextSeq(meta))
-    commitSnapshot(s, table, meta, prevManifests :+ m)
-  }
-
-  /** REPLACE the table's contents in one new snapshot (INSERT
-    * OVERWRITE): the snapshot's manifest list carries ONLY the new
-    * manifest, so prior files drop out of the live set atomically but
-    * stay reachable through earlier snapshots until
-    * [[expireSnapshots]]. Written under the current schema and the
-    * default partition spec.
-    */
-  def overwrite(s: SparkSession, table: String, df: DataFrame): Long = {
-    val meta = readMeta(s, table)
-    val m = writeManifest(s, table, df, meta.currentSchema,
-      meta.defaultSpecId, meta.partCols, meta.sortCols, nextSeq(meta))
-    commitSnapshot(s, table, meta, Seq(m))
-  }
-
   /** Streaming-source contract: current schema struct, partition
     * columns, current snapshot id. Restricted to un-evolved schemas —
     * the stream reader matches parquet columns by NAME; rename/add
@@ -1162,6 +1135,11 @@ object IcebergLite extends LakeFormat {
     def isEmpty: Boolean = pos.isEmpty && eq.isEmpty
   }
 
+  /** The position-delete file schema ([[deleteWhere]] writes it):
+    * read under it, delete files cost no schema-inference job. */
+  private val PosDeleteSchema = StructType(Seq(
+    StructField("file_path", StringType), StructField("pos", LongType)))
+
   private def delCtxOf(manifests: Seq[Manifest]): DelCtx = {
     val dels = manifests.filter(_.content == "deletes")
     val (eqMs, posMs) = dels.partition(_.equalityIds.nonEmpty)
@@ -1243,7 +1221,7 @@ object IcebergLite extends LakeFormat {
       val live =
         if (deleteFiles.isEmpty) base
         else {
-          val posDels = s.read
+          val posDels = s.read.schema(PosDeleteSchema)
             .parquet(deleteFiles.map(p => new Path(table, p).toString): _*)
             .select(col("file_path").as("_ice_fname"),
               col("pos").as("_ice_pos"))
@@ -1750,19 +1728,7 @@ object IcebergLite extends LakeFormat {
         fileCol = Some("file_path"), posCol = Some("pos"))
       .filter(cond)
       .select(col("file_path"), col("pos"))
-    val f = fs(s, new Path(table))
-    val stageDir = new Path(table, s"_stage-del-${UUID.randomUUID()}")
-    hits.write.parquet(stageDir.toString)
-    val parts = f.listStatus(stageDir).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet")
-        && st.getLen > 0)
-    val rels = parts.map { st =>
-      val rel = s"data/delete-${UUID.randomUUID()}.parquet"
-      require(f.rename(st.getPath, new Path(table, rel)),
-        s"rename failed for ${st.getPath}")
-      rel
-    }
-    f.delete(stageDir, true)
+    val rels = stageDeleteFiles(s, table, hits, "delete")
     if (rels.isEmpty) return meta.currentSnapshot
     // Deletes manifest: entries are delete files; no partition summary
     // (position deletes are pruned by their data files, not by value).
@@ -1772,8 +1738,8 @@ object IcebergLite extends LakeFormat {
     val entries = root.putArray("entries")
     rels.foreach(r => entries.addObject().put("path", r))
     val mRel = s"metadata/manifest-${UUID.randomUUID()}.json"
-    writeFile(f, new Path(table, mRel), Json.writeValueAsString(root),
-      overwrite = false)
+    writeFile(fs(s, new Path(table)), new Path(table, mRel),
+      Json.writeValueAsString(root), overwrite = false)
     commitSnapshot(s, table, meta, manifests.map(_.path) :+ mRel)
   }
 
@@ -1802,89 +1768,67 @@ object IcebergLite extends LakeFormat {
       throw new IllegalArgumentException(s"no column $k in $table")))
     val rows = keyRows.select(keyFields.map(kf =>
       col(kf.name).cast(kf.dataType).as(kf.name)).toSeq: _*).distinct()
+    stageEqDeleteManifest(s, table, meta, cur, keyFields, rows,
+        nextSeq(meta)) match {
+      case Nil => meta.currentSnapshot
+      case m => commitSnapshot(s, table, meta, manifests.map(_.path) ++ m)
+    }
+  }
+
+  /** Write `rows` as delete files `data/<prefix>-<uuid>.parquet`
+    * through one staging directory, removed whether the write succeeds
+    * or fails. Returns their table-relative paths — none when `rows`
+    * is empty (Spark still writes a row-less file for an empty result,
+    * and a delete that masks nothing must commit nothing).
+    */
+  private def stageDeleteFiles(s: SparkSession, table: String,
+      rows: DataFrame, prefix: String): Seq[String] = {
     val f = fs(s, new Path(table))
-    val stageDir = new Path(table, s"_stage-eqdel-${UUID.randomUUID()}")
-    rows.write.parquet(stageDir.toString)
-    val parts = f.listStatus(stageDir).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet")
-        && st.getLen > 0)
-    val rels = parts.map { st =>
-      val rel = s"data/eqdelete-${UUID.randomUUID()}.parquet"
-      require(f.rename(st.getPath, new Path(table, rel)),
-        s"rename failed for ${st.getPath}")
-      rel
-    }
-    f.delete(stageDir, true)
-    if (rels.isEmpty) return meta.currentSnapshot
-    val entries = rels.map { rel =>
-      val e = Json.createObjectNode()
-      e.put("path", rel)
-      ManifestEntry(rel, Nil, None, e)
-    }
-    val mRel = writeManifestFile(f, table, cur.schemaId, meta.defaultSpecId,
-      Nil, entries, nextSeq(meta), keyFields.map(_.id))
-    commitSnapshot(s, table, meta, manifests.map(_.path) :+ mRel)
+    val stageDir = new Path(table, s"_stage-$prefix-${UUID.randomUUID()}")
+    try {
+      if (Glue.save(rows, "parquet", stageDir.toString, Nil) == 0L) Nil
+      else f.listStatus(stageDir).toSeq
+        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet")
+          && st.getLen > 0)
+        .map { st =>
+          val rel = s"data/$prefix-${UUID.randomUUID()}.parquet"
+          require(f.rename(st.getPath, new Path(table, rel)),
+            s"rename failed for ${st.getPath}")
+          rel
+        }
+    } finally f.delete(stageDir, true)
   }
 
   /** New manifest list after removing `removedPaths` data entries:
     * untouched manifests survive BY REFERENCE (zero metadata rewritten
     * for them), affected ones are rewritten with their remaining
-    * entries (Iceberg's manifest-rewrite shape), and emptied ones drop
-    * out. Deletes manifests pass through — their entries reference
-    * old file NAMES that no longer resolve, which is dead weight until
-    * the next compaction but never wrong.
+    * entries (Iceberg's manifest-rewrite shape), and data manifests
+    * left with no entry drop out. Deletes manifests pass through while
+    * any data manifest survives — their entries may reference old file
+    * NAMES that no longer resolve, which is dead weight until the next
+    * compaction but never wrong — and drop out with the last one: they
+    * can mask no file a later commit writes (new names, a higher
+    * sequence number), so an overwrite commits only its new manifest.
     */
   private def survivingManifests(s: SparkSession, table: String, meta: Meta,
       manifests: Seq[Manifest], removedPaths: Set[String]): Seq[String] = {
     val f = fs(s, new Path(table))
-    manifests.flatMap { m =>
-      if (m.content != "data" || !m.entries.exists(e => removedPaths(e.path)))
-        Some(m.path)
+    val kept = manifests.flatMap { m =>
+      if (m.content != "data") Some(m)
       else {
-        val kept = m.entries.filterNot(e => removedPaths(e.path))
-        if (kept.isEmpty) None
+        val left = m.entries.filterNot(e => removedPaths(e.path))
+        if (left.isEmpty) None
+        else if (left.size == m.entries.size) Some(m)
         // A rewritten manifest keeps ITS OWN schema + spec: the
         // surviving entries' files and partition values are unchanged.
         // A rewritten manifest also keeps its SEQUENCE NUMBER: its
         // surviving files' write order is unchanged, so their equality-
         // delete scoping must not move.
-        else Some(writeManifestFile(f, table, m.schemaId, m.specId,
-          meta.colsOfSpec(m.specId).map(_.name), kept, m.seq))
+        else Some(m.copy(path = writeManifestFile(f, table, m.schemaId,
+          m.specId, meta.colsOfSpec(m.specId).map(_.name), left, m.seq)))
       }
     }
-  }
-
-  /** Copy-on-write UPDATE … WHERE: only files that may contain matching
-    * rows (hierarchically pruned) are rewritten; each survivor file's
-    * rows rewrite with `assignments` applied to the matching rows and
-    * everything else byte-identical. Prior position deletes are folded
-    * in during the rewrite (the rewritten files are clean). Returns the
-    * new snapshot id.
-    */
-  def updateWhere(s: SparkSession, table: String, cond: Column,
-      assignments: Map[String, Column]): Long = {
-    val (meta, manifests) = manifestsOf(s, table, -1L)
-    val cur = meta.currentSchema
-    assignments.keys.foreach(k =>
-      require(cur.fields.exists(_.name == k), s"no column $k"))
-    val candidates =
-      prunedEntries(s, meta, dataManifests(manifests), cond)._2
-    if (candidates.forall(_._2.isEmpty)) return meta.currentSnapshot
-    val rewritten = readEntries(s, table, meta, candidates,
-      delCtxOf(manifests))
-      .select(cur.fields.map { fd =>
-        assignments.get(fd.name) match {
-          case Some(set) =>
-            when(cond, set.cast(fd.dataType)).otherwise(col(fd.name))
-              .as(fd.name)
-          case None => col(fd.name)
-        }
-      }.toSeq: _*)
-    val newManifest = writeManifest(s, table, rewritten, cur,
-      meta.defaultSpecId, meta.partCols, meta.sortCols, nextSeq(meta))
-    val removed = candidates.flatMap(_._2.map(_.path)).toSet
-    commitSnapshot(s, table, meta,
-      survivingManifests(s, table, meta, manifests, removed) :+ newManifest)
+    if (kept.exists(_.content == "data")) kept.map(_.path) else Nil
   }
 
   /** Compaction (the OPTIMIZE / rewrite-data-files maintenance op):
@@ -2096,19 +2040,7 @@ object IcebergLite extends LakeFormat {
   private def stageEqDeleteManifest(s: SparkSession, table: String,
       meta: Meta, cur: IceSchema, keyFields: Seq[IceField],
       keyRows: DataFrame, seq: Long): Seq[String] = {
-    val f = fs(s, new Path(table))
-    val stageDir = new Path(table, s"_stage-eqdel-${UUID.randomUUID()}")
-    keyRows.write.parquet(stageDir.toString)
-    val parts = f.listStatus(stageDir).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet")
-        && st.getLen > 0)
-    val rels = parts.map { st =>
-      val rel = s"data/eqdelete-${UUID.randomUUID()}.parquet"
-      require(f.rename(st.getPath, new Path(table, rel)),
-        s"rename failed for ${st.getPath}")
-      rel
-    }
-    f.delete(stageDir, true)
+    val rels = stageDeleteFiles(s, table, keyRows, "eqdelete")
     if (rels.isEmpty) Nil
     else {
       val entries = rels.map { rel =>
@@ -2116,7 +2048,7 @@ object IcebergLite extends LakeFormat {
         e.put("path", rel)
         ManifestEntry(rel, Nil, None, e)
       }
-      Seq(writeManifestFile(f, table, cur.schemaId,
+      Seq(writeManifestFile(fs(s, new Path(table)), table, cur.schemaId,
         meta.defaultSpecId, Nil, entries, seq, keyFields.map(_.id)))
     }
   }
@@ -2169,6 +2101,7 @@ object IcebergLite extends LakeFormat {
     val (meta, manifests) = manifestsOf(s, table, -1L)
     val groups = entryGroups(manifests)
     new LakeFormat.Live {
+      val version: Long = meta.currentSnapshot
       val schema: StructType = meta.currentSchema.struct
       val files: Seq[String] = groups.flatMap(_._2.map(_.path))
       def prune(pred: Column): Seq[String] =
@@ -2180,7 +2113,9 @@ object IcebergLite extends LakeFormat {
           k -> es.filter(e => want.contains(e.path))
         }, delCtxOf(manifests), fileCol)
       }
-      def replace(removed: Seq[String], add: DataFrame): Long = {
+      // Iceberg snapshots carry no operation name.
+      def replace(removed: Seq[String], add: DataFrame,
+          operation: String): Long = {
         val m = writeManifest(s, table, add, meta.currentSchema,
           meta.defaultSpecId, meta.partCols, meta.sortCols, nextSeq(meta))
         commitSnapshot(s, table, meta,

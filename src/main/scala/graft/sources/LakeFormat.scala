@@ -19,12 +19,14 @@ import org.apache.spark.sql.types._
   * Operations only one format has (ZORDER, deletion vectors, refs and
   * branches, merge-on-read) stay on that format's object.
   *
-  * The keyed [[merge]] and the full-sync [[sync]] MERGE are written
-  * here once. Each reads one snapshot ([[LakeFormat.Live]], the hooks
-  * a format supplies on one log replay or manifest read) for the whole
-  * statement, evaluates its source under the one DML source rule
-  * ([[LakeFormat.once]]), casts it to the table's types, and ends in
-  * the same anti-join + union commit.
+  * The keyed [[merge]], the full-sync [[sync]] MERGE, the
+  * copy-on-write [[updateWhere]], and INSERT ([[append]], [[overwrite]],
+  * both over [[insert]]) are written here once. Each reads one snapshot
+  * ([[LakeFormat.Live]], the hooks a format supplies on one log replay
+  * or manifest read) for the whole statement and ends in one
+  * [[LakeFormat.Live.replace]] commit. The MERGEs evaluate their source
+  * under the one DML source rule ([[LakeFormat.once]]), cast it to the
+  * table's types, and end in the same anti-join + union commit.
   */
 trait LakeFormat {
   import LakeFormat._
@@ -47,15 +49,60 @@ trait LakeFormat {
       partitionColumns: Seq[String] = Nil,
       properties: Map[String, String] = Map.empty): Long
 
-  def append(s: SparkSession, table: String, df: DataFrame): Long
+  /** INSERT on one snapshot: `rows` gets the table's schema (to bind
+    * and cast the source to) and its rows are added in one commit,
+    * replacing every live file when `overwrite` holds. */
+  def insert(s: SparkSession, table: String, overwrite: Boolean)(
+      rows: StructType => DataFrame): Long = {
+    val t = live(s, table)
+    t.replace(if (overwrite) t.files else Nil, rows(t.schema), "WRITE")
+  }
 
-  /** REPLACE the table's contents in one atomic commit. */
-  def overwrite(s: SparkSession, table: String, df: DataFrame): Long
+  def append(s: SparkSession, table: String, df: DataFrame): Long =
+    insert(s, table, overwrite = false)(_ => df)
+
+  /** REPLACE the table's contents in one atomic commit (INSERT
+    * OVERWRITE): readers see the old state or the new, never a mix, and
+    * the old files stay reachable by time travel. */
+  def overwrite(s: SparkSession, table: String, df: DataFrame): Long =
+    insert(s, table, overwrite = true)(_ => df)
 
   def deleteWhere(s: SparkSession, table: String, cond: Column): Long
 
+  /** Copy-on-write UPDATE WHERE `cond`: `assignments` maps column name
+    * → new-value expression (which may reference any current columns,
+    * cast to the column's type); matching rows are rewritten, the other
+    * rows of their files carry over unchanged, and files holding no
+    * match are untouched ([[rewriteWhere]]). Assigning an unknown column
+    * is an error — UPDATE never widens the schema. */
   def updateWhere(s: SparkSession, table: String, cond: Column,
-      assignments: Map[String, Column]): Long
+      assignments: Map[String, Column]): Long = {
+    val t = live(s, table)
+    assignments.keys.foreach(k => require(t.schema.fieldNames.contains(k),
+      s"updateWhere: unknown column $k"))
+    val matched = coalesce(cond, lit(false))
+    val set = t.schema.fields.toSeq.map(f =>
+      assignments.get(f.name).fold(col(f.name))(v =>
+        when(matched, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)))
+    rewriteWhere(s, t, cond, "UPDATE")(_.select(set: _*))
+  }
+
+  /** The copy-on-write row rewrite: partition and stats pruning narrow
+    * the candidates, one file-name probe of those finds the files
+    * actually holding a row matching `cond` ([[collectHitNames]]), and
+    * only those are replaced by their rows passed through `rows`.
+    * Commits nothing (returns the current version) when no row
+    * matches. */
+  protected def rewriteWhere(s: SparkSession, t: Live, cond: Column,
+      operation: String)(rows: DataFrame => DataFrame): Long = {
+    val candidates = t.prune(cond)
+    val hitNames =
+      if (candidates.isEmpty) Set.empty[String]
+      else collectHitNames(s, t.read(candidates, Some("_gf")).filter(cond))
+    val hits = candidates.filter(p => hitNames.contains(fileName(p)))
+    if (hits.isEmpty) t.version
+    else t.replace(hits, rows(t.read(hits)), operation)
+  }
 
   /** Bin-pack the live rows into `targetFiles` files (OPTIMIZE). */
   def compact(s: SparkSession, table: String, targetFiles: Int): Long
@@ -171,7 +218,7 @@ trait LakeFormat {
       if (files.isEmpty) src
       else absent(t.read(files)
           .join(src.select(keys.map(col): _*), keys, "left_anti"))
-        .unionByName(src))
+        .unionByName(src), "MERGE")
 }
 
 object LakeFormat {
@@ -188,6 +235,8 @@ object LakeFormat {
     * paths need from a format. Files are named the way the format's
     * metadata names them. */
   private[sources] trait Live {
+    /** The version this snapshot is (what a no-op write returns). */
+    def version: Long
     def schema: StructType
     /** Every live data file. */
     def files: Seq[String]
@@ -196,9 +245,36 @@ object LakeFormat {
     /** Rows of the live files `paths` under `schema`, honoring deletes;
       * `fileCol` adds each row's data-file NAME. */
     def read(paths: Seq[String], fileCol: Option[String] = None): DataFrame
-    /** ONE commit replacing `removed` with `add`'s rows; returns the
-      * new version. */
-    def replace(removed: Seq[String], add: DataFrame): Long
+    /** ONE commit replacing `removed` with `add`'s rows, recorded as
+      * `operation` (WRITE, MERGE, UPDATE, DELETE); returns the new
+      * version. */
+    def replace(removed: Seq[String], add: DataFrame,
+        operation: String): Long
+  }
+
+  /** Cap on the driver-side matched-file set a DML operation may
+    * collect (`spark.graft.maxHitFiles` overrides). The hit-file sets
+    * of delete/update/merge are metadata-sized by design — but a
+    * predicate matching most of a 100 TB table would queue millions of
+    * names on the driver; refusing loudly past the cap beats an OOM.
+    */
+  private def maxHitFiles(s: SparkSession): Int =
+    s.conf.getOption("spark.graft.maxHitFiles").map(_.toInt)
+      .getOrElse(100000)
+
+  /** Distinct `_gf` hit-file names of `df`, bounded by [[maxHitFiles]]
+    * — fails loud (with the remedy) past the cap.
+    */
+  private[sources] def collectHitNames(s: SparkSession,
+      df: DataFrame): Set[String] = {
+    val cap = maxHitFiles(s)
+    val names = df.select(col("_gf")).distinct().limit(cap + 1)
+      .collect().map(_.getString(0))
+    require(names.length <= cap,
+      s"predicate matches more than $cap data files; a driver-side " +
+        "file set this large risks driver memory — narrow the " +
+        "operation or raise spark.graft.maxHitFiles")
+    names.toSet
   }
 
   /** Rows this thread's staged data writes have written so far. */

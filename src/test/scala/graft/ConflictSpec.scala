@@ -117,16 +117,22 @@ class ConflictSpec extends SparkSpec {
   test("iceberg: deleteWhere built from a stale snapshot fails " +
       "loudly; the competitor's rows survive") {
     import spark.implicits._
-    val t = s"${graft.util.Scratch.dir("conflictspec")}/i_del"
-    IcebergLite.create(spark, t, Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
-    IcebergLite.interleaveForTest = () => {
-      IcebergLite.interleaveForTest = noop
-      IcebergLite.append(spark, t, Seq((20L, "y")).toDF("k", "v"))
+    // updateWhere, the shared copy-on-write rewrite, fails the same way
+    for ((name, op) <- Seq[(String, String => Unit)](
+        "del" -> (t => IcebergLite.deleteWhere(spark, t, col("k") === 1L)),
+        "update" -> (t => IcebergLite.updateWhere(spark, t,
+          col("k") === 2L, Map("v" -> lit("Z")))))) {
+      val t = s"${graft.util.Scratch.dir("conflictspec")}/i_$name"
+      IcebergLite.create(spark, t, Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
+      IcebergLite.interleaveForTest = () => {
+        IcebergLite.interleaveForTest = noop
+        IcebergLite.append(spark, t, Seq((20L, "y")).toDF("k", "v"))
+      }
+      try {
+        intercept[java.util.ConcurrentModificationException](op(t))
+      } finally IcebergLite.interleaveForTest = noop
+      assert(IcebergLite.snapshot(spark, t).as[(Long, String)].collect()
+        .toMap == Map(1L -> "a", 2L -> "b", 20L -> "y"), name)
     }
-    try {
-      intercept[java.util.ConcurrentModificationException](
-        IcebergLite.deleteWhere(spark, t, col("k") === 1L))
-    } finally IcebergLite.interleaveForTest = noop
-    assert(IcebergLite.snapshot(spark, t).count() == 3)
   }
 }

@@ -844,4 +844,35 @@ class IcebergLiteSpec extends SparkSpec {
     val removed = (before -- after).map(p => p.substring(p.lastIndexOf('/') + 1))
     assert(removed == meets, s"removed $removed, key ranges meeting $meets")
   }
+
+  test("a point read after a matching delete reads its position-delete " +
+      "files under their fixed schema: no schema-inference job") {
+    val t = freshTable()
+    val c = Tables.customer(spark, sfDir)
+    IcebergLite.create(spark, t, c.repartitionByRange(2, col("c_custkey")))
+    def pointRead(): Unit = assert(IcebergLite.snapshot(spark, t)
+      .filter(col("c_custkey") === 7).collect().length == 1)
+    val clean = jobsOf(pointRead())
+    IcebergLite.deleteWhere(spark, t, col("c_custkey") === 5)
+    val masked = jobsOf(pointRead())
+    info(s"point read: $clean jobs, $masked after a delete")
+    // the delete side's broadcast is the one job a delete file may add
+    assert(masked <= clean + 1, s"$clean jobs clean, $masked masked")
+  }
+
+  test("a failing delete-file write leaves no staging directory") {
+    import spark.implicits._
+    val t = freshTable()
+    IcebergLite.create(spark, t, (1L to 10L).toDF("k"))
+    // over a parquet scan this evaluates in the delete-file write job,
+    // and fails there
+    val boom = expr("assert_true(k < 5) IS NULL")
+    intercept[Exception](IcebergLite.deleteWhere(spark, t, boom))
+    intercept[Exception](IcebergLite.equalityDelete(spark, t, Seq("k"),
+      IcebergLite.snapshot(spark, t).filter(boom)))
+    val staged = new java.io.File(t).listFiles()
+      .filter(_.getName.startsWith("_stage-"))
+    assert(staged.isEmpty, staged.map(_.getName).mkString(", "))
+    assert(IcebergLite.snapshot(spark, t).count() == 10)
+  }
 }

@@ -3591,4 +3591,41 @@ class LakeSqlSpec extends SparkSpec {
       assert(math.abs(g.getDouble(1) - w.getDouble(1)) < 1e-9, s"$g vs $w")
     }
   }
+
+  test("UPDATE and DELETE whose predicate passes stats pruning but " +
+      "matches no row commit nothing, on both formats") {
+    import graft.sources.{IcebergLite, LakeFormat}
+    val tag = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
+    val root = Scratch.dir("lakesqlspec")
+    for (fmt <- Seq[LakeFormat](DeltaLite, IcebergLite)) {
+      val n = s"nohit_${fmt.provider}_$tag"
+      LakeSql.sql(spark, s"""CREATE TABLE $n USING ${fmt.provider}
+        LOCATION '$root/$n'
+        AS SELECT * FROM (VALUES (1, 'a'), (3, 'c')) AS v(k, s)""")
+      val v = fmt.latestVersion(spark, s"$root/$n")
+      // no file's stats can rule `k * 2 = 4` out; no row satisfies it
+      LakeSql.sql(spark, s"UPDATE $n SET s = 'z' WHERE k * 2 = 4")
+      LakeSql.sql(spark, s"DELETE FROM $n WHERE k * 2 = 4")
+      assert(fmt.latestVersion(spark, s"$root/$n") == v, fmt.provider)
+      assert(LakeSql.sql(spark, s"SELECT k, s FROM $n ORDER BY k").collect()
+        .map(r => (r.getInt(0), r.getString(1))).toSeq ==
+        Seq(1 -> "a", 3 -> "c"), fmt.provider)
+      LakeSql.sql(spark, s"DROP TABLE $n")
+    }
+  }
+
+  test("INSERT into a Delta table with a CHECK constraint refuses a " +
+      "violating row and commits nothing") {
+    val t = freshTable()
+    DeltaLite.create(spark, t, spark.range(3).toDF("k"))
+    DeltaLite.addCheckConstraint(spark, t, "nonneg", "k >= 0")
+    val v = DeltaLite.latestVersion(spark, t)
+    intercept[IllegalArgumentException] {
+      LakeSql.execute(spark, Map("t" -> t), "INSERT INTO t VALUES (-1)")
+    }
+    assert(DeltaLite.latestVersion(spark, t) == v)
+    LakeSql.execute(spark, Map("t" -> t), "INSERT INTO t VALUES (7)")
+    assert(DeltaLite.snapshot(spark, t).orderBy("k").collect()
+      .map(_.getLong(0)).toSeq == Seq(0L, 1L, 2L, 7L))
+  }
 }
