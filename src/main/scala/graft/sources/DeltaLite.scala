@@ -18,7 +18,7 @@ import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import LakeFormat.{collectHitNames, fileName}
+import LakeFormat.{collectHitNames, fileName, latestChanges, mergeHits}
 
 /** Minimal open-table-format support speaking the public Delta Lake
   * transaction-log protocol: a table is a directory of immutable parquet
@@ -444,15 +444,16 @@ object DeltaLite extends LakeFormat {
     val rows: java.util.List[Row] =
       ((protocolRow +: metaRow +: addRows) ++ txnRows).asJava
     val stageDir = new Path(table, s"_stage_ckpt_${UUID.randomUUID()}")
-    s.createDataFrame(rows, schema).coalesce(1)
-      .write.mode("overwrite").parquet(stageDir.toString)
     val f = fs(s, stageDir)
-    val part = f.listStatus(stageDir)
-      .map(_.getPath).find(_.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException("checkpoint stage empty"))
-    require(f.rename(part, checkpointFile(table, v)),
-      "rename failed for checkpoint")
-    f.delete(stageDir, true)
+    try {
+      s.createDataFrame(rows, schema).coalesce(1)
+        .write.mode("overwrite").parquet(stageDir.toString)
+      val part = f.listStatus(stageDir)
+        .map(_.getPath).find(_.getName.endsWith(".parquet"))
+        .getOrElse(throw new IllegalStateException("checkpoint stage empty"))
+      require(f.rename(part, checkpointFile(table, v)),
+        "rename failed for checkpoint")
+    } finally f.delete(stageDir, true)
     val out = f.create(lastCheckpointPath(table), true) // pointer: overwrite
     try out.write(s"""{"version":$v,"size":${rows.size()}}"""
       .getBytes("UTF-8"))
@@ -583,41 +584,42 @@ object DeltaLite extends LakeFormat {
     * `partCols` is non-empty); returns (relative path, partition
     * values, size) per data file. Files are staged by the normal
     * parquet committer, then renamed (a metadata op) to UUID names —
-    * keeping their `k=v` partition directories — under the root.
+    * keeping their `k=v` partition directories — under the root. The
+    * staging directory is removed whether the write succeeds or fails.
     */
   private[sources] def stage(s: SparkSession, table: String, df: DataFrame,
       partCols: Seq[String]): Seq[(String, Seq[(String, Option[String])], Long)] = {
     val stageDir = new Path(table, s"_stage_${UUID.randomUUID()}")
-    LakeFormat.wrote(org.apache.spark.sql.graft.Glue.save(df, "parquet",
-      stageDir.toString, partCols))
     val f = fs(s, stageDir)
-    val stagePrefix = f.makeQualified(stageDir).toString
-    val found = mutable.Buffer[(Path, String, Long)]() // (file, subdir, size)
-    val it = f.listFiles(stageDir, true)
-    while (it.hasNext) {
-      val st = it.next()
-      val n = st.getPath.getName
-      if (n.startsWith("part-") && n.endsWith(".parquet")) {
-        val sub = f.makeQualified(st.getPath.getParent).toString
-          .stripPrefix(stagePrefix).stripPrefix("/")
-        found += ((st.getPath, sub, st.getLen))
+    try {
+      LakeFormat.wrote(org.apache.spark.sql.graft.Glue.save(df, "parquet",
+        stageDir.toString, partCols))
+      val stagePrefix = f.makeQualified(stageDir).toString
+      val found = mutable.Buffer[(Path, String, Long)]() // (file, subdir, size)
+      val it = f.listFiles(stageDir, true)
+      while (it.hasNext) {
+        val st = it.next()
+        val n = st.getPath.getName
+        if (n.startsWith("part-") && n.endsWith(".parquet")) {
+          val sub = f.makeQualified(st.getPath.getParent).toString
+            .stripPrefix(stagePrefix).stripPrefix("/")
+          found += ((st.getPath, sub, st.getLen))
+        }
       }
-    }
-    val out = found.map { case (src, sub, len) =>
-      val name = s"part-${UUID.randomUUID()}.parquet"
-      val rel = if (sub.isEmpty) name else s"$sub/$name"
-      if (sub.nonEmpty) f.mkdirs(new Path(table, sub))
-      require(f.rename(src, new Path(table, rel)),
-        s"rename failed staging $rel")
-      val pvs = sub.split('/').filter(_.contains('=')).toSeq.map { comp =>
-        val k = comp.substring(0, comp.indexOf('='))
-        val raw = comp.substring(comp.indexOf('=') + 1)
-        k -> (if (raw == NullPartition) None else Some(unescapeHive(raw)))
-      }
-      (rel, pvs, len)
-    }.toSeq
-    f.delete(stageDir, true)
-    out
+      found.map { case (src, sub, len) =>
+        val name = s"part-${UUID.randomUUID()}.parquet"
+        val rel = if (sub.isEmpty) name else s"$sub/$name"
+        if (sub.nonEmpty) f.mkdirs(new Path(table, sub))
+        require(f.rename(src, new Path(table, rel)),
+          s"rename failed staging $rel")
+        val pvs = sub.split('/').filter(_.contains('=')).toSeq.map { comp =>
+          val k = comp.substring(0, comp.indexOf('='))
+          val raw = comp.substring(comp.indexOf('=') + 1)
+          k -> (if (raw == NullPartition) None else Some(unescapeHive(raw)))
+        }
+        (rel, pvs, len)
+      }.toSeq
+    } finally f.delete(stageDir, true)
   }
 
   private def obj(field: String)(fill: ObjectNode => Unit): String = {
@@ -1703,30 +1705,42 @@ object DeltaLite extends LakeFormat {
   }
 
   private[sources] def live(s: SparkSession,
-      table: String): LakeFormat.Live = {
+      table: String): LakeFormat.Live = deltaLive(s, table)
+
+  private def deltaLive(s: SparkSession, table: String): DeltaLive = {
     val v = latestVersion(s, table)
     require(v >= 0, s"no delta log at $table")
-    val st = replay(s, table, v)
-    new LakeFormat.Live {
-      val version: Long = v
-      val schema: StructType = st.schema
-      val files: Seq[String] = st.entries.map(_.path)
-      def prune(pred: Column): Seq[String] =
-        keptEntries(s, st, pred).map(_.path)
-      def read(paths: Seq[String], fileCol: Option[String]): DataFrame = {
-        val want = paths.toSet
-        readEntries(s, table, schema,
-          st.entries.filter(e => want.contains(e.path)), fileCol)
-      }
-      // A DELETE's rows only carry over, so its CHECKs are not re-run
-      // (the stagedAdds rule).
-      def replace(removed: Seq[String], add: DataFrame,
-          operation: String): Long =
-        writeCommit(s, table, v + 1,
-          stagedAdds(s, table, add, schema, st.partCols,
-            constraints = if (operation == "DELETE") Nil
-              else st.constraints) ++ removed.map(removeAction(_)),
-          operation)
+    new DeltaLive(s, table, v, replay(s, table, v))
+  }
+
+  /** The current snapshot as a [[LakeFormat.Live]], carrying the
+    * [[State]] it was replayed from so the Delta-only writes (deletion
+    * vectors, partial compaction) pick files from the same replay. */
+  private final class DeltaLive(s: SparkSession, table: String,
+      val version: Long, val st: State) extends LakeFormat.Live {
+    val schema: StructType = st.schema
+    val files: Seq[String] = st.entries.map(_.path)
+    val partitioning: Seq[Column] = st.partCols.map(col)
+    def prune(pred: Column): Seq[String] =
+      keptEntries(s, st, pred).map(_.path)
+    def read(paths: Seq[String], fileCol: Option[String]): DataFrame =
+      readEntries(s, table, schema, entries(paths), fileCol)
+    def entries(paths: Seq[String]): Seq[FileEntry] = {
+      val want = paths.toSet
+      st.entries.filter(e => want.contains(e.path))
+    }
+    // OPTIMIZE only moves rows: its adds and removes carry
+    // `dataChange = false` (streaming readers may skip the commit).
+    // Neither it nor a DELETE, whose rows only carry over, re-runs the
+    // CHECKs (the stagedAdds rule).
+    def replace(removed: Seq[String], add: DataFrame,
+        operation: String): Long = {
+      val change = operation != "OPTIMIZE"
+      writeCommit(s, table, version + 1,
+        stagedAdds(s, table, add, schema, st.partCols, change,
+          if (change && operation != "DELETE") st.constraints else Nil) ++
+          removed.map(removeAction(_, change)),
+        operation)
     }
   }
 
@@ -1743,38 +1757,18 @@ object DeltaLite extends LakeFormat {
     */
   def mergeDV(s: SparkSession, table: String, source: DataFrame,
       keys: Seq[String]): Unit = {
-    val v = latestVersion(s, table)
-    require(v >= 0, s"no delta log at $table")
-    val st = replay(s, table, v)
-    val schema = st.schema
-    val srcCols = LakeFormat.mergeSource(source, schema, keys)
-    val srcKeys = srcCols.select(keys.map(col): _*).distinct()
-    val srcKeyCounts = srcCols.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("_src_n"))
-    val (hitNames, maxMatches) =
-      if (st.entries.isEmpty) (Set.empty[String], 0L)
-      else {
-        val row = readEntries(s, table, schema, st.entries,
-            fileCol = Some("_gf"))
-          .join(srcKeyCounts, keys)
-          .agg(collect_set(col("_gf")).as("_files"), max(col("_src_n")))
-          .head()
-        (row.getSeq[String](0).toSet,
-          if (row.isNullAt(1)) 0L else row.getLong(1))
-      }
-    require(maxMatches <= 1L,
-      s"mergeDV: $maxMatches source rows match the same target key — " +
-        "Delta MERGE forbids ambiguous multi-matches; dedup the source")
-    val hitEntries = st.entries
-      .filter(e => hitNames.contains(fileName(e.path)))
+    val t = deltaLive(s, table)
+    val srcCols = LakeFormat.mergeSource(source, t.schema, keys)
     // Matched = live rows whose key appears in the source: their
     // positions soft-delete; the source's new versions arrive via the
     // append below.
-    val dvActions = softDelete(s, table, schema, hitEntries)(
-      _.join(broadcast(srcKeys), keys, "left_semi"))
-    writeCommit(s, table, v + 1,
-      stagedAdds(s, table, srcCols, schema, st.partCols,
-        constraints = st.constraints) ++ dvActions,
+    val dvActions = softDelete(s, table, t.schema,
+      t.entries(mergeHits(t, t.files, srcCols, keys)))(
+      _.join(broadcast(srcCols.select(keys.map(col): _*).distinct()),
+        keys, "left_semi"))
+    writeCommit(s, table, t.version + 1,
+      stagedAdds(s, table, srcCols, t.schema, t.st.partCols,
+        constraints = t.st.constraints) ++ dvActions,
       operation = "MERGE")
   }
 
@@ -1782,9 +1776,11 @@ object DeltaLite extends LakeFormat {
     * row-level operations tagged by `opCol` ('insert' / 'update' with
     * full postimage columns, or 'delete') and ordered per key by
     * `seqCol` (the source's commit version / LSN). Within the batch
-    * only the LATEST change per key applies: an upsert
-    * replaces-or-inserts the target row, a delete removes it (a
-    * delete for an absent key is a no-op). One commit; only target
+    * only the LATEST change per key applies
+    * ([[LakeFormat.latestChanges]], the rule IcebergLite.applyChangesMOR
+    * shares): an upsert replaces-or-inserts the target row, a delete
+    * (the op 'delete' in any case) removes it (a delete for an absent
+    * key is a no-op). One commit; only target
     * files holding a touched key are rewritten — found by merge's
     * keyed file lookup — so replicating a small change batch into a
     * 100 TB table rewrites the touched files, not the table. Batches
@@ -1793,42 +1789,17 @@ object DeltaLite extends LakeFormat {
     */
   def applyChanges(s: SparkSession, table: String, changes: DataFrame,
       keys: Seq[String], opCol: String, seqCol: String): Unit = {
-    val v = latestVersion(s, table)
-    require(v >= 0, s"no delta log at $table")
-    val st = replay(s, table, v)
-    val schema = st.schema
-    val dataCols = schema.fieldNames.toSeq
-    val payload = dataCols.filterNot(keys.contains)
-    // Latest change per key: argmax on (seq) via the max-struct idiom
-    // — one partial-aggregating exchange, no window sort.
-    val latest = changes
-      .groupBy(keys.map(col): _*)
-      .agg(max(struct((seqCol +: opCol +: payload).map(col): _*))
-        .as("_m"))
-      .select(keys.map(col) ++ (opCol +: payload).map(c =>
-        col(s"_m.$c").as(c)): _*)
-    val upserts = latest.filter(col(opCol) =!= "delete")
-      .select(dataCols.map(col): _*)
-    val touchedKeys = latest.select(keys.map(col): _*)
+    val t = live(s, table)
+    val (touched, upserts) =
+      latestChanges(changes, t.schema, keys, opCol, seqCol)
     // Keyed file lookup (merge's shape): files containing ANY touched
     // key get rewritten; everything else is untouched metadata.
     val hitNames =
-      if (st.entries.isEmpty) Set.empty[String]
+      if (t.files.isEmpty) Set.empty[String]
       else collectHitNames(s,
-        readEntries(s, table, schema, st.entries, fileCol = Some("_gf"))
-          .join(touchedKeys, keys, "left_semi"))
-    val hitEntries = st.entries
-      .filter(e => hitNames.contains(fileName(e.path)))
-    val newData =
-      if (hitEntries.isEmpty) upserts
-      else readEntries(s, table, schema, hitEntries)
-        .join(touchedKeys, keys, "left_anti")
-        .unionByName(upserts)
-    writeCommit(s, table, v + 1,
-      stagedAdds(s, table, newData, schema, st.partCols,
-        constraints = st.constraints) ++
-        hitEntries.map(e => removeAction(e.path)),
-      operation = "APPLY CHANGES")
+        t.read(t.files, Some("_gf")).join(touched, keys, "left_semi"))
+    rewrite(t, t.files.filter(p => hitNames.contains(fileName(p))),
+      touched, upserts, keys, "APPLY CHANGES")(identity)
   }
 
   /** PARTIAL compaction — OPTIMIZE for just the fragmented slice:
@@ -1845,50 +1816,17 @@ object DeltaLite extends LakeFormat {
   def compactWhere(s: SparkSession, table: String, targetFiles: Int,
       maxFileBytes: Long,
       pred: Column = org.apache.spark.sql.functions.lit(true)): Int = {
-    val v = latestVersion(s, table)
-    require(v >= 0, s"no delta log at $table")
-    val st = replay(s, table, v)
-    val inSlice = keptEntries(s, st, pred).map(_.path).toSet
-    val victims = st.entries.filter(e =>
-      e.size < maxFileBytes && inSlice.contains(e.path))
+    val t = deltaLive(s, table)
+    val inSlice = t.prune(pred).toSet
+    val victims = t.st.entries.filter(e =>
+      e.size < maxFileBytes && inSlice.contains(e.path)).map(_.path)
     // One small file alone is already as packed as it can get —
     // rewriting it would churn the log for nothing.
     if (victims.size < 2) return 0
-    val df = readEntries(s, table, st.schema, victims)
-    val packed =
-      if (st.partCols.isEmpty) df.repartition(targetFiles)
-      else df.repartition(targetFiles, st.partCols.map(col): _*)
-    writeCommit(s, table, v + 1,
-      stagedAdds(s, table, packed, st.schema, st.partCols,
-        dataChange = false) ++
-        victims.map(e => removeAction(e.path, dataChange = false)),
-      operation = "OPTIMIZE")
+    t.replace(victims,
+      t.read(victims).repartition(targetFiles, t.partitioning: _*),
+      "OPTIMIZE")
     victims.size
-  }
-
-  /** Bin-pack the live files into `targetFiles` larger ones per
-    * partition — the OPTIMIZE/compaction maintenance op. Content is
-    * unchanged, so both the adds and removes carry `dataChange = false`
-    * (per the protocol, streaming readers may skip this commit
-    * entirely).
-    */
-  def compact(s: SparkSession, table: String, targetFiles: Int): Long = {
-    val v = latestVersion(s, table)
-    require(v >= 0, s"no delta log at $table")
-    val st = replay(s, table, v)
-    if (st.entries.isEmpty) return v
-    // Reading through readEntries applies deletion vectors, so
-    // compaction also REBASES soft deletes into clean files (the DV
-    // maintenance story: accumulated sidecars disappear here).
-    val df = readEntries(s, table, st.schema, st.entries)
-    val packed =
-      if (st.partCols.isEmpty) df.repartition(targetFiles)
-      else df.repartition(targetFiles, st.partCols.map(col): _*)
-    writeCommit(s, table, v + 1,
-      stagedAdds(s, table, packed, st.schema, st.partCols,
-        dataChange = false) ++
-        st.entries.map(e => removeAction(e.path, dataChange = false)),
-      operation = "OPTIMIZE")
   }
 
   /** VACUUM: physically delete data files no longer referenced by the
@@ -2128,15 +2066,13 @@ object DeltaLite extends LakeFormat {
   def compactZOrder(s: SparkSession, table: String, zCols: Seq[String],
       targetFiles: Int): Unit = {
     require(zCols.nonEmpty, "zorder needs at least one column")
-    val v = latestVersion(s, table)
-    require(v >= 0, s"no delta log at $table")
-    val st = replay(s, table, v)
-    if (st.entries.isEmpty) return
+    val t = live(s, table)
+    if (t.files.isEmpty) return
     val Buckets = 16 // 4 bits per column
     zCols.foreach(c => require(
-      st.schema(c).dataType.isInstanceOf[NumericType],
+      t.schema(c).dataType.isInstanceOf[NumericType],
       s"zorder column $c must be numeric (quantile-bucketed)"))
-    val df = readEntries(s, table, st.schema, st.entries)
+    val df = t.read(t.files)
     // Approx-quantile bucket boundaries per column: metadata-sized
     // (zCols × 15 doubles), one distributed sketch pass.
     val cuts: Map[String, Array[Double]] = zCols.map { c =>
@@ -2156,14 +2092,9 @@ object DeltaLite extends LakeFormat {
         shiftleft(when(bucketOf(c).bitwiseAND(lit(1 << bit)) =!= 0, lit(1))
           .otherwise(lit(0)), bit * zCols.size + j)
     }).reduce(_ + _)
-    val packed = df.withColumn("_z", zVal)
+    t.replace(t.files, df.withColumn("_z", zVal)
       .repartitionByRange(targetFiles, col("_z"))
-      .drop("_z")
-    writeCommit(s, table, v + 1,
-      stagedAdds(s, table, packed, st.schema, st.partCols,
-        dataChange = false) ++
-        st.entries.map(e => removeAction(e.path, dataChange = false)),
-      operation = "OPTIMIZE")
+      .drop("_z"), "OPTIMIZE")
   }
 
   /** Copy-on-write DELETE WHERE `cond` ([[rewriteWhere]]): only the
@@ -2233,13 +2164,11 @@ object DeltaLite extends LakeFormat {
     * of the table should use [[deleteWhere]] instead.
     */
   def deleteWhereDV(s: SparkSession, table: String, cond: Column): Unit = {
-    val v = latestVersion(s, table)
-    require(v >= 0, s"no delta log at $table")
-    val st = replay(s, table, v)
-    val actions = softDelete(s, table, st.schema,
-      keptEntries(s, st, cond))(_.filter(cond))
+    val t = deltaLive(s, table)
+    val actions = softDelete(s, table, t.schema,
+      t.entries(t.prune(cond)))(_.filter(cond))
     if (actions.isEmpty) return
-    writeCommit(s, table, v + 1, actions, operation = "DELETE")
+    writeCommit(s, table, t.version + 1, actions, operation = "DELETE")
   }
 
   /** The deletion-vector write both merge-on-read paths share: the live

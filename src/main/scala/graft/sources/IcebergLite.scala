@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Glue
 import org.apache.spark.sql.types._
 
-import LakeFormat.fileName
+import LakeFormat.{fileName, latestChanges}
 
 /** Minimal Iceberg-STYLE table format: the manifest-tree metadata
   * architecture of Apache Iceberg (reference:metadata:1-9's
@@ -1831,48 +1831,6 @@ object IcebergLite extends LakeFormat {
     if (kept.exists(_.content == "data")) kept.map(_.path) else Nil
   }
 
-  /** Compaction (the OPTIMIZE / rewrite-data-files maintenance op):
-    * bin-pack the live rows into `targetFiles` files per partition,
-    * FOLDING IN accumulated position deletes — the merge-on-read
-    * maintenance story: delete files disappear here, reads stop paying
-    * the anti-join. Content is unchanged; the new snapshot carries one
-    * fresh manifest (and no deletes manifests). Schema evolution rides
-    * along: rewritten files are written under the CURRENT schema, so
-    * compaction also retires old-schema files.
-    */
-  def compact(s: SparkSession, table: String, targetFiles: Int): Long = {
-    val (meta, manifests) = manifestsOf(s, table, -1L)
-    val groups = entryGroups(manifests)
-    if (groups.forall(_._2.isEmpty)) return meta.currentSnapshot
-    val df = readEntries(s, table, meta, groups, delCtxOf(manifests))
-    val packed =
-      if (meta.partCols.isEmpty) df.repartition(targetFiles)
-      else df.repartition(targetFiles,
-        meta.partCols.map(partExpr(_, meta.schema)): _*)
-    // Rewritten files land under the CURRENT schema AND the DEFAULT
-    // spec — compaction also retires old-spec layouts.
-    val m = writeManifest(s, table, packed, meta.currentSchema,
-      meta.defaultSpecId, meta.partCols, meta.sortCols, nextSeq(meta))
-    commitSnapshot(s, table, meta, Seq(m))
-  }
-
-  /** Expire all snapshots except the newest `retain`, then delete every
-    * data/delete file and manifest no retained snapshot references —
-    * Iceberg's expire-snapshots + orphan-file cleanup in one pass. Time
-    * travel to expired ids stops working, by design. File enumeration
-    * is manifest-driven (referenced set) plus ONE directory walk for
-    * orphans (stage leftovers); deletes are per-path. Returns the
-    * number of deleted data/delete files.
-    */
-  /** Roll the table back to `snapshotId` — an ANCESTOR of the current
-    * snapshot (walked via parent-snapshot-id lineage) — as one
-    * metadata-only commit: the current pointer moves, NOTHING is
-    * deleted, and the abandoned snapshots stay reachable (time
-    * travel, refs) until [[expireSnapshots]]. The 100 TB "bad
-    * backfill" undo: cost is one metadata write regardless of table
-    * size. Pre-lineage metadata (no parents map) falls back to
-    * id-order ancestry.
-    */
   /** Resolve a wall-clock instant to the snapshot current AT that
     * instant on the MAIN lineage: the ancestor of the current snapshot
     * with the largest `timestamp-ms` <= the target (ties break to the
@@ -1896,6 +1854,15 @@ object IcebergLite extends LakeFormat {
     at.maxBy(id => (meta.snapshotTs.getOrElse(id, 0L), id))
   }
 
+  /** Roll the table back to `snapshotId` — an ANCESTOR of the current
+    * snapshot (walked via parent-snapshot-id lineage) — as one
+    * metadata-only commit: the current pointer moves, NOTHING is
+    * deleted, and the abandoned snapshots stay reachable (time
+    * travel, refs) until [[expireSnapshots]]. The 100 TB "bad
+    * backfill" undo: cost is one metadata write regardless of table
+    * size. Pre-lineage metadata (no parents map) falls back to
+    * id-order ancestry.
+    */
   def rollbackTo(s: SparkSession, table: String,
       snapshotId: Long): Unit = {
     val meta = readMeta(s, table)
@@ -1943,6 +1910,14 @@ object IcebergLite extends LakeFormat {
     deleted
   }
 
+  /** Expire all snapshots except the newest `retain`, then delete every
+    * data/delete file and manifest no retained snapshot references —
+    * Iceberg's expire-snapshots + orphan-file cleanup in one pass. Time
+    * travel to expired ids stops working, by design. File enumeration
+    * is manifest-driven (referenced set) plus ONE directory walk for
+    * orphans (stage leftovers); deletes are per-path. Returns the
+    * number of deleted data/delete files.
+    */
   def expireSnapshots(s: SparkSession, table: String,
       retain: Int = 1): Int = {
     require(retain >= 1, "must retain at least the current snapshot")
@@ -1985,16 +1960,6 @@ object IcebergLite extends LakeFormat {
     deletedData
   }
 
-  /** Copy-on-write MERGE (upsert) on `keys`: source rows REPLACE
-    * matching target rows and are INSERTED otherwise. Only target files
-    * containing a matching key are rewritten — found by ONE
-    * file-name-column scan joined against the source keys — so merging
-    * a small source into a 100 TB table rewrites the touched files, not
-    * the table. Per MERGE semantics (same contract as DeltaLite.merge),
-    * multiple source rows matching the same target row is an error
-    * (which copy would win is ambiguous); duplicate source keys that
-    * match nothing insert all their copies. Returns the new snapshot id.
-    */
   /** MERGE-ON-READ MERGE: ONE snapshot carrying an equality-delete
     * manifest (the source's keys) AND a data manifest (the full
     * source) at the SAME data sequence number — the delete masks only
@@ -2013,9 +1978,7 @@ object IcebergLite extends LakeFormat {
     val cur = meta.currentSchema
     val keyFields = keys.map(k => cur.fields.find(_.name == k).getOrElse(
       throw new IllegalArgumentException(s"no column $k in $table")))
-    val srcCols = source.select(cur.fields.map(fd =>
-      col(fd.name).cast(fd.dataType).as(fd.name)).toSeq: _*)
-      .localCheckpoint() // key rows + data rows: one source evaluation
+    val srcCols = LakeFormat.mergeSource(source, cur.struct, keys)
     require(srcCols.groupBy(keys.map(col): _*)
         .agg(count(lit(1)).as("n")).filter(col("n") > 1)
         .limit(1).count() == 0,
@@ -2026,8 +1989,7 @@ object IcebergLite extends LakeFormat {
       meta.defaultSpecId, meta.partCols, meta.sortCols, seq)
     // Equality-delete files at the SAME sequence (mask applies to
     // strictly-smaller seq only): the equalityDelete staging shape.
-    val keyRows = srcCols.select(keyFields.map(kf =>
-      col(kf.name).cast(kf.dataType).as(kf.name)).toSeq: _*).distinct()
+    val keyRows = srcCols.select(keys.map(col): _*).distinct()
     val withDelete = dataManifest +:
       stageEqDeleteManifest(s, table, meta, cur, keyFields, keyRows, seq)
     commitSnapshot(s, table, meta, manifests.map(_.path) ++ withDelete)
@@ -2056,7 +2018,9 @@ object IcebergLite extends LakeFormat {
   /** CDC APPLY as ONE merge-on-read snapshot per change batch (the
     * streaming-CDC-writer shape, [[mergeMOR]] generalized to deletes):
     * the ordered batch (`opCol` insert/update/delete, `seqCol` total
-    * order) reduces to its LATEST change per key, then ONE snapshot
+    * order) reduces to its LATEST change per key (the
+    * [[LakeFormat.latestChanges]] rule DeltaLite.applyChanges shares),
+    * then ONE snapshot
     * commits an equality-delete manifest covering EVERY touched key
     * plus a data manifest carrying the surviving (non-delete) latest
     * rows, both at the same data sequence number — every older copy of
@@ -2073,18 +2037,8 @@ object IcebergLite extends LakeFormat {
     val cur = meta.currentSchema
     val keyFields = keys.map(k => cur.fields.find(_.name == k).getOrElse(
       throw new IllegalArgumentException(s"no column $k in $table")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys.map(col): _*)
-      .orderBy(col(seqCol).desc)
-    val latest = changes
-      .withColumn("_cdc_rn", row_number().over(w))
-      .filter(col("_cdc_rn") === 1)
-      .localCheckpoint() // keys + survivors: one change-feed evaluation
-    val survivors = latest.filter(lower(col(opCol)) =!= "delete")
-      .select(cur.fields.map(fd =>
-        col(fd.name).cast(fd.dataType).as(fd.name)).toSeq: _*)
-    val touched = latest.select(keyFields.map(kf =>
-      col(kf.name).cast(kf.dataType).as(kf.name)).toSeq: _*).distinct()
+    val (touched, survivors) =
+      latestChanges(changes, cur.struct, keys, opCol, seqCol)
     val seq = nextSeq(meta)
     val dataManifests =
       if (survivors.isEmpty) Nil
@@ -2104,6 +2058,7 @@ object IcebergLite extends LakeFormat {
       val version: Long = meta.currentSnapshot
       val schema: StructType = meta.currentSchema.struct
       val files: Seq[String] = groups.flatMap(_._2.map(_.path))
+      val partitioning: Seq[Column] = meta.partCols.map(partExpr(_, schema))
       def prune(pred: Column): Seq[String] =
         prunedEntries(s, meta, dataManifests(manifests), pred)
           ._2.flatMap(_._2.map(_.path))
@@ -2113,7 +2068,9 @@ object IcebergLite extends LakeFormat {
           k -> es.filter(e => want.contains(e.path))
         }, delCtxOf(manifests), fileCol)
       }
-      // Iceberg snapshots carry no operation name.
+      // Iceberg snapshots carry no operation name. New files land under
+      // the current schema and default spec, so a rewrite (OPTIMIZE)
+      // also retires old-schema files and old-spec layouts.
       def replace(removed: Seq[String], add: DataFrame,
           operation: String): Long = {
         val m = writeManifest(s, table, add, meta.currentSchema,

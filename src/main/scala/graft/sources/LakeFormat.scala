@@ -20,13 +20,14 @@ import org.apache.spark.sql.types._
   * branches, merge-on-read) stay on that format's object.
   *
   * The keyed [[merge]], the full-sync [[sync]] MERGE, the
-  * copy-on-write [[updateWhere]], and INSERT ([[append]], [[overwrite]],
-  * both over [[insert]]) are written here once. Each reads one snapshot
-  * ([[LakeFormat.Live]], the hooks a format supplies on one log replay
-  * or manifest read) for the whole statement and ends in one
-  * [[LakeFormat.Live.replace]] commit. The MERGEs evaluate their source
-  * under the one DML source rule ([[LakeFormat.once]]), cast it to the
-  * table's types, and end in the same anti-join + union commit.
+  * copy-on-write [[updateWhere]], OPTIMIZE ([[compact]]) and INSERT
+  * ([[append]], [[overwrite]], both over [[insert]]) are written here
+  * once. Each reads one snapshot ([[LakeFormat.Live]], the hooks a
+  * format supplies on one log replay or manifest read) for the whole
+  * statement and ends in one [[LakeFormat.Live.replace]] commit. The
+  * MERGEs evaluate their source under the one DML source rule
+  * ([[LakeFormat.once]]), cast it to the table's types, and end in the
+  * same anti-join + union commit.
   */
 trait LakeFormat {
   import LakeFormat._
@@ -104,8 +105,18 @@ trait LakeFormat {
     else t.replace(hits, rows(t.read(hits)), operation)
   }
 
-  /** Bin-pack the live rows into `targetFiles` files (OPTIMIZE). */
-  def compact(s: SparkSession, table: String, targetFiles: Int): Long
+  /** OPTIMIZE: bin-pack the live rows into `targetFiles` files,
+    * clustered by the table's partitioning, in one commit replacing
+    * every live file. Reading through the snapshot applies deletes, so
+    * compaction also folds deletion vectors and delete files into clean
+    * files. Content is unchanged; an empty table commits nothing. */
+  def compact(s: SparkSession, table: String, targetFiles: Int): Long = {
+    val t = live(s, table)
+    if (t.files.isEmpty) t.version
+    else t.replace(t.files,
+      t.read(t.files).repartition(targetFiles, t.partitioning: _*),
+      "OPTIMIZE")
+  }
 
   def addColumn(s: SparkSession, table: String, name: String,
       dataType: DataType): Unit
@@ -137,8 +148,6 @@ trait LakeFormat {
       keys: Seq[String]): Long = {
     val t = live(s, table)
     val src = mergeSource(source, t.schema, keys)
-    val srcKeyCounts = src.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("_src_n"))
     // Stats-pruned candidate set: above the file-count floor, one
     // source key-range aggregate lets partition and min/max stats drop
     // files that cannot hold ANY source key before the hit-detection
@@ -150,21 +159,8 @@ trait LakeFormat {
         val aggs = rangeAggs(rk)
         t.prune(rangePred(rk, src.agg(aggs.head, aggs.tail: _*).head(), 0))
       }
-    val (hitNames, maxMatches) =
-      if (candidates.isEmpty) (Set.empty[String], 0L)
-      else {
-        val row = t.read(candidates, Some("_gf"))
-          .join(srcKeyCounts, keys)
-          .agg(collect_set(col("_gf")).as("_files"), max(col("_src_n")))
-          .head()
-        (row.getSeq[String](0).toSet,
-          if (row.isNullAt(1)) 0L else row.getLong(1))
-      }
-    require(maxMatches <= 1L,
-      s"merge: $maxMatches source rows match the same target key — " +
-        "MERGE forbids ambiguous multi-matches; dedup the source")
-    rewrite(t, t.files.filter(p => hitNames.contains(fileName(p))), src,
-      keys)(identity)
+    rewrite(t, mergeHits(t, candidates, src, keys), src, src, keys,
+      "MERGE")(identity)
   }
 
   /** Full-sync MERGE — [[merge]] plus `WHEN NOT MATCHED BY SOURCE [AND
@@ -198,7 +194,7 @@ trait LakeFormat {
         else rangePred(rk, row, 1)) || c)
     }
     val acts = cond.fold(lit(true))(c => coalesce(c, lit(false)))
-    rewrite(t, files, src, keys) { absent =>
+    rewrite(t, files, src, src, keys, "MERGE") { absent =>
       set.fold(absent.filter(not(acts))) { asg =>
         absent.select(t.schema.fields.toSeq.map(f =>
           asg.get(f.name).fold(col(f.name))(v =>
@@ -208,17 +204,19 @@ trait LakeFormat {
     }
   }
 
-  /** The one commit both MERGEs end in: `files` are replaced by their
-    * rows whose key `src` lacks (passed through `absent`) and by `src`.
-    * No distinct() on the anti-join's key side: right-side duplicates
-    * cannot change a left_anti result — one exchange fewer. */
-  private def rewrite(t: Live, files: Seq[String], src: DataFrame,
-      keys: Seq[String])(absent: DataFrame => DataFrame): Long =
+  /** The one commit the MERGEs and APPLY CHANGES end in: `files` are
+    * replaced by their rows whose key `keyed` lacks (passed through
+    * `absent`) and by `add`. No distinct() on the anti-join's key side:
+    * right-side duplicates cannot change a left_anti result — one
+    * exchange fewer. */
+  protected def rewrite(t: Live, files: Seq[String], keyed: DataFrame,
+      add: DataFrame, keys: Seq[String], operation: String)(
+      absent: DataFrame => DataFrame): Long =
     t.replace(files,
-      if (files.isEmpty) src
+      if (files.isEmpty) add
       else absent(t.read(files)
-          .join(src.select(keys.map(col): _*), keys, "left_anti"))
-        .unionByName(src), "MERGE")
+          .join(keyed.select(keys.map(col): _*), keys, "left_anti"))
+        .unionByName(add), operation)
 }
 
 object LakeFormat {
@@ -245,9 +243,12 @@ object LakeFormat {
     /** Rows of the live files `paths` under `schema`, honoring deletes;
       * `fileCol` adds each row's data-file NAME. */
     def read(paths: Seq[String], fileCol: Option[String] = None): DataFrame
+    /** The expressions a rewrite clusters rows by: the table's partition
+      * columns or transforms. */
+    def partitioning: Seq[Column]
     /** ONE commit replacing `removed` with `add`'s rows, recorded as
-      * `operation` (WRITE, MERGE, UPDATE, DELETE); returns the new
-      * version. */
+      * `operation` (WRITE, MERGE, UPDATE, DELETE, APPLY CHANGES,
+      * OPTIMIZE); returns the new version. */
     def replace(removed: Seq[String], add: DataFrame,
         operation: String): Long
   }
@@ -275,6 +276,48 @@ object LakeFormat {
         "file set this large risks driver memory — narrow the " +
         "operation or raise spark.graft.maxHitFiles")
     names.toSet
+  }
+
+  /** The keyed MERGE hit probe: the `files` holding a key of `src`,
+    * found by ONE file-name-column scan joined against the source key
+    * counts. One target row matching several source rows is an error —
+    * which copy would win is ambiguous. */
+  private[sources] def mergeHits(t: Live, files: Seq[String],
+      src: DataFrame, keys: Seq[String]): Seq[String] = {
+    if (files.isEmpty) return Nil
+    val row = t.read(files, Some("_gf"))
+      .join(src.groupBy(keys.map(col): _*).agg(count(lit(1)).as("_src_n")),
+        keys)
+      .agg(collect_set(col("_gf")), max(col("_src_n"))).head()
+    require(row.isNullAt(1) || row.getLong(1) <= 1L,
+      s"merge: ${row.getLong(1)} source rows match the same target key " +
+        "— MERGE forbids ambiguous multi-matches; dedup the source")
+    val names = row.getSeq[String](0).toSet
+    files.filter(p => names.contains(fileName(p)))
+  }
+
+  /** A CDC change batch reduced to its latest change per key: for each
+    * key, the row with the largest `seqCol` (ties resolve by the op and
+    * then the payload columns, so the winner never depends on the
+    * batch's order), found by the max-struct idiom — one
+    * partial-aggregating exchange, no window sort — and evaluated
+    * [[once]]. Returns every touched key and the upserts: the latest
+    * rows whose `opCol` is not 'delete' (in any case), in `schema`'s
+    * columns and types. A key whose latest op is 'delete' is touched
+    * and has no upsert. */
+  private[sources] def latestChanges(changes: DataFrame, schema: StructType,
+      keys: Seq[String], opCol: String,
+      seqCol: String): (DataFrame, DataFrame) = {
+    val payload = schema.fieldNames.toSeq.filterNot(keys.contains)
+    val latest = once(changes.groupBy(keys.map(col): _*)
+      .agg(max(struct((seqCol +: opCol +: payload).map(col): _*)).as("_m"))
+      .select(keys.map(col) ++ (opCol +: payload).map(c =>
+        col(s"_m.$c").as(c)): _*))
+    def typed(cols: Seq[String]) = cols.map(c =>
+      col(c).cast(schema(c).dataType).as(c))
+    (latest.select(typed(keys): _*),
+      latest.filter(lower(col(opCol)) =!= "delete")
+        .select(typed(schema.fieldNames.toSeq): _*))
   }
 
   /** Rows this thread's staged data writes have written so far. */

@@ -147,6 +147,57 @@ class DeltaLiteSpec extends SparkSpec {
       .orderBy(col("c_custkey")).collect().toSeq
     assert(after == before)
     assert(DeltaLite.pruneInfo(spark, t, lit(true))._2 == 1) // 6 → 1 file
+    // Content is unchanged, so every add and remove of the OPTIMIZE
+    // commit carries dataChange = false, and history names it.
+    val log = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(t, "_delta_log",
+        "00000000000000000001.json")), "UTF-8")
+    val actions = log.linesIterator
+      .filter(l => l.startsWith("{\"add\"") || l.startsWith("{\"remove\""))
+      .toSeq
+    assert(actions.count(_.startsWith("{\"add\"")) == 1 &&
+      actions.count(_.startsWith("{\"remove\"")) == 6, log)
+    assert(actions.forall(_.contains("\"dataChange\":false")), log)
+    assert(DeltaLite.history(spark, t).filter(col("version") === 1L)
+      .select(col("operation")).head().getString(0) == "OPTIMIZE")
+  }
+
+  test("OPTIMIZE compacts a CHECK-constrained table without re-running " +
+      "its CHECKs: content only moves") {
+    val c = Tables.customer(spark, sfDir)
+    def table(): String = {
+      val t = freshTable()
+      DeltaLite.create(spark, t, c.repartition(4))
+      t
+    }
+    val (plain, checked) = (table(), table())
+    DeltaLite.addCheckConstraint(spark, checked, "balanced",
+      "c_acctbal > -1000")
+    val plainJobs = jobsOf(DeltaLite.compact(spark, plain, targetFiles = 1))
+    val checkedJobs =
+      jobsOf(DeltaLite.compact(spark, checked, targetFiles = 1))
+    assert(checkedJobs == plainJobs, s"$checkedJobs vs $plainJobs jobs")
+    assert(DeltaLite.pruneInfo(spark, checked, lit(true))._2 == 1)
+    assert(DeltaLite.snapshot(spark, checked).orderBy(col("c_custkey"))
+      .collect().toSeq == c.orderBy(col("c_custkey")).collect().toSeq)
+    assert(DeltaLite.checkConstraints(spark, checked).map(_._1) ==
+      Seq("balanced"))
+  }
+
+  test("a write that fails in its Spark job leaves no staging " +
+      "directory behind and the table at its previous version") {
+    val t = freshTable()
+    val c = Tables.customer(spark, sfDir)
+    DeltaLite.create(spark, t, c.filter(col("c_custkey") <= 40))
+    intercept[Exception] {
+      DeltaLite.append(spark, t, DeltaLite.snapshot(spark, t)
+        .filter(assert_true(col("c_custkey") < 5).isNull))
+    }
+    val root = new java.io.File(t).list().toSeq
+    assert(!root.exists(_.startsWith("_stage_")), root.toString)
+    assert(DeltaLite.latestVersion(spark, t) == 0L)
+    assert(DeltaLite.snapshot(spark, t).count() ==
+      c.filter(col("c_custkey") <= 40).count())
   }
 
   test("stats-based data skipping prunes non-overlapping files and " +
@@ -877,6 +928,16 @@ class DeltaLiteSpec extends SparkSpec {
     assert(filesBefore.intersect(filesAfter).size == 1,
       s"expected the untouched high-key file to survive: " +
         s"$filesBefore -> $filesAfter")
+    // The op is matched in any case: 'DELETE' deletes, 'UPDATE' upserts.
+    DeltaLite.applyChanges(spark, t, Seq(
+        (2L, "new", 2.0, "DELETE", 12L), (3L, "upd", 3.0, "UPDATE", 12L))
+        .toDF("c_custkey", "c_name", "c_acctbal", "_op", "_seq"),
+      Seq("c_custkey"), "_op", "_seq")
+    val last = DeltaLite.snapshot(spark, t)
+    assert(last.filter(col("c_custkey") === 2L).count() == 0)
+    assert(last.filter(col("c_custkey") === 3L)
+      .select(col("c_name")).head().getString(0) == "upd")
+    assert(last.count() == before - 1)
   }
 
   test("compactWhere rewrites only sub-threshold files (the big file " +

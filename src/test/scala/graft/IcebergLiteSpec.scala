@@ -3,7 +3,7 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
-import graft.sources.IcebergLite
+import graft.sources.{DeltaLite, IcebergLite}
 import graft.util.Scratch
 
 class IcebergLiteSpec extends SparkSpec {
@@ -804,12 +804,52 @@ class IcebergLiteSpec extends SparkSpec {
       Seq("c_custkey"), "_op", "_seq")
     assert(IcebergLite.snapshot(spark, t)
       .filter(col("c_custkey") === 7).count() == 1)
+    // The op is matched in any case: 'DELETE' deletes, 'UPDATE' upserts.
+    IcebergLite.applyChangesMOR(spark, t,
+      tag(keep.filter(col("c_custkey") === 8), "DELETE", 5).unionByName(
+        tag(keep.filter(col("c_custkey") === 9)
+          .withColumn("c_acctbal", lit(2.5)), "UPDATE", 5)),
+      Seq("c_custkey"), "_op", "_seq")
+    val cased = IcebergLite.snapshot(spark, t)
+    assert(cased.filter(col("c_custkey") === 8).count() == 0)
+    assert(cased.filter(col("c_custkey") === 9)
+      .select(col("c_acctbal")).head().getDouble(0) == 2.5)
+    assert(cased.count() ==
+      keep.filter(col("c_custkey") % 7 =!= 0).count())
     // Compact folds masks; content unchanged.
     val pre = IcebergLite.snapshot(spark, t)
       .orderBy(col("c_custkey")).collect().toSeq
     IcebergLite.compact(spark, t, targetFiles = 1)
     assert(IcebergLite.snapshot(spark, t)
       .orderBy(col("c_custkey")).collect().toSeq == pre)
+  }
+
+  test("APPLY CHANGES has one meaning on Delta and Iceberg: the same " +
+      "batches, with ties on the sequence and ops in any case, leave " +
+      "the same rows") {
+    import spark.implicits._
+    val base = Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0))
+      .toDF("k", "name", "bal")
+    val batches = Seq(
+      // key 1: two changes at the same sequence; key 2: 'DELETE'
+      Seq((1L, "x", 5.0, "update", 7L), (1L, "y", 4.0, "update", 7L),
+        (2L, "b", 2.0, "DELETE", 7L), (4L, "d", 4.0, "Insert", 7L)),
+      // key 3: delete then re-insert within one batch; key 4: 'Delete'
+      Seq((3L, "c", 3.0, "delete", 8L), (3L, "c2", 6.0, "INSERT", 9L),
+        (4L, "d", 4.0, "Delete", 8L)))
+      .map(_.toDF("k", "name", "bal", "_op", "_seq"))
+    val (d, i) = (freshTable(), freshTable())
+    DeltaLite.create(spark, d, base)
+    IcebergLite.create(spark, i, base)
+    batches.foreach { b =>
+      DeltaLite.applyChanges(spark, d, b, Seq("k"), "_op", "_seq")
+      IcebergLite.applyChangesMOR(spark, i, b, Seq("k"), "_op", "_seq")
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy(col("k")).collect().toSeq.map(_.toSeq)
+    val want = Seq(Seq(1L, "y", 4.0), Seq(3L, "c2", 6.0))
+    assert(rows(DeltaLite.snapshot(spark, d)) == want)
+    assert(rows(IcebergLite.snapshot(spark, i)) == want)
   }
 
   test("keyed merge above the pruning floor replaces only the files " +
