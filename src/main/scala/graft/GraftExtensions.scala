@@ -920,6 +920,18 @@ object GraftExtensions {
   * pass, 100 entries still recompiled 82–99 classes a pass and 1000
   * entries 2–4 (see [[GraftExtensions]] for why literals no longer
   * matter). The larger cache retained about 2 MB more heap there.
+  *
+  * The `file:` FileSystem is [[graft.util.LocalFs]] (`fs.file.impl`).
+  * Without the native libhadoop, Hadoop's local file system forks a
+  * `chmod` for every file and directory it creates (each data file,
+  * its `.crc`, each committer directory) and an `ls -ld` for every
+  * `listFiles` entry: over a thousand processes in 20 s of lake DML. The
+  * replacement changes nothing but how permissions are set and read
+  * (through `java.nio`, same mode bits, same lazy reads). Hadoop caches
+  * one `file:` FileSystem per JVM and user, and the cache key ignores
+  * the configuration: if anything in the JVM obtains a `file:`
+  * FileSystem before the session starts, that stock instance is the
+  * one every later caller gets.
   */
 object GraftSession {
   def builder(master: String = "local[*]",
@@ -932,4 +944,5 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.codegen.cache.maxEntries", 1000)
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.util.LocalFs].getName)
 }

@@ -445,7 +445,7 @@ object DeltaLite extends LakeFormat {
       ((protocolRow +: metaRow +: addRows) ++ txnRows).asJava
     val stageDir = new Path(table, s"_stage_ckpt_${UUID.randomUUID()}")
     val f = fs(s, stageDir)
-    try {
+    LakeFormat.staged(s, stageDir) {
       s.createDataFrame(rows, schema).coalesce(1)
         .write.mode("overwrite").parquet(stageDir.toString)
       val part = f.listStatus(stageDir)
@@ -453,7 +453,7 @@ object DeltaLite extends LakeFormat {
         .getOrElse(throw new IllegalStateException("checkpoint stage empty"))
       require(f.rename(part, checkpointFile(table, v)),
         "rename failed for checkpoint")
-    } finally f.delete(stageDir, true)
+    }
     val out = f.create(lastCheckpointPath(table), true) // pointer: overwrite
     try out.write(s"""{"version":$v,"size":${rows.size()}}"""
       .getBytes("UTF-8"))
@@ -475,10 +475,15 @@ object DeltaLite extends LakeFormat {
   private[sources] def isAbsPath(p: String): Boolean =
     p.startsWith("/") || p.contains("://")
 
+  /** `fileCol` adds each row's data file name from the scan's own
+    * `_metadata` (reachable on the scan relation only, so before the
+    * renaming projection). It is a plain column: a filter above it
+    * still reaches the parquet reader. */
   private def readFiles(s: SparkSession, table: String, schema: StructType,
-      rels: Seq[String]): DataFrame =
+      rels: Seq[String], fileCol: Option[String] = None): DataFrame =
     if (rels.isEmpty)
-      s.createDataFrame(s.sparkContext.emptyRDD[Row], schema)
+      s.createDataFrame(s.sparkContext.emptyRDD[Row],
+        fileCol.fold(schema)(schema.add(_, StringType)))
     else {
       // Parquet speaks PHYSICAL names; the projection relabels to the
       // current logical names (identity when mapping is off).
@@ -486,7 +491,8 @@ object DeltaLite extends LakeFormat {
       val r = if (rels.exists(isAbsPath)) r0 else r0.option("basePath", table)
       r.parquet(rels.map(p => new Path(table, p).toString): _*)
         .select(schema.fields.map(fd =>
-          col(physName(fd)).as(fd.name)).toSeq: _*)
+          col(physName(fd)).as(fd.name)).toSeq ++
+          fileCol.map(col("_metadata.file_name").as(_)): _*)
     }
 
   private def readDv(s: SparkSession, table: String, rel: String): Seq[Long] = {
@@ -512,13 +518,8 @@ object DeltaLite extends LakeFormat {
     import s.implicits._
     val outCols =
       (schema.fieldNames.toSeq ++ fileCol.toSeq).map(col)
-    def withName(df: DataFrame): DataFrame = fileCol match {
-      case Some(c) => df.withColumn(c,
-        element_at(split(input_file_name(), "/"), -1))
-      case None => df
-    }
     val (dvE, plain) = entries.partition(_.dv.isDefined)
-    val base = withName(readFiles(s, table, schema, plain.map(_.path)))
+    val base = readFiles(s, table, schema, plain.map(_.path), fileCol)
       .select(outCols: _*)
     if (dvE.isEmpty) return base
     val deleted = dvE.flatMap(e => readDv(s, table, e.dv.get)
@@ -531,8 +532,7 @@ object DeltaLite extends LakeFormat {
     }
     val masked = maskedReader
       .parquet(dvE.map(e => new Path(table, e.path).toString): _*)
-      .withColumn("_dv_fname",
-        element_at(split(input_file_name(), "/"), -1))
+      .withColumn("_dv_fname", col("_metadata.file_name"))
       .withColumn("_dv_rid", col("_metadata.row_index"))
       .select(schema.fields.map(fd =>
         col(physName(fd)).as(fd.name)).toSeq ++
@@ -585,13 +585,14 @@ object DeltaLite extends LakeFormat {
     * values, size) per data file. Files are staged by the normal
     * parquet committer, then renamed (a metadata op) to UUID names —
     * keeping their `k=v` partition directories — under the root. The
-    * staging directory is removed whether the write succeeds or fails.
+    * staging directory is removed whether the write succeeds or fails
+    * ([[LakeFormat.staged]]).
     */
   private[sources] def stage(s: SparkSession, table: String, df: DataFrame,
       partCols: Seq[String]): Seq[(String, Seq[(String, Option[String])], Long)] = {
     val stageDir = new Path(table, s"_stage_${UUID.randomUUID()}")
     val f = fs(s, stageDir)
-    try {
+    LakeFormat.staged(s, stageDir) {
       LakeFormat.wrote(org.apache.spark.sql.graft.Glue.save(df, "parquet",
         stageDir.toString, partCols))
       val stagePrefix = f.makeQualified(stageDir).toString
@@ -619,7 +620,7 @@ object DeltaLite extends LakeFormat {
         }
         (rel, pvs, len)
       }.toSeq
-    } finally f.delete(stageDir, true)
+    }
   }
 
   private def obj(field: String)(fill: ObjectNode => Unit): String = {
@@ -2199,8 +2200,7 @@ object DeltaLite extends LakeFormat {
     }
     val scan0 = scanReader
       .parquet(entries.map(e => new Path(table, e.path).toString): _*)
-      .withColumn("_dv_fname",
-        element_at(split(input_file_name(), "/"), -1))
+      .withColumn("_dv_fname", col("_metadata.file_name"))
       .withColumn("_dv_rid", col("_metadata.row_index"))
       .select(schema.fields.map(fd =>
         col(physName(fd)).as(fd.name)).toSeq ++

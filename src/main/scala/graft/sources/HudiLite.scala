@@ -234,7 +234,7 @@ object HudiLite {
     val staged = new Path(table, s".staging_$instant")
     def parts(dir: Path) = f.listStatus(dir).map(_.getPath)
       .filter(_.getName.startsWith("part-")).sortBy(_.getName).toSeq
-    try {
+    LakeFormat.staged(s, staged) {
       val groups = freshSuffix match {
         case Some(suffix) =>
           rows.write.mode("overwrite").parquet(staged.toString)
@@ -265,7 +265,7 @@ object HudiLite {
           s"rename of file group $fileId's part file to $rel failed")
         Stat(fileId, rel, log(fileId))
       }, StructType(rows.schema.filter(_.name != Fg)))
-    } finally f.delete(staged, true)
+    }
   }
 
   /** Commit `w` under `instant`: a `.deltacommit` for the MOR log

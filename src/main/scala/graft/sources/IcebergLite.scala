@@ -1211,10 +1211,10 @@ object IcebergLite extends LakeFormat {
         else reader0.option("basePath", s"$table/data")
       val base0 = reader
         .parquet(entries.map(e => new Path(table, e.path).toString): _*)
-        .withColumn("_ice_fname",
-          element_at(split(input_file_name(), "/"), -1))
+        .withColumn("_ice_fname", col("_metadata.file_name"))
       // _metadata is only reachable on the scan relation itself —
-      // capture the row position here, before any join/projection.
+      // capture the file name and row position here, before any
+      // join/projection.
       val base = if (needPos)
         base0.withColumn("_ice_pos", col("_metadata.row_index"))
       else base0
@@ -1777,15 +1777,16 @@ object IcebergLite extends LakeFormat {
 
   /** Write `rows` as delete files `data/<prefix>-<uuid>.parquet`
     * through one staging directory, removed whether the write succeeds
-    * or fails. Returns their table-relative paths — none when `rows`
-    * is empty (Spark still writes a row-less file for an empty result,
-    * and a delete that masks nothing must commit nothing).
+    * or fails ([[LakeFormat.staged]]). Returns their table-relative
+    * paths — none when `rows` is empty (Spark still writes a row-less
+    * file for an empty result, and a delete that masks nothing must
+    * commit nothing).
     */
   private def stageDeleteFiles(s: SparkSession, table: String,
       rows: DataFrame, prefix: String): Seq[String] = {
     val f = fs(s, new Path(table))
     val stageDir = new Path(table, s"_stage-$prefix-${UUID.randomUUID()}")
-    try {
+    LakeFormat.staged(s, stageDir) {
       if (Glue.save(rows, "parquet", stageDir.toString, Nil) == 0L) Nil
       else f.listStatus(stageDir).toSeq
         .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet")
@@ -1796,7 +1797,7 @@ object IcebergLite extends LakeFormat {
             s"rename failed for ${st.getPath}")
           rel
         }
-    } finally f.delete(stageDir, true)
+    }
   }
 
   /** New manifest list after removing `removedPaths` data entries:

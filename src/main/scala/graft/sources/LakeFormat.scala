@@ -1,5 +1,8 @@
 package graft.sources
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation,
@@ -8,6 +11,7 @@ import org.apache.spark.sql.catalyst.trees.TreePattern
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Glue
 import org.apache.spark.sql.types._
 
 /** The table operations Delta and Iceberg share, each with one meaning
@@ -264,18 +268,22 @@ object LakeFormat {
       .getOrElse(100000)
 
   /** Distinct `_gf` hit-file names of `df`, bounded by [[maxHitFiles]]
-    * — fails loud (with the remedy) past the cap.
+    * — fails loud (with the remedy) past the cap. One Spark job and no
+    * exchange: each task returns its own distinct names, so at most one
+    * name per file split of the scan comes back, a list no longer than
+    * the candidate file list already in memory.
     */
   private[sources] def collectHitNames(s: SparkSession,
       df: DataFrame): Set[String] = {
+    import s.implicits._
     val cap = maxHitFiles(s)
-    val names = df.select(col("_gf")).distinct().limit(cap + 1)
-      .collect().map(_.getString(0))
-    require(names.length <= cap,
+    val names = df.select(col("_gf")).as[String]
+      .mapPartitions(_.toSet.iterator).collect().toSet
+    require(names.size <= cap,
       s"predicate matches more than $cap data files; a driver-side " +
         "file set this large risks driver memory — narrow the " +
         "operation or raise spark.graft.maxHitFiles")
-    names.toSet
+    names
   }
 
   /** The keyed MERGE hit probe: the `files` holding a key of `src`,
@@ -319,6 +327,31 @@ object LakeFormat {
       latest.filter(lower(col(opCol)) =!= "delete")
         .select(typed(schema.fieldNames.toSeq): _*))
   }
+
+  /** Run the staged write `body`, which writes under `stageDir`, and
+    * remove that directory afterwards whether the write succeeds or
+    * fails. After a failure it is removed only once the write's tasks
+    * have ended (waiting at most [[StageSettleMs]]): a task of the
+    * failed job that is still running would otherwise recreate it when
+    * it opens its output file. The write's jobs are found by a job tag,
+    * which leaves the thread's job group to its caller. */
+  private[sources] def staged[T](s: SparkSession, stageDir: Path)(
+      body: => T): T = {
+    val sc = s.sparkContext
+    val tag = s"graft-stage-${java.util.UUID.randomUUID()}"
+    sc.addJobTag(tag)
+    try body
+    catch {
+      case NonFatal(e) =>
+        Glue.awaitTasks(sc, tag, StageSettleMs)
+        throw e
+    } finally {
+      sc.removeJobTag(tag)
+      stageDir.getFileSystem(sc.hadoopConfiguration).delete(stageDir, true)
+    }
+  }
+
+  private val StageSettleMs = 30000L
 
   /** Rows this thread's staged data writes have written so far. */
   private val written = ThreadLocal.withInitial[java.lang.Long](() => 0L)

@@ -92,4 +92,24 @@ object Glue {
   }
 
   private object AqePlans extends AdaptiveSparkPlanHelper
+
+  /** Wait, at most `timeoutMs`, until every task of the jobs tagged
+    * `tag` has ended. A job that failed returns to its caller while its
+    * other tasks may still be running. The status store learns of jobs
+    * and tasks through the listener bus, so the bus (private to Spark,
+    * hence here) is drained first: every job started under the tag is
+    * then known to it.
+    */
+  def awaitTasks(sc: org.apache.spark.SparkContext, tag: String,
+      timeoutMs: Long): Unit = {
+    val deadline = System.nanoTime + timeoutMs * 1000000L
+    try sc.listenerBus.waitUntilEmpty(timeoutMs)
+    catch { case _: java.util.concurrent.TimeoutException => return }
+    val st = sc.statusTracker
+    def busy: Boolean = st.getJobIdsForTag(tag).exists(id =>
+      st.getJobInfo(id).exists(j =>
+        j.status == org.apache.spark.JobExecutionStatus.RUNNING ||
+          j.stageIds.exists(st.getStageInfo(_).exists(_.numActiveTasks > 0))))
+    while (busy && System.nanoTime < deadline) Thread.sleep(5)
+  }
 }

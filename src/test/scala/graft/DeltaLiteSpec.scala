@@ -991,6 +991,20 @@ class DeltaLiteSpec extends SparkSpec {
     }
   }
 
+  test("a failed staged write removes its staging directory only after " +
+      "its last task has ended") {
+    import spark.implicits._
+    val t = freshTable()
+    DeltaLite.create(spark, t, Seq(7L).toDF("k"))
+    // the straggling task opens its output file after the job failed
+    failWithStraggler(straggle => DeltaLite.append(spark, t,
+      spark.range(0, 2, 1, 2).select(straggle(col("id")).as("k"))))
+    val staged = new java.io.File(t).listFiles()
+      .filter(_.getName.startsWith("_stage"))
+    assert(staged.isEmpty, staged.map(_.getName).mkString(", "))
+    assert(DeltaLite.snapshot(spark, t).as[Long].collect().toSeq == Seq(7L))
+  }
+
   test("DML hit-file collects are capped (spark.graft.maxHitFiles): a " +
       "predicate matching more files refuses loudly, data untouched") {
     val t = freshTable()

@@ -915,4 +915,20 @@ class IcebergLiteSpec extends SparkSpec {
     assert(staged.isEmpty, staged.map(_.getName).mkString(", "))
     assert(IcebergLite.snapshot(spark, t).count() == 10)
   }
+
+  test("a failed delete-file write removes its staging directory only " +
+      "after its last task has ended") {
+    import spark.implicits._
+    val t = freshTable()
+    // two files, one task each: the delete's condition fails on k = 0
+    // and straggles on k = 1, whose task then writes its delete row
+    IcebergLite.create(spark, t, Seq(0L).toDF("k"))
+    IcebergLite.append(spark, t, Seq(1L).toDF("k"))
+    failWithStraggler(straggle =>
+      IcebergLite.deleteWhere(spark, t, straggle(col("k")) >= 0L))
+    val staged = new java.io.File(t).listFiles()
+      .filter(_.getName.startsWith("_stage-"))
+    assert(staged.isEmpty, staged.map(_.getName).mkString(", "))
+    assert(IcebergLite.snapshot(spark, t).count() == 2)
+  }
 }
