@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedAttribute, UnresolvedIdentifier, UnresolvedRelation}
-import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression}
+import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression,
+  SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{AddColumns, Assignment, CreateTable, CreateTableAsSelect, DeleteAction, DeleteFromTable, DropTable, InsertIntoStatement, InsertStarAction, LogicalPlan, MergeIntoTable, RenameColumn, SubqueryAlias, TableSpec, UpdateAction, UpdateStarAction, UpdateTable}
 import org.apache.spark.sql.graft.Glue
 
@@ -35,8 +36,6 @@ import graft.sources.{DeltaLite, IcebergLite, LakeFormat}
   * rewrite here is syntax Spark's parser rejects.
   */
 object LakeSql {
-
-  private def nameOf(rel: LogicalPlan): String = partsOf(rel).last
 
   private def partsOf(rel: LogicalPlan): Seq[String] = rel match {
     case r: UnresolvedRelation => r.multipartIdentifier
@@ -1819,8 +1818,7 @@ object LakeSql {
         case _ if ReturningKeyword.matches(st) => runReturning(s, st)
         case _ if OnConflictKeyword.matches(st) => runOnConflict(s, st)
         case _ if InsertOrKeyword.matches(st) => runInsertOr(s, st)
-        case _ if isUpdateFrom(st) => runUpdateFrom(s, st)
-        case _ if isDeleteUsing(st) => runDeleteUsing(s, st)
+        case _ if isJoinDml(st) => runJoinDml(s, st)
         case _ if CopyKeyword.matches(st) => runCopy(s, st)
         case _ if SummarizeKeyword.matches(st) => runSummarize(s, st)
         case _ if PivotKeyword.matches(st) => runPivot(s, st)
@@ -1912,17 +1910,7 @@ object LakeSql {
               "LIST, [] on miss) — spell map_extract()/element_at() " +
               "explicitly")
           df
-        case ListFnRewrite(r) => sql(s, r)
-        case JsonFnRewrite(r) => sql(s, r)
-        case NullsModRewrite(r) => sql(s, r)
-        case _ if StringAggKeyword.matches(st) =>
-          sql(s, rewriteStringAgg(st))
-        case TypeAliasRewrite(r) => sql(s, r)
-        case OpPinRewrite(r) => sql(s, r)
-        case TimeBucketRewrite(r) => sql(s, r)
-        case OrderedAggRewrite(r) => sql(s, r)
-        case _ if StructPackKeyword.matches(st) =>
-          sql(s, rewriteStructPack(st))
+        case ExprPass(r) => sql(s, r)
         case _ if ColumnsFnKeyword.matches(st) =>
           // re-enter the full route: the expanded text may still carry
           // another rewritable form (FROM-first, QUALIFY, …)
@@ -2071,18 +2059,39 @@ object LakeSql {
   }
   private lazy val ListLitRewrite =
     new Rewritten(ListLiteralKeyword, rewriteListLiterals)
-  private lazy val ListFnRewrite = new Rewritten(ListFnKeyword, rewriteListFns)
-  private lazy val JsonFnRewrite = new Rewritten(JsonFnKeyword, rewriteJsonFns)
-  private lazy val NullsModRewrite =
-    new Rewritten(NullsModKeyword, rewriteNullsModifier)
-  private lazy val OpPinRewrite =
-    new Rewritten(OpPinKeyword, rewriteOperatorPins)
-  private lazy val TimeBucketRewrite =
-    new Rewritten(TimeBucketKeyword, rewriteTimeBucket)
-  private lazy val OrderedAggRewrite =
-    new Rewritten(OrderedAggKeyword, rewriteOrderedListAgg)
-  private lazy val TypeAliasRewrite =
-    new Rewritten(TypeAliasKeyword, rewriteTypeAliases)
+
+  /** The dialect's expression-level text passes, in dispatch order.
+    * The dispatcher re-enters the whole route after the first one that
+    * changes a statement; [[exprText]] runs them on one expression.
+    */
+  private lazy val exprPasses = ListLitRewrite +:
+    Seq[(scala.util.matching.Regex, String => String)](
+      ListFnKeyword -> rewriteListFns, JsonFnKeyword -> rewriteJsonFns,
+      NullsModKeyword -> rewriteNullsModifier,
+      StringAggKeyword -> rewriteStringAgg,
+      TypeAliasKeyword -> rewriteTypeAliases,
+      OpPinKeyword -> rewriteOperatorPins,
+      TimeBucketKeyword -> rewriteTimeBucket,
+      OrderedAggKeyword -> rewriteOrderedListAgg,
+      StructPackKeyword -> rewriteStructPack)
+      .map { case (k, r) => new Rewritten(k, r) }
+
+  /** The first of [[exprPasses]] after the list literals that changes a
+    * text: the new text. */
+  private object ExprPass {
+    def unapply(st: String): Option[String] =
+      exprPasses.tail.iterator.flatMap(_.unapply(st)).nextOption()
+  }
+
+  /** An expression's text as the dispatcher hands it to Spark's
+    * parser: every expression-level pass, then the terminal NULL-order
+    * pin ([[pinNullOrder]]). */
+  @annotation.tailrec
+  private def exprText(text: String): String =
+    exprPasses.iterator.flatMap(_.unapply(text)).nextOption() match {
+      case Some(r) => exprText(r)
+      case None => pinNullOrder(text)
+    }
 
   /** Apply `f` to the segments of `st` OUTSIDE single-quoted string
     * literals only (SQL's doubled-quote escape survives: the '' yields
@@ -4992,14 +5001,17 @@ object LakeSql {
   // picks an arbitrary row; graft REFUSES loudly, matching MERGE's
   // one-source-row-per-target contract (x39). DELETE is multi-match-
   // insensitive (deleting twice = once) and runs without the check.
-  // Execution is the full-rewrite-DML class (BASELINE.md): the
-  // post-state is ONE declarative plan — LEFT OUTER join for UPDATE,
-  // LEFT ANTI for DELETE, both keyed so Catalyst broadcasts a small
-  // source — committed as one atomic overwrite (old files stay
-  // time-travelable). A no-op statement (zero matches) commits
-  // nothing. Detection is TOP-LEVEL keyword position (depth-0,
-  // quote-aware): `SET a = (SELECT … FROM …)` has no top-level FROM
-  // and stays on the single-table pruned copy-on-write path.
+  // This parses the statement and binds its clauses as the query path
+  // would (clauseColumn); LakeFormat.joinDml runs it on one
+  // snapshot as the shared copy-on-write rewrite: one capped probe of
+  // the target joined to the source (LEFT join for UPDATE, LEFT SEMI
+  // for DELETE) finds the hit files, the match count and the
+  // ambiguity, and only the hit files are rewritten (LEFT join with the
+  // SET assignments / LEFT ANTI) in one commit. A no-op statement (zero
+  // matches) commits nothing. Detection is TOP-LEVEL keyword position
+  // (depth-0, quote-aware): `SET a = (SELECT … FROM …)` has no
+  // top-level FROM and stays on the single-table pruned copy-on-write
+  // path.
   private val UpdateHeadRe =
     ("(?is)^\\s*UPDATE\\s+([A-Za-z_]\\w*)" +
       "(?:\\s+(?:AS\\s+)?([A-Za-z_]\\w*))?\\s+SET\\b(.*)$").r
@@ -5007,12 +5019,10 @@ object LakeSql {
     ("(?is)^\\s*DELETE\\s+FROM\\s+([A-Za-z_]\\w*)" +
       "(?:\\s+(?:AS\\s+)?([A-Za-z_]\\w*))?\\s+USING\\b(.*)$").r
 
-  private[graft] def isUpdateFrom(st: String): Boolean = st match {
+  private def isJoinDml(st: String): Boolean = st match {
     case UpdateHeadRe(_, _, rest) => topLevelIndexOf(rest, "FROM") >= 0
-    case _ => false
+    case _ => DeleteUsingHeadRe.matches(st)
   }
-  private[graft] def isDeleteUsing(st: String): Boolean =
-    DeleteUsingHeadRe.matches(st)
 
   /** Parse the single source relation of a join-DML statement:
     * a table/view name or `(subquery) [AS] alias`. Returns
@@ -5043,131 +5053,68 @@ object LakeSql {
     }
   }
 
-  private def joinDmlTarget(s: SparkSession, tbl: String,
-      what: String): (LakeFormat, String) =
-    lakeEntry(catalog(s).get(tbl),
-      s"$tbl is a view — $what targets must be lake tables",
-      s"$what: table $tbl not in catalog")
-
-  private[graft] def runUpdateFrom(s: SparkSession, st: String): DataFrame = {
+  /** Run an UPDATE … FROM or a DELETE … USING statement `st`; returns
+    * the matched rows. */
+  private[graft] def runJoinDml(s: SparkSession, st: String): DataFrame = {
     import s.implicits._
-    val UpdateHeadRe(tbl, aliasOpt, rest) = st
-    val fromIdx = topLevelIndexOf(rest, "FROM")
-    val setText = rest.substring(0, fromIdx)
-    val afterFrom = rest.substring(fromIdx + 4)
-    val whereIdx = topLevelIndexOf(afterFrom, "WHERE")
-    val (srcSpec, cond) =
-      if (whereIdx >= 0) (afterFrom.substring(0, whereIdx),
-        afterFrom.substring(whereIdx + 5).trim.stripSuffix(";").trim)
-      else (afterFrom.trim.stripSuffix(";"), "TRUE")
-    val (fmt, path) = joinDmlTarget(s, tbl, "UPDATE … FROM")
-    recordTableTouch(s, fmt, path)
-    val schema = table(s, tbl).schema
-    val ta = Option(aliasOpt).getOrElse(tbl)
-    val (srcSql, sa) = parseJoinDmlSource(srcSpec, "UPDATE … FROM")
-    require(!sa.equalsIgnoreCase(ta),
-      s"source alias $sa collides with the target alias")
-    val assigns = splitTopCommasQuoted(setText).filter(_.nonEmpty).map {
-      item =>
-        val eq = item.indexOf('=')
-        require(eq > 0, s"bad SET item: $item")
-        val colParts = item.substring(0, eq).trim.split("\\.")
-        val cname = colParts.last.trim
-        require(colParts.length <= 2 &&
-            "^[A-Za-z_]\\w*$".r.matches(cname) &&
-            (colParts.length == 1 ||
-              colParts(0).trim.equalsIgnoreCase(ta)),
-          s"SET must assign target columns, got: ${item.substring(0, eq)}")
-        require(schema.fieldNames.exists(_.equalsIgnoreCase(cname)),
-          s"UPDATE … FROM: unknown column $cname")
-        (cname, item.substring(eq + 1).trim)
+    // `ta`: the target's alias; `set`: the SET list (none for DELETE …
+    // USING); `rest`: the text after the source keyword (FROM / USING)
+    val (tbl, ta, set, rest, what) = st match {
+      case UpdateHeadRe(tbl, a, rest) =>
+        val from = topLevelIndexOf(rest, "FROM")
+        (tbl, Option(a).getOrElse(tbl), Some(rest.substring(0, from)),
+          rest.substring(from + 4), "UPDATE … FROM")
+      case DeleteUsingHeadRe(tbl, a, rest) =>
+        (tbl, Option(a).getOrElse(tbl), None, rest, "DELETE … USING")
     }
-    require(assigns.nonEmpty, "UPDATE … FROM: empty SET list")
-    require(assigns.map(_._1.toLowerCase).distinct.length == assigns.length,
-      "UPDATE … FROM: a column is assigned twice")
-    // Materialize the source ONCE (localCheckpoint) so the ambiguity
-    // check and the applied rewrite see the SAME rows even for a
-    // nondeterministic (rand()/now()) or concurrently-mutated source,
-    // and the statement costs one source evaluation instead of three.
-    // The source is the MERGE-contract small side; the target is never
-    // materialized.
-    val srcView = s"__gf_jdml_src_${java.util.UUID.randomUUID()
-      .toString.replace("-", "").take(12)}"
-    val srcDf = sql(s, s"SELECT * FROM $srcSql AS $sa").localCheckpoint()
-    srcDf.createOrReplaceTempView(srcView)
-    try {
-      // one source row per target row, or the SET replacement is
-      // ambiguous — ONE aggregate over ONE left join: nj = matched
-      // pairs, nm = distinct matched target rows (row identity from
-      // monotonically_increasing_id, stable within this single action)
-      val counts = sql(s, s"""SELECT
-          COUNT($sa.__gf_m) AS nj,
-          COUNT(DISTINCT IF($sa.__gf_m, $ta.__gf_rid, NULL)) AS nm
-        FROM (SELECT monotonically_increasing_id() AS __gf_rid, *
-              FROM $tbl) AS $ta
-        LEFT JOIN (SELECT *, TRUE AS __gf_m FROM $srcView) AS $sa
-          ON ($cond)""").head
-      val (nj, nm) = (counts.getLong(0), counts.getLong(1))
-      require(nj == nm,
-        s"UPDATE … FROM: ${nj - nm} surplus match(es) — some target row " +
-          "matches more than one source row and SET replacement is " +
-          "ambiguous; dedup the source or tighten the condition (the " +
-          "MERGE one-source-row-per-target contract)")
-      if (nm > 0) {
-        val colsSql = schema.fields.map { f =>
-          assigns.find(_._1.equalsIgnoreCase(f.name)) match {
-            case Some((_, e)) =>
-              s"CASE WHEN $sa.__gf_m THEN CAST(($e) AS ${f.dataType.sql}) " +
-                s"ELSE $ta.${f.name} END AS ${f.name}"
-            case None => s"$ta.${f.name} AS ${f.name}"
-          }
-        }.mkString(", ")
-        // nj == nm against the checkpointed source ⇒ the LEFT JOIN
-        // emits exactly one row per target row; the write plan carries
-        // exactly ONE join over the target (PlanShapeSpec-gated).
-        val post = sql(s, s"""SELECT $colsSql FROM $tbl AS $ta
-          LEFT JOIN (SELECT *, TRUE AS __gf_m FROM $srcView) AS $sa
-          ON ($cond)""")
-        fmt.overwrite(s, path, post)
-      }
-      Seq(nm).toDF("count")
-    } finally s.catalog.dropTempView(srcView)
-  }
-
-  private[graft] def runDeleteUsing(s: SparkSession,
-      st: String): DataFrame = {
-    import s.implicits._
-    val DeleteUsingHeadRe(tbl, aliasOpt, rest) = st
     val whereIdx = topLevelIndexOf(rest, "WHERE")
     val (srcSpec, cond) =
       if (whereIdx >= 0) (rest.substring(0, whereIdx),
         rest.substring(whereIdx + 5).trim.stripSuffix(";").trim)
       else (rest.trim.stripSuffix(";"), "TRUE")
-    val (fmt, path) = joinDmlTarget(s, tbl, "DELETE … USING")
+    val (fmt, path) = lakeEntry(catalog(s).get(tbl),
+      s"$tbl is a view — $what targets must be lake tables",
+      s"$what: table $tbl not in catalog")
     recordTableTouch(s, fmt, path)
-    val schema = table(s, tbl).schema
-    val ta = Option(aliasOpt).getOrElse(tbl)
-    val (srcSql, sa) = parseJoinDmlSource(srcSpec, "DELETE … USING")
+    val (srcSql, sa) = parseJoinDmlSource(srcSpec, what)
     require(!sa.equalsIgnoreCase(ta),
       s"source alias $sa collides with the target alias")
-    // Materialize the source once (same rationale as UPDATE … FROM):
-    // the count and the applied anti-join must see identical rows.
-    val srcView = s"__gf_jdml_src_${java.util.UUID.randomUUID()
-      .toString.replace("-", "").take(12)}"
-    val srcDf = sql(s, s"SELECT * FROM $srcSql AS $sa").localCheckpoint()
-    srcDf.createOrReplaceTempView(srcView)
-    try {
-      val nDel = sql(s, s"""SELECT COUNT(*) AS n FROM $tbl AS $ta
-        LEFT SEMI JOIN $srcView AS $sa ON ($cond)""").head.getLong(0)
-      if (nDel > 0) {
-        val keepCols = schema.fieldNames
-          .map(f => s"$ta.$f AS $f").mkString(", ")
-        val post = sql(s, s"""SELECT $keepCols FROM $tbl AS $ta
-          LEFT ANTI JOIN $srcView AS $sa ON ($cond)""")
-        fmt.overwrite(s, path, post)
-      }
-      Seq(nDel).toDF("count")
-    } finally s.catalog.dropTempView(srcView)
+    Seq(fmt.joinDml(s, path, ta, sql(s, s"SELECT * FROM $srcSql AS $sa"),
+      sa, clauseColumn(s, cond), set.map(setItems(s, _, ta))))
+      .toDF("count")
+  }
+
+  /** The SET list of an UPDATE … FROM whose target is aliased `ta`:
+    * target column name → value. */
+  private def setItems(s: SparkSession, text: String,
+      ta: String): Map[String, Column] = {
+    val assigns = splitTopCommasQuoted(text).filter(_.nonEmpty).map { item =>
+      val eq = item.indexOf('=')
+      require(eq > 0, s"bad SET item: $item")
+      val colParts = item.substring(0, eq).trim.split("\\.")
+      val cname = colParts.last.trim
+      require(colParts.length <= 2 &&
+          "^[A-Za-z_]\\w*$".r.matches(cname) &&
+          (colParts.length == 1 || colParts(0).trim.equalsIgnoreCase(ta)),
+        s"SET must assign target columns, got: ${item.substring(0, eq)}")
+      (cname, clauseColumn(s, item.substring(eq + 1).trim))
+    }
+    require(assigns.nonEmpty, "UPDATE … FROM: empty SET list")
+    require(assigns.map(_._1.toLowerCase).distinct.length == assigns.length,
+      "UPDATE … FROM: a column is assigned twice")
+    assigns.toMap
+  }
+
+  /** A join-DML clause (the condition or one SET value) as a Column
+    * with the meaning the query path gives it: its text through
+    * [[exprText]], the metadata views it names bound, and every
+    * cataloged name in its subqueries bound to the table's current
+    * snapshot ([[bindCataloged]]). */
+  private def clauseColumn(s: SparkSession, text: String): Column = {
+    bindMetaViews(s, text)
+    Glue.column(parseExpr(s, exprText(text)).transform {
+      case q: SubqueryExpression => q.withNewPlan(bindCataloged(s, q.plan))
+    })
   }
 
   private[graft] def runOnConflict(s: SparkSession,
@@ -6324,45 +6271,21 @@ object LakeSql {
         // Query path: bind every cataloged name the plan references to
         // the table's current snapshot, then run the parsed plan (full
         // Catalyst optimization).
-        // Metadata views bind by textual mention: they are reserved
-        // names, and a mention inside a CTE body is invisible to
-        // plan.collect (UnresolvedWith keeps cteRelations out of the
-        // children traversal).
-        if (statement.contains(MetaCatalogsView))
-          catalogsMeta(s).createOrReplaceTempView(MetaCatalogsView)
-        if (statement.contains(MetaTablesView))
-          tablesMeta(s).createOrReplaceTempView(MetaTablesView)
-        if (statement.contains(MetaColumnsView))
-          columnsMeta(s).createOrReplaceTempView(MetaColumnsView)
+        bindMetaViews(s, statement)
         // Attached-qualified names (`alias.table`) cannot bind through
         // temp views (dots aren't temp-view names) — when present, the
-        // analyzed snapshot substitutes into the parsed plan directly,
-        // the same binder mechanism the time-travel path uses; plain
-        // cataloged names in the same statement substitute too, so
-        // cross-catalog joins optimize as ONE Catalyst plan.
-        def isAttachedRel(r: UnresolvedRelation): Boolean =
-          r.multipartIdentifier.length == 2 &&
-            attached(s).contains(r.multipartIdentifier.head)
+        // analyzed snapshot substitutes into the parsed plan directly
+        // ([[bindCataloged]]); plain cataloged names in the same
+        // statement substitute too, so cross-catalog joins optimize as
+        // ONE Catalyst plan.
         // Deep collection/binding: names inside WITH-clause bodies
         // count too (UnresolvedWith hides cteRelations from plain
         // traversal — a qualified name only mentioned inside a CTE
         // must still trigger the substitution path).
         val rels = collectRelationsDeep(plan)
-        if (rels.exists(isAttachedRel)) {
-          val bound = bindRelationsDeep(plan, {
-            case r if isAttachedRel(r) =>
-              attachedTable(s, r.multipartIdentifier.head,
-                r.multipartIdentifier.last).queryExecution.analyzed
-            // Only a BARE name may bind the primary catalog here: a
-            // qualified name whose prefix is not an attached alias
-            // (e.g. `foo.customer`) must fail resolution loudly, not
-            // silently bind the bare `customer` entry.
-            case r if r.multipartIdentifier.length == 1 &&
-                catalog(s).contains(r.multipartIdentifier.last) =>
-              table(s, r.multipartIdentifier.last).queryExecution.analyzed
-          })
-          Glue.dataFrame(s, bound)
-        } else {
+        if (rels.exists(isAttachedRel(s, _)))
+          Glue.dataFrame(s, bindCataloged(s, plan))
+        else {
           rels.map(_.multipartIdentifier.last).distinct.foreach { n =>
             catalog(s).get(n).foreach(_ =>
               table(s, n).createOrReplaceTempView(n))
@@ -6371,6 +6294,42 @@ object LakeSql {
         }
     }
   }
+
+  /** Metadata views bind by textual mention: they are reserved names,
+    * and a mention inside a CTE body is invisible to plan.collect
+    * (UnresolvedWith keeps cteRelations out of the children traversal).
+    */
+  private def bindMetaViews(s: SparkSession, text: String): Unit = {
+    if (text.contains(MetaCatalogsView))
+      catalogsMeta(s).createOrReplaceTempView(MetaCatalogsView)
+    if (text.contains(MetaTablesView))
+      tablesMeta(s).createOrReplaceTempView(MetaTablesView)
+    if (text.contains(MetaColumnsView))
+      columnsMeta(s).createOrReplaceTempView(MetaColumnsView)
+  }
+
+  private def isAttachedRel(s: SparkSession, r: UnresolvedRelation) =
+    r.multipartIdentifier.length == 2 &&
+      attached(s).contains(r.multipartIdentifier.head)
+
+  /** `plan` with every cataloged name in it (CTE bodies and subqueries
+    * included) replaced by the table's current snapshot, under that
+    * name (so `name.column` resolves): `alias.table` through its
+    * attached catalog, a bare name through the session catalog. Only a
+    * BARE name may bind the primary catalog: a qualified name whose
+    * prefix is not an attached alias (e.g. `foo.customer`) must fail
+    * resolution loudly, not silently bind the bare `customer` entry.
+    */
+  private def bindCataloged(s: SparkSession, plan: LogicalPlan): LogicalPlan =
+    bindRelationsDeep(plan, {
+      case r if isAttachedRel(s, r) => SubqueryAlias(r.multipartIdentifier,
+        attachedTable(s, r.multipartIdentifier.head,
+          r.multipartIdentifier.last).queryExecution.analyzed)
+      case r if r.multipartIdentifier.length == 1 &&
+          catalog(s).contains(r.multipartIdentifier.last) =>
+        SubqueryAlias(r.multipartIdentifier,
+          table(s, r.multipartIdentifier.last).queryExecution.analyzed)
+    })
 
   /** Resolve an ALTER TABLE target plan to (provider, path) through the
     * session catalog.

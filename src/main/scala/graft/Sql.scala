@@ -3266,10 +3266,12 @@ object Sql {
       // source row's columns; multi-match REFUSES loudly (MERGE's
       // one-source-row-per-target contract — Postgres silently picks
       // an arbitrary row, the worst possible default). Runs on BOTH
-      // lake formats; execution is the full-rewrite-DML class
-      // (BASELINE.md): post-state as one declarative plan (LEFT OUTER
-      // join for UPDATE, LEFT ANTI for DELETE — the grouped source
-      // broadcasts), committed as one atomic overwrite. The ORACLE is
+      // lake formats as the shared copy-on-write rewrite
+      // (LakeFormat.joinDml): one snapshot, one capped probe of the
+      // target joined to the source finds the hit files, and only those
+      // are rewritten (LEFT OUTER join for UPDATE, LEFT ANTI for DELETE
+      // — the grouped source broadcasts) in one atomic commit; old
+      // files stay time-travelable. The ORACLE is
       // DuckDB's NATIVE UPDATE…FROM / DELETE…USING on a temp table —
       // not a hand-replayed SELECT — so the semantics themselves are
       // cross-checked engine-to-engine.

@@ -9,6 +9,7 @@ import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.ObjectNode
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
@@ -18,7 +19,7 @@ import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import LakeFormat.{collectHitNames, fileName, latestChanges, mergeHits}
+import LakeFormat.{collectHits, fileName, latestChanges, mergeHits}
 
 /** Minimal open-table-format support speaking the public Delta Lake
   * transaction-log protocol: a table is a directory of immutable parquet
@@ -725,10 +726,11 @@ object DeltaLite extends LakeFormat {
       dataSchema: StructType): Map[String, String] = {
     if (rels.isEmpty) return Map.empty
     val conf = s.sparkContext.hadoopConfiguration
+    val opts = HadoopReadOptions.builder(conf).build()
     val byName = statCols(dataSchema).map(f => f.name -> f.dataType).toMap
     rels.flatMap { rel =>
       val reader = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(table, rel), conf))
+        HadoopInputFile.fromPath(new Path(table, rel), conf), opts)
       try {
         var numRecords = 0L
         val mins = mutable.Map[String, Any]()
@@ -1797,8 +1799,8 @@ object DeltaLite extends LakeFormat {
     // key get rewritten; everything else is untouched metadata.
     val hitNames =
       if (t.files.isEmpty) Set.empty[String]
-      else collectHitNames(s,
-        t.read(t.files, Some("_gf")).join(touched, keys, "left_semi"))
+      else collectHits(s,
+        t.read(t.files, Some("_gf")).join(touched, keys, "left_semi")).names
     rewrite(t, t.files.filter(p => hitNames.contains(fileName(p))),
       touched, upserts, keys, "APPLY CHANGES")(identity)
   }

@@ -1,9 +1,11 @@
 package graft.sources
 
+import scala.collection.mutable
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation,
   LogicalPlan, Project, Range, SubqueryAlias, View}
@@ -19,19 +21,21 @@ import org.apache.spark.sql.types._
   * SQL front end maps a catalog entry to `(LakeFormat, path)` once
   * ([[LakeFormat.of]]) and calls through it. A VERSION is a Delta log
   * version or an Iceberg snapshot id, and every write returns the
-  * version it committed (the current one when it committed nothing).
+  * version it committed (the current one when it committed nothing),
+  * except the join DML, which returns the rows it matched.
   * Operations only one format has (ZORDER, deletion vectors, refs and
   * branches, merge-on-read) stay on that format's object.
   *
   * The keyed [[merge]], the full-sync [[sync]] MERGE, the
-  * copy-on-write [[updateWhere]], OPTIMIZE ([[compact]]) and INSERT
-  * ([[append]], [[overwrite]], both over [[insert]]) are written here
-  * once. Each reads one snapshot ([[LakeFormat.Live]], the hooks a
-  * format supplies on one log replay or manifest read) for the whole
-  * statement and ends in one [[LakeFormat.Live.replace]] commit. The
-  * MERGEs evaluate their source under the one DML source rule
-  * ([[LakeFormat.once]]), cast it to the table's types, and end in the
-  * same anti-join + union commit.
+  * copy-on-write [[updateWhere]] and join DML ([[joinDml]]), OPTIMIZE
+  * ([[compact]]) and INSERT ([[append]], [[overwrite]], both over
+  * [[insert]]) are written here once. Each
+  * reads one snapshot ([[LakeFormat.Live]], the hooks a format supplies
+  * on one log replay or manifest read) for the whole statement and ends
+  * in one [[LakeFormat.Live.replace]] commit. The MERGEs and the join
+  * DML evaluate their source under the one DML source rule
+  * ([[LakeFormat.once]]); the MERGEs cast it to the table's types and
+  * end in the same anti-join + union commit.
   */
 trait LakeFormat {
   import LakeFormat._
@@ -85,28 +89,77 @@ trait LakeFormat {
     val t = live(s, table)
     assignments.keys.foreach(k => require(t.schema.fieldNames.contains(k),
       s"updateWhere: unknown column $k"))
-    val matched = coalesce(cond, lit(false))
-    val set = t.schema.fields.toSeq.map(f =>
-      assignments.get(f.name).fold(col(f.name))(v =>
-        when(matched, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)))
-    rewriteWhere(s, t, cond, "UPDATE")(_.select(set: _*))
+    rewriteWhere(s, t, cond, "UPDATE")(_.select(
+      assigned(t.schema, assignments, coalesce(cond, lit(false)))(col): _*))
+  }
+
+  /** Join DML: the target rows (aliased `ta`) that a row of `source`
+    * (aliased `sa`) matches on `cond` take the `set` assignments (UPDATE
+    * … FROM: column name in any case → expression over both sides, cast
+    * to the column's type) or, with no `set`, are deleted however many
+    * source rows match them (DELETE … USING); only the files holding
+    * such a row are rewritten. An UPDATE's target row matched by more
+    * than one source row is an error — which source row's values win is
+    * ambiguous (MERGE's one-source-row-per-target contract). Returns the
+    * matched rows. */
+  def joinDml(s: SparkSession, table: String, ta: String,
+      source: DataFrame, sa: String, cond: Column,
+      set: Option[Map[String, Column]]): Long = {
+    val t = live(s, table)
+    val asg = set.map(_.map { case (k, v) =>
+      t.schema.fieldNames.find(_.equalsIgnoreCase(k)).getOrElse(
+        throw new IllegalArgumentException(
+          s"UPDATE … FROM: unknown column $k")) -> v
+    })
+    if (t.files.isEmpty) return 0L
+    val src = once(source).withColumn("_gf_m", lit(true)).as(sa)
+    def joined(df: DataFrame, how: String) = df.as(ta).join(src, cond, how)
+    val m = ref(sa, "_gf_m")
+    val target = t.read(t.files, Some("_gf"))
+    val (hits, rows) = asg match {
+      case None => (collectHits(s, joined(target, "left_semi")),
+        joined(_: DataFrame, "left_anti"))
+      case Some(a) =>
+        // LEFT join: the target is never the replicated side, so all the
+        // probe rows of one target row come from one task (collectHits)
+        val probe = joined(target.withColumn("_gf_rid",
+          monotonically_increasing_id()), "left")
+        (collectHits(s, probe.withColumn("_gf", when(m, ref(ta, "_gf"))),
+            Some(ref(ta, "_gf_rid"))),
+          (df: DataFrame) => joined(df, "left")
+            .select(assigned(t.schema, a, m)(ref(ta, _)): _*))
+    }
+    require(hits.surplus == 0L,
+      s"UPDATE … FROM: ${hits.surplus} surplus match(es) — some target " +
+        "row matches more than one source row and SET replacement is " +
+        "ambiguous; dedup the source or tighten the condition (the " +
+        "MERGE one-source-row-per-target contract)")
+    replaceHits(t, t.files, hits.names, asg.fold("DELETE")(_ => "UPDATE"))(rows)
+    hits.rows
   }
 
   /** The copy-on-write row rewrite: partition and stats pruning narrow
     * the candidates, one file-name probe of those finds the files
-    * actually holding a row matching `cond` ([[collectHitNames]]), and
-    * only those are replaced by their rows passed through `rows`.
-    * Commits nothing (returns the current version) when no row
-    * matches. */
+    * actually holding a row matching `cond` ([[collectHits]]), and
+    * only those are replaced ([[replaceHits]]). */
   protected def rewriteWhere(s: SparkSession, t: Live, cond: Column,
       operation: String)(rows: DataFrame => DataFrame): Long = {
     val candidates = t.prune(cond)
-    val hitNames =
-      if (candidates.isEmpty) Set.empty[String]
-      else collectHitNames(s, t.read(candidates, Some("_gf")).filter(cond))
-    val hits = candidates.filter(p => hitNames.contains(fileName(p)))
-    if (hits.isEmpty) t.version
-    else t.replace(hits, rows(t.read(hits)), operation)
+    replaceHits(t, candidates,
+      if (candidates.isEmpty) Set.empty
+      else collectHits(s, t.read(candidates, Some("_gf")).filter(cond)).names,
+      operation)(rows)
+  }
+
+  /** Replace the `candidates` named in `hits` by their rows passed
+    * through `rows`, in one commit. Commits nothing (returns the
+    * current version) when none is hit. */
+  private def replaceHits(t: Live, candidates: Seq[String],
+      hits: Set[String], operation: String)(
+      rows: DataFrame => DataFrame): Long = {
+    val files = candidates.filter(p => hits.contains(fileName(p)))
+    if (files.isEmpty) t.version
+    else t.replace(files, rows(t.read(files)), operation)
   }
 
   /** OPTIMIZE: bin-pack the live rows into `targetFiles` files,
@@ -199,12 +252,8 @@ trait LakeFormat {
     }
     val acts = cond.fold(lit(true))(c => coalesce(c, lit(false)))
     rewrite(t, files, src, src, keys, "MERGE") { absent =>
-      set.fold(absent.filter(not(acts))) { asg =>
-        absent.select(t.schema.fields.toSeq.map(f =>
-          asg.get(f.name).fold(col(f.name))(v =>
-            when(acts, v.cast(f.dataType)).otherwise(col(f.name))
-              .as(f.name))): _*)
-      }
+      set.fold(absent.filter(not(acts)))(asg =>
+        absent.select(assigned(t.schema, asg, acts)(col): _*))
     }
   }
 
@@ -267,24 +316,59 @@ object LakeFormat {
     s.conf.getOption("spark.graft.maxHitFiles").map(_.toInt)
       .getOrElse(100000)
 
-  /** Distinct `_gf` hit-file names of `df`, bounded by [[maxHitFiles]]
-    * — fails loud (with the remedy) past the cap. One Spark job and no
-    * exchange: each task returns its own distinct names, so at most one
-    * name per file split of the scan comes back, a list no longer than
-    * the candidate file list already in memory.
+  /** What one hit probe found: the names of the files holding a hit,
+    * the hit rows, and the hits past the first of each target-row id. */
+  private[sources] final case class Hits(names: Set[String], rows: Long,
+      surplus: Long)
+
+  /** One capped pass over the hit probe `df`: the distinct `_gf` names
+    * of its rows (a row with a null `_gf` is no hit), bounded by
+    * [[maxHitFiles]] — failing loud (with the remedy) past the cap —
+    * the hit rows, and, when `rid` gives each row its target row's id,
+    * the surplus hits of ids seen more than once. One Spark job and no
+    * exchange: each task returns its own summary, so at most one name
+    * per file split of the scan comes back, a list no longer than the
+    * candidate file list already in memory. The surplus is counted per
+    * task, which is exact for a probe that makes all the rows of one
+    * target row in one task (a LEFT join streams or hash-partitions its
+    * left side, never replicates it).
     */
-  private[sources] def collectHitNames(s: SparkSession,
-      df: DataFrame): Set[String] = {
+  private[sources] def collectHits(s: SparkSession, df: DataFrame,
+      rid: Option[Column] = None): Hits = {
     import s.implicits._
     val cap = maxHitFiles(s)
-    val names = df.select(col("_gf")).as[String]
-      .mapPartitions(_.toSet.iterator).collect().toSet
+    val parts = df.select(col("_gf"), rid.getOrElse(lit(null).cast(LongType)))
+      .as[(String, Option[Long])]
+      .mapPartitions { it =>
+        val names = mutable.Set.empty[String]
+        val ids = new mutable.ArrayBuilder.ofLong // unboxed: 8 B per hit
+        var rows = 0L
+        it.filter(_._1 != null).foreach { case (f, id) =>
+          names += f; rows += 1; id.foreach(ids += _)
+        }
+        val sorted = ids.result().sorted
+        Iterator((names.toSeq, rows, sorted.indices
+          .count(i => i > 0 && sorted(i) == sorted(i - 1)).toLong))
+      }.collect()
+    val names = parts.iterator.flatMap(_._1).toSet
     require(names.size <= cap,
       s"predicate matches more than $cap data files; a driver-side " +
         "file set this large risks driver memory — narrow the " +
         "operation or raise spark.graft.maxHitFiles")
-    names
+    Hits(names, parts.map(_._2).sum, parts.map(_._3).sum)
   }
+
+  /** `schema`'s columns, each named in `asg` taking its value cast to
+    * the column's type where `acts` holds; `old` reads a column's
+    * current value. */
+  private def assigned(schema: StructType, asg: Map[String, Column],
+      acts: Column)(old: String => Column): Seq[Column] =
+    schema.fields.toSeq.map(f => asg.get(f.name).fold(old(f.name))(v =>
+      when(acts, v.cast(f.dataType)).otherwise(old(f.name))).as(f.name))
+
+  /** `c` of the relation aliased `q`. */
+  private def ref(q: String, c: String): Column =
+    Glue.column(UnresolvedAttribute(Seq(q, c)))
 
   /** The keyed MERGE hit probe: the `files` holding a key of `src`,
     * found by ONE file-name-column scan joined against the source key

@@ -37,6 +37,7 @@ object Scale {
     import org.apache.spark.sql.catalyst.plans.logical._
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     val conf = df.sparkSession.sparkContext.hadoopConfiguration
+    lazy val opts = org.apache.parquet.HadoopReadOptions.builder(conf).build()
     val MaxFooterReads = 512 // beyond this a distributed count() is cheaper
     def walk(p: LogicalPlan): Option[Long] = p match {
       case Project(_, c) => walk(c)
@@ -62,7 +63,7 @@ object Scale {
           else scala.util.Try(files.map { f =>
             val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
               org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-                new org.apache.hadoop.fs.Path(f), conf))
+                new org.apache.hadoop.fs.Path(f), conf), opts)
             try rd.getRecordCount finally rd.close()
           }.sum).toOption
         case _ => None

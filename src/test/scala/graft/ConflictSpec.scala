@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.sources.{DeltaLite, IcebergLite}
+import graft.util.Scratch
 
 /** Multi-writer conflict detection on DML commits, both formats.
   *
@@ -73,6 +74,35 @@ class ConflictSpec extends SparkSpec {
     }
   }
 
+  /** An UPDATE … FROM and a DELETE … USING of the table `t` names. */
+  private val joinDml = Seq[(String, String => String)](
+    "update" -> (t => s"""UPDATE $t SET v = s.v
+      FROM (SELECT CAST(2 AS BIGINT) AS k, 'Z' AS v) AS s WHERE $t.k = s.k"""),
+    "delete" -> (t => s"""DELETE FROM $t
+      USING (SELECT CAST(1 AS BIGINT) AS k) AS s WHERE $t.k = s.k"""))
+
+  test("delta: UPDATE … FROM and DELETE … USING built from a stale " +
+      "snapshot also fail loudly") {
+    import spark.implicits._
+    for ((name, stmt) <- joinDml) {
+      val t = s"${Scratch.dir("conflictspec")}/dj_$name"
+      DeltaLite.create(spark, t, Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
+      LakeSql.register(spark, s"conflict_dj_$name", DeltaLite.provider, t)
+      DeltaLite.interleaveForTest = () => {
+        DeltaLite.interleaveForTest = noop
+        DeltaLite.append(spark, t, Seq((20L, "y")).toDF("k", "v"))
+      }
+      try {
+        val e = intercept[java.io.IOException](
+          LakeSql.sql(spark, stmt(s"conflict_dj_$name")))
+        assert(e.getMessage.contains("commit race lost"), s"$name: ${e.getMessage}")
+      } finally DeltaLite.interleaveForTest = noop
+      assert(DeltaLite.snapshot(spark, t).as[(Long, String)].collect()
+        .toMap == Map(1L -> "a", 2L -> "b", 20L -> "y"), name)
+      LakeSql.sql(spark, s"DROP TABLE conflict_dj_$name")
+    }
+  }
+
   test("delta: appendWithRetry absorbs the same interleave (blind " +
       "retry is append-safe) and both appends land") {
     import spark.implicits._
@@ -133,6 +163,28 @@ class ConflictSpec extends SparkSpec {
       } finally IcebergLite.interleaveForTest = noop
       assert(IcebergLite.snapshot(spark, t).as[(Long, String)].collect()
         .toMap == Map(1L -> "a", 2L -> "b", 20L -> "y"), name)
+    }
+  }
+
+  test("iceberg: UPDATE … FROM and DELETE … USING built from a stale " +
+      "snapshot also fail loudly") {
+    import spark.implicits._
+    for ((name, stmt) <- joinDml) {
+      val t = s"${Scratch.dir("conflictspec")}/ij_$name"
+      IcebergLite.create(spark, t, Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
+      LakeSql.register(spark, s"conflict_ij_$name", IcebergLite.provider, t)
+      IcebergLite.interleaveForTest = () => {
+        IcebergLite.interleaveForTest = noop
+        IcebergLite.append(spark, t, Seq((20L, "y")).toDF("k", "v"))
+      }
+      try {
+        val e = intercept[java.util.ConcurrentModificationException](
+          LakeSql.sql(spark, stmt(s"conflict_ij_$name")))
+        assert(e.getMessage.contains("stale snapshot"), s"$name: ${e.getMessage}")
+      } finally IcebergLite.interleaveForTest = noop
+      assert(IcebergLite.snapshot(spark, t).as[(Long, String)].collect()
+        .toMap == Map(1L -> "a", 2L -> "b", 20L -> "y"), name)
+      LakeSql.sql(spark, s"DROP TABLE conflict_ij_$name")
     }
   }
 }

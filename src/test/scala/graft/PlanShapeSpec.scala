@@ -108,16 +108,17 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   // ---------------------------------------------------------- join-DML
-  // The r17 fusion contract for x125's machinery (judge item 4): an
-  // UPDATE … FROM evaluates its source ONCE (localCheckpoint), then
-  // runs exactly TWO joins over the target — one inside the ambiguity
-  // count, one inside the write plan — and the execution that carries
-  // the overwrite contains exactly ONE join. DELETE … USING is the
-  // same shape with semi/anti joins. A regression back to the r16
-  // three-pass shape (or a second join sneaking into the write plan)
-  // fails here. Plans are captured from the engine's own execution via
-  // SparkListenerSQLExecutionStart — the gate sees what actually ran,
-  // not a reconstruction.
+  // The fusion contract for x125's machinery: an UPDATE … FROM
+  // evaluates its source once (LakeFormat.once: a stable source is
+  // re-read, anything else is checkpointed), then runs exactly TWO
+  // joins over the target — one inside the capped hit probe (hit
+  // files, match count and ambiguity), one inside the rewrite of the
+  // hit files — and the execution that carries the write contains
+  // exactly ONE join. DELETE … USING is the same shape with semi/anti
+  // joins. A regression back to a three-pass shape (or a second join
+  // sneaking into the write plan) fails here. Plans are captured from
+  // the engine's own execution via SparkListenerSQLExecutionStart — the
+  // gate sees what actually ran, not a reconstruction.
   private def capturePlans(body: => Unit)
       : Seq[org.apache.spark.sql.execution.SparkPlanInfo] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
